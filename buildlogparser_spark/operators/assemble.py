@@ -423,14 +423,6 @@ def _flat_projection(df: DataFrame) -> DataFrame:
     )
 
 
-def parse_stateful_chunked_flat(
-    transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
-    chunk_size: int = 65536,
-) -> DataFrame:
-    return _flat_projection(
-        parse_stateful_chunked(transcripts, rules_factory, chunk_size))
-
-
 def parse_stateful_auto_flat(
     transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
     chunk_size: int = 65536,

@@ -20,7 +20,7 @@ Rules implemented (paper → here):
 Scale shape (the 100 TB plan):
 * ONE posexplode produces the line stream; it is the diamond root feeding
   the per-page totals AND the dedup/reassembly, so it is
-  snapshot-materialized once per (session, key).
+  snapshot-materialized once per input plan.
 * The cross-page line dedup is a hash-aggregation on the line digest
   (min (doc_id, pos) struct = the deterministic first occurrence) plus
   one co-partitioned equi-join back — the exact shape of dedup_exact at
@@ -117,23 +117,20 @@ def _line_keep(line: Column, min_words: int) -> Column:
 
 
 def c4_clean(documents: DataFrame, min_words_per_line: int = 5,
-             min_lines: int = 3, banned: tuple[str, ...] = DEFAULT_BANNED,
-             snapshot_key: str | None = None) -> DataFrame:
+             min_lines: int = 3,
+             banned: tuple[str, ...] = DEFAULT_BANNED) -> DataFrame:
     """(doc_id, page_kept, n_lines_total, n_lines_kept, clean_text):
     C4 cleaning with per-page stats. ``page_kept`` folds the page gates
     (curly brace / lorem ipsum / banned word on the ORIGINAL text, plus
     the retained-line minimum); ``clean_text`` is the newline-joined
     retained lines after the cross-page first-occurrence dedup ('' when
     nothing survives, NULL-text pages score (false, 0, 0, ''))."""
-    lines = (
+    from ..materialize import materialize
+
+    lines = materialize(
         documents.select(
             "doc_id", F.posexplode(F.split(F.col("text"), "\n"))
-            .alias("pos", "line"))
-    )
-    if snapshot_key is not None:
-        from ..materialize import materialize
-
-        lines = materialize(lines, key=f"c4lines:{snapshot_key}")
+            .alias("pos", "line")))
 
     totals = lines.groupBy("doc_id").agg(
         F.count("*").alias("n_lines_total"))

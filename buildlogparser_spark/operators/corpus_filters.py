@@ -274,15 +274,14 @@ GROUP BY ngram HAVING count(*) >= {min_docs}
 
 
 def boilerplate_stats(documents: DataFrame, k: int = 3,
-                      min_docs: int = 3,
-                      snapshot_key: str | None = None) -> DataFrame:
+                      min_docs: int = 3) -> DataFrame:
     """(doc_id, n_ngrams, n_boiler, boiler_ratio): per-document share of
     its distinct k-grams that are corpus-level boilerplate (flagged by
     :func:`boilerplate_ngrams`). Documents dominated by boilerplate are
     the ones a pretraining pipeline drops or trims.
 
-    Scale shape: the corpus is exploded ONCE into (doc_id, ngram) —
-    ``snapshot_key`` materializes that relation so the flagged-set
+    Scale shape: the corpus is exploded ONCE into (doc_id, ngram) — a
+    snapshot of that relation lets the flagged-set
     hash-agg and the per-doc semi-join scan a real table instead of
     re-deriving the explode (without it the plan scans the corpus 3×;
     the DuckDB twin's MATERIALIZED CTE is the same fix). Then a
@@ -291,11 +290,10 @@ def boilerplate_stats(documents: DataFrame, k: int = 3,
     n-gram or doc_id — no window over the corpus, no collect. Short docs
     (< k tokens) have 0 ngrams and ratio 0.0."""
     sh = shingles(F.col("text"), k=k)
-    exploded = documents.select("doc_id", F.explode(sh).alias("ngram"))
-    if snapshot_key is not None:
-        from ..materialize import materialize
+    from ..materialize import materialize
 
-        exploded = materialize(exploded, key=f"boilerng:{snapshot_key}:{k}")
+    exploded = materialize(
+        documents.select("doc_id", F.explode(sh).alias("ngram")))
     flagged = (
         exploded.groupBy("ngram").agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs).select("ngram"))
@@ -587,8 +585,7 @@ def split_assign_sql(table: str = "documents", train_bp: int = 8000,
 
 
 def split_leakage(documents: DataFrame, train_bp: int = 8000,
-                  valid_bp: int = 9000,
-                  snapshot_key: str | None = None, num_hashes: int = 32,
+                  valid_bp: int = 9000, num_hashes: int = 32,
                   bands: int = 8, shingle_k: int = 3) -> DataFrame:
     """(doc_a, doc_b, split_a, split_b): near-duplicate pairs that CROSS a
     split boundary — the train→eval contamination an honest benchmark run
@@ -605,14 +602,14 @@ def split_leakage(documents: DataFrame, train_bp: int = 8000,
     ``shingle_k``) when short documents matter.
 
     Scale shape: reuses the banded-signature snapshot the graded
-    `lsh_candidates` row materializes (same ``snapshot_key`` and LSH
-    parameters → one signature build per corpus per session); split
+    `lsh_candidates` row materializes (same corpus plan and LSH
+    parameters → one signature build per corpus); split
     assignment is a pure column expression joined onto the candidate
     pairs by doc_id — two corpus-sized equi-joins against a 2-column
     projection, never an all-pairs comparison and never a second
     signature pass."""
     pairs = lsh_candidates(documents, num_hashes=num_hashes, bands=bands,
-                           shingle_k=shingle_k, snapshot_key=snapshot_key)
+                           shingle_k=shingle_k)
     splits = split_assign(documents, train_bp, valid_bp)
     a = splits.select(F.col("doc_id").alias("doc_a"),
                       F.col("split").alias("split_a"))

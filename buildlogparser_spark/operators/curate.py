@@ -22,16 +22,12 @@ from .textstats import lang_id, quality_score
 
 def curated_corpus(documents: DataFrame, lang: str = "en",
                    min_quality: float = 0.35, min_tokens: int = 5,
-                   jaccard_threshold: float = 0.5,
-                   snapshot_key: str | None = None) -> DataFrame:
+                   jaccard_threshold: float = 0.5) -> DataFrame:
     """(doc_id, lang_pred, quality, n_tokens) of the curated document set.
 
     Survivor selection: exact-dup groups keep min(doc_id); near-dup
     components (over the exact-deduped set) keep their min-id
     representative — so curation is deterministic and idempotent.
-    ``snapshot_key`` namespaces the LSH signature snapshot to the deduped
-    corpus (distinct from the full-corpus signatures a standalone
-    lsh_candidates call would build).
     """
     survivors = dedup_exact(documents).select(
         F.col("keep_doc_id").alias("doc_id"))
@@ -39,11 +35,8 @@ def curated_corpus(documents: DataFrame, lang: str = "en",
     # components, lang, quality) and an un-materialized lineage re-runs the
     # exact-dedup hash-agg per reference — the Spark analog of the SQL
     # twin's `docs_d AS MATERIALIZED`
-    docs = materialize(documents.join(survivors, "doc_id"),
-                       key=f"{snapshot_key}:curate:docs" if snapshot_key else None)
-    key = f"{snapshot_key}:curate" if snapshot_key else None
-    pairs = ngram_jaccard_pairs(docs, threshold=jaccard_threshold,
-                                snapshot_key=key)
+    docs = materialize(documents.join(survivors, "doc_id"))
+    pairs = ngram_jaccard_pairs(docs, threshold=jaccard_threshold)
     # star formulation (O(log n) rounds): min-propagation would RAISE on
     # a dup chain whose diameter exceeds its round budget, aborting the
     # whole curation query — the star variant converges regardless
@@ -61,9 +54,8 @@ def curated_corpus(documents: DataFrame, lang: str = "en",
     )
 
 
-def curation_pipeline(documents: DataFrame, snapshot_key: str | None = None,
-                      min_quality: float = 0.35, min_tokens: int = 5,
-                      jaccard_threshold: float = 0.5,
+def curation_pipeline(documents: DataFrame, min_quality: float = 0.35,
+                      min_tokens: int = 5, jaccard_threshold: float = 0.5,
                       min_distinct_ratio: float = 0.3,
                       max_top_bigram_frac: float = 0.5) -> DataFrame:
     """The FULL training-data pipeline, composed end-to-end:
@@ -83,12 +75,8 @@ def curation_pipeline(documents: DataFrame, snapshot_key: str | None = None,
     # stage snapshots mirror the SQL twin's MATERIALIZED CTEs: without them
     # the composed lineage re-derives exact dedup and decontamination once
     # per downstream reference (explain showed 210 re-scans of the corpus)
-    docs = materialize(
-        documents.join(survivors, "doc_id"),
-        key=f"{snapshot_key}:fullcurate:docs" if snapshot_key else None)
-    pairs = ngram_jaccard_pairs(docs, threshold=jaccard_threshold,
-                                snapshot_key=f"{snapshot_key}:fullcurate"
-                                if snapshot_key else None)
+    docs = materialize(documents.join(survivors, "doc_id"))
+    pairs = ngram_jaccard_pairs(docs, threshold=jaccard_threshold)
     comp = near_dup_components_star(docs, pairs)
     keep = comp.filter(F.col("doc_id") == F.col("component_id")).select("doc_id")
     kept = materialize(docs.join(keep, "doc_id"))

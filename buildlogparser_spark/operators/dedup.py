@@ -208,12 +208,11 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = 32,
 
 
 def banded_signatures(documents: DataFrame, num_hashes: int = 32,
-                      bands: int = 8, shingle_k: int = 3,
-                      snapshot_key: str | None = None) -> DataFrame:
+                      bands: int = 8, shingle_k: int = 3) -> DataFrame:
     """(doc_id, band, bucket): the banded-MinHash signature rows, snapshot-
     materialized. Factored out of :func:`lsh_candidates` so other consumers
     (``cross_snapshot_dedup``, ``split_leakage`` via lsh_candidates) share
-    ONE signature build per (corpus, params) per session — the banded
+    ONE signature build per (corpus, params) — the banded
     subplan is expensive (shingle explode + 32-way min agg) and any
     self-/cross-join would otherwise compute each side independently (AQE
     does not reuse the exchange across differently-aliased sides). At
@@ -234,23 +233,19 @@ def banded_signatures(documents: DataFrame, num_hashes: int = 32,
     )
     from ..materialize import materialize
 
-    key = (f"minhash-banded:{snapshot_key}:{num_hashes}:{bands}:{shingle_k}"
-           if snapshot_key else None)
-    return materialize(banded, key=key)
+    return materialize(banded)
 
 
 def lsh_candidates(documents: DataFrame, num_hashes: int = 32, bands: int = 8,
-                   shingle_k: int = 3, snapshot_key: str | None = None) -> DataFrame:
+                   shingle_k: int = 3) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) sharing ≥1 LSH band bucket.
 
-    ``snapshot_key`` (a stable name for the input corpus, e.g. its path)
-    memoizes the banded-signature snapshot per session: repeated calls over
+    The banded-signature snapshot is keyed on its plan: repeated calls over
     the same corpus — including :func:`ngram_jaccard_pairs`, which builds
     on the same candidates — reuse one materialized table instead of
     re-deriving signatures, exactly as production materializes the
     signature table once and queries it many times."""
-    banded = banded_signatures(documents, num_hashes, bands, shingle_k,
-                               snapshot_key)
+    banded = banded_signatures(documents, num_hashes, bands, shingle_k)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -296,8 +291,7 @@ def banded_rows_rowwise(documents: DataFrame, num_hashes: int = 32,
 
 
 def lsh_dedup_keep(documents: DataFrame, num_hashes: int = 32, bands: int = 8,
-                   shingle_k: int = 3,
-                   snapshot_key: str | None = None) -> DataFrame:
+                   shingle_k: int = 3) -> DataFrame:
     """(doc_id, kept): the first-seen LSH dedup verdict — a document is
     dropped iff a LOWER-id document shares at least one band bucket with
     it (i.e. it appears as doc_b in :func:`lsh_candidates`). This is the
@@ -312,8 +306,7 @@ def lsh_dedup_keep(documents: DataFrame, num_hashes: int = 32, bands: int = 8,
     asserts set equality under that contract; with out-of-order arrival
     the streaming filter keeps the earliest arrival instead, the standard
     ingest-side behavior)."""
-    dropped = (lsh_candidates(documents, num_hashes, bands, shingle_k,
-                              snapshot_key)
+    dropped = (lsh_candidates(documents, num_hashes, bands, shingle_k)
                .select(F.col("doc_b").alias("doc_id")).distinct())
     return (documents.select("doc_id")
             .join(dropped.withColumn("hit", F.lit(True)), "doc_id", "left")
@@ -337,10 +330,10 @@ FROM {table} t LEFT JOIN dropped d ON t.doc_id = d.doc_id
 
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5,
                         shingle_k: int = 3, num_hashes: int = 32,
-                        bands: int = 8, snapshot_key: str | None = None) -> DataFrame:
+                        bands: int = 8) -> DataFrame:
     """Near-dup pairs with exact n-gram Jaccard ≥ threshold, verified only on
     LSH candidates (the scale path: no all-pairs join)."""
-    cands = lsh_candidates(documents, num_hashes, bands, shingle_k, snapshot_key)
+    cands = lsh_candidates(documents, num_hashes, bands, shingle_k)
     sh = documents.select(
         "doc_id", shingles(F.col("text"), shingle_k).alias("sh"))
     a = sh.alias("a")
@@ -405,7 +398,7 @@ def minhash_signatures_flat(documents: DataFrame, num_hashes: int = 32,
 
 
 def simhash_near_pairs(documents: DataFrame, bits: int = 32, max_hamming: int = 3,
-                       n_bands: int = 4, snapshot_key: str | None = None) -> DataFrame:
+                       n_bands: int = 4) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ max_hamming,
     blocked on simhash bit-bands (a pair within distance k must agree on at
     least one of k+1 bands — pigeonhole), so no all-pairs join."""
@@ -424,9 +417,7 @@ def simhash_near_pairs(documents: DataFrame, bits: int = 32, max_hamming: int = 
     )
     from ..materialize import materialize
 
-    key = (f"simhash-banded:{snapshot_key}:{bits}:{n_bands}"
-           if snapshot_key else None)
-    banded = materialize(banded, key=key)  # see lsh_candidates: self-join computes twice
+    banded = materialize(banded)  # see lsh_candidates: self-join computes twice
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(r, [F.col("l.band") == F.col("r.band"),
@@ -772,8 +763,7 @@ FROM (
 
 
 def conversation_near_dups(transcripts: DataFrame, threshold: float = 0.2,
-                           num_hashes: int = 32, bands: int = 16,
-                           snapshot_key: str | None = None) -> DataFrame:
+                           num_hashes: int = 32, bands: int = 16) -> DataFrame:
     """Near-duplicate CONVERSATION pairs: n-gram Jaccard ≥ threshold over
     the conversation-granular documents, LSH-blocked exactly like the
     document path (banded minhash bucket join — never all-pairs). doc ids
@@ -792,22 +782,18 @@ def conversation_near_dups(transcripts: DataFrame, threshold: float = 0.2,
     #     compute (shingle explode + 32-way minhash) — AQE coalesces the
     #     small pack shuffle to one partition and would serialize it, so
     #     fan back out explicitly;
-    # (b) snapshot the packed docs once (keyed) so each consumer re-reads
+    # (b) snapshot the packed docs once so each consumer re-reads
     #     a parquet scan instead of re-running the pack aggregate.
     from ..materialize import materialize
 
     n = max(transcripts.sparkSession.sparkContext.defaultParallelism, 8)
-    docs = materialize(
-        docs.repartition(n, "doc_id"),
-        key=f"convdocs:{snapshot_key}" if snapshot_key else None, n_files=n)
+    docs = materialize(docs.repartition(n, "doc_id"), n_files=n)
     return ngram_jaccard_pairs(docs, threshold=threshold,
-                               num_hashes=num_hashes, bands=bands,
-                               snapshot_key=snapshot_key)
+                               num_hashes=num_hashes, bands=bands)
 
 
 def cross_snapshot_dedup(documents: DataFrame, num_hashes: int = 32,
-                         bands: int = 8, shingle_k: int = 3,
-                         snapshot_key: str | None = None) -> DataFrame:
+                         bands: int = 8, shingle_k: int = 3) -> DataFrame:
     """(doc_id, verdict) for every INCOMING document: incremental ingest
     dedup of a new batch against an existing corpus.
 
@@ -835,9 +821,8 @@ def cross_snapshot_dedup(documents: DataFrame, num_hashes: int = 32,
     pre-aggregated to distinct digests); the near check is a (band,
     bucket) equi-join between the two halves of the SAME banded-signature
     snapshot the graded ``lsh_candidates`` row materializes (one
-    signature build per corpus per session; pass the same
-    ``snapshot_key``) — never an all-pairs comparison, and the incoming
-    side never joins itself.
+    signature build per corpus) — never an all-pairs comparison, and the
+    incoming side never joins itself.
     """
     def half_of(doc_id: Column) -> Column:
         return _md5_i64(
@@ -852,8 +837,7 @@ def cross_snapshot_dedup(documents: DataFrame, num_hashes: int = 32,
     # does (review finding, round-5 final session)
     halves = materialize(
         documents.select("doc_id", half_of(F.col("doc_id")).alias("half"),
-                         F.md5(F.col("text")).alias("digest")),
-        key=f"snaphalves:{snapshot_key}" if snapshot_key else None)
+                         F.md5(F.col("text")).alias("digest")))
     incoming = halves.filter(F.col("half") == 1)
     existing = halves.filter(F.col("half") == 0)
     exact_hits = (
@@ -861,8 +845,7 @@ def cross_snapshot_dedup(documents: DataFrame, num_hashes: int = 32,
         .join(existing.select("digest").distinct(), "digest")
         .select("doc_id").distinct()
         .withColumn("is_exact", F.lit(True)))
-    banded = banded_signatures(documents, num_hashes, bands, shingle_k,
-                               snapshot_key)
+    banded = banded_signatures(documents, num_hashes, bands, shingle_k)
     # half is functional on doc_id — derive it on the banded snapshot rows
     # directly instead of a corpus-sized join (same review finding)
     hb = banded.withColumn("half", half_of(F.col("doc_id")))

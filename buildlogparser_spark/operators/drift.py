@@ -94,8 +94,7 @@ def psi_value(ref: dict[str, int], cur: dict[str, int]) -> float:
     return r(total, 6)
 
 
-def corpus_drift(documents: DataFrame,
-                 snapshot_key: str | None = None) -> DataFrame:
+def corpus_drift(documents: DataFrame) -> DataFrame:
     """(dim, bin, ref_n, cur_n, ref_share, cur_share, psi_term, psi_total)
     for dim ∈ {lang, source} over the two md5(doc_id) snapshot halves.
 
@@ -107,7 +106,7 @@ def corpus_drift(documents: DataFrame,
     The |bins|-row ``terms`` aggregate is snapshot-materialized before the
     per-bin/total diamond — without it each branch re-runs the corpus scan
     and hash-agg (plan audit: 2 full scans; the repo-wide diamond-root
-    defense). ``snapshot_key`` memoizes per (session, key); None → one-shot.
+    defense).
     """
     half = (_md5_i64(
         F.concat(F.lit("drift"), F.col("doc_id").cast("string"))) % 2
@@ -136,7 +135,6 @@ def corpus_drift(documents: DataFrame,
             portable_round(q, 6).alias("cur_share"),
             term9.alias("term9"),
         ),
-        key=f"driftterms:{snapshot_key}" if snapshot_key else None,
         n_files=1)
     totals = (
         terms.groupBy("dim")

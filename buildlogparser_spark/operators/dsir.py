@@ -19,7 +19,7 @@ setup without any external data.
 Scale shape (the 100 TB plan):
 * ONE corpus scan builds the hashed per-(doc, bucket) count stream; it is
   the diamond root feeding BOTH distribution fits and the scoring join,
-  so it is snapshot-materialized once per (session, key).
+  so it is snapshot-materialized once per input plan.
 * The two distributions come from a single hash-aggregation over that
   stream (raw total + conditional target total per bucket — map-side
   partial combine); the result is ≤ B rows (B defaults to 1024), so the
@@ -48,18 +48,6 @@ DEFAULT_BUCKETS = 1024
 DEFAULT_TARGET_SQL = "lang = 'en'"
 
 
-def _target_key(target: Column) -> str:
-    """Deterministic fingerprint of a target predicate for snapshot keys:
-    two same-session calls with DIFFERENT target Columns must not share a
-    memoized feature snapshot (is_target is baked into it — the
-    ADVICE-r04 snapshot_key contract, enforced here rather than only
-    documented). str(Column) renders the resolved expression tree, stable
-    within a session."""
-    import hashlib
-
-    return hashlib.md5(str(target).encode()).hexdigest()[:8]
-
-
 def _hashed_feature_counts(documents: DataFrame, n_buckets: int,
                            target: Column) -> DataFrame:
     """(doc_id, is_target, bucket, cnt): per-document hashed unigram+bigram
@@ -83,8 +71,7 @@ def _hashed_feature_counts(documents: DataFrame, n_buckets: int,
 
 
 def dsir_weights(documents: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                 target: Column | None = None,
-                 snapshot_key: str | None = None) -> DataFrame:
+                 target: Column | None = None) -> DataFrame:
     """(doc_id, n_feats, log_weight): DSIR importance log-weight per
     document under hashed unigram+bigram features. ``target`` is the
     boolean Column selecting the target sub-corpus (default lang='en';
@@ -92,13 +79,9 @@ def dsir_weights(documents: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
     nothing to weight, never dropped silently."""
     if target is None:
         target = F.col("lang") == "en"
-    fs = _hashed_feature_counts(documents, n_buckets, target)
-    if snapshot_key is not None:
-        from ..materialize import materialize
+    from ..materialize import materialize
 
-        fs = materialize(
-            fs,
-            key=f"dsirfeat:{snapshot_key}:{n_buckets}:{_target_key(target)}")
+    fs = materialize(_hashed_feature_counts(documents, n_buckets, target))
 
     # one hash-agg fits BOTH distributions: raw total and target total
     # per bucket (is_target is constant per doc, so summing the flagged

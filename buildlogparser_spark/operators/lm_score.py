@@ -15,7 +15,7 @@ the cross-entropy in bits per bigram, ``h_bits = -Σ log2 P / n_bigrams``
 Scale shape (the 100 TB plan):
 * ONE corpus scan produces the positional bigram stream; it is the diamond
   root feeding the context counts, the pair counts AND the scoring join, so
-  it is snapshot-materialized once per (session, key) — the production
+  it is snapshot-materialized once per input plan — the production
   pattern is a materialized bigram table.
 * The model is two hash-aggregations over that stream (map-side partial
   combine); both outputs are vocabulary-sized (≪ corpus).
@@ -59,16 +59,13 @@ def _bigram_stream(documents: DataFrame) -> DataFrame:
     )
 
 
-def bigram_lm_score(documents: DataFrame,
-                    snapshot_key: str | None = None) -> DataFrame:
+def bigram_lm_score(documents: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, h_bits): add-one bigram LM cross-entropy per
     document, trained on ``documents`` itself. Docs with fewer than two
     tokens score (0, 0.0) — nothing to model, never dropped silently."""
     from ..materialize import materialize
 
-    bg = _bigram_stream(documents)
-    if snapshot_key is not None:
-        bg = materialize(bg, key=f"bigrams:{snapshot_key}")
+    bg = materialize(_bigram_stream(documents))
 
     pair_counts = bg.groupBy("bg").agg(F.count("*").alias("c12"))
     ctx_counts = bg.groupBy("w1").agg(F.count("*").alias("c1"))
@@ -149,8 +146,7 @@ FROM {table} d LEFT JOIN per_doc p ON d.doc_id = p.s_doc_id
 """
 
 
-def ccnet_buckets(documents: DataFrame,
-                  snapshot_key: str | None = None) -> DataFrame:
+def ccnet_buckets(documents: DataFrame) -> DataFrame:
     """(doc_id, lang_pred, h_bits, bucket): CCNet's head/middle/tail
     selection (Wenzek et al. 2020) — per predicted language, split the
     corpus into perplexity terciles: the lowest-cross-entropy third is
@@ -180,15 +176,12 @@ def ccnet_buckets(documents: DataFrame,
     from ..materialize import materialize
     from .textstats import lang_id
 
-    scored = (
-        bigram_lm_score(documents, snapshot_key=snapshot_key)
-        .join(lang_id(documents).select("doc_id", "lang_pred"), "doc_id")
-    )
     # diamond root: consumed by the histogram AND the final bucket select —
     # snapshot it so the LM-scoring joins run once, not once per consumer
     # (the DuckDB twin's `scored AS MATERIALIZED` is the same statement)
-    if snapshot_key is not None:
-        scored = materialize(scored, key=f"ccnet-scored:{snapshot_key}")
+    scored = materialize(
+        bigram_lm_score(documents)
+        .join(lang_id(documents).select("doc_id", "lang_pred"), "doc_id"))
     hist = (
         scored.filter(F.col("n_bigrams") > 0)
         .groupBy("lang_pred", "h_bits").agg(F.count("*").alias("c"))

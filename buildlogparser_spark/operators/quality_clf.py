@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..rounding import portable_round, portable_round_sql
 from .dedup import _md5_i64, _md5_i64_sql
 from .dsir import (
-    DEFAULT_BUCKETS, DEFAULT_TARGET_SQL, _hashed_feature_counts, _target_key)
+    DEFAULT_BUCKETS, DEFAULT_TARGET_SQL, _hashed_feature_counts)
 
 
 def _sigmoid(m: Column) -> Column:
@@ -52,8 +52,7 @@ def _sigmoid(m: Column) -> Column:
         F.lit(1.0) / (F.lit(1.0) + F.exp(-portable_round(m, 9))), 9)
 
 
-def _bin_feats(documents: DataFrame, n_buckets: int, target: Column,
-               snapshot_key: str | None) -> DataFrame:
+def _bin_feats(documents: DataFrame, n_buckets: int, target: Column) -> DataFrame:
     """(doc_id, y, bucket, x): L2-NORMALIZED binary feature presence
     (x = 1/sqrt(buckets hit by the doc)) with the 0/1 label (NULL target
     counts as 0, mirroring DSIR). The normalization is load-bearing for
@@ -63,22 +62,17 @@ def _bin_feats(documents: DataFrame, n_buckets: int, target: Column,
     tf it is lr/doc_len² ≈ 1e-6 — measured as no learning at all. Unit-L2
     features make the per-doc margin step exactly lr-scaled, stable for
     any lr ≲ 4."""
+    from ..materialize import materialize
+
     fs = _hashed_feature_counts(documents, n_buckets, target)
     h = fs.groupBy("doc_id").agg(F.count("*").alias("h"))
-    feats = (fs.join(h, "doc_id")
-             .select(
-                 "doc_id",
-                 F.when(F.col("is_target"), F.lit(1.0)).otherwise(0.0)
-                 .alias("y"),
-                 "bucket",
-                 (F.lit(1.0) / F.sqrt(F.col("h").cast("double"))).alias("x")))
-    if snapshot_key is not None:
-        from ..materialize import materialize
-
-        feats = materialize(
-            feats,
-            key=f"lrfeat:{snapshot_key}:{n_buckets}:{_target_key(target)}")
-    return feats
+    return materialize(
+        fs.join(h, "doc_id")
+        .select("doc_id",
+                F.when(F.col("is_target"), F.lit(1.0)).otherwise(0.0)
+                .alias("y"),
+                "bucket",
+                (F.lit(1.0) / F.sqrt(F.col("h").cast("double"))).alias("x")))
 
 
 def _margins(feats: DataFrame, w: DataFrame, bias: DataFrame) -> DataFrame:
@@ -148,15 +142,14 @@ def _lr_iter(samp: DataFrame, w: DataFrame, bias: DataFrame, lr: float,
 def quality_classifier(documents: DataFrame,
                        n_buckets: int = DEFAULT_BUCKETS,
                        target: Column | None = None, lr: float = 1.0,
-                       n_iters: int = 5, sample_mod: int = 1,
-                       snapshot_key: str | None = None) -> DataFrame:
+                       n_iters: int = 5, sample_mod: int = 1) -> DataFrame:
     """(doc_id, n_feats, quality_prob): logistic quality score per doc
     under the trained classifier. Docs with no tokens score by the bias
     alone (they have no evidence either way, never dropped silently)."""
     if target is None:
         target = F.col("lang") == "en"
     spark = documents.sparkSession
-    feats = _bin_feats(documents, n_buckets, target, snapshot_key)
+    feats = _bin_feats(documents, n_buckets, target)
     samp = feats.filter(
         F.pmod(_md5_i64(F.col("doc_id").cast("string")),
                F.lit(sample_mod)) == 0)
@@ -166,17 +159,15 @@ def quality_classifier(documents: DataFrame,
     bias = spark.range(1).select(F.lit(1).alias("k"), F.lit(0.0).alias("b"))
     from ..materialize import materialize
 
-    wkey = (f"lrw:{snapshot_key}:{n_buckets}:{lr}:{sample_mod}:"
-            f"{_target_key(target)}" if snapshot_key else None)
-    for i in range(n_iters):
+    for _ in range(n_iters):
         w, bias = _lr_iter(samp, w, bias, lr, n_samp)
         # ALWAYS flatten the iteration chain through a tiny
         # (≤ n_buckets)-row snapshot: the lazy alternative embeds the
         # previous iteration's plan twice per step (residual feeds two
         # gradients), growing the plan tree exponentially in n_iters —
         # measured as a driver-heap OOM at n_iters=5 before this.
-        w = materialize(w, key=f"{wkey}:{i}" if wkey else None)
-        bias = materialize(bias, key=f"{wkey}:b{i}" if wkey else None)
+        w = materialize(w)
+        bias = materialize(bias)
 
     scored = (_margins(feats, w, bias)
               .select("doc_id", portable_round(F.col("p"), 6)

@@ -205,8 +205,7 @@ WHERE role = 'assistant'
 """
 
 
-def preference_pairs(transcripts: DataFrame,
-                     snapshot_key: str | None = None) -> DataFrame:
+def preference_pairs(transcripts: DataFrame) -> DataFrame:
     """(prompt_key, prompt, chosen, rejected, chosen_score, rejected_score,
     margin, n_candidates): DPO-style preference pairs constructed from
     repeated prompts.
@@ -237,8 +236,7 @@ def preference_pairs(transcripts: DataFrame,
     candidate set is snapshot-materialized before the best/worst diamond —
     without it Spark re-derives the whole sft_pairs window chain once per
     branch (plan audit: 2 full transcript scans; the repo-wide
-    diamond-root defense, see curate/ccnet). ``snapshot_key`` memoizes the
-    snapshot per (session, key); None → one-shot temp snapshot.
+    diamond-root defense, see curate/ccnet).
 
     Reference analog: none (the reference is a diagnostics parser); this is
     a driver-brief training-data op.
@@ -257,8 +255,7 @@ def preference_pairs(transcripts: DataFrame,
 
     scored = materialize(
         cand.withColumn(
-            "score", portable_round(quality_expr(F.col("response")), 4)),
-        key=f"prefpairs-scored:{snapshot_key}" if snapshot_key else None)
+            "score", portable_round(quality_expr(F.col("response")), 4)))
     wp = Window.partitionBy("prompt_key")
     best_w = wp.orderBy(F.desc("score"), F.asc("response"))
     worst_w = wp.orderBy(F.asc("score"), F.desc("response"))

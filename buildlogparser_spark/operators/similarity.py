@@ -125,16 +125,15 @@ def lsh_bucket(unit: Column, planes: list[list[float]]) -> Column:
 
 
 def lsh_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-             n_planes: int = 8, n_tables: int = 4, dim: int = 64,
-             snapshot_key: str | None = None) -> DataFrame:
+             n_planes: int = 8, n_tables: int = 4, dim: int = 64) -> DataFrame:
     """Banded random-hyperplane ANN: same output schema as cosine_topk but
     only candidates sharing an LSH bucket (any table) are scored. May miss
     true neighbors (approximate); recall measured in tests vs cosine_topk.
 
-    ``snapshot_key`` memoizes the banded corpus (unit vectors + bucket ids
-    per table) to a keyed parquet snapshot, like
-    :func:`embedding_near_dup_lsh` — repeated top-k calls against the same
-    corpus then skip the normalize+hash recompute and scan the snapshot."""
+    The banded corpus (unit vectors + bucket ids per table) is a parquet
+    snapshot, like :func:`embedding_near_dup_lsh` — repeated top-k calls
+    against the same corpus then skip the normalize+hash recompute and
+    scan the snapshot."""
     base = with_unit_vectors(embeddings).select("vec_id", "unit")
     tables = []
     for t in range(n_tables):
@@ -145,11 +144,9 @@ def lsh_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     banded = tables[0]
     for t in tables[1:]:
         banded = banded.unionByName(t)
-    if snapshot_key is not None:
-        from ..materialize import materialize
+    from ..materialize import materialize
 
-        banded = materialize(
-            banded, key=f"annband:{snapshot_key}:{n_planes}:{n_tables}:{dim}")
+    banded = materialize(banded)
 
     queries = banded.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit"),
@@ -231,8 +228,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.4) -> DataFra
 
 def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.4,
                            n_planes: int = 4, n_tables: int = 8,
-                           dim: int = 64,
-                           snapshot_key: str | None = None) -> DataFrame:
+                           dim: int = 64) -> DataFrame:
     """Scale path: random-hyperplane LSH blocks candidates (same-bucket in
     any table), exact cosine verifies — never an all-pairs join.
     Approximate: may miss pairs whose vectors disagree in every table."""
@@ -246,9 +242,7 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.4,
         banded = part if banded is None else banded.unionByName(part)
     from ..materialize import materialize
 
-    key = (f"embnd-banded:{snapshot_key}:{n_planes}:{n_tables}:{dim}"
-           if snapshot_key else None)
-    banded = materialize(banded, key=key)  # self-join computes each side otherwise
+    banded = materialize(banded)  # self-join computes each side otherwise
     l, r = banded.alias("l"), banded.alias("r")
     cands = (
         l.join(r, [F.col("l.tbl") == F.col("r.tbl"),
@@ -420,8 +414,8 @@ def _forgy_seeds(sample: DataFrame, n_centroids: int, dim: int) -> DataFrame:
 
 
 def kmeans_centroids(embeddings: DataFrame, n_centroids: int = 16,
-                     dim: int = 64, n_iters: int = 3, sample_mod: int = 1,
-                     snapshot_key: str | None = None) -> DataFrame:
+                     dim: int = 64, n_iters: int = 3,
+                     sample_mod: int = 1) -> DataFrame:
     """(cid, cvec): coarse centroids trained by ``n_iters`` fixed Lloyd
     iterations from deterministic Forgy seeds (:func:`_forgy_seeds`), on
     the md5(vec_id)%sample_mod == 0 training sample. At 10^12 rows callers
@@ -436,30 +430,27 @@ def kmeans_centroids(embeddings: DataFrame, n_centroids: int = 16,
         sample = sample.filter(keep % sample_mod == 0)
     from ..materialize import materialize
 
-    skey = (f"kmsample:{snapshot_key}:{sample_mod}:{dim}"
-            if snapshot_key else None)
-    sample = materialize(sample, key=skey)  # each iteration rescans it
-    cents = _forgy_seeds(sample, n_centroids, dim)
+    sample = materialize(sample)  # each iteration rescans it
+    # one tiny (n_centroids-row) snapshot per step: each iteration reads
+    # the previous centroids three times, so a lazy chain grows as
+    # 3^n_iters plan copies (the quality_clf._lr_iter precedent)
+    cents = materialize(_forgy_seeds(sample, n_centroids, dim))
     for _ in range(n_iters):
-        cents = _kmeans_iter(sample, cents, dim)
-    ckey = (f"kmcents:{snapshot_key}:{n_centroids}:{dim}:{n_iters}:{sample_mod}"
-            if snapshot_key else None)
-    return materialize(cents, key=ckey)  # consumed by assignment AND probes
+        cents = materialize(_kmeans_iter(sample, cents, dim))
+    return cents  # consumed by assignment AND probes
 
 
 def _cents_df(embeddings: DataFrame, n_centroids: int, dim: int,
-              trained: bool, n_iters: int, sample_mod: int,
-              snapshot_key: str | None) -> DataFrame:
+              trained: bool, n_iters: int, sample_mod: int) -> DataFrame:
     if trained:
         return kmeans_centroids(embeddings, n_centroids, dim, n_iters,
-                                sample_mod, snapshot_key)
+                                sample_mod)
     return _seed_cents_df(embeddings.sparkSession, n_centroids, dim)
 
 
 def ivf_assign(embeddings: DataFrame, n_centroids: int | None = 16,
                dim: int = 64, trained: bool = True, n_iters: int = 3,
-               sample_mod: int = 1,
-               snapshot_key: str | None = None) -> DataFrame:
+               sample_mod: int = 1) -> DataFrame:
     """(vec_id, cluster, cos_sim): nearest coarse centroid per vector.
 
     The centroid table (trained by default, see :func:`kmeans_centroids`)
@@ -473,7 +464,7 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int | None = 16,
         n_centroids = _auto_n_centroids(embeddings)
     base = with_unit_vectors(embeddings).select("vec_id", "unit")
     crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod, snapshot_key))
+                                n_iters, sample_mod))
     best = _best_cent(F.col("cents"), F.col("unit"))
     return (base.join(F.broadcast(crow), F.lit(True))
             .select("vec_id", "unit", best.alias("best"))
@@ -484,8 +475,8 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int | None = 16,
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
              n_centroids: int | None = 16, nprobe: int = 4, dim: int = 64,
-             trained: bool = True, n_iters: int = 3, sample_mod: int = 1,
-             snapshot_key: str | None = None) -> DataFrame:
+             trained: bool = True, n_iters: int = 3,
+             sample_mod: int = 1) -> DataFrame:
     """IVF ANN top-k: same output schema as cosine_topk, but each query is
     scored only against the ``nprobe`` centroid lists nearest to it.
     Approximate — recall vs cosine_topk asserted in pytest (trained ≥
@@ -499,10 +490,10 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     if n_centroids is None:
         n_centroids = _auto_n_centroids(embeddings)
     base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, snapshot_key,
-                              trained, n_iters, sample_mod)
+    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
+                              n_iters, sample_mod)
     crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod, snapshot_key))
+                                n_iters, sample_mod))
 
     queries = _probe_queries(base, crow, query_ids, nprobe)
     cands = (
@@ -546,37 +537,24 @@ def _probe_queries(base: DataFrame, crow: DataFrame, query_ids: list[int],
 
 
 def _assigned_corpus(embeddings: DataFrame, n_centroids: int, dim: int,
-                     snapshot_key: str | None, trained: bool = True,
-                     n_iters: int = 3, sample_mod: int = 1) -> DataFrame:
+                     trained: bool = True, n_iters: int = 3,
+                     sample_mod: int = 1) -> DataFrame:
     """(vec_id, unit, cluster): unit vectors with their IVF assignment,
-    snapshot-materialized under the shared ``ivf:`` key — ivf_topk and
-    semantic_dedup consume the IDENTICAL relation, so they share one
-    snapshot instead of deriving (and writing) it twice.
+    snapshot-materialized — ivf_topk and semantic_dedup consume the
+    IDENTICAL relation, so they share one snapshot instead of deriving
+    (and writing) it twice."""
+    from ..materialize import materialize
 
-    CONTRACT (ADVICE r04): ``snapshot_key`` must uniquely identify the
-    input relation (the graded callers key by sf_dir — one embeddings
-    table per key). The key encodes every quantizer parameter, but NOT a
-    fingerprint of the rows themselves: two different DataFrames passed
-    under the same key would silently share one snapshot."""
     assigned = ivf_assign(embeddings, n_centroids, dim, trained, n_iters,
-                          sample_mod, snapshot_key).select("vec_id", "cluster")
-    corpus = (with_unit_vectors(embeddings).select("vec_id", "unit")
-              .join(assigned, "vec_id"))
-    if snapshot_key is not None:
-        from ..materialize import materialize
-
-        corpus = materialize(
-            corpus,
-            key=(f"ivf:{snapshot_key}:{n_centroids}:{dim}:"
-                 f"{int(trained)}:{n_iters}:{sample_mod}"))
-    return corpus
+                          sample_mod).select("vec_id", "cluster")
+    return materialize(with_unit_vectors(embeddings).select("vec_id", "unit")
+                       .join(assigned, "vec_id"))
 
 
 def semantic_dedup(embeddings: DataFrame, threshold: float = 0.4,
                    n_centroids: int | None = 16, dim: int = 64,
                    trained: bool = True, n_iters: int = 3,
-                   sample_mod: int = 1,
-                   snapshot_key: str | None = None) -> DataFrame:
+                   sample_mod: int = 1) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", public arXiv 2303.09540):
     embedding-space near-duplicates are detected WITHIN each coarse IVF
@@ -598,8 +576,8 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.4,
     paper-faithful alternative when needed."""
     if n_centroids is None:
         n_centroids = _auto_n_centroids(embeddings)
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, snapshot_key,
-                              trained, n_iters, sample_mod)
+    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
+                              n_iters, sample_mod)
     l, r = corpus.alias("l"), corpus.alias("r")
     sim = _dot(F.col("l.unit"), F.col("r.unit"))
     dropped = (
@@ -621,8 +599,7 @@ def semantic_dedup_representative(embeddings: DataFrame,
                                   threshold: float = 0.4,
                                   n_centroids: int | None = 16, dim: int = 64,
                                   trained: bool = True, n_iters: int = 3,
-                                  sample_mod: int = 1,
-                                  snapshot_key: str | None = None) -> DataFrame:
+                                  sample_mod: int = 1) -> DataFrame:
     """SemDeDup with the PAPER-FAITHFUL keep policy (closes the disclosed
     over-drop of :func:`semantic_dedup`, ADVICE r04 #1): one representative
     per connected ε-neighborhood — the similarity pairs within each IVF
@@ -642,8 +619,8 @@ def semantic_dedup_representative(embeddings: DataFrame,
 
     if n_centroids is None:
         n_centroids = _auto_n_centroids(embeddings)
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, snapshot_key,
-                              trained, n_iters, sample_mod)
+    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
+                              n_iters, sample_mod)
     l, r = corpus.alias("l"), corpus.alias("r")
     sim = _dot(F.col("l.unit"), F.col("r.unit"))
     pairs = (
@@ -1008,8 +985,8 @@ def _pq_iter(subs: DataFrame, cents: DataFrame, sub_d: int) -> DataFrame:
 
 
 def pq_codebooks(embeddings: DataFrame, m: int = 8, k: int = 16,
-                 dim: int = 64, n_iters: int = 2, sample_mod: int = 1,
-                 snapshot_key: str | None = None) -> DataFrame:
+                 dim: int = 64, n_iters: int = 2,
+                 sample_mod: int = 1) -> DataFrame:
     """(sub, cid, cvec[dim/m]): per-subspace PQ codebooks — deterministic
     Forgy seeds (md5-ranked sample subvectors per subspace) + ``n_iters``
     Lloyd rounds in one (sub, cid)-keyed chain. ``sample_mod`` bounds
@@ -1022,34 +999,28 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8, k: int = 16,
         subs = subs.filter(keep % sample_mod == 0)
     from ..materialize import materialize
 
-    skey = (f"pqsample:{snapshot_key}:{m}:{sample_mod}:{dim}"
-            if snapshot_key else None)
-    subs = materialize(subs, key=skey)
+    subs = materialize(subs)
     rank = Window.partitionBy("sub").orderBy(
         _md5_i64(F.concat(F.lit("pqseed"), F.col("sub").cast("string"),
                           F.lit(":"), F.col("vec_id").cast("string"))),
         "vec_id")
-    cents = (subs.withColumn("rn", F.row_number().over(rank))
-             .filter(F.col("rn") <= k)
-             .select("sub", (F.col("rn") - 1).cast("int").alias("cid"),
-                     F.col("svec").alias("cvec")))
-    for _ in range(n_iters):
-        cents = _pq_iter(subs, cents, sub_d)
-    ckey = (f"pqcents:{snapshot_key}:{m}:{k}:{dim}:{n_iters}:{sample_mod}"
-            if snapshot_key else None)
-    return materialize(cents, key=ckey)
+    cents = materialize(subs.withColumn("rn", F.row_number().over(rank))
+                        .filter(F.col("rn") <= k)
+                        .select("sub", (F.col("rn") - 1).cast("int").alias("cid"),
+                                F.col("svec").alias("cvec")))
+    for _ in range(n_iters):  # per-step snapshots, as in kmeans_centroids
+        cents = materialize(_pq_iter(subs, cents, sub_d))
+    return cents
 
 
 def pq_encode(embeddings: DataFrame, m: int = 8, k: int = 16, dim: int = 64,
-              n_iters: int = 2, sample_mod: int = 1,
-              snapshot_key: str | None = None) -> DataFrame:
+              n_iters: int = 2, sample_mod: int = 1) -> DataFrame:
     """(vec_id, sub, code): each vector's per-subspace nearest-codebook
     assignment — the PQ compressed representation, flat (one row per
     subspace: arrays stringify differently across engines, the flat form
     value-hashes identically; production packs the m codes into bytes).
     One pass over the corpus; the codebook rides a 1-row broadcast."""
-    cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod,
-                         snapshot_key)
+    cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod)
     crow = _pq_cents_row(cents)
     best = F.array_min(F.transform(
         F.filter(F.col("cb"), lambda c: c["sub"] == F.col("sub")),
@@ -1062,7 +1033,7 @@ def pq_encode(embeddings: DataFrame, m: int = 8, k: int = 16, dim: int = 64,
 
 def pq_topk(embeddings: DataFrame, query_ids: list[int], k_results: int = 5,
             m: int = 8, k: int = 16, dim: int = 64, n_iters: int = 2,
-            sample_mod: int = 1, snapshot_key: str | None = None) -> DataFrame:
+            sample_mod: int = 1) -> DataFrame:
     """(query_id, neighbor_id, adc_sim): approximate top-k by ADC — the
     query's EXACT unit subvectors dotted against each candidate's
     RECONSTRUCTED subvectors (codebook rows keyed by the candidate's
@@ -1074,9 +1045,8 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k_results: int = 5,
     only) — here the full codes table is scanned so the oracle covers the
     whole scoring path."""
     sub_d = dim // m
-    codes = pq_encode(embeddings, m, k, dim, n_iters, sample_mod, snapshot_key)
-    cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod,
-                         snapshot_key)
+    codes = pq_encode(embeddings, m, k, dim, n_iters, sample_mod)
+    cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod)
     queries = (with_unit_vectors(embeddings)
                .filter(F.col("vec_id").isin(query_ids))
                .select(F.col("vec_id").alias("query_id"), F.col("unit")))
@@ -1254,8 +1224,7 @@ def ivfpq_topk(embeddings: DataFrame, query_ids: list[int],
                k_results: int = 5, n_centroids: int | None = 16,
                nprobe: int = 4, m: int = 8, k: int = 16, dim: int = 64,
                trained: bool = True, n_iters: int = 3, pq_iters: int = 2,
-               sample_mod: int = 1,
-               snapshot_key: str | None = None) -> DataFrame:
+               sample_mod: int = 1) -> DataFrame:
     """IVF-PQ — the production web-scale ANN architecture (Jégou et al.
     2011 §V; what FAISS's IVFPQ index computes): the trained IVF coarse
     quantizer restricts each query to its ``nprobe`` nearest lists, and
@@ -1271,20 +1240,18 @@ def ivfpq_topk(embeddings: DataFrame, query_ids: list[int],
         n_centroids = _auto_n_centroids(embeddings)
     sub_d = dim // m
     base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, snapshot_key,
-                              trained, n_iters, sample_mod)
+    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
+                              n_iters, sample_mod)
     crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod, snapshot_key))
+                                n_iters, sample_mod))
     queries = _probe_queries(base, crow, query_ids, nprobe)
     cands = (
         corpus.select("vec_id", "cluster")
         .join(F.broadcast(queries), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "q_unit"))
-    codes = pq_encode(embeddings, m, k, dim, pq_iters, sample_mod,
-                      snapshot_key)
-    cents = pq_codebooks(embeddings, m, k, dim, pq_iters, sample_mod,
-                         snapshot_key)
+    codes = pq_encode(embeddings, m, k, dim, pq_iters, sample_mod)
+    cents = pq_codebooks(embeddings, m, k, dim, pq_iters, sample_mod)
     cvecs = (codes.join(F.broadcast(cents),
                         (codes["sub"] == cents["sub"])
                         & (codes["code"] == cents["cid"]))

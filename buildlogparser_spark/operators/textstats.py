@@ -283,8 +283,7 @@ GROUP BY l.lang_pred
 """
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3,
-                    snapshot_key: str | None = None) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, term, tf, doc_freq, score, rank): the top-``k`` tf-idf
     keywords per document — the classic retrieval/indexing signal (Salton &
     Buckley 1988; the smoothed idf is scikit-learn's public
@@ -306,20 +305,17 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3,
     NULL, exploding/unnesting a NULL list emits nothing) but still counts
     toward N — disclosed: N is the table's row count, not the non-empty
     count."""
+    from ..materialize import materialize
     from ..rounding import portable_round
 
     terms = documents.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    if snapshot_key is not None:
-        # tf feeds BOTH the per-term df agg and the score join: without a
-        # snapshot Catalyst duplicates the scan+explode+agg subtree (the
-        # formatted plan showed two full parquet scans) — at corpus scale
-        # that doubles the dominant explode. Same diamond-root defense as
-        # curate.py / the banded LSH intermediates.
-        from ..materialize import materialize
-
-        tf = materialize(tf, key=f"tfidf-tf:{snapshot_key}")
+    # tf feeds BOTH the per-term df agg and the score join: without a
+    # snapshot Catalyst duplicates the scan+explode+agg subtree (the
+    # formatted plan showed two full parquet scans) — at corpus scale
+    # that doubles the dominant explode. Same diamond-root defense as
+    # curate.py / the banded LSH intermediates.
+    tf = materialize(terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     df_ = tf.groupBy("term").agg(F.count("*").alias("doc_freq"))
     n_docs = documents.agg(
         F.count("*").alias("n_docs")).withColumn("_k", F.lit(1))

@@ -100,20 +100,17 @@ FROM sel WHERE pos >= least({w}, n)
 
 def winnow_match_pairs(documents: DataFrame, k: int = 5, w: int = 4,
                        min_shared: int = 2, max_df: int = 50,
-                       text_col: str = "text",
-                       snapshot_key: str | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """(doc_a, doc_b, n_shared): MOSS-style candidate match pairs — document
     pairs sharing ≥ ``min_shared`` winnowed fingerprint VALUES. Fingerprints
     appearing in more than ``max_df`` documents are boilerplate and dropped
     before the join (the hot-key guard); position is ignored for matching,
     as in the paper. The fingerprint diamond (df-count + self-join) is
-    snapshot-materialized when ``snapshot_key`` identifies the input."""
-    fps = (winnow_fingerprints(documents, k, w, text_col)
-           .select("doc_id", "fp").distinct())
-    if snapshot_key is not None:
-        from ..materialize import materialize
+    snapshot-materialized."""
+    from ..materialize import materialize
 
-        fps = materialize(fps, key=f"winnow:{snapshot_key}:{k}:{w}")
+    fps = materialize(winnow_fingerprints(documents, k, w, text_col)
+                      .select("doc_id", "fp").distinct())
     rare = (fps.groupBy("fp").agg(F.count("*").alias("df"))
             .filter((F.col("df") >= 2) & (F.col("df") <= max_df))
             .select("fp"))

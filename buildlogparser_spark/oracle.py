@@ -20,8 +20,6 @@ Dispatch order per line (BuildLogParser.swift:325-364):
 
 from __future__ import annotations
 
-from copy import deepcopy
-
 from .rules.table import Diagnostic, Rule
 
 
@@ -102,19 +100,3 @@ def parse_lines_with_turns(
         oracle.consume_line(line, t)
     diags = oracle.finish()
     return list(zip(oracle.out_line_nos, diags))
-
-
-def parse_conversations(
-    convs: dict[str, list[str]], rules_factory,
-) -> dict[str, list[Diagnostic]]:
-    """Parse many conversations independently (a diagnostic never spans
-    conversations — FIXTURES.md §1). ``rules_factory`` builds a fresh stack
-    per conversation so no state leaks."""
-    out: dict[str, list[Diagnostic]] = {}
-    for conv_id, lines in convs.items():
-        out[conv_id] = parse_lines(list(lines), rules_factory())
-    return out
-
-
-def diagnostics_to_rows(diags: list[Diagnostic]) -> list[dict]:
-    return [deepcopy(d.__dict__) for d in diags]

@@ -172,7 +172,8 @@ def load_transcripts(spark: SparkSession, sf_dir: str, cache: bool = True) -> Da
     """Load the derived transcript table for an sf dir.
 
     ``cache=True`` (default) materializes the derived table to a temp
-    parquet snapshot (keyed per session + sf_dir) and returns a scan of it.
+    parquet snapshot (reused while the events files are unchanged) and
+    returns a scan of it.
     Materializing matters beyond convenience: the template CASE in
     :func:`derive_transcripts` is an expensive projection, and Catalyst's
     filter pushdown inlines it into every downstream predicate/extract
@@ -196,7 +197,7 @@ def load_transcripts(spark: SparkSession, sf_dir: str, cache: bool = True) -> Da
     # downstream scan pay 200 tiny-task overheads at small sf. File count ==
     # scan parallelism at re-read time.
     n = max(spark.sparkContext.defaultParallelism, 8)
-    return materialize(df, key=f"transcripts:{sf_dir}", n_files=n)
+    return materialize(df, n_files=n)
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +281,7 @@ def load_aux_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .materialize import materialize
 
     n = max(spark.sparkContext.defaultParallelism, 8)
-    return materialize(df, key=f"aux_transcripts:{sf_dir}", n_files=n)
+    return materialize(df, n_files=n)
 
 
 AUX_TRANSCRIPT_SQL = """

@@ -56,7 +56,7 @@ def test_trained_centroids_match_duckdb(spark, emb, duck_smoke):
     from Spark equals the DuckDB twin exactly (== on Python floats is
     bit-compare here — both are float64 round-trips)."""
     got = {r.cid: list(r.cvec)
-           for r in sim.kmeans_centroids(emb, 16, snapshot_key="kmtest").collect()}
+           for r in sim.kmeans_centroids(emb, 16).collect()}
     want = {int(r.cid): list(r.cvec) for _, r in duck_df(
         duck_smoke, sim.kmeans_centroids_sql(16)).iterrows()}
     assert set(got) == set(want) == set(range(16))
@@ -67,7 +67,7 @@ def test_trained_centroids_match_duckdb(spark, emb, duck_smoke):
 def test_trained_centroids_move_from_seeds(emb):
     seeds = sim._ivf_centroids(16, 64)
     trained = {r.cid: list(r.cvec)
-               for r in sim.kmeans_centroids(emb, 16, snapshot_key="kmtest").collect()}
+               for r in sim.kmeans_centroids(emb, 16).collect()}
     moved = sum(1 for cid, s in enumerate(seeds) if trained[cid] != s)
     assert moved >= 8, f"only {moved}/16 centroids moved — training inert?"
 
@@ -151,7 +151,7 @@ def test_auto_n_centroids_scales(spark, emb):
 def test_sampled_training_differs_but_assigns_everywhere(spark, emb, duck_smoke):
     """sample_mod > 1 trains on a strict subset (bounded cost at corpus
     scale) yet still assigns the FULL corpus, and stays oracle-exact."""
-    full = sim.ivf_assign(emb, 8, snapshot_key="kmtest", sample_mod=4)
+    full = sim.ivf_assign(emb, 8, sample_mod=4)
     rows = full.collect()
     assert len(rows) == emb.count()
     import pandas as pd

@@ -17,7 +17,7 @@ def emb(spark):
 
 def test_pq_codebooks_match_duckdb(spark, emb, duck_smoke):
     got = {(r.sub, r.cid): list(r.cvec)
-           for r in sim.pq_codebooks(emb, snapshot_key="pqtest").collect()}
+           for r in sim.pq_codebooks(emb).collect()}
     want = {(int(r["sub"]), int(r["cid"])): list(r["cvec"])
             for _, r in duck_df(duck_smoke, sim.pq_codebooks_sql()).iterrows()}
     assert set(got) == set(want)
@@ -29,7 +29,7 @@ def test_pq_codebooks_match_duckdb(spark, emb, duck_smoke):
 
 
 def test_pq_encode_matches_duckdb(spark, emb, duck_smoke):
-    codes = sim.pq_encode(emb, snapshot_key="pqtest")
+    codes = sim.pq_encode(emb)
     assert_frames_match(codes, duck_df(duck_smoke, sim.pq_encode_sql()),
                         "pq_encode")
     n_vec = emb.count()
@@ -39,7 +39,7 @@ def test_pq_encode_matches_duckdb(spark, emb, duck_smoke):
 
 def test_pq_topk_matches_duckdb_and_recalls(spark, emb, duck_smoke):
     qids = [1, 2, 3, 4, 5]
-    topk = sim.pq_topk(emb, qids, 5, snapshot_key="pqtest")
+    topk = sim.pq_topk(emb, qids, 5)
     assert_frames_match(topk, duck_df(duck_smoke, sim.pq_topk_sql(qids, 5)),
                         "pq_topk")
     exact = {(r.query_id, r.neighbor_id)
@@ -55,7 +55,7 @@ def test_pq_topk_matches_duckdb_and_recalls(spark, emb, duck_smoke):
 def test_pq_sampled_training_encodes_everything(spark, emb, duck_smoke):
     """sample_mod bounds TRAINING only — the full corpus still gets codes,
     and the sampled chain stays oracle-exact."""
-    codes = sim.pq_encode(emb, sample_mod=4, snapshot_key="pqtest")
+    codes = sim.pq_encode(emb, sample_mod=4)
     assert codes.select("vec_id").distinct().count() == emb.count()
     assert_frames_match(
         codes, duck_df(duck_smoke, sim.pq_encode_sql(sample_mod=4)),
@@ -67,7 +67,7 @@ def test_ivfpq_topk_matches_duckdb_and_prunes(spark, emb, duck_smoke):
     reported neighbor lies in a probed list), and recall no worse than
     chance by a wide margin."""
     qids = [1, 2, 3, 4, 5]
-    topk = sim.ivfpq_topk(emb, qids, 5, snapshot_key="pqtest")
+    topk = sim.ivfpq_topk(emb, qids, 5)
     assert_frames_match(
         topk, duck_df(duck_smoke, sim.ivfpq_topk_sql(qids, 5)), "ivfpq_topk")
 
@@ -75,9 +75,9 @@ def test_ivfpq_topk_matches_duckdb_and_prunes(spark, emb, duck_smoke):
     # pruning contract: neighbors come only from probed lists — the IVF
     # stage really restricted the ADC scan (compare with unpruned pq_topk)
     assign = {r.vec_id: r.cluster for r in sim.ivf_assign(
-        emb, 16, snapshot_key="pqtest").collect()}
+        emb, 16).collect()}
     probed: dict[int, set[int]] = {}
-    full = sim.ivfpq_topk(emb, qids, 10_000, nprobe=4, snapshot_key="pqtest")
+    full = sim.ivfpq_topk(emb, qids, 10_000, nprobe=4)
     for r in full.collect():
         probed.setdefault(r.query_id, set()).add(assign[r.neighbor_id])
     assert all(len(cl) <= 4 for cl in probed.values()), probed

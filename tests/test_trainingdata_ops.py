@@ -323,7 +323,7 @@ def test_conversation_near_dups_semantics(spark):
     from buildlogparser_spark.transcripts import load_transcripts
 
     tr = load_transcripts(spark, "/root/testdata/sf0.001")
-    pairs = dd.conversation_near_dups(tr, snapshot_key="t:conv").collect()
+    pairs = dd.conversation_near_dups(tr).collect()
     assert len(pairs) > 0
     convs = {r.conv_id for r in tr.select("conv_id").distinct().collect()}
     for p in pairs:
