@@ -301,11 +301,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "summary_text": lambda spark, sf: rnd.summary_text(
             _diags(spark, sf), verbose=True),
         # --- stateful / multi-line assembly (SURVEY.md §2.2, oracled) -------
-        # R1 compile blocks (windowed default; the chunked twin is folded
-        # with the same oracle SQL), R8 gutter blocks over the aux stream,
-        # R7 XCTest failure blocks with the state-dependent start closed
-        # form — the three hardest multi-line shapes stay graded, the rest
-        # (R2/R3/R6/R9) are folded with the same generic assembler
+        # R1 compile blocks (a small-chunk twin is folded with the same
+        # oracle SQL), R8 gutter blocks over the aux stream, R7 XCTest
+        # failure blocks with the state-dependent start closed form — the
+        # three hardest multi-line shapes stay graded, the rest
+        # (R2/R3/R6/R9) are folded; all seven share one assembler
         "compile_blocks": lambda spark, sf: asm.compile_blocks_flat(
             load_transcripts(spark, sf)),
         "swiftbuild_compile_blocks": lambda spark, sf: asm.swiftbuild_compile_blocks(

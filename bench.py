@@ -38,9 +38,8 @@ from buildlogparser_spark.transcripts import derive_transcripts  # noqa: E402
 from buildlogparser_spark.operators.classify import classify  # noqa: E402
 from buildlogparser_spark.operators import aggregate as agg  # noqa: E402
 from buildlogparser_spark.operators.assemble import (  # noqa: E402
-    assemble_compile_blocks, assemble_compile_blocks_chunked, parse_stateful,
-    parse_stateful_auto, parse_stateful_chunked, swiftbuild_compile_blocks,
-    xctest_blocks)
+    compile_blocks, parse_stateful, parse_stateful_auto, parse_stateful_chunked,
+    swiftbuild_compile_blocks, xctest_blocks)
 from buildlogparser_spark.operators.enrich import enrich  # noqa: E402
 from buildlogparser_spark.operators.route import route_writes  # noqa: E402
 from buildlogparser_spark.operators import (  # noqa: E402
@@ -150,10 +149,9 @@ def main() -> None:
         timed("q5_top_files", lambda: agg.top_files(diags).collect())
         timed("q6_duration_histogram",
               lambda: agg.duration_histogram(transcripts).collect())
+        # key kept from the windowed assembler for round-over-round diffs
         timed("q7_assemble_window",
-              lambda: assemble_compile_blocks(transcripts).count())
-        timed("q7b_assemble_chunked",
-              lambda: assemble_compile_blocks_chunked(transcripts).count())
+              lambda: compile_blocks(transcripts).count())
         timed("q8_parse_stateful",
               lambda: parse_stateful(transcripts, default_stack).count())
         timed("q8b_parse_stateful_chunked",

@@ -7,41 +7,28 @@ Two implementations with different generality/performance trade-offs:
    ``consumeLine`` semantics (BuildLogParser.swift:325-364), via
    ``groupBy(conv_id).applyInPandas`` running the pure-Python state machine
    once per conversation. Arrow-batched, rules compiled once per executor
-   Python worker; no per-row Python calls crossing the JVM boundary. One
-   shuffle on conv_id. Skew note: a single monster conversation serializes
-   into one task — mitigate upstream with
-   :func:`buildlogparser_spark.operators.route.salt_repartition` for the
-   stateless stages; the stateful stage's unit of work is inherently a
-   conversation (reference semantics: a diagnostic never spans
-   conversations).
+   Python worker; no per-row Python calls crossing the JVM boundary.
+   :func:`parse_stateful_chunked` / :func:`parse_stateful_auto` split an
+   oversized conversation into chunks (speculative run + boundary repair).
 
-2. :func:`assemble_compile_blocks` — the SCALE PATH for the dominant shape
-   (compile-error blocks with context/caret/note continuations, i.e. a
-   single ``CompileErrorRule`` — the reference's common-rules configuration):
-   pure window/aggregate formulation, whole-stage codegen end-to-end, no
-   Python. Semantics proven equal to ``ParserOracle([CompileErrorRule()])``
-   by differential tests on adversarial generated logs
-   (tests/test_assemble.py).
+2. :func:`assemble_flagged` — ONE vectorized block assembler for every
+   single-rule multi-line shape the reference can run: R1 compile errors
+   (:func:`compile_blocks`), R2 BUILD FAILED, R3 xcodebuild warnings, R6
+   linker, R7 XCTest, R8 swift-build gutter blocks and R9 module-failed.
+   Each shape supplies three stateless per-line booleans — ``is_start``,
+   ``is_close``, ``is_cont`` — plus a header projection; no Python runs.
+   Semantics proven equal to the single-rule ``ParserOracle`` stack by
+   differential tests on adversarial generated logs (tests/test_assemble.py).
 
-Single-rule CompileErrorRule semantics (derived from consumeLine +
-CompileErrorRule.swift, see rules/table.py):
-
-  per line, with an open block:
-    * terminator (blank / trimmed-prefix SwiftCompile|cd |** BUILD|---)
-      closes the block; the same line may also start a new block;
-    * a start match (regex + int guards) closes and restarts;
-    * ``note:``/caret-prefixed or non-fastFail non-empty lines append to
-      ``related_messages``;
-    * fastFail-true lines that match nothing are *dropped in place* (the
-      block stays open — consumeLine falls through all four branches).
-
-  with no open block, only a start match does anything.
-
-Vectorized formulation: is_start / is_end / is_cont are stateless per-line
-booleans; ``segment = running count of is_start``; a row belongs to the
-block iff no terminator occurred strictly after the block's start row and
-before it. Two windows over (conv_id ordered by turn_idx) + one hash
-aggregate — the shuffle key is conv_id only.
+Vectorized formulation: a row's segment id is the running count of
+``is_start`` up to it; a continuation belongs to its segment's block iff it
+precedes the segment's first non-start ``is_close`` row (consumeLine checks
+isEnd before matchContinuation, and lines matching nothing are dropped with
+the block still open). The running count is a prefix sum over
+(conv_id, chunk = turn_idx // chunk_size): a local window per chunk plus a
+per-conversation sum of per-chunk start counts, so no task ever sorts more
+than ``chunk_size`` rows of one conversation. One hash aggregate per
+segment then takes the header, the first close and the continuations.
 
 Known restriction (documented, tested): a line that BOTH starts with a
 caret/``note:`` after trimming AND matches the full start regex (e.g.
@@ -92,6 +79,17 @@ STATEFUL_SCHEMA = StructType([
 ])
 
 
+def _diag_row(conv: str, turn: int | None, diag) -> dict:
+    return {
+        "conv_id": conv, "start_turn_idx": turn,
+        "file": diag.file, "line": diag.line, "column": diag.column,
+        "severity": diag.severity, "message": diag.message,
+        "related_messages": diag.related_messages, "source": diag.source,
+        "category": diag.category, "raw": diag.raw,
+        "build_target": diag.build_target,
+    }
+
+
 def parse_stateful(
     transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
 ) -> DataFrame:
@@ -109,18 +107,7 @@ def parse_stateful(
         pairs = parse_lines_with_turns(
             pdf["text"].tolist(), pdf["turn_idx"].tolist(), rules_factory())
         conv = pdf["conv_id"].iloc[0] if len(pdf) else None
-        out = [
-            {
-                "conv_id": conv,
-                "start_turn_idx": t,
-                "file": d.file, "line": d.line, "column": d.column,
-                "severity": d.severity, "message": d.message,
-                "related_messages": d.related_messages, "source": d.source,
-                "category": d.category, "raw": d.raw,
-                "build_target": d.build_target,
-            }
-            for t, d in pairs
-        ]
+        out = [_diag_row(conv, t, d) for t, d in pairs]
         return pd.DataFrame(out, columns=[f.name for f in STATEFUL_SCHEMA.fields])
 
     return (
@@ -131,16 +118,26 @@ def parse_stateful(
     )
 
 
+def _flat_related(df: DataFrame) -> DataFrame:
+    """Replace ``related_messages`` in place by (n_related, related_joined).
+    The driver's canonicalization sorts every output column — an
+    ``array<string>`` column is unsortable there (CORRECTNESS_r01
+    ``unhashable type: 'list'``), and arrays stringify differently across
+    engines anyway; the scalar pair value-hashes identically."""
+    cols: list = []
+    for c in df.columns:
+        cols += ([F.size(c).cast("long").alias("n_related"),
+                  F.concat_ws("\n", c).alias("related_joined")]
+                 if c == "related_messages" else [c])
+    return df.select(*cols)
+
+
 def parse_stateful_flat(
     transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
 ) -> DataFrame:
-    """:func:`parse_stateful` projected to scalar columns. The driver's
-    canonicalization sorts every output column — an ``array<string>`` column
-    is unsortable there (CORRECTNESS_r01 ``unhashable type: 'list'``), and
-    arrays stringify differently across engines anyway; the
-    (n_related, related_joined) form value-hashes identically (same pattern
-    as :func:`compile_blocks_flat`)."""
-    return _flat_projection(parse_stateful(transcripts, rules_factory))
+    """:func:`parse_stateful` with scalar related columns
+    (:func:`_flat_related`)."""
+    return _flat_related(parse_stateful(transcripts, rules_factory))
 
 
 # ---------------------------------------------------------------------------
@@ -214,17 +211,6 @@ def _diag_from_json(s: str):
     d = json.loads(s)
     turn = d.pop("_turn")
     return turn, Diagnostic(**d)
-
-
-def _diag_row(conv: str, turn: int | None, diag) -> dict:
-    return {
-        "conv_id": conv, "start_turn_idx": turn,
-        "file": diag.file, "line": diag.line, "column": diag.column,
-        "severity": diag.severity, "message": diag.message,
-        "related_messages": diag.related_messages, "source": diag.source,
-        "category": diag.category, "raw": diag.raw,
-        "build_target": diag.build_target,
-    }
 
 
 def parse_stateful_chunked(
@@ -411,39 +397,56 @@ def parse_stateful_auto(
         parse_stateful_chunked(big, rules_factory, chunk_size, repair_cap))
 
 
-def _flat_projection(df: DataFrame) -> DataFrame:
-    """STATEFUL_SCHEMA → driver-sortable scalars (same contract as
-    :func:`parse_stateful_flat`)."""
-    return df.select(
-        "conv_id", "start_turn_idx",
-        "file", "line", "column", "severity", "message",
-        F.size("related_messages").cast("long").alias("n_related"),
-        F.concat_ws("\n", "related_messages").alias("related_joined"),
-        "source", "category", "raw", "build_target",
-    )
-
-
 def parse_stateful_auto_flat(
     transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
     chunk_size: int = 65536,
 ) -> DataFrame:
-    return _flat_projection(
+    return _flat_related(
         parse_stateful_auto(transcripts, rules_factory, chunk_size))
 
 
-def assemble_compile_blocks(transcripts: DataFrame, source: str = "compiler",
-                            category_prefix: str = "") -> DataFrame:
-    """Window/aggregate segment assembly for CompileErrorRule blocks — the
-    no-Python scale path. Output schema == STATEFUL_SCHEMA."""
-    T = F.col("text")
-    trimmed = F.regexp_replace(T, r"^[ \t]+|[ \t]+$", "")
-
-    is_start = (
+def _compile_start(T):
+    """R1/R8 block start: the compile-error header, with the reference's
+    Int-overflow guards on line and column (CompileErrorRule.swift,
+    SwiftBuildCompileErrorRule.swift:66-70)."""
+    return (
         (T.contains("error:") | T.contains("warning:"))
         & T.rlike(COMPILE_ERROR_RE)
         & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 3)) <= 18)
         & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 4)) <= 18)
     )
+
+
+def _compile_header(header):
+    """file / line / column / severity / message of an R1/R8 header line."""
+    return [
+        F.regexp_extract(header, COMPILE_ERROR_RE, 1).alias("file"),
+        F.regexp_extract(header, COMPILE_ERROR_RE, 3).cast("long").alias("line"),
+        F.regexp_extract(header, COMPILE_ERROR_RE, 4).cast("long").alias("column"),
+        F.regexp_extract(header, COMPILE_ERROR_RE, 5).alias("severity"),
+        F.regexp_extract(header, COMPILE_ERROR_RE, 6).alias("message"),
+    ]
+
+
+def compile_blocks(transcripts: DataFrame, chunk_size: int = 65536) -> DataFrame:
+    """R1 CompileErrorRule blocks through :func:`assemble_blocks`. Output
+    schema == STATEFUL_SCHEMA.
+
+    Single-rule semantics (consumeLine + CompileErrorRule.swift, see
+    rules/table.py), per line with an open block:
+
+      * terminator (blank / trimmed-prefix SwiftCompile|cd |** BUILD|---)
+        closes the block; the same line may also start a new block;
+      * a start match (regex + int guards) closes and restarts;
+      * ``note:``/caret-prefixed or non-fastFail non-empty lines append to
+        ``related_messages``;
+      * fastFail-true lines that match nothing are *dropped in place* (the
+        block stays open).
+
+    With no open block, only a start match does anything.
+    """
+    T = F.col("text")
+    trimmed = F.regexp_replace(T, r"^[ \t]+|[ \t]+$", "")
     is_term = (
         (F.length(trimmed) == 0)
         | trimmed.startswith("SwiftCompile")
@@ -451,81 +454,30 @@ def assemble_compile_blocks(transcripts: DataFrame, source: str = "compiler",
         | trimmed.startswith("** BUILD")
         | trimmed.startswith("---")
     )
-    note_or_caret = trimmed.startswith("note:") | trimmed.startswith("^")
     fastfail = T.contains(":") & (T.contains("error:") | T.contains("warning:"))
-    is_cont = ~is_start & ~is_term & (
-        note_or_caret | (~fastfail & (F.length(trimmed) > 0)))
-
-    w_conv = (
-        Window.partitionBy("conv_id").orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .withColumn("is_start", is_start)
-        .withColumn("is_term", is_term)
-        .withColumn("is_cont", is_cont)
-        .withColumn("seg", F.sum(F.col("is_start").cast("int")).over(w_conv))
-        .filter(F.col("seg") > 0)
-    )
-    w_seg = (
-        Window.partitionBy("conv_id", "seg").orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # closed once a terminator appears strictly after the start row
-    df = df.withColumn(
-        "closed",
-        F.max(F.when(~F.col("is_start") & F.col("is_term"), 1).otherwise(0)).over(w_seg),
-    )
-
-    header = F.col("text")
-    agg = (
-        df.groupBy("conv_id", "seg")
-        .agg(
-            F.min_by(F.struct("turn_idx", "text"), "turn_idx").alias("start"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("is_cont") & (F.col("closed") == 0),
-                           F.struct("turn_idx", "text"))
-                )
-            ).alias("conts"),
-        )
-    )
-    header = F.col("start.text")
-    related = F.transform(F.col("conts"), lambda s: s["text"])
-    sev = F.regexp_extract(header, COMPILE_ERROR_RE, 5)
-    category = (
-        F.concat(F.lit(category_prefix + "_"), sev) if category_prefix else sev
-    )
-    return agg.select(
-        "conv_id",
-        F.col("start.turn_idx").alias("start_turn_idx"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 1).alias("file"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 3).cast("long").alias("line"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 4).cast("long").alias("column"),
-        sev.alias("severity"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 6).alias("message"),
-        related.alias("related_messages"),
-        F.lit(source).alias("source"),
-        category.alias("category"),
+    # starts and terminators need no exclusion here: the assembler drops
+    # start rows and every row at or after the block's first terminator
+    is_cont = (trimmed.startswith("note:") | trimmed.startswith("^")
+               | (~fastfail & (F.length(trimmed) > 0)))
+    blocks = assemble_blocks(transcripts, _compile_start(T), is_term, is_cont,
+                             chunk_size)
+    header = F.col("header")
+    return blocks.select(
+        "conv_id", "start_turn_idx", *_compile_header(header),
+        "related_messages",
+        F.lit("compiler").alias("source"),
+        F.regexp_extract(header, COMPILE_ERROR_RE, 5).alias("category"),
         header.alias("raw"),
         F.lit(None).cast("string").alias("build_target"),
     )
 
 
-def compile_blocks_flat(transcripts: DataFrame, impl=None) -> DataFrame:
-    """assemble_compile_blocks projected to scalar columns (arrays stringify
-    differently across engines; the joined form value-hashes identically).
-    ``impl`` selects the assembly implementation (default: windowed)."""
-    blocks = (impl or assemble_compile_blocks)(transcripts)
-    return blocks.select(
-        "conv_id",
-        "start_turn_idx",
-        "file", "line", "column", "severity", "message",
-        F.size("related_messages").cast("long").alias("n_related"),
-        F.concat_ws("\n", "related_messages").alias("related_joined"),
-        "source", "category",
-    )
+def compile_blocks_flat(transcripts: DataFrame,
+                        chunk_size: int = 65536) -> DataFrame:
+    """:func:`compile_blocks` with scalar related columns, the shape of
+    :func:`compile_blocks_sql`."""
+    return _flat_related(
+        compile_blocks(transcripts, chunk_size).drop("raw", "build_target"))
 
 
 def compile_blocks_sql(transcripts_cte: str) -> str:
@@ -590,8 +542,8 @@ FROM agg
 def assemble_blocks(transcripts: DataFrame, is_start, is_close, is_cont,
                     chunk_size: int = 65536) -> DataFrame:
     """Generic single-rule multi-line block assembly (the consumeLine shape
-    shared by CompileErrorRule, BuildFailedRule — BuildFailedRule.swift:39-46
-    — and LinkerErrorRule — LinkerErrorRule.swift:30-40): ``is_start`` opens
+    shared by every multi-line rule, e.g. BuildFailedRule.swift:39-46 and
+    LinkerErrorRule.swift:30-40): ``is_start`` opens
     a block, the first subsequent ``is_close`` line ends it (the close line
     itself is NOT appended — consumeLine checks isEnd before
     matchContinuation, BuildLogParser.swift:327-343), ``is_cont`` lines
@@ -599,11 +551,10 @@ def assemble_blocks(transcripts: DataFrame, is_start, is_close, is_cont,
     be adjacent: a line matching none of the predicates falls through all
     four consumeLine branches and is dropped with the block still open.
 
-    Skew-proof chunked prefix-sum formulation throughout (see
-    :func:`assemble_compile_blocks_chunked`): local windows per
-    (conv, chunk), per-conversation chunk-offset prefix sum, one hash
-    aggregate with a conditional-min close cutoff — no whole-conversation
-    sort task.
+    Skew-proof chunked prefix-sum formulation (module docstring): local
+    windows per (conv, chunk), per-conversation chunk-offset prefix sum, one
+    hash aggregate with a conditional-min close cutoff — no
+    whole-conversation sort task.
 
     Returns (conv_id, seg, start_turn_idx, header, related_messages).
     """
@@ -673,14 +624,6 @@ def assemble_flagged(flagged: DataFrame, chunk_size: int = 65536) -> DataFrame:
     )
 
 
-def _flat_related(df: DataFrame, keep: list) -> DataFrame:
-    return df.select(
-        *keep,
-        F.size("related_messages").cast("long").alias("n_related"),
-        F.concat_ws("\n", "related_messages").alias("related_joined"),
-    )
-
-
 def build_failed_blocks(transcripts: DataFrame) -> DataFrame:
     """BuildFailedRule (R2) blocks: ``** BUILD FAILED **`` header + the
     failed-command list (``The following build commands failed:`` /
@@ -706,9 +649,7 @@ def build_failed_blocks(transcripts: DataFrame) -> DataFrame:
         F.col("header").alias("raw"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "severity", "message", "source",
-        "category", "raw"])
+    return _flat_related(out)
 
 
 def linker_blocks(transcripts: DataFrame) -> DataFrame:
@@ -733,9 +674,7 @@ def linker_blocks(transcripts: DataFrame) -> DataFrame:
         F.col("header").alias("raw"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "severity", "message", "source",
-        "category", "raw"])
+    return _flat_related(out)
 
 
 def _blocks_sql(transcripts_cte: str, start_sql: str, close_sql: str,
@@ -819,114 +758,6 @@ FROM ({inner}) b
 """
 
 
-def assemble_compile_blocks_chunked(transcripts: DataFrame,
-                                    chunk_size: int = 65536) -> DataFrame:
-    """Skew-proof compile-block assembly (SURVEY.md §7 hard-part 5).
-
-    :func:`assemble_compile_blocks` computes segment ids with a window over
-    the WHOLE conversation — one sort task per conversation, so a single
-    hot conversation with millions of turns serializes. This variant makes
-    the running count of starts scalable the classic prefix-sum way:
-
-      1. per (conv_id, chunk = turn_idx // chunk_size): LOCAL window —
-         parallelism = conversations × chunks, each sorting ≤ chunk_size
-         rows;
-      2. per-conversation prefix sum of per-chunk start counts — a window
-         over #chunks rows (a 10^7-turn conversation is ~150 rows here);
-      3. join the chunk offsets back (shuffle on (conv, chunk)) →
-         global segment id = local running count + chunk offset;
-      4. ONE hash aggregate per (conv, segment): the 'closed' flag needs no
-         second window — a continuation belongs to the block iff its
-         turn_idx precedes the segment's first non-start terminator, which
-         is a conditional min inside the same aggregate.
-
-    Output schema == STATEFUL_SCHEMA; differential-tested equal to
-    assemble_compile_blocks and the oracle.
-    """
-    T = F.col("text")
-    trimmed = F.regexp_replace(T, r"^[ \t]+|[ \t]+$", "")
-    is_start = (
-        (T.contains("error:") | T.contains("warning:"))
-        & T.rlike(COMPILE_ERROR_RE)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 3)) <= 18)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 4)) <= 18)
-    )
-    is_term = (
-        (F.length(trimmed) == 0)
-        | trimmed.startswith("SwiftCompile")
-        | trimmed.startswith("cd ")
-        | trimmed.startswith("** BUILD")
-        | trimmed.startswith("---")
-    )
-    note_or_caret = trimmed.startswith("note:") | trimmed.startswith("^")
-    fastfail = T.contains(":") & (T.contains("error:") | T.contains("warning:"))
-    is_cont = ~is_start & ~is_term & (
-        note_or_caret | (~fastfail & (F.length(trimmed) > 0)))
-
-    df = (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .withColumn("chunk", F.floor(F.col("turn_idx") / chunk_size))
-        .withColumn("is_start", is_start)
-        .withColumn("is_term", is_term)
-        .withColumn("is_cont", is_cont)
-    )
-    w_local = (
-        Window.partitionBy("conv_id", "chunk").orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn("local_seg", F.sum(F.col("is_start").cast("long")).over(w_local))
-
-    per_chunk = df.groupBy("conv_id", "chunk").agg(
-        F.sum(F.col("is_start").cast("long")).alias("n_starts"))
-    w_chunks = (
-        Window.partitionBy("conv_id").orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = per_chunk.withColumn(
-        "seg_offset", F.coalesce(F.sum("n_starts").over(w_chunks), F.lit(0)))
-
-    df = (
-        df.join(offsets.select("conv_id", "chunk", "seg_offset"),
-                ["conv_id", "chunk"])
-        .withColumn("seg", F.col("local_seg") + F.col("seg_offset"))
-        .filter(F.col("seg") > 0)
-    )
-
-    agg = (
-        df.groupBy("conv_id", "seg")
-        .agg(
-            F.min_by(F.struct("turn_idx", "text"), "turn_idx").alias("start"),
-            F.min(F.when(F.col("is_term") & ~F.col("is_start"),
-                         F.col("turn_idx"))).alias("first_term"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("is_cont"), F.struct("turn_idx", "text"))
-                )
-            ).alias("conts"),
-        )
-    )
-    header = F.col("start.text")
-    cutoff = F.coalesce(F.col("first_term"), F.lit((1 << 62)))
-    related = F.transform(
-        F.filter(F.col("conts"), lambda s: s["turn_idx"] < cutoff),
-        lambda s: s["text"])
-    sev = F.regexp_extract(header, COMPILE_ERROR_RE, 5)
-    return agg.select(
-        "conv_id",
-        F.col("start.turn_idx").alias("start_turn_idx"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 1).alias("file"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 3).cast("long").alias("line"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 4).cast("long").alias("column"),
-        sev.alias("severity"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 6).alias("message"),
-        related.alias("related_messages"),
-        F.lit("compiler").alias("source"),
-        sev.alias("category"),
-        header.alias("raw"),
-        F.lit(None).cast("string").alias("build_target"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # R8 swift-build 5.9+ gutter blocks and R3 xcodebuild warning bodies —
 # the remaining single-rule multi-line shapes, via the generic assembler.
@@ -958,16 +789,10 @@ def swiftbuild_compile_blocks(transcripts: DataFrame) -> DataFrame:
     both engines (reference trims Unicode ``.whitespaces`` — documented
     ASCII-only restriction, same as render_text_verbose)."""
     T = F.col("text")
-    is_start = (
-        (T.contains("error:") | T.contains("warning:"))
-        & T.rlike(COMPILE_ERROR_RE)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 3)) <= 18)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 4)) <= 18)
-    )
     # isEnd includes the UNGUARDED start regex (SwiftBuildCompileErrorRule
     # .swift:118 matches without the Int casts): a header whose line/col
-    # overflows Int64 is rejected as a start (guards above) but still
-    # terminates the open block — without this disjunct the stale block
+    # overflows Int64 is rejected as a start (_compile_start's guards) but
+    # still terminates the open block — without this disjunct the stale block
     # would keep collecting gutter lines the reference drops (ADVICE r03).
     # For valid headers is_start is also true, and the assembler's
     # close-detection is `is_close AND NOT is_start` (end+start same line
@@ -986,24 +811,17 @@ def swiftbuild_compile_blocks(transcripts: DataFrame) -> DataFrame:
         (T.contains("|") & (T.rlike(CONTEXT_LINE_RE) | T.rlike(ERROR_POINTER_RE)))
         | T.rlike(_BLANK_LINE_RE)
     )
-    blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
+    blocks = assemble_blocks(transcripts, _compile_start(T), is_close, is_cont)
     header = F.col("header")
-    sev = F.regexp_extract(header, COMPILE_ERROR_RE, 5)
     out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.regexp_extract(header, COMPILE_ERROR_RE, 1).alias("file"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 3).cast("long").alias("line"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 4).cast("long").alias("column"),
-        sev.alias("severity"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 6).alias("message"),
+        "conv_id", "start_turn_idx", *_compile_header(header),
         F.lit("swift-build").alias("source"),
-        F.concat(F.lit("compile_"), sev).alias("category"),
+        F.concat(F.lit("compile_"), F.regexp_extract(header, COMPILE_ERROR_RE, 5))
+        .alias("category"),
         header.alias("raw"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "file", "line", "column", "severity",
-        "message", "source", "category", "raw"])
+    return _flat_related(out)
 
 
 def swiftbuild_compile_blocks_sql(transcripts_cte: str) -> str:
@@ -1068,9 +886,7 @@ def module_failed_blocks(transcripts: DataFrame) -> DataFrame:
         header.alias("raw"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "severity", "message", "source",
-        "category", "raw"])
+    return _flat_related(out)
 
 
 def module_failed_blocks_sql(transcripts_cte: str) -> str:
@@ -1116,9 +932,7 @@ def xcodebuild_warning_blocks(transcripts: DataFrame) -> DataFrame:
         header.alias("raw"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "severity", "message", "source",
-        "category", "raw"])
+    return _flat_related(out)
 
 
 def xcodebuild_warning_blocks_sql(transcripts_cte: str) -> str:
@@ -1282,9 +1096,7 @@ def xctest_blocks(transcripts: DataFrame) -> DataFrame:
         build_target.alias("build_target"),
         "related_messages",
     )
-    return _flat_related(out, [
-        "conv_id", "start_turn_idx", "file", "line", "severity", "message",
-        "source", "category", "raw", "build_target"])
+    return _flat_related(out)
 
 
 def xctest_blocks_sql(transcripts_cte: str) -> str:

@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's MemTotal, capped at 24g. In local mode every task
+    runs inside the driver JVM, so a heap larger than the host lets a heavy
+    job grow until the kernel OOM-kills it. Hosts without /proc/meminfo
+    get the cap."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f
+                       if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(kib // 2048, 24 * 1024)}m"
+
+
 def get_spark(app_name: str = "buildlogparser_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
@@ -29,7 +43,8 @@ def get_spark(app_name: str = "buildlogparser_spark", cores: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

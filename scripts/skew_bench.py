@@ -1,6 +1,7 @@
 """Hot-conversation skew benchmark (the BASELINE.json skew scenario):
 
-1. windowed vs chunked compile-block assembly (vectorized JVM path);
+1. compile-block assembly with one chunk per conversation vs the default
+   chunk size (vectorized JVM path);
 2. unchunked vs chunked GENERAL state machine (parse_stateful — the
    Python escape hatch, round 5);
 
@@ -103,8 +104,8 @@ def main() -> None:
 
     from buildlogparser_spark.session import get_spark
     from buildlogparser_spark.operators.assemble import (
-        assemble_compile_blocks, assemble_compile_blocks_chunked,
-        parse_stateful, parse_stateful_auto, parse_stateful_chunked)
+        compile_blocks, parse_stateful, parse_stateful_auto,
+        parse_stateful_chunked)
     from buildlogparser_spark.rules.table import CompileErrorRule
 
     spark = get_spark("skew-bench", cores=args.cores,
@@ -112,8 +113,8 @@ def main() -> None:
 
     tr = _skew_corpus(spark, args.hot_turns, "/tmp/blp_skew_tr")
     compile_res = _race(tr, [
-        ("windowed", assemble_compile_blocks),
-        ("chunked", assemble_compile_blocks_chunked)])
+        ("one_chunk", lambda df: compile_blocks(df, chunk_size=2**62)),
+        ("chunked", compile_blocks)])
 
     stack = lambda: [CompileErrorRule()]  # noqa: E731
     tr_s = _skew_corpus(spark, args.stateful_hot_turns, "/tmp/blp_skew_tr_s")
@@ -123,7 +124,7 @@ def main() -> None:
         ("auto", lambda df: parse_stateful_auto(df, stack))])
 
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    w, c = compile_res["windowed"][0], compile_res["chunked"][0]
+    w, c = compile_res["one_chunk"][0], compile_res["chunked"][0]
     su, sc = stateful_res["unchunked"][0], stateful_res["chunked"][0]
     sa = stateful_res["auto"][0]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
@@ -134,13 +135,13 @@ Generated {stamp} by `scripts/skew_bench.py --hot-turns {args.hot_turns}
 --stateful-hot-turns {args.stateful_hot_turns}`.
 
 Corpus: ONE conversation with {args.hot_turns:,} turns + 100 normal
-conversations × 1k turns (local[{args.cores}]). Both implementations emit
-identical blocks ({compile_res['windowed'][1]:,}).
+conversations × 1k turns (local[{args.cores}]). Both runs emit identical
+blocks ({compile_res['one_chunk'][1]:,}).
 
-| implementation | strategy | wall sec |
+| call | strategy | wall sec |
 |---|---|---|
-| `assemble_compile_blocks` (windowed) | one window sort per conversation — the hot conversation is ONE task | {w} |
-| `assemble_compile_blocks_chunked` | per-chunk local windows + per-conversation prefix-sum of chunk start-counts + single hash aggregate | {c} |
+| `compile_blocks(tr, chunk_size=2**62)` | one chunk, so one window sort, per conversation — the hot conversation is ONE task | {w} |
+| `compile_blocks(tr)` (default chunk_size 65536) | per-chunk local windows + per-conversation prefix-sum of chunk start-counts + single hash aggregate | {c} |
 
 **{w / c:.0f}× faster under skew.** At 10^12 turns a hot conversation is
 guaranteed; the chunked path bounds any single task at chunk_size rows, so
@@ -166,7 +167,7 @@ Exactness is differential-tested (tests/test_assemble_chunked_stateful.py:
 oracle parity at chunk_size=7, mutated-corpus fuzz, a block spanning 25
 chunks, sparse turn_idx).
 {SHINGLES_SECTION}""")
-    print(f"windowed/chunked = {w / c:.1f}x, "
+    print(f"one-chunk/chunked = {w / c:.1f}x, "
           f"stateful unchunked/chunked = {su / sc:.1f}x → BENCH/SKEW.md")
 
 

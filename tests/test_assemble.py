@@ -1,15 +1,19 @@
 """Differential tests for the stateful operators (applyInPandas state machine
-and the window-based compile-block assembly) against the pure-Python oracle
-on adversarial generated conversations."""
+and the chunked block assembler behind every multi-line rule) against the
+pure-Python oracle on adversarial generated conversations, plus the plan
+shape that keeps block assembly skew-proof."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter
+
+import pytest
 
 from buildlogparser_spark.datagen import conversations_df, gen_conversations
 from buildlogparser_spark.oracle import parse_lines_with_turns
-from buildlogparser_spark.operators.assemble import (
-    assemble_compile_blocks, assemble_compile_blocks_chunked, parse_stateful)
+from buildlogparser_spark.operators import assemble as asm
+from buildlogparser_spark.operators.assemble import compile_blocks, parse_stateful
 from buildlogparser_spark.rules.table import CompileErrorRule, default_stack
 from buildlogparser_spark.rules.table import test_stack as _ref_test_stack
 
@@ -59,9 +63,9 @@ def test_stateful_default_stack_matches_oracle(spark):
     _assert_equal(_expected(default_stack), got)
 
 
-def test_assemble_compile_blocks_matches_oracle(spark):
+def test_compile_blocks_matches_oracle(spark):
     df = conversations_df(spark, SEED, N_CONVS)
-    got = _got(assemble_compile_blocks(df))
+    got = _got(compile_blocks(df))
     _assert_equal(_expected(lambda: [CompileErrorRule()]), got)
 
 
@@ -70,15 +74,43 @@ def test_chunked_assembly_matches_oracle(spark):
     chunk size small enough (7) that every block straddles chunk
     boundaries, exercising the prefix-sum offset merge."""
     df = conversations_df(spark, SEED, N_CONVS)
-    got = _got(assemble_compile_blocks_chunked(df, chunk_size=7))
+    got = _got(compile_blocks(df, chunk_size=7))
     _assert_equal(_expected(lambda: [CompileErrorRule()]), got)
 
 
 def test_chunked_equals_windowed(spark):
+    """16-turn chunks == the default size, where every generated
+    conversation is one chunk (one window per conversation)."""
     df = conversations_df(spark, SEED + 1, N_CONVS)
-    a = _got(assemble_compile_blocks(df))
-    b = _got(assemble_compile_blocks_chunked(df, chunk_size=16))
+    a = _got(compile_blocks(df))
+    b = _got(compile_blocks(df, chunk_size=16))
     assert a == b
+
+
+# Window [exprs], [partition keys], [order keys] — one executed-plan line
+_WINDOW_LINE = re.compile(r"\bWindow \[.*\], \[(.*?)\], \[(.*?)\]\s*$")
+
+
+def _names(spec: str) -> list[str]:
+    return [re.sub(r"#\d+L?$", "", k.split(" ")[0]) for k in spec.split(", ")]
+
+
+@pytest.mark.parametrize("op", [
+    "compile_blocks_flat", "build_failed_blocks", "linker_blocks",
+    "xcodebuild_warning_blocks", "module_failed_blocks",
+    "swiftbuild_compile_blocks", "xctest_blocks"])
+def test_block_windows_sort_per_chunk(spark, op):
+    """Skew immunity: every window that orders a conversation's turns is
+    partitioned by (conv_id, chunk), so no task sorts a whole hot
+    conversation — the per-chunk parallelism BENCH/SKEW.md measures."""
+    df = getattr(asm, op)(conversations_df(spark, SEED, 4))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    turn_windows = [
+        _names(m.group(1)) for m in map(_WINDOW_LINE.search, plan.splitlines())
+        if m and _names(m.group(2)) == ["turn_idx"]]
+    assert turn_windows, plan
+    assert all(keys == ["conv_id", "chunk"] for keys in turn_windows), plan
 
 
 def test_partition_count_invariance(spark):

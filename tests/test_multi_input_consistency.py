@@ -82,7 +82,7 @@ def test_read_log_files_matches_oracle_parse(spark, tmp_path):
     from collections import Counter
 
     from buildlogparser_spark.datagen import gen_conversations
-    from buildlogparser_spark.operators.assemble import assemble_compile_blocks
+    from buildlogparser_spark.operators.assemble import compile_blocks
     from buildlogparser_spark.operators.lines import read_log_files
     from buildlogparser_spark.oracle import parse_lines_with_turns
     from buildlogparser_spark.rules.table import CompileErrorRule
@@ -104,7 +104,7 @@ def test_read_log_files_matches_oracle_parse(spark, tmp_path):
     got = Counter(
         (r.conv_id.rsplit("/", 1)[-1].removesuffix(".log"), r.start_turn_idx,
          r.severity, r.message, tuple(r.related_messages))
-        for r in assemble_compile_blocks(good).collect())
+        for r in compile_blocks(good).collect())
     exp = Counter(
         (cid, t, d.severity, d.message, tuple(d.related_messages))
         for cid, ls in convs.items()
