@@ -3,9 +3,12 @@
 The reference fans one parse out to N in-process sinks
 (``DiagnosticsParser.outputs`` — BuildLogParser.swift:285,375-384;
 TextOutput/JSONOutput/SummaryOutput etc., OutputFormatters.swift). Our
-engine's equivalent: classify once, cache, then write per-severity /
-per-tool partitioned parquet sinks plus a dead-letter route, with skew
-defenses per BASELINE.json:
+engine's equivalent writes per-severity / per-tool partitioned parquet
+sinks plus a dead-letter route. The caller classifies once and owns that
+cache: the batch job (``jobs/run_pipeline.py``) persists its classified
+diagnostics for the sinks, aggregates and reports. The fan-out caches only
+its repartitioned copy, so the sinks share one shuffle. Skew defenses per
+BASELINE.json:
 
 * sink layout: ``{root}/{sink}/`` partitioned by ``(ts_bucket, conv_bucket)``
   where ts_bucket is a day bucket of ts and conv_bucket is a salted hash of

@@ -372,6 +372,23 @@ FROM ranked WHERE rank <= {k}
 """
 
 
+def entropy_term(c: Column, n: Column) -> Column:
+    """One token's p·ln(p) with p = c/n, the drift.py convention: ``ln`` of
+    the EXACT share, with only the ``ln`` result (the ≤1-ulp libm
+    divergence) and the term 9-dp-rounded. Rounding the share first would
+    collapse one below 5e-10 to 0 and take ln(0), which Spark turns into
+    NULL and DuckDB rejects."""
+    p = c / n
+    return portable_round(p * portable_round(F.log(p), 9), 9)
+
+
+def entropy_term_sql(c: str, n: str) -> str:
+    """DuckDB twin of :func:`entropy_term`."""
+    p = f"(CAST({c} AS DOUBLE) / {n})"
+    ln9 = portable_round_sql(f"ln({p})", 9)
+    return portable_round_sql(f"{p} * ({ln9})", 9)
+
+
 def token_entropy(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_distinct_tokens, entropy, norm_entropy):
     Shannon entropy of each document's token frequency distribution —
@@ -384,8 +401,8 @@ def token_entropy(documents: DataFrame) -> DataFrame:
         norm_entropy = entropy / ln(n_distinct)  (∈ [0,1]; 0 when ≤1
                                                   distinct token)
 
-    Cross-engine determinism: each token's term is 9-dp-rounded around
-    ``ln`` (the drift/quality_clf libm convention) and the per-document
+    Cross-engine determinism: each token's term follows
+    :func:`entropy_term` (the drift.py convention) and the per-document
     sum is a TOKEN-ORDERED sequential fold — safe collation-wise because
     :func:`~.dedup.tokens` emits only ``[a-z0-9]+`` strings. Docs with
     no tokens (NULL/empty/symbol-only text) emit the zero row rather
@@ -407,14 +424,10 @@ def token_entropy(documents: DataFrame) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("tok", "c"))).alias("tl"),
     )
 
-    def term(n):
-        # p9 = 9-dp share; term = 9-dp p·ln(p); fold order is the sorted
-        # struct array (token asc), summed sequentially from 0.0
-        return lambda acc, s: acc + portable_round(
-            portable_round(s["c"] / n, 9)
-            * F.log(portable_round(s["c"] / n, 9)), 9)
-
-    ent9 = -F.aggregate(F.col("tl"), F.lit(0.0), term(F.col("n")))
+    # fold order is the sorted struct array (token asc), summed
+    # sequentially from 0.0
+    ent9 = -F.aggregate(F.col("tl"), F.lit(0.0),
+                        lambda acc, s: acc + entropy_term(s["c"], F.col("n")))
     norm = F.when(
         F.col("n_distinct") > 1,
         portable_round(ent9 / portable_round(
@@ -443,9 +456,8 @@ def token_entropy(documents: DataFrame) -> DataFrame:
 
 def token_entropy_sql(table: str = "documents") -> str:
     """DuckDB twin: unnest → (doc, token) counts → token-ordered
-    list_reduce fold with the identical double rounding."""
-    p9 = portable_round_sql("CAST(c AS DOUBLE) / n", 9)
-    term9 = portable_round_sql(f"{p9} * ln({p9})", 9)
+    list_reduce fold of the same :func:`entropy_term` terms."""
+    term9 = entropy_term_sql("c", "n")
     return f"""
 WITH pairs AS (
   SELECT doc_id, unnest({_TOKS}) AS tok FROM {table}

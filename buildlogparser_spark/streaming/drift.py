@@ -57,9 +57,10 @@ def stream_drift_monitor(doc_stream: DataFrame,
     ``on_result(batch_id, dim, psi, alert)``. ``threshold`` follows the
     standard PSI reading (≥0.25 = shifted). Dimensions absent from a batch
     (e.g. an empty batch) are still judged — their batch histogram is
-    empty, which PSI handles through the smoothing. Returns the started
-    StreamingQuery (callers await it); pair with ``availableNow`` triggers
-    for bounded runs. ``on_result`` is the test/callback sink; production
+    empty, which PSI handles through the smoothing. The query runs with an
+    ``availableNow`` trigger: it drains what is available and stops (a
+    bounded run). Returns the started StreamingQuery (callers await it).
+    ``on_result`` is the test/callback sink; production
     swaps in a metrics-table writer — the contract is the emitted tuples,
     not the transport."""
     def fb(batch_df: DataFrame, batch_id: int) -> None:

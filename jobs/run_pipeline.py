@@ -13,9 +13,16 @@ Local smoke (also exercised by tests/test_submit_job.py)::
     spark-submit --master 'local[4]' --py-files <zip> jobs/run_pipeline.py \\
         --input /tmp/tr --output /tmp/sinks
 
+The job classifies once: the dead-letter write scans the input, and one
+persisted classify + enrich pass then feeds the route fan-out, the
+aggregates and the reports (the reference parses a log once and fans that
+parse out to every output, BuildLogParser.swift:285,375-384). The cache is
+dropped before ``main`` returns.
+
 The job is resumable: rerunning with the same --output consults the
 checkpoint manifest and skips completed sink writes. Emits one JSON line of
-per-stage lineage/row-count metrics on success.
+per-stage lineage/row-count metrics on success (``scan``, ``dead_letter``,
+``classify_enrich``).
 """
 
 from __future__ import annotations
@@ -93,54 +100,62 @@ def main(argv: list[str] | None = None) -> int:
         source = spark.read.parquet(args.input)
     transcripts = mx.observe(source, "scan")
     good, dead = split_dead_letter(transcripts)
-    dead.write.mode("overwrite").parquet(f"{args.output}/dead_letter")
+    mx.observe(dead, "dead_letter").write.mode("overwrite").parquet(
+        f"{args.output}/dead_letter")
 
-    diags = mx.observe(enrich(classify(good)), "classify_enrich")
-    routed = route_writes_resumable(
-        diags, args.output, n_salt=args.n_salt,
-        ts_granularity=args.ts_granularity)
+    # the job's one classify pass: every sink, aggregate and report below
+    # reads this persisted copy instead of re-scanning the input; the
+    # finally drops it so a long-lived application (a test session, a
+    # benchmark JVM) keeps no cache after main returns
+    diags = mx.observe(enrich(classify(good)), "classify_enrich").persist()
+    try:
+        routed = route_writes_resumable(
+            diags, args.output, n_salt=args.n_salt,
+            ts_granularity=args.ts_granularity)
 
-    # sink-side aggregate metadata (the reference's JSON metadata /
-    # SummaryOutput counters) written next to the sinks
-    aggs = {
-        "severity_counts": agg.severity_counts(diags),
-        "errors_per_tool": agg.errors_per_tool(diags),
-        "warnings_per_conversation": agg.warnings_per_conversation(diags),
-        "top_files": agg.top_files(diags),
-    }
-    for name, df in aggs.items():
-        df.coalesce(1).write.mode("overwrite").json(
-            f"{args.output}/aggregates/{name}")
+        # sink-side aggregate metadata (the reference's JSON metadata /
+        # SummaryOutput counters) written next to the sinks
+        aggs = {
+            "severity_counts": agg.severity_counts(diags),
+            "errors_per_tool": agg.errors_per_tool(diags),
+            "warnings_per_conversation": agg.warnings_per_conversation(diags),
+            "top_files": agg.top_files(diags),
+        }
+        for name, df in aggs.items():
+            df.coalesce(1).write.mode("overwrite").json(
+                f"{args.output}/aggregates/{name}")
 
-    # formatted report sinks (the reference CLI's TextOutput/JSONOutput/
-    # SummaryOutput formats). Single-file text outputs: these are
-    # bounded-size reports (the reference buffers them in memory), so
-    # coalesce(1) + total sort is the honest equivalent, not a scale path.
-    if args.format != "none" or args.show_stats:
-        from datetime import datetime, timezone
+        # formatted report sinks (the reference CLI's TextOutput/JSONOutput/
+        # SummaryOutput formats). Single-file text outputs: these are
+        # bounded-size reports (the reference buffers them in memory), so
+        # coalesce(1) + total sort is the honest equivalent, not a scale path.
+        if args.format != "none" or args.show_stats:
+            from datetime import datetime, timezone
 
-        from buildlogparser_spark.operators import render as rnd
+            from buildlogparser_spark.operators import render as rnd
 
-        report_dir = f"{args.output}/report"
-        fmt_df = None
-        if args.format == "text":
-            fmt_df = (rnd.render_text(diags, errors_only=args.errors_only)
-                      .coalesce(1).sortWithinPartitions("conv_id", "turn_idx")
-                      .select("rendered"))
-        elif args.format == "json":
-            src = diags.filter(F.col("severity") == "error") \
-                if args.errors_only else diags
-            stamp = datetime.now(timezone.utc).isoformat(timespec="seconds")
-            fmt_df = rnd.json_document(src, verbose=args.verbose,
-                                       timestamp=stamp)
-        elif args.format == "summary":
-            fmt_df = rnd.summary_text(diags, verbose=args.verbose,
-                                      errors_only=args.errors_only)
-        if fmt_df is not None:
-            fmt_df.write.mode("overwrite").text(f"{report_dir}/{args.format}")
-        if args.show_stats:
-            rnd.stats_text(diags).write.mode("overwrite").text(
-                f"{report_dir}/stats")
+            report_dir = f"{args.output}/report"
+            fmt_df = None
+            if args.format == "text":
+                fmt_df = (rnd.render_text(diags, errors_only=args.errors_only)
+                          .coalesce(1).sortWithinPartitions("conv_id", "turn_idx")
+                          .select("rendered"))
+            elif args.format == "json":
+                src = diags.filter(F.col("severity") == "error") \
+                    if args.errors_only else diags
+                stamp = datetime.now(timezone.utc).isoformat(timespec="seconds")
+                fmt_df = rnd.json_document(src, verbose=args.verbose,
+                                           timestamp=stamp)
+            elif args.format == "summary":
+                fmt_df = rnd.summary_text(diags, verbose=args.verbose,
+                                          errors_only=args.errors_only)
+            if fmt_df is not None:
+                fmt_df.write.mode("overwrite").text(f"{report_dir}/{args.format}")
+            if args.show_stats:
+                rnd.stats_text(diags).write.mode("overwrite").text(
+                    f"{report_dir}/stats")
+    finally:
+        diags.unpersist()
 
     report = mx.report()
     print(json.dumps({

@@ -242,7 +242,10 @@ def test_token_entropy_hand_values(spark):
     def r(x, p):
         return math.floor(x * 10 ** p + 0.5) / 10 ** p
 
-    ln2 = r(r(0.5, 9) * math.log(r(0.5, 9)), 9) * 2
+    def term(p):  # ln of the exact share; round the ln and the term
+        return r(p * r(math.log(p), 9), 9)
+
+    ln2 = term(0.5) * 2
     assert out[1].n_tokens == 4 and out[1].n_distinct_tokens == 2
     assert out[1].entropy == r(-ln2, 6)
     assert out[1].norm_entropy == r(-ln2 / r(math.log(2.0), 9), 6)
@@ -250,8 +253,33 @@ def test_token_entropy_hand_values(spark):
     for d in (3, 4):
         assert (out[d].n_tokens, out[d].n_distinct_tokens,
                 out[d].entropy, out[d].norm_entropy) == (0, 0, 0.0, 0.0)
-    t75 = r(r(0.75, 9) * math.log(r(0.75, 9)), 9)
-    t25 = r(r(0.25, 9) * math.log(r(0.25, 9)), 9)
-    assert out[5].entropy == r(-(t75 + t25), 6)
+    assert out[5].entropy == r(-(term(0.75) + term(0.25)), 6)
     # skewed < uniform for the same distinct count
     assert out[5].entropy < out[1].entropy
+
+
+def test_token_entropy_term_tiny_share(spark):
+    """A share below 5e-10 (one token in 4e9) keeps a finite, negative
+    term in both engines: ``ln`` takes the exact share, so the share is
+    never rounded to 0 first (which gave NULL in Spark, -inf in DuckDB)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from buildlogparser_spark.operators import textstats as ts
+
+    c, n = 1, 4_000_000_000
+    got = spark.createDataFrame([(c, n)], "c long, n long").select(
+        ts.entropy_term(F.col("c"), F.col("n"))).first()[0]
+    duck = duckdb.connect().execute(
+        f"SELECT {ts.entropy_term_sql('c', 'n')} FROM "
+        f"(SELECT CAST({c} AS BIGINT) AS c, CAST({n} AS BIGINT) AS n)"
+    ).fetchone()[0]
+
+    def r(x, p):
+        return math.floor(x * 10 ** p + 0.5) / 10 ** p
+
+    p = c / n
+    assert p < 5e-10
+    expect = r(p * r(math.log(p), 9), 9)
+    assert got == duck == expect
+    assert math.isfinite(expect) and expect < 0

@@ -44,6 +44,9 @@ def test_spark_submit_pipeline(spark, tmp_path):
     total = batch.count()
     assert report["sinks"]["diagnostics"]["rows"] == total
     assert report["stages"]["classify_enrich"]["rows"] == total
+    n_null = load_transcripts(spark, SF_SMOKE) \
+        .filter(F.col("text").isNull()).count()
+    assert report["stages"]["dead_letter"]["rows"] == n_null
 
     back = spark.read.parquet(f"{out_root}/diagnostics")
     assert back.count() == total
@@ -142,3 +145,76 @@ def test_cli_logs_input_mode(spark, tmp_path):
     sev = _json.loads(
         spark.read.text(f"{out}/aggregates/severity_counts").collect()[0].value)
     assert sev["total_count"] == diags.count()
+
+
+def _seq(coll) -> list:
+    """A Scala Seq/Iterable from the py4j gateway as a Python list."""
+    it, out = coll.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def test_job_classifies_once(spark, tmp_path, capsys):
+    """The batch job scans its input in at most two SQL executions (the
+    dead-letter write and the one persisted classify pass), runs the
+    classify cascade on rows in exactly one, and drops its cache before
+    ``main`` returns. Read from Spark's SQL status store, which records
+    every execution's plan graph and per-operator row metrics."""
+    import re
+    import sys
+
+    sys.path.insert(0, str(REPO / "jobs"))
+    import run_pipeline
+
+    from buildlogparser_spark.transcripts import load_transcripts
+
+    tr_path = str(tmp_path / "tr")
+    (load_transcripts(spark, SF_SMOKE).limit(2000)
+     .withColumn("text", F.when(F.col("turn_idx") % 17 != 0, F.col("text")))
+     .coalesce(2).write.parquet(tr_path))
+    n_null = spark.read.parquet(tr_path).filter(F.col("text").isNull()).count()
+    assert n_null > 0
+
+    jsc = spark.sparkContext._jsc
+    bus = jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty(30_000)
+    seen = {e.executionId() for e in _seq(store.executionsList())}
+    n_persisted = jsc.getPersistentRDDs().size()
+    capsys.readouterr()
+
+    rc = run_pipeline.main([
+        "--input", tr_path, "--output", str(tmp_path / "out"),
+        "--n-salt", "4", "--ts-granularity", "month",
+        "--format", "json", "--show-stats"])
+    assert rc == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["stages"]["dead_letter"]["rows"] == n_null
+    assert jsc.getPersistentRDDs().size() == n_persisted
+
+    bus.waitUntilEmpty(30_000)
+    loc = f"file:{tr_path}"
+    scans = cascades = 0
+    for e in _seq(store.executionsList()):
+        eid = e.executionId()
+        if eid in seen:
+            continue
+        values = store.executionMetrics(eid)
+
+        def rows(node) -> int:
+            for m in _seq(node.metrics()):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total = re.search(r"\d[\d,]*", v.get().splitlines()[-1])
+                    return int(total.group().replace(",", ""))
+            return 0
+
+        nodes = _seq(store.planGraph(eid).allNodes())
+        scans += any(n.name().startswith("Scan parquet") and loc in n.desc()
+                     and rows(n) > 0 for n in nodes)
+        cascades += any(n.name() == "Filter" and "CASE WHEN" in n.desc()
+                        and "RLIKE(text" in n.desc() and rows(n) > 0
+                        for n in nodes)
+    assert scans <= 2, f"input scanned in {scans} executions"
+    assert cascades == 1, f"classify cascade ran in {cascades} executions"
