@@ -232,19 +232,10 @@ def main() -> None:
 
         flagship = queries.get("q1_flagship_pipeline", 0.0)
         total = round(sum(queries.values()), 3)
-        r02_set = {q: s for q, s in queries.items()
-                   if q not in ("q8b_parse_stateful_chunked",
-                                "q8c_parse_stateful_auto",
-                                "q15_swiftbuild_blocks", "q16_xctest_blocks",
-                                "q17_curation_pipeline", "q18_sft_pairs",
-                                "q19_tfidf_top_terms", "q20_dsir_weights",
-                                "q21_c4_clean", "q22_quality_classifier",
-                                "q23_asof_enrich", "q24_incident_errors",
-                                "q25_dup_span_removal", "q26_tool_call_loops",
-                                "q27_context_windows", "q28_preference_pairs",
-                                "q29_semantic_decontaminate",
-                                "q30_corpus_drift", "q31_weighted_sample",
-                                "q32_token_entropy")}
+        # the r02-comparable set is the queries r02 ran, q1-q14 (the q8b/q8c
+        # evidence twins excluded); any later bench query stays outside it
+        r02_ids = {f"q{i}" for i in range(1, 15)}
+        r02_set = {q: s for q, s in queries.items() if q.split("_")[0] in r02_ids}
         # the r02-comparable figure must use r02's methodology: the hot set
         # there was min-of-3, so take the min of this run's FIRST three reps
         # (not min-of-9 — more reps monotonically lowers the min on a noisy

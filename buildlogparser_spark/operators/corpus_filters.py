@@ -7,7 +7,7 @@ All Spark-first: pure column expressions where possible; the two ops that
 need cross-row work (decontaminate, repetition_stats) are a broadcast
 bucket-join and a partial-agg groupBy respectively — no window over the
 whole corpus, no collect, no Python UDF. Each operator has a DuckDB twin
-(`*_sql`) compared value-for-value in tests/test_gate_folded.py.
+(`*_sql`) compared value-for-value in tests/test_spark_duckdb_parity.py.
 
 Regex note: the PII patterns are written to the Java-regex ∩ RE2 common
 subset (character classes, bounded repetition, ``\\b``) so Spark and the

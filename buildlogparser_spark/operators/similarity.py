@@ -1343,15 +1343,19 @@ def semantic_decontaminate(embeddings: DataFrame, bench_mod: int = 97,
     ``contaminated`` = 1 when that max ≥ threshold, else 0 (including the
     empty-benchmark case).
 
-    Scale shape (10^12 corpus vectors): benchmark suites are SMALL and
-    fixed-size (10^3-10^5 items, independent of corpus growth), so the
-    whole benchmark set is folded into ONE array row and broadcast — the
-    corpus side is a single map-only pass (no shuffle at all: the
-    per-corpus-row max is computed inside ``transform``/``array_max`` over
-    the broadcast array). A benchmark too large to broadcast would switch
-    to the LSH-blocked path (:func:`embedding_near_dup_lsh`'s bucket join);
-    this op deliberately takes the broadcast shape because it is the right
-    plan for real benchmark sizes.
+    Scale shape: the whole benchmark set is folded into ONE array row and
+    broadcast, so the corpus side (any size, 10^12 vectors included) is a
+    single map-only pass (no shuffle at all: the per-corpus-row max is
+    computed inside ``transform``/``array_max`` over the broadcast array).
+    The cost sits on the benchmark side: that row is about
+    ``n_bench × dim × 8`` bytes of doubles, built by ONE ``collect_list``
+    task and held in full by every executor. At 10^5 benchmark items it is
+    about 51 MB at dim 64, 614 MB at dim 768 and 3.3 GB at dim 4096 — past
+    the JVM's 2 GB single-array limit, so that last case fails. Supported
+    range: ``n_bench × dim`` up to about 10^7 (a row of ≤ 80 MB, e.g. 10^5
+    items at dim 64 or 10^4 items at dim 768). Nothing switches plans
+    automatically; a larger benchmark set needs the LSH-blocked bucket join
+    of :func:`embedding_near_dup_lsh` instead of this op.
 
     Reference analog: none; driver-brief training-data op.
     """

@@ -75,11 +75,11 @@ def main() -> int:
 
     qs, osql = E.queries(), E.oracle_sql()
     fails = 0
-    # insertion order, NOT sorted: dict order IS the graded sweep order and
-    # carries this round's position defenses (training-data ops early,
-    # Python-worker rows-only queries after every oracled query) — an
-    # alphabetical walk would run ann_lsh_topk's Python workers first and
-    # could not reproduce position-dependent behavior
+    # insertion order, NOT sorted: dict order IS the graded sweep order
+    # (training-data ops early, the Python-worker rows-only parse_stateful
+    # after every oracled query) — an alphabetical walk would run
+    # parse_stateful's Python workers mid-sweep and could not reproduce
+    # position-dependent behavior
     for name in qs:
         t0 = time.time()
         sdf = qs[name](spark, sf_dir).toPandas()

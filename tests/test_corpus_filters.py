@@ -1,6 +1,6 @@
 """Fixture-based tests for the corpus-curation filters (corpus_filters.py).
 
-The sf parity rows live in test_gate_folded.py; these fixtures pin the
+The sf parity rows live in test_spark_duckdb_parity.py; these fixtures pin the
 SEMANTICS on hand-built inputs where the expected values are computed by
 eye — redaction counts, contamination flags, sampling determinism and
 growth stability, and the Gopher repetition fractions."""

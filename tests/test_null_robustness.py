@@ -1,7 +1,7 @@
-"""NULL/adversarial-input robustness of the graded corpus + embedding
-queries: both engines must agree over a clone of sf0.001 whose documents
-table carries NULL / empty / whitespace-only text rows and whose embeddings
-table carries a NULL embedding and a zero vector.
+"""NULL/adversarial-input robustness of the registered corpus + embedding
+queries (graded and folded): both engines must agree over a clone of
+sf0.001 whose documents table carries NULL / empty / whitespace-only text
+rows and whose embeddings table carries a NULL embedding and a zero vector.
 
 The graded parquet has no NULLs, so `test_spark_duckdb_parity` can never
 exercise this class — and it is a real class: before this suite existed,
@@ -96,16 +96,15 @@ def null_duck(null_sf):
 
 @pytest.mark.parametrize("name", DOC_QUERIES + EMB_QUERIES)
 def test_null_input_parity(spark, null_sf, null_duck, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_frames_match(q(spark, null_sf), duck_df(null_duck, sql),
+    e = entry_mod.registry()[name]
+    assert_frames_match(e.run(spark, null_sf), duck_df(null_duck, e.sql),
                         f"null-robustness:{name}")
 
 
 def test_null_embedding_rows_are_dropped(spark, null_sf):
     """The contract itself, not just parity: the NULL-embedding row is
     absent from per-vector outputs; the zero vector stays."""
-    out = entry_mod.queries()["semantic_dedup"](spark, null_sf)
+    out = entry_mod.registry()["semantic_dedup"].run(spark, null_sf)
     ids = {r.vec_id for r in out.select("vec_id").collect()}
     assert 999001 not in ids
     assert 999002 in ids
@@ -114,7 +113,7 @@ def test_null_embedding_rows_are_dropped(spark, null_sf):
 def test_null_text_scores_as_empty(spark, null_sf):
     """NULL-text docs get the empty-document quality row (all zeros), not
     an engine-accident composite."""
-    out = {r.doc_id: r for r in entry_mod.queries()["quality_score"](
+    out = {r.doc_id: r for r in entry_mod.registry()["quality_score"].run(
         spark, null_sf).filter("doc_id >= 999001").collect()}
     for did in (999001, 999003):
         r = out[did]

@@ -1,6 +1,7 @@
-"""Local mini-version of the driver's correctness gate: every
-queries()/oracle_sql() pair must agree (columns, row count, values) between
-Spark and DuckDB at sf0.001."""
+"""Local mini-version of the driver's correctness gate, over every entry of
+the query registry (graded AND folded): an entry with oracle SQL must agree
+with DuckDB (columns, row count, values) at sf0.001; a rows-only entry must
+run non-empty with a non-empty schema. Also pins the registry's shape."""
 
 from __future__ import annotations
 
@@ -9,23 +10,43 @@ import pytest
 import __spark_entry__ as entry_mod
 from conftest import SF_SMOKE, assert_frames_match, duck_df
 
-QUERY_NAMES = sorted(entry_mod.queries().keys())
+QUERY_NAMES = sorted(entry_mod.registry())
+
+# entries with no SQL twin; an oracle that vanishes shows up here
+ROWS_ONLY = {
+    "parse_stateful", "ann_lsh_topk", "media_features", "files_affected_approx",
+    "duration_percentiles_approx", "json_document", "json_document_sharded",
+    "embedding_near_dup",
+}
 
 
-def test_all_queries_have_oracles():
-    q = set(entry_mod.queries())
-    o = set(entry_mod.oracle_sql())
-    assert o <= q, f"oracle without query: {o - q}"
+def test_registry_contract():
+    table = entry_mod.registry()
+    q, o = entry_mod.queries(), entry_mod.oracle_sql()
+    # the driver records only the first 50 rows of its sweep
+    assert len(q) <= 50, f"graded tier has {len(q)} entries (> 50)"
+    assert len(table) == 110, f"registry has {len(table)} entries"
+    assert {n for n, e in table.items() if e.sql is None} == ROWS_ONLY
+    # graded rows-only entries come after every graded oracled entry (dict
+    # order is the sweep order)
+    names = list(q)
+    oracled_idx = [i for i, n in enumerate(names) if n in o]
+    rows_only_idx = [i for i, n in enumerate(names) if n not in o]
+    assert not rows_only_idx or max(oracled_idx) < min(rows_only_idx)
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_parity(spark, duck_smoke, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql().get(name)
-    if sql is None:
-        pytest.skip("rows-only query (no SQL oracle)")
-    spark_df = q(spark, SF_SMOKE)
-    assert_frames_match(spark_df, duck_df(duck_smoke, sql), name)
+    e = entry_mod.registry()[name]
+    spark_df = e.run(spark, SF_SMOKE)
+    if e.sql is None:
+        # rows-only: accuracy and contract tests live in the operator's own
+        # module; here prove the query runs non-empty with a stable schema
+        rows = spark_df.collect()
+        assert len(spark_df.columns) > 0
+        assert len(rows) > 0, f"{name}: rows-only query went empty"
+        return
+    assert_frames_match(spark_df, duck_df(duck_smoke, e.sql), name)
 
 
 def test_entry_runs(spark):
