@@ -1,7 +1,9 @@
 """Local mini-version of the driver's correctness gate, over every entry of
 the query registry (graded AND folded): an entry with oracle SQL must agree
 with DuckDB (columns, row count, values) at sf0.001; a rows-only entry must
-run non-empty with a non-empty schema. Also pins the registry's shape."""
+run non-empty with a non-empty schema. Also pins which entries have no
+oracle; the graded/folded split is pinned next to the folded tier's own
+sf0.01 compare."""
 
 from __future__ import annotations
 
@@ -20,19 +22,9 @@ ROWS_ONLY = {
 }
 
 
-def test_registry_contract():
+def test_all_queries_have_oracles():
     table = entry_mod.registry()
-    q, o = entry_mod.queries(), entry_mod.oracle_sql()
-    # the driver records only the first 50 rows of its sweep
-    assert len(q) <= 50, f"graded tier has {len(q)} entries (> 50)"
-    assert len(table) == 110, f"registry has {len(table)} entries"
     assert {n for n, e in table.items() if e.sql is None} == ROWS_ONLY
-    # graded rows-only entries come after every graded oracled entry (dict
-    # order is the sweep order)
-    names = list(q)
-    oracled_idx = [i for i, n in enumerate(names) if n in o]
-    rows_only_idx = [i for i, n in enumerate(names) if n not in o]
-    assert not rows_only_idx or max(oracled_idx) < min(rows_only_idx)
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
