@@ -8,8 +8,8 @@ the rest. The manifest is a JSON-lines file updated with atomic
 write-then-rename from the driver — the same pattern works against object
 storage via a _manifest prefix (one object per unit) on a real cluster.
 
-Row counts per unit come from ``observe`` (computed inside the write job,
-no second pass).
+The fan-out itself is :func:`~.operators.route.route_writes`; this module
+adds only the manifest it resumes from.
 """
 
 from __future__ import annotations
@@ -18,10 +18,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .metrics import Observation
-from .operators.route import DEFAULT_N_SALT, with_sink_partitions
+from .operators.route import DEFAULT_N_SALT, route_writes
 
 
 class Manifest:
@@ -37,8 +36,9 @@ class Manifest:
                         rec = json.loads(line)
                         self._done[(rec["stage"], rec["unit"])] = rec
 
-    def is_done(self, stage: str, unit: str) -> bool:
-        return (stage, unit) in self._done
+    def get(self, stage: str, unit: str) -> dict | None:
+        """The stored record of a completed unit, or None."""
+        return self._done.get((stage, unit))
 
     def mark_done(self, stage: str, unit: str, **meta) -> None:
         rec = {"stage": stage, "unit": unit, "ts": time.time(), **meta}
@@ -56,46 +56,8 @@ class Manifest:
 
 def route_writes_resumable(
     diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
-    fmt: str = "parquet", ts_granularity: str = "day",
+    ts_granularity: str = "day",
 ) -> dict[str, dict]:
-    """The fan-out of route_writes, resumable per sink.
-
-    Returns {sink_name: {"path", "rows", "secs", "skipped"}}. A sink already
-    in the manifest is skipped (its prior record is returned); each write
-    observes its own row count — per-unit lineage lands in the manifest.
-    """
-    manifest = Manifest(root)
-    diags = (
-        with_sink_partitions(diags, n_salt, ts_granularity)
-        .repartition("ts_bucket", "conv_bucket")
-        .cache()
-    )
-    results: dict[str, dict] = {}
-    try:
-        targets: list[tuple[str, DataFrame]] = [("diagnostics", diags)]
-        for sev in ("error", "warning", "info", "note"):
-            targets.append((f"severity={sev}", diags.filter(F.col("severity") == sev)))
-        for cls in ("error", "warning", "note", "tool-invocation", "step-boundary"):
-            targets.append((f"class={cls}", diags.filter(F.col("diag_class") == cls)))
-        for name, df in targets:
-            path = os.path.join(root, name)
-            if manifest.is_done("route", name):
-                rec = dict(next(r for r in manifest.records()
-                                if r["stage"] == "route" and r["unit"] == name))
-                rec.update(path=path, skipped=True)
-                results[name] = rec
-                continue
-            t0 = time.time()
-            if Observation is not None:
-                obs = Observation(f"route:{name}")
-                df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            (df.write.mode("overwrite").format(fmt)
-               .partitionBy("ts_bucket", "conv_bucket").save(path))
-            rows = int(obs.get["rows"]) if Observation is not None else -1
-            secs = round(time.time() - t0, 3)
-            manifest.mark_done("route", name, rows=rows, secs=secs)
-            results[name] = {"path": path, "rows": rows, "secs": secs,
-                             "skipped": False}
-    finally:
-        diags.unpersist()
-    return results
+    """:func:`route_writes` resumable per sink from ``{root}/_manifest.jsonl``:
+    a sink already in the manifest is skipped and its record returned."""
+    return route_writes(diags, root, n_salt, ts_granularity, manifest=Manifest(root))

@@ -19,19 +19,14 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, functions as F
-
-try:
-    from pyspark.sql import Observation
-except ImportError:  # pragma: no cover - Observation exists since 3.3
-    Observation = None
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 class StageMetrics:
     """Collects named per-stage observations; ``report()`` after an action."""
 
     def __init__(self) -> None:
-        self._obs: dict[str, object] = {}
+        self._obs: dict[str, Observation] = {}
         self._t0 = time.time()
 
     def observe(self, df: DataFrame, stage: str, *extra_aggs) -> DataFrame:
@@ -40,8 +35,6 @@ class StageMetrics:
         Stage names must be unique per StageMetrics instance; the returned
         DataFrame is otherwise identical to the input.
         """
-        if Observation is None:  # pragma: no cover
-            return df
         obs = Observation(stage)
         self._obs[stage] = obs
         aggs = [F.count(F.lit(1)).alias("rows"), *extra_aggs]
@@ -55,10 +48,11 @@ class StageMetrics:
         wall-clock comes from :meth:`wall_s` (it is a duration, not a stage
         row count, and must not be mixed into the per-stage map).
         """
-        out: dict[str, dict] = {}
-        for stage, obs in self._obs.items():
-            out[stage] = dict(obs.get)
-        return out
+        return {stage: self.get(stage) for stage in self._obs}
+
+    def get(self, stage: str) -> dict:
+        """Metric values of one stage; blocks until its action has run."""
+        return dict(self._obs[stage].get)
 
     def wall_s(self) -> float:
         """Seconds since this StageMetrics was constructed."""

@@ -20,14 +20,19 @@ BASELINE.json:
   ``DiagnosticError.invalidEncoding`` on non-UTF-8 input —
   BuildLogParser.swift:65-67) are routed aside instead of failing the job.
 
-In local mode this writes plain parquet; on a cluster the same calls target
-Iceberg tables (``writeTo(...).partitionedBy(...)``) — the partitioning
-columns are already materialized here so either sink format gets pruning.
+:func:`route_writes` writes plain parquet; :func:`route_writes_iceberg` is
+its cluster twin over the same sink list, writing Iceberg tables with
+native partition transforms instead of the materialized bucket columns.
 """
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, functions as F
+
+from ..metrics import StageMetrics
 
 DEFAULT_N_SALT = 64
 
@@ -72,6 +77,18 @@ FROM ({select_body}) s
 """
 
 
+def _sinks(diags: DataFrame) -> list[tuple[str, DataFrame]]:
+    """The fan-out's (name, frame) sinks, mirroring §2.6: the full
+    diagnostics sink, one per severity and one per diag class."""
+    return [
+        ("diagnostics", diags),
+        *((f"severity={sev}", diags.filter(F.col("severity") == sev))
+          for sev in ("error", "warning", "info", "note")),
+        *((f"class={cls}", diags.filter(F.col("diag_class") == cls))
+          for cls in ("error", "warning", "note", "tool-invocation", "step-boundary")),
+    ]
+
+
 def route_writes_iceberg(diags: DataFrame, table_prefix: str,
                          n_salt: int = DEFAULT_N_SALT) -> dict[str, str]:
     """Fan-out to real Iceberg tables (north_rule sink format) — the
@@ -93,28 +110,15 @@ def route_writes_iceberg(diags: DataFrame, table_prefix: str,
     """
     from pyspark.sql.functions import partitioning as P
 
-    sinks: dict[str, DataFrame] = {"diagnostics": diags}
-    for sev in ("error", "warning", "info", "note"):
-        sinks[f"severity_{sev}"] = diags.filter(F.col("severity") == sev)
-    for cls in ("error", "warning", "note", "tool-invocation", "step-boundary"):
-        key = cls.replace("-", "_")
-        sinks[f"class_{key}"] = diags.filter(F.col("diag_class") == cls)
     tables: dict[str, str] = {}
-    for name, df in sinks.items():
-        table = f"{table_prefix}_{name}"
-        (df.writeTo(table)
+    for sink, df in _sinks(diags):
+        name = sink.replace("=", "_").replace("-", "_")
+        tables[name] = f"{table_prefix}_{name}"
+        (df.writeTo(tables[name])
            .partitionedBy(P.days(F.col("ts")), P.bucket(n_salt, F.col("conv_id")))
            .using("iceberg")
            .createOrReplace())
-        tables[name] = table
     return tables
-
-
-def salt_repartition(df: DataFrame, n_salt: int = DEFAULT_N_SALT) -> DataFrame:
-    """Repartition by salted conversation key — defuses hot-conversation skew
-    ahead of stateless stages (classify/enrich are per-row, so any
-    partitioning is legal)."""
-    return df.repartition(F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt)))
 
 
 def split_dead_letter(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -143,20 +147,19 @@ def decode_text(raw: DataFrame, blob_col: str = "text_bytes",
 
 
 def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
-                 fmt: str = "parquet", ts_granularity: str = "day",
-                 subdir: str | None = None) -> dict[str, str]:
+                 ts_granularity: str = "day", subdir: str | None = None,
+                 manifest=None) -> dict[str, dict]:
     """Fan-out: one cached classify feeds all sinks (the reference's
-    addOutput loop). Returns {sink_name: path}.
+    addOutput loop). Returns {sink_name: {"path", "rows", "secs",
+    "skipped"}} in :func:`_sinks` order; rows are observed inside each
+    write job (no second pass).
 
-    Sinks (mirroring §2.6): per-severity sinks, per-diag-class sinks, an
-    errors_only sink (TextOutput errorsOnly flag) and the full diagnostics
-    sink. Each is partitioned by (ts_bucket, conv_bucket).
-
-    Write pattern: repartition on the sink partition columns BEFORE the
-    partitionBy write — otherwise every task holds rows of every output dir
-    and file count explodes to tasks × dirs (the classic partitioned-write
-    tiny-file storm; at 10^12 rows that is millions of 1 KB files). After
-    the repartition each output dir's rows live in one task → files ≈ dirs.
+    Each sink is partitioned by (ts_bucket, conv_bucket). Write pattern:
+    repartition on the sink partition columns BEFORE the partitionBy write —
+    otherwise every task holds rows of every output dir and file count
+    explodes to tasks × dirs (the classic partitioned-write tiny-file storm;
+    at 10^12 rows that is millions of 1 KB files). After the repartition
+    each output dir's rows live in one task → files ≈ dirs.
 
     ``subdir`` scopes the overwrite: writes land under
     ``{root}/{sink}/{subdir}`` and only that subtree is replaced. Callers
@@ -165,41 +168,50 @@ def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
     subdir per call (``batch_id=N``); a bare overwrite at the sink root
     would truncate every earlier call's rows.
 
-    The ten sink writes are INDEPENDENT jobs over the same cached input, so
-    they run concurrently from a small driver-side thread pool (Spark's
-    scheduler interleaves jobs submitted from multiple threads): the
-    per-job fixed costs — job scheduling, the partitioned-write commit
-    protocol — overlap instead of serializing. The cache is populated once
-    up front so the threads race on reads, not on materialization. On a
-    cluster the same shape holds: each sink is an independent Iceberg
-    commit, and concurrent sink jobs keep executors busy while a commit
-    finalizes. Measured 4.7 s → ~2 s on the sf0.1 bench (q9).
+    ``manifest`` (a :class:`..checkpoint.Manifest`) makes the fan-out
+    resumable per sink: a sink already recorded there is skipped and its
+    stored record returned with ``skipped=True``; each finished write is
+    recorded from the calling thread, in sink order. A crash between a
+    write and its record leaves a sink that the rerun overwrites.
+
+    The sink writes are INDEPENDENT jobs over the same cached input, so
+    they run from a small driver-side thread pool: the per-job fixed costs
+    (scheduling, the partitioned-write commit protocol) overlap instead of
+    serializing — 4.7 s → ~2 s on the sf0.1 bench (q9). The cache is filled
+    once up front, and only if a sink is left to write.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    diags = (
-        with_sink_partitions(diags, n_salt, ts_granularity)
-        .repartition("ts_bucket", "conv_bucket")
-        .cache()
-    )
+    parts = (with_sink_partitions(diags, n_salt, ts_granularity)
+             .repartition("ts_bucket", "conv_bucket"))
     suffix = f"/{subdir}" if subdir else ""
+    mx = StageMetrics()
+    results: dict[str, dict] = {}
+    pending: list[tuple[str, str, DataFrame]] = []
+    for name, df in _sinks(parts):
+        path = f"{root}/{name}{suffix}"
+        rec = manifest.get("route", name + suffix) if manifest else None
+        if rec:
+            results[name] = {**rec, "path": path, "skipped": True}
+        else:
+            results[name] = {"path": path}
+            pending.append((name, path, mx.observe(df, name)))
+    if not pending:
+        return results
+
+    def write(item: tuple[str, str, DataFrame]) -> tuple[str, float]:
+        name, path, df = item
+        t0 = time.time()
+        df.write.mode("overwrite").partitionBy("ts_bucket", "conv_bucket").parquet(path)
+        return name, round(time.time() - t0, 3)
+
+    parts.cache()
     try:
-        diags.count()  # populate the cache once, before the write threads
-        targets: list[tuple[str, DataFrame]] = [("diagnostics", diags)]
-        for sev in ("error", "warning", "info", "note"):
-            targets.append((f"severity={sev}", diags.filter(F.col("severity") == sev)))
-        for cls in ("error", "warning", "note", "tool-invocation", "step-boundary"):
-            targets.append((f"class={cls}", diags.filter(F.col("diag_class") == cls)))
-
-        def write(name_df: tuple[str, DataFrame]) -> tuple[str, str]:
-            name, df = name_df
-            path = f"{root}/{name}{suffix}"
-            (df.write.mode("overwrite").format(fmt)
-               .partitionBy("ts_bucket", "conv_bucket").save(path))
-            return name, path
-
+        parts.count()  # populate the cache once, before the write threads
         with ThreadPoolExecutor(max_workers=4) as pool:
-            paths = dict(pool.map(write, targets))
+            for name, secs in pool.map(write, pending):
+                rows = int(mx.get(name)["rows"])
+                if manifest:
+                    manifest.mark_done("route", name + suffix, rows=rows, secs=secs)
+                results[name].update(rows=rows, secs=secs, skipped=False)
     finally:
-        diags.unpersist()
-    return paths
+        parts.unpersist()
+    return results

@@ -36,8 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ..operators.assemble import STATEFUL_SCHEMA
-from ..rules.table import Diagnostic
+from ..operators.assemble import STATEFUL_SCHEMA, _diag_row
 
 #: default end-of-conversation sentinel (ASCII EOT) — never a real log line
 DEFAULT_EOF_MARKER = "\x04"
@@ -49,16 +48,6 @@ STATE_SCHEMA = StructType([
 ])
 
 _COLS = [f.name for f in STATEFUL_SCHEMA.fields]
-
-
-def _diag_to_row(conv: str, turn: int | None, d: Diagnostic) -> dict:
-    return {
-        "conv_id": conv, "start_turn_idx": turn,
-        "file": d.file, "line": d.line, "column": d.column,
-        "severity": d.severity, "message": d.message,
-        "related_messages": d.related_messages, "source": d.source,
-        "category": d.category, "raw": d.raw, "build_target": d.build_target,
-    }
 
 
 def stream_parse_stateful(transcripts: DataFrame, rules_factory,
@@ -83,7 +72,7 @@ def stream_parse_stateful(transcripts: DataFrame, rules_factory,
             state.remove()
             if cur_json:
                 d = D(**json.loads(cur_json))
-                yield pd.DataFrame([_diag_to_row(conv, cur_turn, d)],
+                yield pd.DataFrame([_diag_row(conv, cur_turn, d)],
                                    columns=_COLS)
             return
 
@@ -103,7 +92,7 @@ def stream_parse_stateful(transcripts: DataFrame, rules_factory,
             else:
                 oracle.consume_line(text, int(turn))
 
-        out = [_diag_to_row(conv, t, d)
+        out = [_diag_row(conv, t, d)
                for t, d in zip(oracle.out_line_nos, oracle.out)]
         if finished and oracle.current is None:
             state.remove()
@@ -199,7 +188,7 @@ def stream_parse_stateful_unordered(
                 oracle.consume_line(text, next_turn)
             next_turn += 1
 
-        out = [_diag_to_row(conv, t, d)
+        out = [_diag_row(conv, t, d)
                for t, d in zip(oracle.out_line_nos, oracle.out)]
         if finished and oracle.current is None and not buffer:
             state.remove()

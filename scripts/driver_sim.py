@@ -90,8 +90,8 @@ def main() -> int:
         # transient-ENOMEM retry: this Firecracker sandbox sporadically
         # fails tiny allocations (16 KB) with 122 GB free — measured with
         # duckdb_memory() sum = 0 and process RSS < 600 MB at the failure,
-        # and an immediate SAME-CONNECTION retry succeeding (see
-        # __spark_entry__ docstring). Exponential backoff + a memory
+        # and an immediate SAME-CONNECTION retry succeeding (evidence in
+        # commit 80c6d52's message). Exponential backoff + a memory
         # snapshot per retry: if duckdb_memory/RSS are LARGE here it is a
         # real regression in the oracle, not the sandbox transient.
         for attempt in range(5):

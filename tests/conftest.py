@@ -51,8 +51,8 @@ def duck_oracle():
 def duck_df(con: duckdb.DuckDBPyConnection, sql: str) -> pd.DataFrame:
     """Execute oracle SQL with a transient-ENOMEM retry: this sandbox VM
     sporadically fails tiny allocations (duckdb_memory() = 0, RSS < 600 MB,
-    122 GB free at the failure; same-connection retry succeeds — see
-    __spark_entry__ docstring). Exponential backoff; each retry logs a
+    122 GB free at the failure; same-connection retry succeeds — evidence
+    in commit 80c6d52's message). Exponential backoff; each retry logs a
     duckdb_memory()/RSS snapshot so a REAL memory regression in a new
     oracle shows up as large numbers here instead of being silently
     absorbed (ADVICE r03)."""

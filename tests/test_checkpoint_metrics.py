@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,12 +14,29 @@ from buildlogparser_spark.checkpoint import Manifest, route_writes_resumable
 from buildlogparser_spark.metrics import StageMetrics
 from buildlogparser_spark.operators.classify import classify
 from buildlogparser_spark.operators.enrich import enrich
+from buildlogparser_spark.operators.route import route_writes
 from buildlogparser_spark.transcripts import load_transcripts
 
 
 @pytest.fixture()
 def diags(spark):
     return classify(load_transcripts(spark, SF_SMOKE))
+
+
+def _execution_ids(spark) -> set[int]:
+    """Ids of the SQL executions in Spark's status store, once the listener
+    bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().executionId())
+    return ids
+
+
+def _part_mtimes(root: str) -> dict[str, float]:
+    return {p: os.path.getmtime(p)
+            for p in glob.glob(f"{root}/**/part-*", recursive=True)}
 
 
 def test_stage_metrics_row_counts(spark, diags):
@@ -44,10 +64,31 @@ def test_route_resumable_full_and_skip(spark, diags, tmp_path):
     key = ["conv_id", "turn_idx", "severity", "category"]
     assert diags.select(*key).exceptAll(back.select(*key)).count() == 0
 
-    # second run: everything skipped, nothing rewritten
+    # second run: everything skipped, nothing rewritten — not even the
+    # cache-filling count runs when no sink is pending
+    ids, mtimes = _execution_ids(spark), _part_mtimes(root)
+    assert mtimes
     res2 = route_writes_resumable(diags, root, n_salt=4, ts_granularity="month")
     assert all(r["skipped"] for r in res2.values())
     assert res2["diagnostics"]["rows"] == total
+    assert _execution_ids(spark) <= ids
+    assert _part_mtimes(root) == mtimes
+
+
+def test_route_writes_rows_match_sinks(spark, diags, tmp_path):
+    """The one fan-out returns each sink's observed row count, and it equals
+    what the sink holds on disk under the caller's subdir."""
+    root = str(tmp_path / "sinks")
+    res = route_writes(diags, root, n_salt=4, ts_granularity="month",
+                       subdir="batch_id=0")
+    assert len(res) == 10 and not any(r["skipped"] for r in res.values())
+    for sink, r in res.items():
+        path = f"{root}/{sink}/batch_id=0"
+        assert r["path"] == path
+        on_disk = spark.read.parquet(path).count() \
+            if glob.glob(f"{path}/**/part-*", recursive=True) else 0
+        assert r["rows"] == on_disk, sink
+    assert res["diagnostics"]["rows"] == diags.count() > 0
 
 
 def test_route_resume_after_partial_failure(spark, diags, tmp_path):
