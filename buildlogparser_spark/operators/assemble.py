@@ -16,7 +16,9 @@ Two implementations with different generality/performance trade-offs:
    (:func:`compile_blocks`), R2 BUILD FAILED, R3 xcodebuild warnings, R6
    linker, R7 XCTest, R8 swift-build gutter blocks and R9 module-failed.
    Each shape supplies three stateless per-line booleans — ``is_start``,
-   ``is_close``, ``is_cont`` — plus a header projection; no Python runs.
+   ``is_close``, ``is_cont`` — and the rule id its header is read under:
+   the header's fields come from :func:`classify.rule_fields` (the SQL
+   twins: :func:`classify.header_fields_sql`); no Python runs.
    Semantics proven equal to the single-rule ``ParserOracle`` stack by
    differential tests on adversarial generated logs (tests/test_assemble.py).
 
@@ -40,11 +42,11 @@ treated as a start here. Such lines require the general
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -55,13 +57,11 @@ from ..rules.table import (
     COMPILE_ERROR_RE,
     CONTEXT_LINE_RE,
     ERROR_POINTER_RE,
-    FILE_INFO_RE,
     MODULE_FAILED_RE,
     Rule,
-    SUITE_NAME_RE,
-    TEST_NAME_RE,
     XCODEBUILD_WARNING_RE,
 )
+from .classify import header_fields_sql, rule_fields
 
 STATEFUL_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -417,15 +417,28 @@ def _compile_start(T):
     )
 
 
-def _compile_header(header):
-    """file / line / column / severity / message of an R1/R8 header line."""
-    return [
-        F.regexp_extract(header, COMPILE_ERROR_RE, 1).alias("file"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 3).cast("long").alias("line"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 4).cast("long").alias("column"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 5).alias("severity"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 6).alias("message"),
-    ]
+def _compile_start_sql() -> str:
+    """DuckDB twin of :func:`_compile_start`."""
+    ce = "'" + COMPILE_ERROR_RE.replace("'", "''") + "'"
+    return (f"(contains(text, 'error:') OR contains(text, 'warning:')) "
+            f"AND regexp_matches(text, {ce}) "
+            f"AND length(regexp_extract(text, {ce}, 3)) <= 18 "
+            f"AND length(regexp_extract(text, {ce}, 4)) <= 18")
+
+
+def _header_select(blocks: DataFrame, fields: dict[str, Column],
+                   cols: list[str]) -> DataFrame:
+    """conv_id, start_turn_idx and ``cols`` of assembled blocks: each header
+    field from ``fields`` (:func:`classify.rule_fields` over the header),
+    ``related_messages`` as assembled."""
+    return blocks.select("conv_id", "start_turn_idx", *(
+        F.col(c) if c == "related_messages" else fields[c].alias(c) for c in cols))
+
+
+#: header fields of the R2/R3/R6/R9 block outputs
+_BLOCK_FIELDS = ["severity", "message", "source", "category", "raw"]
+#: the flat related pair of every SQL twin (see :func:`_flat_related`)
+_RELATED_SQL = ["n_related", "related_joined"]
 
 
 def compile_blocks(transcripts: DataFrame, chunk_size: int = 65536) -> DataFrame:
@@ -461,15 +474,8 @@ def compile_blocks(transcripts: DataFrame, chunk_size: int = 65536) -> DataFrame
                | (~fastfail & (F.length(trimmed) > 0)))
     blocks = assemble_blocks(transcripts, _compile_start(T), is_term, is_cont,
                              chunk_size)
-    header = F.col("header")
-    return blocks.select(
-        "conv_id", "start_turn_idx", *_compile_header(header),
-        "related_messages",
-        F.lit("compiler").alias("source"),
-        F.regexp_extract(header, COMPILE_ERROR_RE, 5).alias("category"),
-        header.alias("raw"),
-        F.lit(None).cast("string").alias("build_target"),
-    )
+    return _header_select(blocks, rule_fields(F.col("header"), "r1_compile"),
+                          STATEFUL_SCHEMA.names[2:])
 
 
 def compile_blocks_flat(transcripts: DataFrame,
@@ -482,61 +488,18 @@ def compile_blocks_flat(transcripts: DataFrame,
 
 def compile_blocks_sql(transcripts_cte: str) -> str:
     """DuckDB twin of compile_blocks_flat over a transcripts CTE body."""
-    ce = "'" + COMPILE_ERROR_RE.replace("'", "''") + "'"
-    return f"""
-WITH transcripts AS (
-{transcripts_cte}
-), flags AS (
-  SELECT conv_id, turn_idx, text,
-    regexp_replace(text, '^[ \t]+|[ \t]+$', '', 'g') AS trimmed,
-    (contains(text, 'error:') OR contains(text, 'warning:'))
-      AND regexp_matches(text, {ce})
-      AND length(regexp_extract(text, {ce}, 3)) <= 18
-      AND length(regexp_extract(text, {ce}, 4)) <= 18 AS is_start,
-    contains(text, ':') AND (contains(text, 'error:') OR contains(text, 'warning:')) AS fastfail
-  FROM transcripts
-), flags2 AS (
-  SELECT *,
-    length(trimmed) = 0 OR starts_with(trimmed, 'SwiftCompile')
-      OR starts_with(trimmed, 'cd ') OR starts_with(trimmed, '** BUILD')
-      OR starts_with(trimmed, '---') AS is_term,
-    starts_with(trimmed, 'note:') OR starts_with(trimmed, '^') AS note_or_caret
-  FROM flags
-), flags3 AS (
-  SELECT *,
-    NOT is_start AND NOT is_term
-      AND (note_or_caret OR (NOT fastfail AND length(trimmed) > 0)) AS is_cont
-  FROM flags2
-), seg AS (
-  SELECT *, sum(CASE WHEN is_start THEN 1 ELSE 0 END)
-              OVER (PARTITION BY conv_id ORDER BY turn_idx
-                    ROWS UNBOUNDED PRECEDING) AS seg
-  FROM flags3
-), cl AS (
-  SELECT *, max(CASE WHEN NOT is_start AND is_term THEN 1 ELSE 0 END)
-              OVER (PARTITION BY conv_id, seg ORDER BY turn_idx
-                    ROWS UNBOUNDED PRECEDING) AS closed
-  FROM seg WHERE seg > 0
-), agg AS (
-  SELECT conv_id, seg,
-    min_by(text, turn_idx) AS header,
-    CAST(min(turn_idx) AS INTEGER) AS start_turn_idx,
-    CAST(coalesce(count(*) FILTER (WHERE is_cont AND closed = 0), 0) AS BIGINT) AS n_related,
-    coalesce(string_agg(text, chr(10) ORDER BY turn_idx)
-               FILTER (WHERE is_cont AND closed = 0), '') AS related_joined
-  FROM cl GROUP BY conv_id, seg
-)
-SELECT conv_id, start_turn_idx,
-  regexp_extract(header, {ce}, 1) AS file,
-  CAST(regexp_extract(header, {ce}, 3) AS BIGINT) AS line,
-  CAST(regexp_extract(header, {ce}, 4) AS BIGINT) AS "column",
-  regexp_extract(header, {ce}, 5) AS severity,
-  regexp_extract(header, {ce}, 6) AS message,
-  n_related, related_joined,
-  'compiler' AS source,
-  regexp_extract(header, {ce}, 5) AS category
-FROM agg
-"""
+    tr = "regexp_replace(text, '^[ \t]+|[ \t]+$', '', 'g')"
+    close = (f"length({tr}) = 0 OR starts_with({tr}, 'SwiftCompile') "
+             f"OR starts_with({tr}, 'cd ') OR starts_with({tr}, '** BUILD') "
+             f"OR starts_with({tr}, '---')")
+    cont = (f"starts_with({tr}, 'note:') OR starts_with({tr}, '^') "
+            "OR (NOT (contains(text, ':') AND (contains(text, 'error:') "
+            f"OR contains(text, 'warning:'))) AND length({tr}) > 0)")
+    inner = _blocks_sql(transcripts_cte, _compile_start_sql(), close, cont)
+    return header_fields_sql(
+        inner, "'r1_compile'",
+        ["file", "line", "column", "severity", "message", *_RELATED_SQL,
+         "source", "category"])
 
 
 def assemble_blocks(transcripts: DataFrame, is_start, is_close, is_cont,
@@ -640,16 +603,9 @@ def build_failed_blocks(transcripts: DataFrame) -> DataFrame:
         | T.contains("failures)")
     )
     blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
-    out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.lit("error").alias("severity"),
-        F.lit("BUILD FAILED").alias("message"),
-        F.lit("xcodebuild").alias("source"),
-        F.lit("build_failed").alias("category"),
-        F.col("header").alias("raw"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    return _flat_related(_header_select(
+        blocks, rule_fields(F.col("header"), "r2_build_failed"),
+        _BLOCK_FIELDS + ["related_messages"]))
 
 
 def linker_blocks(transcripts: DataFrame) -> DataFrame:
@@ -665,16 +621,9 @@ def linker_blocks(transcripts: DataFrame) -> DataFrame:
     is_close = T.startswith("clang: error: linker command failed")
     is_cont = T.startswith("  ") | T.startswith("ld:") | T.startswith("clang:")
     blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
-    out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.lit("error").alias("severity"),
-        F.col("header").alias("message"),
-        F.lit("linker").alias("source"),
-        F.lit("undefined_symbols").alias("category"),
-        F.col("header").alias("raw"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    return _flat_related(_header_select(
+        blocks, rule_fields(F.col("header"), "r6_linker"),
+        _BLOCK_FIELDS + ["related_messages"]))
 
 
 def _blocks_sql(transcripts_cte: str, start_sql: str, close_sql: str,
@@ -735,13 +684,8 @@ def build_failed_blocks_sql(transcripts_cte: str) -> str:
     close = "contains(text, 'failures)')"
     cont = ("starts_with(text, 'The following build commands failed:') "
             "OR starts_with(text, chr(9)) OR contains(text, 'failures)')")
-    inner = _blocks_sql(transcripts_cte, start, close, cont)
-    return f"""
-SELECT conv_id, start_turn_idx,
-  'error' AS severity, 'BUILD FAILED' AS message, 'xcodebuild' AS source,
-  'build_failed' AS category, header AS raw, n_related, related_joined
-FROM ({inner}) b
-"""
+    return header_fields_sql(_blocks_sql(transcripts_cte, start, close, cont),
+                             "'r2_build_failed'", _BLOCK_FIELDS + _RELATED_SQL)
 
 
 def linker_blocks_sql(transcripts_cte: str) -> str:
@@ -749,13 +693,8 @@ def linker_blocks_sql(transcripts_cte: str) -> str:
     close = "starts_with(text, 'clang: error: linker command failed')"
     cont = ("starts_with(text, '  ') OR starts_with(text, 'ld:') "
             "OR starts_with(text, 'clang:')")
-    inner = _blocks_sql(transcripts_cte, start, close, cont)
-    return f"""
-SELECT conv_id, start_turn_idx,
-  'error' AS severity, header AS message, 'linker' AS source,
-  'undefined_symbols' AS category, header AS raw, n_related, related_joined
-FROM ({inner}) b
-"""
+    return header_fields_sql(_blocks_sql(transcripts_cte, start, close, cont),
+                             "'r6_linker'", _BLOCK_FIELDS + _RELATED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -812,26 +751,17 @@ def swiftbuild_compile_blocks(transcripts: DataFrame) -> DataFrame:
         | T.rlike(_BLANK_LINE_RE)
     )
     blocks = assemble_blocks(transcripts, _compile_start(T), is_close, is_cont)
-    header = F.col("header")
-    out = blocks.select(
-        "conv_id", "start_turn_idx", *_compile_header(header),
-        F.lit("swift-build").alias("source"),
-        F.concat(F.lit("compile_"), F.regexp_extract(header, COMPILE_ERROR_RE, 5))
-        .alias("category"),
-        header.alias("raw"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    f = rule_fields(F.col("header"), "r1_compile")
+    f.update(source=F.lit("swift-build"),
+             category=F.concat(F.lit("compile_"), f["severity"]))
+    return _flat_related(_header_select(
+        blocks, f, ["file", "line", "column"] + _BLOCK_FIELDS + ["related_messages"]))
 
 
 def swiftbuild_compile_blocks_sql(transcripts_cte: str) -> str:
     ce = "'" + COMPILE_ERROR_RE.replace("'", "''") + "'"
     ctx = "'" + CONTEXT_LINE_RE.replace("'", "''") + "'"
     ptr = "'" + ERROR_POINTER_RE.replace("'", "''") + "'"
-    start = (f"(contains(text, 'error:') OR contains(text, 'warning:')) "
-             f"AND regexp_matches(text, {ce}) "
-             f"AND length(regexp_extract(text, {ce}, 3)) <= 18 "
-             f"AND length(regexp_extract(text, {ce}, 4)) <= 18")
     close = ("(starts_with(text, 'error: ') AND contains(text, 'command failed')) "
              "OR (starts_with(text, '[') AND contains(text, ']') "
              "AND contains(text, 'Compiling')) "
@@ -839,19 +769,10 @@ def swiftbuild_compile_blocks_sql(transcripts_cte: str) -> str:
              f"AND regexp_matches(text, {ce}))")
     cont = (f"regexp_matches(text, {ctx}) OR regexp_matches(text, {ptr}) "
             f"OR regexp_matches(text, '^\\s*$')")
-    inner = _blocks_sql(transcripts_cte, start, close, cont)
-    return f"""
-SELECT conv_id, start_turn_idx,
-  regexp_extract(header, {ce}, 1) AS file,
-  CAST(regexp_extract(header, {ce}, 3) AS BIGINT) AS line,
-  CAST(regexp_extract(header, {ce}, 4) AS BIGINT) AS "column",
-  regexp_extract(header, {ce}, 5) AS severity,
-  regexp_extract(header, {ce}, 6) AS message,
-  'swift-build' AS source,
-  'compile_' || regexp_extract(header, {ce}, 5) AS category,
-  header AS raw, n_related, related_joined
-FROM ({inner}) b
-"""
+    return header_fields_sql(
+        _blocks_sql(transcripts_cte, _compile_start_sql(), close, cont), "'r1_compile'",
+        ["file", "line", "column"] + _BLOCK_FIELDS + _RELATED_SQL,
+        source="'swift-build'", category=f"'compile_' || regexp_extract(text, {ce}, 5)")
 
 
 def module_failed_blocks(transcripts: DataFrame) -> DataFrame:
@@ -874,19 +795,9 @@ def module_failed_blocks(transcripts: DataFrame) -> DataFrame:
     )
     is_cont = T.startswith(" ") & T.contains("use -v to see invocation")
     blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
-    header = F.col("header")
-    out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.lit("error").alias("severity"),
-        F.concat(F.lit("Module compilation failed with exit code "),
-                 F.regexp_extract(header, MODULE_FAILED_RE, 1),
-                 F.regexp_extract(header, MODULE_FAILED_RE, 2)).alias("message"),
-        F.lit("swift-build").alias("source"),
-        F.lit("module_failed").alias("category"),
-        header.alias("raw"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    return _flat_related(_header_select(
+        blocks, rule_fields(F.col("header"), "r9_module_failed"),
+        _BLOCK_FIELDS + ["related_messages"]))
 
 
 def module_failed_blocks_sql(transcripts_cte: str) -> str:
@@ -897,16 +808,8 @@ def module_failed_blocks_sql(transcripts_cte: str) -> str:
              "OR contains(text, ': warning:'))) "
              "OR regexp_matches(text, '^\\s*$')")
     cont = "starts_with(text, ' ') AND contains(text, 'use -v to see invocation')"
-    inner = _blocks_sql(transcripts_cte, start, close, cont)
-    return f"""
-SELECT conv_id, start_turn_idx,
-  'error' AS severity,
-  'Module compilation failed with exit code '
-    || regexp_extract(header, {mf}, 1) || regexp_extract(header, {mf}, 2) AS message,
-  'swift-build' AS source, 'module_failed' AS category, header AS raw,
-  n_related, related_joined
-FROM ({inner}) b
-"""
+    return header_fields_sql(_blocks_sql(transcripts_cte, start, close, cont),
+                             "'r9_module_failed'", _BLOCK_FIELDS + _RELATED_SQL)
 
 
 def xcodebuild_warning_blocks(transcripts: DataFrame) -> DataFrame:
@@ -922,17 +825,9 @@ def xcodebuild_warning_blocks(transcripts: DataFrame) -> DataFrame:
     )
     is_cont = T.startswith("{ platform:") | T.startswith("}")
     blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
-    header = F.col("header")
-    out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.lit("warning").alias("severity"),
-        F.regexp_extract(header, XCODEBUILD_WARNING_RE, 1).alias("message"),
-        F.lit("xcodebuild").alias("source"),
-        F.lit("warning").alias("category"),
-        header.alias("raw"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    return _flat_related(_header_select(
+        blocks, rule_fields(F.col("header"), "r3_xcb_warning"),
+        _BLOCK_FIELDS + ["related_messages"]))
 
 
 def xcodebuild_warning_blocks_sql(transcripts_cte: str) -> str:
@@ -941,15 +836,8 @@ def xcodebuild_warning_blocks_sql(transcripts_cte: str) -> str:
     close = ("regexp_matches(text, '^\\s*$') "
              "OR starts_with(text, '** BUILD FAILED **')")
     cont = "starts_with(text, '{ platform:') OR starts_with(text, '}')"
-    inner = _blocks_sql(transcripts_cte, start, close, cont)
-    return f"""
-SELECT conv_id, start_turn_idx,
-  'warning' AS severity,
-  regexp_extract(header, {xw}, 1) AS message,
-  'xcodebuild' AS source, 'warning' AS category, header AS raw,
-  n_related, related_joined
-FROM ({inner}) b
-"""
+    return header_fields_sql(_blocks_sql(transcripts_cte, start, close, cont),
+                             "'r3_xcb_warning'", _BLOCK_FIELDS + _RELATED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -963,6 +851,14 @@ FROM ({inner}) b
 # (header or test_error) is again test-flavored — so "a test block is open"
 # ⇔ "turn_idx > first T/E turn", one hash-aggregated min per conversation.
 # ---------------------------------------------------------------------------
+
+
+_R7_RULES = ("r7a_test_case", "r7b_test_suite", "r7c_assertion", "r7d_test_error")
+# a header's start kind, in classify's first-match order
+_R7_KIND_SQL = """CASE WHEN starts_with(text, 'Test Case') THEN 'r7a_test_case'
+       WHEN starts_with(text, 'Test Suite') THEN 'r7b_test_suite'
+       WHEN contains(text, 'XCTAssert') AND contains(text, 'failed') THEN 'r7c_assertion'
+       ELSE 'r7d_test_error' END"""
 
 
 def xctest_blocks(transcripts: DataFrame) -> DataFrame:
@@ -1019,90 +915,19 @@ def xctest_blocks(transcripts: DataFrame) -> DataFrame:
                     ~is_start & (F.col("turn_idx") > OTF) & F.col("c_shape"))
     )
     blocks = assemble_flagged(flagged)
-
-    # header extraction per start kind — same expressions as the stateless
-    # classify r7a-r7d arms (operators/classify.py), applied to the header
     h = F.col("header")
-    null_s = F.lit(None).cast("string")
-    null_l = F.lit(None).cast("long")
-    status = (
-        F.when(h.contains("failed"), "Failed")
-        .when(h.contains("passed"), "Passed")
-        .when(h.contains("started"), "Started")
-        .otherwise("Info")
-    )
-    name_hit = h.rlike(TEST_NAME_RE)
-    name = F.regexp_extract(h, TEST_NAME_RE, 1)
-    target = F.when(name_hit, F.substring_index(name, " ", 1)).otherwise(null_s)
-    suite = F.when(h.rlike(SUITE_NAME_RE),
-                   F.regexp_extract(h, SUITE_NAME_RE, 1)).otherwise(F.lit("Unknown Suite"))
-    fi_hit = h.rlike(FILE_INFO_RE)
-    fi_g2 = F.regexp_extract(h, FILE_INFO_RE, 2)
-    fi_file = F.when(fi_hit, F.regexp_extract(h, FILE_INFO_RE, 1)).otherwise(null_s)
-    fi_line = F.when(fi_hit & (F.length(fi_g2) <= 18), fi_g2.cast("long")).otherwise(null_l)
-    assert_msg = F.trim(F.substring(h, F.locate("XCTAssert", h), F.lit(2 ** 30)))
-    err_msg = F.trim(F.substring(h, F.locate("error:", h) + F.lit(7), F.lit(2 ** 30)))
-
     kind = (
-        F.when(h.startswith("Test Case"), "case")
-        .when(h.startswith("Test Suite"), "suite")
-        .when(h.contains("XCTAssert") & h.contains("failed"), "assert")
-        .otherwise("err")
+        F.when(h.startswith("Test Case"), "r7a_test_case")
+        .when(h.startswith("Test Suite"), "r7b_test_suite")
+        .when(h.contains("XCTAssert") & h.contains("failed"), "r7c_assertion")
+        .otherwise("r7d_test_error")
     )
-    K = kind
-    severity = (
-        F.when(K.isin("case", "suite"),
-               F.when(h.contains("failed"), "error").otherwise("info"))
-        .otherwise(F.lit("error"))
-    )
-    category = (
-        F.when(K == "case",
-               F.when(h.contains("failed"), "test_failure")
-               .when(h.contains("passed"), "test_success")
-               .when(h.contains("started"), "test_start")
-               .otherwise("test_info"))
-        .when(K == "suite",
-              F.when(h.contains("failed"), "test_suite_failure")
-              .when(h.contains("passed"), "test_suite_success")
-              .when(h.contains("started"), "test_suite_start")
-              .otherwise("test_suite_info"))
-        .when(K == "assert", F.lit("assertion_failure"))
-        .otherwise(F.lit("test_error"))
-    )
-    message = (
-        F.when(K == "case", F.concat(
-            F.lit("Test: "),
-            F.when(name_hit, name).otherwise(F.lit("Unknown Test")),
-            F.lit(" - "), status))
-        .when(K == "suite", F.concat(F.lit("Test Suite: "), suite,
-                                     F.lit(" - "), status))
-        .when(K == "assert", assert_msg)
-        .otherwise(err_msg)
-    )
-    build_target = (
-        F.when(K.isin("case", "assert"), target)
-        .when(K == "suite", suite)
-        .otherwise(null_s)
-    )
-    out = blocks.select(
-        "conv_id", "start_turn_idx",
-        F.when(K.isin("assert", "err"), fi_file).otherwise(null_s).alias("file"),
-        F.when(K.isin("assert", "err"), fi_line).otherwise(null_l).alias("line"),
-        severity.alias("severity"),
-        message.alias("message"),
-        F.lit("xctest").alias("source"),
-        category.alias("category"),
-        h.alias("raw"),
-        build_target.alias("build_target"),
-        "related_messages",
-    )
-    return _flat_related(out)
+    return _flat_related(_header_select(
+        blocks, rule_fields(h, kind, _R7_RULES),
+        ["file", "line"] + _BLOCK_FIELDS + ["build_target", "related_messages"]))
 
 
 def xctest_blocks_sql(transcripts_cte: str) -> str:
-    tn = "'" + TEST_NAME_RE.replace("'", "''") + "'"
-    sn = "'" + SUITE_NAME_RE.replace("'", "''") + "'"
-    fi = "'" + FILE_INFO_RE.replace("'", "''") + "'"
     big = str(1 << 62)
     flagged = f"""
 WITH transcripts AS (
@@ -1135,58 +960,6 @@ WITH transcripts AS (
   FROM wotf
 )
 SELECT * FROM fl"""
-    inner = _blocks_sql_flagged(flagged)
-    status = ("(CASE WHEN contains(header, 'failed') THEN 'Failed' "
-              "WHEN contains(header, 'passed') THEN 'Passed' "
-              "WHEN contains(header, 'started') THEN 'Started' ELSE 'Info' END)")
-    suite = (f"(CASE WHEN regexp_matches(header, {sn}) "
-             f"THEN regexp_extract(header, {sn}, 1) ELSE 'Unknown Suite' END)")
-    return f"""
-WITH blocks AS (
-{inner}
-), kinds AS (
-  SELECT *, CASE WHEN starts_with(header, 'Test Case') THEN 'case'
-                 WHEN starts_with(header, 'Test Suite') THEN 'suite'
-                 WHEN contains(header, 'XCTAssert') AND contains(header, 'failed')
-                      THEN 'assert'
-                 ELSE 'err' END AS kind
-  FROM blocks
-)
-SELECT conv_id, start_turn_idx,
-  CASE WHEN kind IN ('assert', 'err') AND regexp_matches(header, {fi})
-       THEN regexp_extract(header, {fi}, 1) END AS file,
-  CASE WHEN kind IN ('assert', 'err') AND regexp_matches(header, {fi})
-            AND length(regexp_extract(header, {fi}, 2)) <= 18
-       THEN CAST(regexp_extract(header, {fi}, 2) AS BIGINT) END AS line,
-  CASE WHEN kind IN ('case', 'suite')
-       THEN CASE WHEN contains(header, 'failed') THEN 'error' ELSE 'info' END
-       ELSE 'error' END AS severity,
-  CASE WHEN kind = 'case'
-       THEN 'Test: ' || (CASE WHEN regexp_matches(header, {tn})
-                              THEN regexp_extract(header, {tn}, 1)
-                              ELSE 'Unknown Test' END) || ' - ' || {status}
-       WHEN kind = 'suite'
-       THEN 'Test Suite: ' || {suite} || ' - ' || {status}
-       WHEN kind = 'assert'
-       THEN trim(substr(header, strpos(header, 'XCTAssert')))
-       ELSE trim(substr(header, strpos(header, 'error:') + 7)) END AS message,
-  'xctest' AS source,
-  CASE WHEN kind = 'case'
-       THEN CASE WHEN contains(header, 'failed') THEN 'test_failure'
-                 WHEN contains(header, 'passed') THEN 'test_success'
-                 WHEN contains(header, 'started') THEN 'test_start'
-                 ELSE 'test_info' END
-       WHEN kind = 'suite'
-       THEN CASE WHEN contains(header, 'failed') THEN 'test_suite_failure'
-                 WHEN contains(header, 'passed') THEN 'test_suite_success'
-                 WHEN contains(header, 'started') THEN 'test_suite_start'
-                 ELSE 'test_suite_info' END
-       WHEN kind = 'assert' THEN 'assertion_failure'
-       ELSE 'test_error' END AS category,
-  header AS raw,
-  CASE WHEN kind IN ('case', 'assert') AND regexp_matches(header, {tn})
-       THEN split_part(regexp_extract(header, {tn}, 1), ' ', 1)
-       WHEN kind = 'suite' THEN {suite} END AS build_target,
-  n_related, related_joined
-FROM kinds
-"""
+    return header_fields_sql(
+        _blocks_sql_flagged(flagged), _R7_KIND_SQL,
+        ["file", "line"] + _BLOCK_FIELDS + ["build_target"] + _RELATED_SQL)

@@ -17,12 +17,19 @@ pipeline is: per line, first-match-wins over the flattened rule order
 and ``related_messages`` is always empty. This file implements that cascade
 twice from the same regex constants (rules/table.py):
 
-* :func:`classify` — Spark DataFrame ops. Pure JVM-side expressions
-  (``rlike``/``regexp_extract``/``when``): whole-stage codegen, no Python in
+* :func:`classify` — Spark DataFrame ops: :func:`rule_id` (the first-match
+  dispatch) then :func:`rule_fields` (each rule's fields). Pure JVM-side
+  expressions (``rlike``/``regexp_extract``/``when``): whole-stage codegen, no Python in
   the hot path, embarrassingly parallel (no shuffle, no ordering needed),
   filter/column pruning pushes to the scan. This is the 100 TB path.
 * :func:`classified_sql` — the equivalent DuckDB SQL (CTE) used as the
   driver's correctness oracle.
+
+The rule → fields mapping lives only here: every multi-line block operator
+(operators/assemble.py) reads its header's fields through :func:`rule_fields`
+under the block's rule id, and its SQL twin through
+:func:`header_fields_sql`, as the reference's ``consumeLine`` keeps the
+``Diagnostic`` its rule's ``matchStart`` built (BuildLogParser.swift:325-364).
 
 Differential-tested against the pure-Python oracle in tests/.
 
@@ -40,6 +47,9 @@ Fidelity notes:
 
 from __future__ import annotations
 
+import functools
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..rules.table import (
@@ -51,7 +61,9 @@ from ..rules.table import (
     SUITE_NAME_RE,
     SWIFT_COMPILE_TASK_RE,
     TEST_NAME_RE,
+    XCODEBUILD_WARNING_RE,
 )
+
 
 def _T():
     """Lazy text column ref (F.col needs an active session in classic mode)."""
@@ -70,21 +82,24 @@ _STEP_BOUNDARY_CATS = (
 _TOOL_INVOCATION_CATS = ("swift_compilation_task_failed", "build_command_failed")
 
 
-def _ext(pat: str, group: int) -> Column:
-    return F.regexp_extract(_T(), pat, group)
+def _ext(T: Column, pat: str, group: int) -> Column:
+    return F.regexp_extract(T, pat, group)
 
 
-def _int_guard(pat: str, group: int) -> Column:
-    """Extract a \\d+ group as bigint, null (without erroring under ANSI) if
-    the digit run cannot fit in 64 bits."""
-    g = _ext(pat, group)
-    return F.when(F.length(g) <= 18, g.cast("long")).otherwise(F.lit(None).cast("long"))
+def _null(t: str) -> Column:
+    return F.lit(None).cast(t)
+
+
+def _long(g: Column) -> Column:
+    """A \\d+ group as bigint, null (without erroring under ANSI) if the
+    digit run cannot fit in 64 bits."""
+    return F.when(F.length(g) <= 18, g.cast("long")).otherwise(_null("long"))
 
 
 _SEP = "\x01"
 
 
-def _packed(pat: str, groups: list[int]) -> Column:
+def _packed(T: Column, pat: str, groups: list[int]) -> Callable[[int], Column]:
     """ONE regex execution extracting several capture groups at once: rewrite
     the (anchored, full-line) pattern's match into the groups joined by an
     \\x01 separator, then split. The naive cascade re-executes the same
@@ -92,60 +107,42 @@ def _packed(pat: str, groups: list[int]) -> Column:
     the dominant classify cost, ROADMAP r01 #2); this brings it to one
     ``rlike`` (the predicate) + one ``regexp_replace``. Only valid for
     ^…$-anchored patterns (an unanchored search would keep the surrounding
-    text around the replacement). Reads with ``F.get`` (0-based), which is
-    null-on-missing — safe under ANSI on rows where the pattern did not
-    match and the array has one element."""
-    repl = _SEP.join(f"${g}" for g in groups)
-    return F.split(F.regexp_replace(_T(), pat, repl), _SEP)
+    text around the replacement).
+
+    Returns a reader: ``read(g)`` is capture group ``g``. It reads with
+    ``F.get`` (null-on-missing — safe under ANSI on rows where the pattern
+    did not match and the array has one element), falling back to exact
+    per-group extraction when the split is not clean (adversarial text
+    containing the \\x01 separator inside a capture group would otherwise
+    shift fields and diverge from the reference). The fallback is
+    regex-per-group but only executes on separator-containing matches, which
+    real logs do not produce. The array is built on the first read."""
+    arr = functools.cache(lambda: F.split(
+        F.regexp_replace(T, pat, _SEP.join(f"${g}" for g in groups)), _SEP))
+
+    def read(g: int) -> Column:
+        return (F.when(F.size(arr()) == len(groups), F.get(arr(), groups.index(g)))
+                .otherwise(_ext(T, pat, g)))
+    return read
 
 
-def _grp(arr: Column, pat: str, group: int, idx: int, n: int) -> Column:
-    """Read packed group ``idx`` (0-based) from an n-group packed array —
-    falling back to exact per-group extraction when the split is not clean
-    (``size != n``: adversarial text containing the \\x01 separator inside
-    a capture group would otherwise shift fields and diverge from the
-    reference). The fallback branch is regex-per-group but only executes on
-    separator-containing matches, which real logs do not produce."""
-    return F.when(F.size(arr) == n, F.get(arr, idx)).otherwise(_ext(pat, group))
-
-
-def _int_guard_el(arr: Column, pat: str, group: int, idx: int, n: int) -> Column:
-    g = _grp(arr, pat, group, idx, n)
-    return F.when(F.length(g) <= 18, g.cast("long")).otherwise(F.lit(None).cast("long"))
-
-
-def _searched(pat: str) -> Column:
-    """Unanchored search success (Java regex find)."""
-    return _T().rlike(pat)
-
-
-def classify(transcripts: DataFrame) -> DataFrame:
-    """transcripts(conv_id, turn_idx, role, text, tool, ts) → diagnostics.
-
-    Output: input columns + rule_id/file/line/column/severity/message/
-    related_messages/source/category/raw/build_target/diag_class; rows whose
-    text matches no rule are dropped (they emit no diagnostic).
-    """
-    T = _T()
-    # packed one-shot extractions for the anchored rules (see _packed)
-    ce = _packed(COMPILE_ERROR_RE, [1, 3, 4, 5, 6])
-    sct = _packed(SWIFT_COMPILE_TASK_RE, [1, 2, 3, 4])
-    bc = _packed(BUILD_COMMAND_RE, [1, 2, 3])
-    mf = _packed(MODULE_FAILED_RE, [1, 2])
-    pg = _packed(PROGRESS_RE, [1, 2, 3, 4])
-    # --- first-match-wins rule dispatch -----------------------------------
+def rule_id(T: Column) -> Column:
+    """The first-match-wins rule dispatch over line ``T``: the rule id of
+    the first rule whose start matches, null when none does."""
+    ce = _packed(T, COMPILE_ERROR_RE, [1, 3, 4, 5, 6])
+    bc = _packed(T, BUILD_COMMAND_RE, [1, 2, 3])
     r1 = (
         (T.contains("error:") | T.contains("warning:"))  # fastFail gate
         & T.rlike(COMPILE_ERROR_RE)
-        & (F.length(_grp(ce, COMPILE_ERROR_RE, 3, 1, 5)) <= 18)
-        & (F.length(_grp(ce, COMPILE_ERROR_RE, 4, 2, 5)) <= 18)
+        & (F.length(ce(3)) <= 18)
+        & (F.length(ce(4)) <= 18)
     )
     r2 = T == "** BUILD FAILED **"  # regex is an exact literal (BuildFailedRule.swift:9)
-    r3 = T.rlike(r"^--- xcodebuild: WARNING: (.+)$")
+    r3 = T.rlike(XCODEBUILD_WARNING_RE)
     r4 = T.contains("SwiftCompile normal ") & T.rlike(SWIFT_COMPILE_TASK_RE)
     r5 = (
         T.contains("(in target '") & T.rlike(BUILD_COMMAND_RE)
-        & ~_grp(bc, BUILD_COMMAND_RE, 1, 0, 3).contains("SwiftCompile")
+        & ~bc(1).contains("SwiftCompile")
     )
     r6 = T.startswith("Undefined symbols for architecture")
     r7a = T.startswith("Test Case")
@@ -155,7 +152,7 @@ def classify(transcripts: DataFrame) -> DataFrame:
     r9 = T.startswith("error: emit-module command failed") & T.rlike(MODULE_FAILED_RE)
     r10 = T.startswith("[") & T.rlike(PROGRESS_RE)
 
-    rule_id = (
+    return (
         F.when(r1, "r1_compile")
         .when(r2, "r2_build_failed")
         .when(r3, "r3_xcb_warning")
@@ -170,124 +167,158 @@ def classify(transcripts: DataFrame) -> DataFrame:
         .when(r10, "r10_progress")
     )
 
-    df = transcripts.withColumn("rule_id", rule_id).filter(F.col("rule_id").isNotNull())
 
-    R = F.col("rule_id")
-    null_s = F.lit(None).cast("string")
-    null_l = F.lit(None).cast("long")
+def _built(v):
+    """A :func:`rule_fields` branch value: a literal, or a thunk to call."""
+    return v() if callable(v) else v
 
-    # --- shared XCTest helpers -------------------------------------------
-    test_name_hit = _searched(TEST_NAME_RE)
-    test_name = _ext(TEST_NAME_RE, 1)
-    test_target = F.when(test_name_hit, F.substring_index(test_name, " ", 1)).otherwise(null_s)
-    suite_hit = _searched(SUITE_NAME_RE)
-    suite_name = F.when(suite_hit, _ext(SUITE_NAME_RE, 1)).otherwise(F.lit("Unknown Suite"))
-    status = (
-        F.when(T.contains("failed"), "Failed")
-        .when(T.contains("passed"), "Passed")
-        .when(T.contains("started"), "Started")
-        .otherwise("Info")
-    )
-    fi_hit = _searched(FILE_INFO_RE)
-    fi_file = F.when(fi_hit, _ext(FILE_INFO_RE, 1)).otherwise(null_s)
-    fi_line = F.when(fi_hit, _int_guard(FILE_INFO_RE, 2)).otherwise(null_l)
-    # substring from the first "XCTAssert" (XCTestRule.swift:234-240)
-    assert_msg = F.trim(F.substring(T, F.locate("XCTAssert", T), F.lit(2 ** 30)))
-    # substring one char past "error:" (XCTestRule.swift:242-249)
-    err_msg = F.trim(F.substring(T, F.locate("error:", T) + F.lit(7), F.lit(2 ** 30)))
 
-    file_c = (
-        F.when(R == "r1_compile", _grp(ce, COMPILE_ERROR_RE, 1, 0, 5))
-        .when(R.isin("r7c_assertion", "r7d_test_error"), fi_file)
-        .otherwise(null_s)
-    )
-    line_c = (
-        F.when(R == "r1_compile", _int_guard_el(ce, COMPILE_ERROR_RE, 3, 1, 5))
-        .when(R.isin("r7c_assertion", "r7d_test_error"), fi_line)
-        .otherwise(null_l)
-    )
-    column_c = F.when(R == "r1_compile", _int_guard_el(ce, COMPILE_ERROR_RE, 4, 2, 5)).otherwise(null_l)
+def rule_fields(T: Column, rule: Column | str,
+                ids: tuple[str, ...] | None = None) -> dict[str, Column]:
+    """The diagnostic fields each rule's ``matchStart`` builds from line
+    ``T``: file, line, column, severity, message, source, category, raw and
+    build_target — the one rule → fields mapping, shared by :func:`classify`
+    and every block operator's header (operators/assemble.py).
 
-    r1_sev = _grp(ce, COMPILE_ERROR_RE, 5, 3, 5)
-    severity_c = (
-        F.when(R == "r1_compile", r1_sev)
-        .when(R == "r3_xcb_warning", "warning")
-        .when(R == "r10_progress", "info")
-        .when(
-            R.isin("r7a_test_case", "r7b_test_suite"),
-            F.when(T.contains("failed"), "error").otherwise("info"),
-        )
-        .otherwise("error")
-    )
+    ``rule`` is either a rule-id column — one CASE per field, with branches
+    only for the rule ids in ``ids`` (default: all) — or one rule-id string,
+    for which only that rule's expressions are built. Every Column op is a
+    Python→JVM round trip (~1 ms), so a block header does not pay for the
+    whole cascade."""
+    if isinstance(rule, str):
+        ids = (rule,)
 
-    message_c = (
-        F.when(R == "r1_compile", _grp(ce, COMPILE_ERROR_RE, 6, 4, 5))
-        .when(R == "r2_build_failed", "BUILD FAILED")
-        .when(R == "r3_xcb_warning", _ext(r"^--- xcodebuild: WARNING: (.+)$", 1))
-        .when(R == "r4_swiftcompile_task", F.concat(
-            F.lit("Swift compilation task failed for "), _grp(sct, SWIFT_COMPILE_TASK_RE, 1, 0, 4),
-            F.lit(": "), _grp(sct, SWIFT_COMPILE_TASK_RE, 2, 1, 4)))
-        .when(R == "r5_build_command", F.concat(
-            F.lit("Build command failed: "), _grp(bc, BUILD_COMMAND_RE, 1, 0, 3)))
-        .when(R == "r6_linker", T)
-        .when(R == "r7a_test_case", F.concat(
-            F.lit("Test: "),
-            F.when(test_name_hit, test_name).otherwise(F.lit("Unknown Test")),
-            F.lit(" - "), status))
-        .when(R == "r7b_test_suite", F.concat(F.lit("Test Suite: "), suite_name,
-                                              F.lit(" - "), status))
-        .when(R == "r7c_assertion", assert_msg)
-        .when(R == "r7d_test_error", err_msg)
-        .when(R == "r9_module_failed", F.concat(
-            F.lit("Module compilation failed with exit code "),
-            _grp(mf, MODULE_FAILED_RE, 1, 0, 2), _grp(mf, MODULE_FAILED_RE, 2, 1, 2)))
-        .when(R == "r10_progress", F.concat(
-            _grp(pg, PROGRESS_RE, 3, 2, 4), F.lit(" "), _grp(pg, PROGRESS_RE, 4, 3, 4), F.lit(" ("),
-            _grp(pg, PROGRESS_RE, 1, 0, 4), F.lit("/"), _grp(pg, PROGRESS_RE, 2, 1, 4), F.lit(")")))
-    )
+    def case(branches: list, default=None) -> Column:
+        """First branch ``(rule ids, value)`` for ``rule``; values are
+        literals or thunks, built only for the rules in ``ids``."""
+        live = []
+        for rs, v in branches:
+            rs = tuple(r for r in ((rs,) if isinstance(rs, str) else rs)
+                       if ids is None or r in ids)
+            if rs:
+                live.append((rs, v))
+        if isinstance(rule, str) or not live:
+            v = _built(live[0][1] if live else default)
+            return F.lit(v) if v is None or isinstance(v, str) else v
+        out = None
+        for rs, v in live:
+            cond = rule == rs[0] if len(rs) == 1 else rule.isin(*rs)
+            out = F.when(cond, _built(v)) if out is None else out.when(cond, _built(v))
+        return out if default is None else out.otherwise(_built(default))
 
-    source_c = (
-        F.when(R == "r1_compile", "compiler")
-        .when(R == "r6_linker", "linker")
-        .when(R.startswith("r7"), "xctest")
-        .when(R.isin("r9_module_failed", "r10_progress"), "swift-build")
-        .otherwise("xcodebuild")
-    )
+    ce = _packed(T, COMPILE_ERROR_RE, [1, 3, 4, 5, 6])
+    sct = _packed(T, SWIFT_COMPILE_TASK_RE, [1, 2, 3, 4])
+    bc = _packed(T, BUILD_COMMAND_RE, [1, 2, 3])
+    mf = _packed(T, MODULE_FAILED_RE, [1, 2])
+    pg = _packed(T, PROGRESS_RE, [1, 2, 3, 4])
+    null_s = lambda: _null("string")  # noqa: E731
+    null_l = lambda: _null("long")  # noqa: E731
 
-    category_c = (
-        F.when(R == "r1_compile", r1_sev)  # category == severity string (empty prefix)
-        .when(R == "r2_build_failed", "build_failed")
-        .when(R == "r3_xcb_warning", "warning")
-        .when(R == "r4_swiftcompile_task", "swift_compilation_task_failed")
-        .when(R == "r5_build_command", "build_command_failed")
-        .when(R == "r6_linker", "undefined_symbols")
-        .when(R == "r7a_test_case",
-              F.when(T.contains("failed"), "test_failure")
-              .when(T.contains("passed"), "test_success")
-              .when(T.contains("started"), "test_start")
-              .otherwise("test_info"))
-        .when(R == "r7b_test_suite",
-              F.when(T.contains("failed"), "test_suite_failure")
-              .when(T.contains("passed"), "test_suite_success")
-              .when(T.contains("started"), "test_suite_start")
-              .otherwise("test_suite_info"))
-        .when(R == "r7c_assertion", "assertion_failure")
-        .when(R == "r7d_test_error", "test_error")
-        .when(R == "r9_module_failed", "module_failed")
-        .when(R == "r10_progress", "progress")
-    )
+    # --- XCTest helpers (XCTestRule.swift) --------------------------------
+    def suite_name():
+        return (F.when(T.rlike(SUITE_NAME_RE), _ext(T, SUITE_NAME_RE, 1))
+                .otherwise(F.lit("Unknown Suite")))
 
-    target_c = (
-        F.when(R == "r4_swiftcompile_task", F.concat(
-            _grp(sct, SWIFT_COMPILE_TASK_RE, 3, 2, 4), F.lit(" ("), _grp(sct, SWIFT_COMPILE_TASK_RE, 4, 3, 4), F.lit(")")))
-        .when(R == "r5_build_command", F.concat(
-            _grp(bc, BUILD_COMMAND_RE, 2, 1, 3), F.lit(" ("), _grp(bc, BUILD_COMMAND_RE, 3, 2, 3), F.lit(")")))
-        .when(R.isin("r7a_test_case", "r7c_assertion"), test_target)
-        .when(R == "r7b_test_suite", suite_name)
-        .when(R == "r10_progress", _grp(pg, PROGRESS_RE, 4, 3, 4))
-        .otherwise(null_s)
-    )
+    def status():
+        return (F.when(T.contains("failed"), "Failed")
+                .when(T.contains("passed"), "Passed")
+                .when(T.contains("started"), "Started")
+                .otherwise("Info"))
 
+    r7cd = ("r7c_assertion", "r7d_test_error")
+    return {
+        "file": case([("r1_compile", lambda: ce(1)),
+                      (r7cd, lambda: F.when(T.rlike(FILE_INFO_RE), _ext(T, FILE_INFO_RE, 1))
+                       .otherwise(null_s()))],
+                     null_s),
+        "line": case([("r1_compile", lambda: _long(ce(3))),
+                      (r7cd, lambda: F.when(T.rlike(FILE_INFO_RE), _long(_ext(T, FILE_INFO_RE, 2)))
+                       .otherwise(null_l()))],
+                     null_l),
+        "column": case([("r1_compile", lambda: _long(ce(4)))], null_l),
+        "severity": case([
+            ("r1_compile", lambda: ce(5)),
+            ("r3_xcb_warning", "warning"),
+            ("r10_progress", "info"),
+            (("r7a_test_case", "r7b_test_suite"),
+             lambda: F.when(T.contains("failed"), "error").otherwise("info")),
+        ], "error"),
+        "message": case([
+            ("r1_compile", lambda: ce(6)),
+            ("r2_build_failed", "BUILD FAILED"),
+            ("r3_xcb_warning", lambda: _ext(T, XCODEBUILD_WARNING_RE, 1)),
+            ("r4_swiftcompile_task", lambda: F.concat(
+                F.lit("Swift compilation task failed for "), sct(1), F.lit(": "), sct(2))),
+            ("r5_build_command", lambda: F.concat(F.lit("Build command failed: "), bc(1))),
+            ("r6_linker", lambda: T),
+            ("r7a_test_case", lambda: F.concat(
+                F.lit("Test: "),
+                F.when(T.rlike(TEST_NAME_RE), _ext(T, TEST_NAME_RE, 1))
+                .otherwise(F.lit("Unknown Test")),
+                F.lit(" - "), status())),
+            ("r7b_test_suite", lambda: F.concat(
+                F.lit("Test Suite: "), suite_name(), F.lit(" - "), status())),
+            # substring from the first "XCTAssert" (XCTestRule.swift:234-240)
+            ("r7c_assertion", lambda: F.trim(
+                F.substring(T, F.locate("XCTAssert", T), F.lit(2 ** 30)))),
+            # substring one char past "error:" (XCTestRule.swift:242-249)
+            ("r7d_test_error", lambda: F.trim(
+                F.substring(T, F.locate("error:", T) + F.lit(7), F.lit(2 ** 30)))),
+            ("r9_module_failed", lambda: F.concat(
+                F.lit("Module compilation failed with exit code "), mf(1), mf(2))),
+            ("r10_progress", lambda: F.concat(
+                pg(3), F.lit(" "), pg(4), F.lit(" ("), pg(1), F.lit("/"), pg(2), F.lit(")"))),
+        ]),
+        "source": case([
+            ("r1_compile", "compiler"),
+            ("r6_linker", "linker"),
+            (("r7a_test_case", "r7b_test_suite") + r7cd, "xctest"),
+            (("r9_module_failed", "r10_progress"), "swift-build"),
+        ], "xcodebuild"),
+        "category": case([
+            ("r1_compile", lambda: ce(5)),  # category == severity string (empty prefix)
+            ("r2_build_failed", "build_failed"),
+            ("r3_xcb_warning", "warning"),
+            ("r4_swiftcompile_task", "swift_compilation_task_failed"),
+            ("r5_build_command", "build_command_failed"),
+            ("r6_linker", "undefined_symbols"),
+            ("r7a_test_case", lambda: F.when(T.contains("failed"), "test_failure")
+             .when(T.contains("passed"), "test_success")
+             .when(T.contains("started"), "test_start")
+             .otherwise("test_info")),
+            ("r7b_test_suite", lambda: F.when(T.contains("failed"), "test_suite_failure")
+             .when(T.contains("passed"), "test_suite_success")
+             .when(T.contains("started"), "test_suite_start")
+             .otherwise("test_suite_info")),
+            ("r7c_assertion", "assertion_failure"),
+            ("r7d_test_error", "test_error"),
+            ("r9_module_failed", "module_failed"),
+            ("r10_progress", "progress"),
+        ]),
+        "raw": T,
+        "build_target": case([
+            ("r4_swiftcompile_task", lambda: F.concat(sct(3), F.lit(" ("), sct(4), F.lit(")"))),
+            ("r5_build_command", lambda: F.concat(bc(2), F.lit(" ("), bc(3), F.lit(")"))),
+            (("r7a_test_case", "r7c_assertion"),
+             lambda: F.when(T.rlike(TEST_NAME_RE),
+                            F.substring_index(_ext(T, TEST_NAME_RE, 1), " ", 1))
+             .otherwise(null_s())),
+            ("r7b_test_suite", suite_name),
+            ("r10_progress", lambda: pg(4)),
+        ], null_s),
+    }
+
+
+def classify(transcripts: DataFrame) -> DataFrame:
+    """transcripts(conv_id, turn_idx, role, text, tool, ts) → diagnostics.
+
+    Output: input columns + rule_id/file/line/column/severity/message/
+    related_messages/source/category/raw/build_target/diag_class; rows whose
+    text matches no rule are dropped (they emit no diagnostic).
+    """
+    T = _T()
+    df = transcripts.withColumn("rule_id", rule_id(T)).filter(F.col("rule_id").isNotNull())
+    f = rule_fields(T, F.col("rule_id"))
     diag_class = (
         F.when(F.col("category").isin(*_STEP_BOUNDARY_CATS), "step-boundary")
         .when(F.col("category").isin(*_TOOL_INVOCATION_CATS), "tool-invocation")
@@ -295,18 +326,17 @@ def classify(transcripts: DataFrame) -> DataFrame:
         .when(F.col("severity") == "warning", "warning")
         .otherwise("note")
     )
-
     return (
-        df.withColumn("file", file_c)
-        .withColumn("line", line_c)
-        .withColumn("column", column_c)
-        .withColumn("severity", severity_c)
-        .withColumn("message", message_c)
+        df.withColumn("file", f["file"])
+        .withColumn("line", f["line"])
+        .withColumn("column", f["column"])
+        .withColumn("severity", f["severity"])
+        .withColumn("message", f["message"])
         .withColumn("related_messages", F.array().cast("array<string>"))
-        .withColumn("source", source_c)
-        .withColumn("category", category_c)
-        .withColumn("raw", T)
-        .withColumn("build_target", target_c)
+        .withColumn("source", f["source"])
+        .withColumn("category", f["category"])
+        .withColumn("raw", f["raw"])
+        .withColumn("build_target", f["build_target"])
         .withColumn("diag_class", diag_class)
     )
 
@@ -358,11 +388,9 @@ def classified_sql(transcripts_cte: str, cols: list[str] | None = None) -> str:
         if c in _SQL_PASSTHROUGH:
             sel.append(c)
         else:
-            alias = f'"{c}"' if c == "column" else c
-            sel.append(f"{exprs[c]} AS {alias}")
+            sel.append(f"{exprs[c]} AS {_quoted(c)}")
     out = ", ".join(
-        exprs["diag_class"] + " AS diag_class" if c == "diag_class"
-        else (f'"{c}"' if c == "column" else c)
+        exprs["diag_class"] + " AS diag_class" if c == "diag_class" else _quoted(c)
         for c in cols)
     # MATERIALIZED: DuckDB inlines plain CTEs into every reference, so the
     # template-CASE transcript derivation and the regex-cascade rule_id would
@@ -384,6 +412,28 @@ FROM diags0
 """
 
 
+def header_fields_sql(blocks_select: str, rule_sql: str, cols: list[str],
+                      **override: str) -> str:
+    """DuckDB twin of :func:`rule_fields` over a block assembler's rows
+    (conv_id, start_turn_idx, header, n_related, related_joined, …): selects
+    conv_id, start_turn_idx, then ``cols``. A diagnostic field is the
+    classify cascade's expression evaluated on ``header AS text`` under
+    ``rule_id = rule_sql`` (an expression over ``text``); ``override`` gives
+    a field its own expression; any other name passes through."""
+    exprs = {**_classified_sql_exprs(), **override}
+    sel = ", ".join(
+        f"{exprs[c]} AS {_quoted(c)}" if c in _SQL_COMPUTED else c for c in cols)
+    return f"""
+SELECT conv_id, start_turn_idx, {sel}
+FROM (SELECT *, {rule_sql} AS rule_id
+      FROM (SELECT *, header AS text FROM ({blocks_select}) b0) b1) b
+"""
+
+
+def _quoted(c: str) -> str:
+    return f'"{c}"' if c == "column" else c
+
+
 def _classified_sql_exprs() -> dict[str, str]:
     """Per-column SQL expression bodies of the classify cascade (DuckDB
     dialect), keyed by output column. ``rule_id`` runs over ``transcripts``;
@@ -396,7 +446,7 @@ def _classified_sql_exprs() -> dict[str, str]:
     tn = _sq(TEST_NAME_RE)
     sn = _sq(SUITE_NAME_RE)
     fi = _sq(FILE_INFO_RE)
-    xw = _sq(r"^--- xcodebuild: WARNING: (.+)$")
+    xw = _sq(XCODEBUILD_WARNING_RE)
 
     return {
         "rule_id": f"""CASE

@@ -30,33 +30,40 @@ def _icon_col() -> Column:
     return c
 
 
-def render_text(diags: DataFrame, errors_only: bool = False) -> DataFrame:
-    if errors_only:
-        diags = diags.filter(F.col("severity") == "error")
+def _head() -> Column:
+    """TextOutput's line: ``{icon} {file}:{line}: {severity} - {message}``
+    when file and line are present, else ``{icon} {severity} - {message}``."""
     with_loc = F.concat(
         _icon_col(), F.lit(" "), F.col("file"), F.lit(":"),
         F.col("line").cast("string"), F.lit(": "), F.col("severity"),
         F.lit(" - "), F.col("message"))
     without = F.concat(
         _icon_col(), F.lit(" "), F.col("severity"), F.lit(" - "), F.col("message"))
-    return diags.select(
-        "conv_id", "turn_idx",
-        F.when(F.col("file").isNotNull() & F.col("line").isNotNull(), with_loc)
-        .otherwise(without).alias("rendered"),
-    )
+    return (F.when(F.col("file").isNotNull() & F.col("line").isNotNull(), with_loc)
+            .otherwise(without))
+
+
+_ICON_SQL = ("CASE severity WHEN 'error' THEN '❌' WHEN 'warning' THEN '⚠️' "
+             "WHEN 'info' THEN 'ℹ️' ELSE '📝' END")
+#: DuckDB twin of :func:`_head`
+_HEAD_SQL = f"""CASE WHEN file IS NOT NULL AND line IS NOT NULL
+       THEN {_ICON_SQL} || ' ' || file || ':' || CAST(line AS STRING) || ': '
+            || severity || ' - ' || message
+       ELSE {_ICON_SQL} || ' ' || severity || ' - ' || message
+  END"""
+
+
+def render_text(diags: DataFrame, errors_only: bool = False) -> DataFrame:
+    if errors_only:
+        diags = diags.filter(F.col("severity") == "error")
+    return diags.select("conv_id", "turn_idx", _head().alias("rendered"))
 
 
 def render_text_sql(diagnostics_select: str, errors_only: bool = False) -> str:
     where = "WHERE severity = 'error'" if errors_only else ""
-    icon = ("CASE severity WHEN 'error' THEN '❌' WHEN 'warning' THEN '⚠️' "
-            "WHEN 'info' THEN 'ℹ️' ELSE '📝' END")
     return f"""
 SELECT conv_id, turn_idx,
-  CASE WHEN file IS NOT NULL AND line IS NOT NULL
-       THEN {icon} || ' ' || file || ':' || CAST(line AS STRING) || ': '
-            || severity || ' - ' || message
-       ELSE {icon} || ' ' || severity || ' - ' || message
-  END AS rendered
+  {_HEAD_SQL} AS rendered
 FROM ({diagnostics_select}) d {where}
 """
 
@@ -73,14 +80,6 @@ def render_text_verbose(blocks: DataFrame, errors_only: bool = False) -> DataFra
     (multi-line assembly output)."""
     if errors_only:
         blocks = blocks.filter(F.col("severity") == "error")
-    with_loc = F.concat(
-        _icon_col(), F.lit(" "), F.col("file"), F.lit(":"),
-        F.col("line").cast("string"), F.lit(": "), F.col("severity"),
-        F.lit(" - "), F.col("message"))
-    without = F.concat(
-        _icon_col(), F.lit(" "), F.col("severity"), F.lit(" - "), F.col("message"))
-    head = F.when(F.col("file").isNotNull() & F.col("line").isNotNull(),
-                  with_loc).otherwise(without)
     rel = F.transform(
         F.col("related_messages"),
         lambda m: F.when(
@@ -90,7 +89,7 @@ def render_text_verbose(blocks: DataFrame, errors_only: bool = False) -> DataFra
     )
     return blocks.select(
         "conv_id", "start_turn_idx",
-        F.concat_ws("\n", F.concat(F.array(head), rel)).alias("rendered"),
+        F.concat_ws("\n", F.concat(F.array(_head()), rel)).alias("rendered"),
     )
 
 
@@ -99,19 +98,13 @@ def render_text_verbose_sql(blocks_select: str, errors_only: bool = False) -> st
     (conv_id, start_turn_idx, file, line, severity, message, n_related,
     related_joined)."""
     where = "WHERE severity = 'error'" if errors_only else ""
-    icon = ("CASE severity WHEN 'error' THEN '❌' WHEN 'warning' THEN '⚠️' "
-            "WHEN 'info' THEN 'ℹ️' ELSE '📝' END")
-    head = f"""CASE WHEN file IS NOT NULL AND line IS NOT NULL
-       THEN {icon} || ' ' || file || ':' || CAST(line AS STRING) || ': '
-            || severity || ' - ' || message
-       ELSE {icon} || ' ' || severity || ' - ' || message END"""
     rel = r"""array_to_string(list_transform(string_split(related_joined, chr(10)),
       m -> CASE WHEN starts_with(regexp_replace(m, '^[\t\p{Zs}]+', '', 'g'), '^')
                 THEN '    📎' || m ELSE '    📎 ' || m END), chr(10))"""
     return f"""
 SELECT conv_id, start_turn_idx,
-  CASE WHEN n_related > 0 THEN ({head}) || chr(10) || {rel}
-       ELSE ({head}) END AS rendered
+  CASE WHEN n_related > 0 THEN ({_HEAD_SQL}) || chr(10) || {rel}
+       ELSE ({_HEAD_SQL}) END AS rendered
 FROM ({blocks_select}) b {where}
 """
 
@@ -129,6 +122,29 @@ def json_projection_sql(diagnostics_select: str) -> str:
 _RULER = "═" * 63  # OutputFormatters.swift's 63-char section ruler
 
 
+def _per_file(diags: DataFrame) -> DataFrame:
+    """Per-file issue count ``n`` and error/warning/info/note tallies
+    ``e``/``w``/``i``/``nt``, a null file counted as ``Unknown``."""
+    is_ = lambda s: (F.col("severity") == s).cast("long")  # noqa: E731
+    return (
+        diags.groupBy(F.coalesce(F.col("file"), F.lit("Unknown")).alias("f"))
+        .agg(F.count("*").alias("n"),
+             F.sum(is_("error")).alias("e"), F.sum(is_("warning")).alias("w"),
+             F.sum(is_("info")).alias("i"), F.sum(is_("note")).alias("nt"))
+    )
+
+
+#: DuckDB twin of :func:`_per_file`, as a CTE over ``d``
+_PER_FILE_SQL = """pf AS (
+  SELECT coalesce(file, 'Unknown') AS f, count(*) AS n,
+         CAST(sum(CASE WHEN severity='error' THEN 1 ELSE 0 END) AS BIGINT) AS e,
+         CAST(sum(CASE WHEN severity='warning' THEN 1 ELSE 0 END) AS BIGINT) AS w,
+         CAST(sum(CASE WHEN severity='info' THEN 1 ELSE 0 END) AS BIGINT) AS i,
+         CAST(sum(CASE WHEN severity='note' THEN 1 ELSE 0 END) AS BIGINT) AS nt
+  FROM d GROUP BY 1
+),"""
+
+
 def summary_text(diags: DataFrame, verbose: bool = False,
                  errors_only: bool = False) -> DataFrame:
     """SummaryOutput's full report (OutputFormatters.swift:295-361) as ONE
@@ -140,13 +156,7 @@ def summary_text(diags: DataFrame, verbose: bool = False,
     global), no collect."""
     if errors_only:
         diags = diags.filter(F.col("severity") == "error")
-    is_ = lambda s: (F.col("severity") == s).cast("long")  # noqa: E731
-    per_file = (
-        diags.groupBy(F.coalesce(F.col("file"), F.lit("Unknown")).alias("f"))
-        .agg(F.count("*").alias("n"),
-             F.sum(is_("error")).alias("e"), F.sum(is_("warning")).alias("w"),
-             F.sum(is_("info")).alias("i"), F.sum(is_("note")).alias("nt"))
-    )
+    per_file = _per_file(diags)
     sec = F.concat(
         F.lit("\n📄 "), F.col("f"), F.lit(":\n"),
         F.when(F.col("e") > 0,
@@ -199,14 +209,7 @@ def summary_text_sql(diagnostics_select: str, verbose: bool = False,
         if verbose else "''")
     return f"""
 WITH d AS (SELECT * FROM ({diagnostics_select}) dd {where}),
-pf AS (
-  SELECT coalesce(file, 'Unknown') AS f, count(*) AS n,
-         CAST(sum(CASE WHEN severity='error' THEN 1 ELSE 0 END) AS BIGINT) AS e,
-         CAST(sum(CASE WHEN severity='warning' THEN 1 ELSE 0 END) AS BIGINT) AS w,
-         CAST(sum(CASE WHEN severity='info' THEN 1 ELSE 0 END) AS BIGINT) AS i,
-         CAST(sum(CASE WHEN severity='note' THEN 1 ELSE 0 END) AS BIGINT) AS nt
-  FROM d GROUP BY 1
-),
+{_PER_FILE_SQL}
 tot AS (
   SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS total,
          CAST(coalesce(sum(e), 0) AS BIGINT) AS e,
@@ -244,13 +247,7 @@ def stats_text(diags: DataFrame) -> DataFrame:
     per-file counts — bounded cardinality (files, not rows)."""
     from pyspark.sql.window import Window
 
-    is_ = lambda s: (F.col("severity") == s).cast("long")  # noqa: E731
-    pf = (
-        diags.groupBy(F.coalesce(F.col("file"), F.lit("Unknown")).alias("f"))
-        .agg(F.count("*").alias("n"),
-             F.sum(is_("error")).alias("e"), F.sum(is_("warning")).alias("w"),
-             F.sum(is_("info")).alias("i"), F.sum(is_("note")).alias("nt"))
-    )
+    pf = _per_file(diags)
     rk = F.row_number().over(Window.orderBy(F.desc("n"), F.asc("f")))
     line = F.concat(F.lit("   "), F.col("f"), F.lit(": "),
                     F.col("n").cast("string"), F.lit(" issue(s)\n"))
@@ -303,14 +300,7 @@ def stats_text(diags: DataFrame) -> DataFrame:
 def stats_text_sql(diagnostics_select: str) -> str:
     return f"""
 WITH d AS (SELECT * FROM ({diagnostics_select}) dd),
-pf AS (
-  SELECT coalesce(file, 'Unknown') AS f, count(*) AS n,
-         CAST(sum(CASE WHEN severity='error' THEN 1 ELSE 0 END) AS BIGINT) AS e,
-         CAST(sum(CASE WHEN severity='warning' THEN 1 ELSE 0 END) AS BIGINT) AS w,
-         CAST(sum(CASE WHEN severity='info' THEN 1 ELSE 0 END) AS BIGINT) AS i,
-         CAST(sum(CASE WHEN severity='note' THEN 1 ELSE 0 END) AS BIGINT) AS nt
-  FROM d GROUP BY 1
-),
+{_PER_FILE_SQL}
 rkd AS (SELECT *, row_number() OVER (ORDER BY n DESC, f ASC) AS rk FROM pf),
 tot AS (
   SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS total,

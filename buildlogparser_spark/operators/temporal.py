@@ -63,7 +63,7 @@ graded columns carry ``ts_us`` as BIGINT epoch-microseconds
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..transcripts import TOOL_REGISTRY_ROWS

@@ -65,6 +65,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--show-stats", action="store_true",
                     help="also write the StatsCollector detailed report")
     args = ap.parse_args(argv)
+    if args.streaming and args.input_format == "logs":
+        ap.error("--streaming reads a parquet table; it cannot take --input-format logs")
 
     # spark-submit provides master/conf; only session-level SQL knobs here
     spark = (

@@ -122,60 +122,6 @@ def test_partition_count_invariance(spark):
     assert a == b
 
 
-def _expected_flat(rules_factory):
-    """Oracle expectations flattened like the *_blocks flat outputs:
-    (conv_id, start_turn_idx, category, severity, message, n_related,
-    related_joined)."""
-    convs: dict[str, list[str]] = {}
-    for conv_id, _i, _r, text, _tl, _ts in gen_conversations(SEED, N_CONVS):
-        convs.setdefault(conv_id, []).append(text)
-    exp: Counter = Counter()
-    for conv_id, lines in convs.items():
-        for t, d in parse_lines_with_turns(lines, list(range(len(lines))), rules_factory()):
-            exp[(conv_id, t, d.category, d.severity, d.message,
-                 len(d.related_messages), "\n".join(d.related_messages))] += 1
-    return exp
-
-
-def _got_flat(df):
-    got: Counter = Counter()
-    for r in df.collect():
-        d = r.asDict()
-        got[(d["conv_id"], d["start_turn_idx"], d["category"], d["severity"],
-             d["message"], d["n_related"], d["related_joined"])] += 1
-    return got
-
-
-def test_build_failed_blocks_match_oracle(spark):
-    """Single-rule BuildFailedRule consumeLine == the generic chunked block
-    assembler: header + failed-command list collected, the '(N failures)'
-    terminator NOT collected (isEnd beats matchContinuation)."""
-    from buildlogparser_spark.operators.assemble import build_failed_blocks
-    from buildlogparser_spark.rules.table import BuildFailedRule
-
-    df = conversations_df(spark, SEED, N_CONVS)
-    exp = _expected_flat(lambda: [BuildFailedRule()])
-    got = _got_flat(build_failed_blocks(df))
-    assert exp == got and sum(exp.values()) > 10
-    # the failed-command lists are real content, not empty blocks
-    assert any(k[5] > 0 for k in exp)
-
-
-def test_linker_blocks_match_oracle(spark):
-    """Single-rule LinkerErrorRule consumeLine == the generic assembler,
-    including the unguarded-isEnd quirk (a linker-failed close line with no
-    open block is a no-op) and the close line's exclusion from related
-    despite matching the clang: continuation prefix."""
-    from buildlogparser_spark.operators.assemble import linker_blocks
-    from buildlogparser_spark.rules.table import LinkerErrorRule
-
-    df = conversations_df(spark, SEED, N_CONVS)
-    exp = _expected_flat(lambda: [LinkerErrorRule()])
-    got = _got_flat(linker_blocks(df))
-    assert exp == got and sum(exp.values()) > 10
-    assert any(k[5] > 0 for k in exp)
-
-
 def _expected_proj(rules_factory, attrs, convs=None):
     """Oracle expectations projected to ``attrs`` + the flat related pair."""
     if convs is None:
@@ -204,6 +150,36 @@ _SB_ATTRS = ["file", "line", "column", "severity", "message", "source",
 _XW_ATTRS = ["severity", "message", "source", "category", "raw"]
 _XT_ATTRS = ["file", "line", "severity", "message", "source", "category",
              "raw", "build_target"]
+
+
+def test_build_failed_blocks_match_oracle(spark):
+    """Single-rule BuildFailedRule consumeLine == the generic chunked block
+    assembler: header + failed-command list collected, the '(N failures)'
+    terminator NOT collected (isEnd beats matchContinuation)."""
+    from buildlogparser_spark.operators.assemble import build_failed_blocks
+    from buildlogparser_spark.rules.table import BuildFailedRule
+
+    df = conversations_df(spark, SEED, N_CONVS)
+    exp = _expected_proj(lambda: [BuildFailedRule()], _XW_ATTRS)
+    got = _got_proj(build_failed_blocks(df), _XW_ATTRS)
+    assert exp == got and sum(exp.values()) > 10
+    # the failed-command lists are real content, not empty blocks
+    assert any(k[-2] > 0 for k in exp)
+
+
+def test_linker_blocks_match_oracle(spark):
+    """Single-rule LinkerErrorRule consumeLine == the generic assembler,
+    including the unguarded-isEnd quirk (a linker-failed close line with no
+    open block is a no-op) and the close line's exclusion from related
+    despite matching the clang: continuation prefix."""
+    from buildlogparser_spark.operators.assemble import linker_blocks
+    from buildlogparser_spark.rules.table import LinkerErrorRule
+
+    df = conversations_df(spark, SEED, N_CONVS)
+    exp = _expected_proj(lambda: [LinkerErrorRule()], _XW_ATTRS)
+    got = _got_proj(linker_blocks(df), _XW_ATTRS)
+    assert exp == got and sum(exp.values()) > 10
+    assert any(k[-2] > 0 for k in exp)
 
 
 def test_swiftbuild_compile_blocks_match_oracle(spark):

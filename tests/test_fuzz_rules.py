@@ -133,11 +133,16 @@ def test_spark_stateful_on_mutated_corpus(spark):
 
 
 def test_packed_extraction_survives_separator_injection(spark):
-    """classify packs capture groups with an \\x01 separator; adversarial
-    text containing \\x01 INSIDE a group must still extract exactly (the
-    clean-split check falls back to per-group extraction)."""
+    """classify and the block headers pack capture groups with an \\x01
+    separator; adversarial text containing \\x01 INSIDE a group must still
+    extract exactly (the clean-split check falls back to per-group
+    extraction)."""
+    from buildlogparser_spark.operators.assemble import (
+        compile_blocks_flat, module_failed_blocks)
     from buildlogparser_spark.operators.classify import classify
-    from buildlogparser_spark.rules.table import CompileErrorRule
+    from buildlogparser_spark.oracle import parse_lines_with_turns
+    from buildlogparser_spark.rules.table import (
+        CompileErrorRule, SwiftBuildModuleFailedRule)
 
     texts = [
         "/app/F\x01ile.swift:12:3: error: bad \x01 separator in message",
@@ -160,3 +165,18 @@ def test_packed_extraction_survives_separator_injection(spark):
     assert got[2].category == "progress" and "Mod\x01ule" in got[2].message
     assert got[3].category == "module_failed"
     assert got[3].message.endswith("2\x01 (tail)")
+
+    # the same texts as single-rule block headers
+    for op, rule_cls, attrs in [
+        (compile_blocks_flat, CompileErrorRule,
+         ["file", "line", "column", "severity", "message", "source", "category"]),
+        (module_failed_blocks, SwiftBuildModuleFailedRule,
+         ["severity", "message", "source", "category", "raw"]),
+    ]:
+        want = Counter(
+            (t, *(getattr(d, a) for a in attrs), "\n".join(d.related_messages))
+            for t, d in parse_lines_with_turns(texts, list(range(len(texts))), [rule_cls()]))
+        got_blocks = Counter(
+            (r.start_turn_idx, *(r[a] for a in attrs), r.related_joined)
+            for r in op(df).collect())
+        assert want and got_blocks == want, rule_cls.__name__

@@ -147,6 +147,22 @@ def test_cli_logs_input_mode(spark, tmp_path):
     assert sev["total_count"] == diags.count()
 
 
+def test_cli_rejects_streaming_logs(tmp_path, capsys):
+    """--streaming reads a parquet table, so it cannot take raw log files:
+    the flag pair is a usage error before any Spark work starts."""
+    import sys
+
+    sys.path.insert(0, str(REPO / "jobs"))
+    import run_pipeline
+
+    with pytest.raises(SystemExit) as exc:
+        run_pipeline.main([
+            "--input", str(tmp_path), "--input-format", "logs", "--streaming",
+            "--output", str(tmp_path / "out")])
+    assert exc.value.code == 2
+    assert "--input-format logs" in capsys.readouterr().err
+
+
 def _seq(coll) -> list:
     """A Scala Seq/Iterable from the py4j gateway as a Python list."""
     it, out = coll.iterator(), []
