@@ -54,6 +54,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..rules.table import (
+    BUILD_FAILED_RE,
     COMPILE_ERROR_RE,
     CONTEXT_LINE_RE,
     ERROR_POINTER_RE,
@@ -61,7 +62,7 @@ from ..rules.table import (
     Rule,
     XCODEBUILD_WARNING_RE,
 )
-from .classify import header_fields_sql, rule_fields
+from .classify import header_fields_sql, java_re, rule_fields
 
 STATEFUL_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -132,14 +133,6 @@ def _flat_related(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def parse_stateful_flat(
-    transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
-) -> DataFrame:
-    """:func:`parse_stateful` with scalar related columns
-    (:func:`_flat_related`)."""
-    return _flat_related(parse_stateful(transcripts, rules_factory))
-
-
 # ---------------------------------------------------------------------------
 # Chunked general state machine — parse_stateful without the one-task-per-
 # conversation skew (VERDICT r04 #3 / SURVEY.md §7 hard-part 5 applied to
@@ -195,24 +188,6 @@ _DECISION_SCHEMA = StructType(
 _KEEP_ALL = -(1 << 62)
 
 
-def _diag_to_json(turn: int | None, diag) -> str:
-    import json
-
-    d = dict(diag.__dict__)
-    d["_turn"] = turn
-    return json.dumps(d)
-
-
-def _diag_from_json(s: str):
-    import json
-
-    from buildlogparser_spark.rules.table import Diagnostic
-
-    d = json.loads(s)
-    turn = d.pop("_turn")
-    return turn, Diagnostic(**d)
-
-
 def parse_stateful_chunked(
     transcripts: DataFrame, rules_factory: Callable[[], list[Rule]],
     chunk_size: int = 65536, repair_cap: int = 4096,
@@ -265,8 +240,7 @@ def parse_stateful_chunked(
             "p_lines": [] if first_chunk else lines[:repair_cap],
             "p_turns": [] if first_chunk else turns[:repair_cap],
             "p_none": [] if first_chunk else p_none,
-            "exit_state": (None if oracle.current is None else
-                           _diag_to_json(oracle.current_line_no, oracle.current)),
+            "exit_state": oracle.state(),
             "n_lines": len(lines),
         })
         return pd.DataFrame(out, columns=[f.name for f in _CHUNK_OUT_SCHEMA.fields])
@@ -282,8 +256,9 @@ def parse_stateful_chunked(
             out.append({**_dec_none, "kind": "k", "conv_id": conv,
                         "chunk_id": chunk, "keep_after_turn": keep_after})
 
-        def repair(t: int | None, d) -> None:
-            out.append(dict(_dec_none, **_diag_row(conv, t, d), kind="d"))
+        def repair(oracle: ParserOracle) -> None:
+            for t, d in zip(oracle.out_line_nos, oracle.out):
+                out.append(dict(_dec_none, **_diag_row(conv, t, d), kind="d"))
 
         state_json: str | None = None
         for row in pdf.itertuples(index=False):
@@ -294,8 +269,7 @@ def parse_stateful_chunked(
                 decide(chunk, _KEEP_ALL)
                 state_json = row.exit_state
                 continue
-            oracle = ParserOracle(rules_factory())
-            oracle.current_line_no, oracle.current = _diag_from_json(state_json)
+            oracle = ParserOracle(rules_factory(), state_json)
             converged_turn = None
             for i, (t, line) in enumerate(zip(row.p_turns, row.p_lines)):
                 oracle.consume_line(line, int(t))
@@ -307,19 +281,15 @@ def parse_stateful_chunked(
                 # speculative diagnostics starting strictly after it (none
                 # can START on it: the state right after it is None), emit
                 # the repair run's own flushes for the lines before it
-                for t2, d in zip(oracle.out_line_nos, oracle.out):
-                    repair(t2, d)
+                repair(oracle)
                 decide(chunk, converged_turn)
                 state_json = row.exit_state
             elif int(row.n_lines) == len(row.p_lines):
                 # no convergence but the prefix WAS the whole chunk — the
                 # repair run is complete and exact; drop all speculative
-                for t2, d in zip(oracle.out_line_nos, oracle.out):
-                    repair(t2, d)
+                repair(oracle)
                 decide(chunk, 1 << 62)
-                state_json = (None if oracle.current is None else
-                              _diag_to_json(oracle.current_line_no,
-                                            oracle.current))
+                state_json = oracle.state()
             else:
                 # one block open for > repair_cap lines into a full chunk:
                 # this conversation re-parses sequentially (exact), nothing
@@ -329,7 +299,9 @@ def parse_stateful_chunked(
                       "chunk_id": chunk}],
                     columns=[f.name for f in _DECISION_SCHEMA.fields])
         if state_json is not None:  # end-of-conversation flush
-            repair(*_diag_from_json(state_json))
+            oracle = ParserOracle([], state_json)
+            oracle.finish()
+            repair(oracle)
         return pd.DataFrame(out, columns=[f.name for f in _DECISION_SCHEMA.fields])
 
     chunked = (
@@ -411,9 +383,9 @@ def _compile_start(T):
     SwiftBuildCompileErrorRule.swift:66-70)."""
     return (
         (T.contains("error:") | T.contains("warning:"))
-        & T.rlike(COMPILE_ERROR_RE)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 3)) <= 18)
-        & (F.length(F.regexp_extract(T, COMPILE_ERROR_RE, 4)) <= 18)
+        & T.rlike(java_re(COMPILE_ERROR_RE))
+        & (F.length(F.regexp_extract(T, java_re(COMPILE_ERROR_RE), 3)) <= 18)
+        & (F.length(F.regexp_extract(T, java_re(COMPILE_ERROR_RE), 4)) <= 18)
     )
 
 
@@ -459,7 +431,7 @@ def compile_blocks(transcripts: DataFrame, chunk_size: int = 65536) -> DataFrame
     With no open block, only a start match does anything.
     """
     T = F.col("text")
-    trimmed = F.regexp_replace(T, r"^[ \t]+|[ \t]+$", "")
+    trimmed = F.regexp_replace(T, java_re(r"^[ \t]+|[ \t]+$"), "")
     is_term = (
         (F.length(trimmed) == 0)
         | trimmed.startswith("SwiftCompile")
@@ -595,7 +567,7 @@ def build_failed_blocks(transcripts: DataFrame) -> DataFrame:
     continuation predicate, but consumeLine's isEnd branch wins so it is
     not collected). Flat scalar output for the driver gate."""
     T = F.col("text")
-    is_start = T.rlike(r"^\*\* BUILD FAILED \*\*$")
+    is_start = T.rlike(java_re(BUILD_FAILED_RE))
     is_close = T.contains("failures)")
     is_cont = (
         T.startswith("The following build commands failed:")
@@ -704,11 +676,11 @@ def linker_blocks_sql(transcripts_cte: str) -> str:
 
 # all-whitespace-or-empty line (one anchored match — cheaper than the
 # previous length(regexp_replace(text, '^\s+|\s+$', '')) == 0 trim form,
-# which allocated a trimmed string per line). The ABSOLUTE anchors are
-# load-bearing: Java's '$' matches BEFORE a trailing U+2028/U+2029/U+0085
-# line terminator, so '^\s*$' calls a whitespace+U+2028 line blank while
-# the trim form, the DuckDB twin, and the Python reference oracle all do
-# not (measured: '^\s*$' flips on exactly those inputs); '\A..\z' has no
+# which allocated a trimmed string per line). The ABSOLUTE anchors make it
+# exact whatever the line-terminator flags: without java_re's (?d), Java's
+# '$' matches BEFORE a trailing U+2028/U+2029/U+0085 line terminator, so
+# '^\s*$' calls a whitespace+U+2028 line blank while the trim form, the
+# DuckDB twin, and the Python reference oracle all do not; '\A..\z' has no
 # terminator exception and is exactly the trim-form predicate. DuckDB's
 # RE2 '$' is already end-of-text-only, so the SQL twins use '^\s*$'.
 _BLANK_LINE_RE = r"\A\s*\z"
@@ -740,15 +712,16 @@ def swiftbuild_compile_blocks(transcripts: DataFrame) -> DataFrame:
         (T.startswith("error: ") & T.contains("command failed"))
         | (T.startswith("[") & T.contains("]") & T.contains("Compiling"))
         | ((T.contains("error:") | T.contains("warning:"))
-           & T.rlike(COMPILE_ERROR_RE))
+           & T.rlike(java_re(COMPILE_ERROR_RE)))
     )
     # fastFail guards: both gutter shapes require a literal '|', so the
     # contains() gate skips two regex executions on the ~83% of lines
     # without one (A/B at sf0.1: 1.67 s -> 1.23 s median); blankness is one
     # anchored match instead of an allocating trim-replace
     is_cont = (
-        (T.contains("|") & (T.rlike(CONTEXT_LINE_RE) | T.rlike(ERROR_POINTER_RE)))
-        | T.rlike(_BLANK_LINE_RE)
+        (T.contains("|") & (T.rlike(java_re(CONTEXT_LINE_RE))
+                            | T.rlike(java_re(ERROR_POINTER_RE))))
+        | T.rlike(java_re(_BLANK_LINE_RE))
     )
     blocks = assemble_blocks(transcripts, _compile_start(T), is_close, is_cont)
     f = rule_fields(F.col("header"), "r1_compile")
@@ -787,11 +760,11 @@ def module_failed_blocks(transcripts: DataFrame) -> DataFrame:
     T = F.col("text")
     is_start = (
         T.startswith("error: emit-module command failed")
-        & T.rlike(MODULE_FAILED_RE)
+        & T.rlike(java_re(MODULE_FAILED_RE))
     )
     is_close = (
         (T.contains(":") & (T.contains(": error:") | T.contains(": warning:")))
-        | T.rlike(_BLANK_LINE_RE)
+        | T.rlike(java_re(_BLANK_LINE_RE))
     )
     is_cont = T.startswith(" ") & T.contains("use -v to see invocation")
     blocks = assemble_blocks(transcripts, is_start, is_close, is_cont)
@@ -818,9 +791,9 @@ def xcodebuild_warning_blocks(transcripts: DataFrame) -> DataFrame:
     (XcodebuildWarningRule.swift:12,47), closed by a blank line or
     ``** BUILD FAILED **`` (:50-54)."""
     T = F.col("text")
-    is_start = T.rlike(XCODEBUILD_WARNING_RE)
+    is_start = T.rlike(java_re(XCODEBUILD_WARNING_RE))
     is_close = (
-        T.rlike(_BLANK_LINE_RE)
+        T.rlike(java_re(_BLANK_LINE_RE))
         | T.startswith("** BUILD FAILED **")
     )
     is_cont = T.startswith("{ platform:") | T.startswith("}")

@@ -43,6 +43,9 @@ Fidelity notes:
     (CompileErrorRule.swift:57-63): guarded via digit-run length ≤ 18.
   * XCTest file/line extraction does NOT reject on overflow — the field just
     goes null (XCTestRule.swift:262-270).
+  * Java regex treats ``\\r`` as a line terminator, RE2 and Python do not:
+    every Spark pattern carries the UNIX_LINES flag through :func:`java_re`,
+    so CRLF lines classify alike in all three (tests/test_crlf_regex.py).
 """
 
 from __future__ import annotations
@@ -82,8 +85,18 @@ _STEP_BOUNDARY_CATS = (
 _TOOL_INVOCATION_CATS = ("swift_compilation_task_failed", "build_command_failed")
 
 
+def java_re(pat: str) -> str:
+    """``pat`` for Spark's Java regex engine, matching as RE2 (the DuckDB
+    twins) and Python (the oracle) do: the UNIX_LINES flag ``(?d)`` makes
+    ``\\n`` the only line terminator, so ``.`` matches a ``\\r`` and ``$``
+    no longer matches before a trailing one (CRLF log lines). Every Spark
+    ``rlike``/``regexp_extract``/``regexp_replace`` pattern of the classify
+    cascade and the block assemblers goes through it."""
+    return "(?d)" + pat
+
+
 def _ext(T: Column, pat: str, group: int) -> Column:
-    return F.regexp_extract(T, pat, group)
+    return F.regexp_extract(T, java_re(pat), group)
 
 
 def _null(t: str) -> Column:
@@ -118,7 +131,7 @@ def _packed(T: Column, pat: str, groups: list[int]) -> Callable[[int], Column]:
     regex-per-group but only executes on separator-containing matches, which
     real logs do not produce. The array is built on the first read."""
     arr = functools.cache(lambda: F.split(
-        F.regexp_replace(T, pat, _SEP.join(f"${g}" for g in groups)), _SEP))
+        F.regexp_replace(T, java_re(pat), _SEP.join(f"${g}" for g in groups)), _SEP))
 
     def read(g: int) -> Column:
         return (F.when(F.size(arr()) == len(groups), F.get(arr(), groups.index(g)))
@@ -133,15 +146,15 @@ def rule_id(T: Column) -> Column:
     bc = _packed(T, BUILD_COMMAND_RE, [1, 2, 3])
     r1 = (
         (T.contains("error:") | T.contains("warning:"))  # fastFail gate
-        & T.rlike(COMPILE_ERROR_RE)
+        & T.rlike(java_re(COMPILE_ERROR_RE))
         & (F.length(ce(3)) <= 18)
         & (F.length(ce(4)) <= 18)
     )
     r2 = T == "** BUILD FAILED **"  # regex is an exact literal (BuildFailedRule.swift:9)
-    r3 = T.rlike(XCODEBUILD_WARNING_RE)
-    r4 = T.contains("SwiftCompile normal ") & T.rlike(SWIFT_COMPILE_TASK_RE)
+    r3 = T.rlike(java_re(XCODEBUILD_WARNING_RE))
+    r4 = T.contains("SwiftCompile normal ") & T.rlike(java_re(SWIFT_COMPILE_TASK_RE))
     r5 = (
-        T.contains("(in target '") & T.rlike(BUILD_COMMAND_RE)
+        T.contains("(in target '") & T.rlike(java_re(BUILD_COMMAND_RE))
         & ~bc(1).contains("SwiftCompile")
     )
     r6 = T.startswith("Undefined symbols for architecture")
@@ -149,8 +162,8 @@ def rule_id(T: Column) -> Column:
     r7b = T.startswith("Test Suite")
     r7c = T.contains("XCTAssert") & T.contains("failed")
     r7d = T.contains("error:") & T.contains("test")
-    r9 = T.startswith("error: emit-module command failed") & T.rlike(MODULE_FAILED_RE)
-    r10 = T.startswith("[") & T.rlike(PROGRESS_RE)
+    r9 = T.startswith("error: emit-module command failed") & T.rlike(java_re(MODULE_FAILED_RE))
+    r10 = T.startswith("[") & T.rlike(java_re(PROGRESS_RE))
 
     return (
         F.when(r1, "r1_compile")
@@ -216,7 +229,7 @@ def rule_fields(T: Column, rule: Column | str,
 
     # --- XCTest helpers (XCTestRule.swift) --------------------------------
     def suite_name():
-        return (F.when(T.rlike(SUITE_NAME_RE), _ext(T, SUITE_NAME_RE, 1))
+        return (F.when(T.rlike(java_re(SUITE_NAME_RE)), _ext(T, SUITE_NAME_RE, 1))
                 .otherwise(F.lit("Unknown Suite")))
 
     def status():
@@ -228,11 +241,13 @@ def rule_fields(T: Column, rule: Column | str,
     r7cd = ("r7c_assertion", "r7d_test_error")
     return {
         "file": case([("r1_compile", lambda: ce(1)),
-                      (r7cd, lambda: F.when(T.rlike(FILE_INFO_RE), _ext(T, FILE_INFO_RE, 1))
+                      (r7cd, lambda: F.when(T.rlike(java_re(FILE_INFO_RE)),
+                                            _ext(T, FILE_INFO_RE, 1))
                        .otherwise(null_s()))],
                      null_s),
         "line": case([("r1_compile", lambda: _long(ce(3))),
-                      (r7cd, lambda: F.when(T.rlike(FILE_INFO_RE), _long(_ext(T, FILE_INFO_RE, 2)))
+                      (r7cd, lambda: F.when(T.rlike(java_re(FILE_INFO_RE)),
+                                            _long(_ext(T, FILE_INFO_RE, 2)))
                        .otherwise(null_l()))],
                      null_l),
         "column": case([("r1_compile", lambda: _long(ce(4)))], null_l),
@@ -253,7 +268,7 @@ def rule_fields(T: Column, rule: Column | str,
             ("r6_linker", lambda: T),
             ("r7a_test_case", lambda: F.concat(
                 F.lit("Test: "),
-                F.when(T.rlike(TEST_NAME_RE), _ext(T, TEST_NAME_RE, 1))
+                F.when(T.rlike(java_re(TEST_NAME_RE)), _ext(T, TEST_NAME_RE, 1))
                 .otherwise(F.lit("Unknown Test")),
                 F.lit(" - "), status())),
             ("r7b_test_suite", lambda: F.concat(
@@ -300,7 +315,7 @@ def rule_fields(T: Column, rule: Column | str,
             ("r4_swiftcompile_task", lambda: F.concat(sct(3), F.lit(" ("), sct(4), F.lit(")"))),
             ("r5_build_command", lambda: F.concat(bc(2), F.lit(" ("), bc(3), F.lit(")"))),
             (("r7a_test_case", "r7c_assertion"),
-             lambda: F.when(T.rlike(TEST_NAME_RE),
+             lambda: F.when(T.rlike(java_re(TEST_NAME_RE)),
                             F.substring_index(_ext(T, TEST_NAME_RE, 1), " ", 1))
              .otherwise(null_s())),
             ("r7b_test_suite", suite_name),

@@ -20,19 +20,33 @@ Dispatch order per line (BuildLogParser.swift:325-364):
 
 from __future__ import annotations
 
+import json
+
 from .rules.table import Diagnostic, Rule
 
 
 class ParserOracle:
-    """One instance per line stream (per conversation)."""
+    """One instance per line stream (per conversation). ``state`` resumes a
+    stream from an earlier instance's :meth:`state`."""
 
-    def __init__(self, rules: list[Rule]):
+    def __init__(self, rules: list[Rule], state: str | None = None):
         self.rules = rules
         self.current: Diagnostic | None = None
         self.current_line_no: int | None = None
         self.out: list[Diagnostic] = []
         self.out_line_nos: list[int | None] = []
-        self._line_no: int | None = None
+        if state is not None:
+            d = json.loads(state)
+            self.current_line_no = d.pop("_turn")
+            self.current = Diagnostic(**d)
+
+    def state(self) -> str | None:
+        """The parser's one piece of cross-line state — the in-flight
+        ``current`` diagnostic plus the turn that started it — as JSON;
+        None when nothing is in flight."""
+        if self.current is None:
+            return None
+        return json.dumps({**self.current.__dict__, "_turn": self.current_line_no})
 
     def _flush(self) -> None:
         if self.current is not None:
@@ -41,11 +55,13 @@ class ParserOracle:
             self.current = None
             self.current_line_no = None
 
-    def consume_line(self, line: str, line_no: int | None = None) -> None:
+    def consume_line(self, line: str | None, line_no: int | None = None) -> None:
         """``line_no`` is graft provenance (the turn_idx of the line) — it does
         not participate in parsing, only in labeling the emitted diagnostic
-        with the turn that started it."""
-        self._line_no = line_no
+        with the turn that started it. A NULL line (a turn without text) is
+        a no-op, as if the turn were absent."""
+        if line is None:
+            return
         # (1) end-branch
         for rule in self.rules:
             if rule.is_end(line, self.current):

@@ -6,5 +6,4 @@ from .pipeline import (  # noqa: F401
     stream_route,
     stream_dedup_exact,
 )
-from .stateful import (  # noqa: F401
-    stream_parse_stateful, stream_parse_stateful_unordered)
+from .stateful import stream_parse_stateful  # noqa: F401

@@ -11,11 +11,12 @@ the conversation's EOF sentinel lands — and only if the closed run reached
 runs exactly (asserted batch-vs-stream in tests/test_streaming_loops.py).
 
 Contract: within one conversation, turns arrive batch-over-batch in
-``turn_idx`` order (each batch's rows are sorted internally) — the same
-in-order contract as ``stream_parse_stateful``; end-of-conversation is the
-same explicit EOF-marker protocol (a timer would close runs mid-stream
-between availableNow runs — the documented Spark 4.1 timeout behavior in
-streaming/stateful.py).
+``turn_idx`` order (each batch's rows are sorted internally). Unlike
+``stream_parse_stateful``, which buffers early turns until the gap before
+them fills, this operator keeps no turn buffer: its state stays one row.
+End-of-conversation is the same explicit ``EOF_MARKER`` protocol (a timer
+would close runs mid-stream between availableNow runs — the documented
+Spark 4.1 timeout behavior in streaming/stateful.py).
 
 Scale shape (10^12 turns): state is ONE bounded row per live conversation
 (a 3-string key + 3 ints — never buffered turns), hash-partitioned by
@@ -34,7 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType)
 
-from .stateful import DEFAULT_EOF_MARKER
+from .stateful import EOF_MARKER
 
 ALERT_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -64,8 +65,7 @@ def _fp(text: object) -> str:
     return hashlib.md5(s.encode("utf-8")).hexdigest()
 
 
-def stream_loop_alerts(transcripts: DataFrame, min_run: int = 3,
-                       eof_marker: str = DEFAULT_EOF_MARKER) -> DataFrame:
+def stream_loop_alerts(transcripts: DataFrame, min_run: int = 3) -> DataFrame:
     """transcripts must be a STREAMING DataFrame with at least
     (conv_id, turn_idx, role, text, tool). Returns the alert stream
     (ALERT_SCHEMA): one row per closed run of >= min_run identical turns."""
@@ -90,7 +90,7 @@ def stream_loop_alerts(transcripts: DataFrame, min_run: int = 3,
         finished = False
         for turn, role, text, tool in zip(
                 rows["turn_idx"], rows["role"], rows["text"], rows["tool"]):
-            if text == eof_marker:
+            if text == EOF_MARKER:
                 close(run)
                 run = None
                 finished = True

@@ -303,16 +303,17 @@ def test_xctest_blocks_state_dependent_assert(spark):
 def test_swiftbuild_blocks_equal_stateful_on_aux_stream(spark):
     """End-to-end tie on the aux modern-toolchain stream (the actual graded
     input): the vectorized assembler == the exact applyInPandas state
-    machine with the same single-rule stack."""
+    machine with the same single-rule stack (every aux conversation fits
+    one chunk, so parse_stateful_auto takes the plain path)."""
     from buildlogparser_spark.operators.assemble import (
-        parse_stateful_flat, swiftbuild_compile_blocks)
+        parse_stateful_auto_flat, swiftbuild_compile_blocks)
     from buildlogparser_spark.rules.table import SwiftBuildCompileErrorRule
     from buildlogparser_spark.transcripts import load_aux_transcripts
 
     aux = load_aux_transcripts(spark, "/root/testdata/sf0.001")
     a = _got_proj(swiftbuild_compile_blocks(aux), _SB_ATTRS)
     b = _got_proj(
-        parse_stateful_flat(aux, lambda: [SwiftBuildCompileErrorRule()]),
+        parse_stateful_auto_flat(aux, lambda: [SwiftBuildCompileErrorRule()]),
         _SB_ATTRS)
     assert a == b and sum(a.values()) > 20
     assert any(k[-2] > 0 for k in a)

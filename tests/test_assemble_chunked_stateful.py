@@ -125,6 +125,23 @@ def test_block_open_across_many_chunks(spark):
     assert key[10] == tuple(f"  note: continuation {i}" for i in range(200))
 
 
+def test_null_text_turns_are_skipped(spark):
+    """A turn with NULL text is a no-op for the state machine: the plain
+    and the chunked path give the same diagnostics as on the frame without
+    those turns (chunk_size=4 puts NULL turns at chunk edges and inside
+    open blocks)."""
+    nulled = conversations_df(spark, SEED, 12).withColumn(
+        "text", F.when(F.col("turn_idx") % 3 == 1, F.lit(None))
+        .otherwise(F.col("text")))
+    without = nulled.filter(F.col("text").isNotNull())
+    exp = _got(parse_stateful(without, _ref_test_stack))
+    assert _got(parse_stateful(nulled, _ref_test_stack)) == exp
+    for df in (nulled, without):
+        assert _got(parse_stateful_chunked(
+            df, _ref_test_stack, chunk_size=4)) == exp
+    assert sum(exp.values()) > 20
+
+
 def test_auto_routes_small_conversations_plain(spark):
     """No conversation exceeds the chunk size → auto must equal the plain
     path's answer (and take it: the probe finds nothing oversized)."""

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from buildlogparser_spark.operators import aggregate as agg
 from buildlogparser_spark.streaming.loops import stream_loop_alerts
-from buildlogparser_spark.streaming.stateful import DEFAULT_EOF_MARKER
+from buildlogparser_spark.streaming.stateful import EOF_MARKER
 from buildlogparser_spark.transcripts import load_transcripts
 from conftest import SF_SMOKE
 
@@ -42,7 +42,7 @@ def test_stream_alerts_equal_batch_across_microbatches(
             .max())
     eofs["turn_idx"] += 1
     eofs["role"] = "system"
-    eofs["text"] = DEFAULT_EOF_MARKER
+    eofs["text"] = EOF_MARKER
     eofs["tool"] = "none"
 
     def write(pdf):
@@ -107,7 +107,7 @@ def test_trailing_run_flushes_only_on_eof(spark, tmp_path):
     run_once()
     assert spark.read.parquet(out_dir).count() == 0  # still in-flight
 
-    write([("X", 4, "system", DEFAULT_EOF_MARKER, "none")])
+    write([("X", 4, "system", EOF_MARKER, "none")])
     run_once()
     rows = spark.read.parquet(out_dir).collect()
     assert [(r.conv_id, r.first_turn_idx, r.last_turn_idx, r.run_len)

@@ -1,6 +1,7 @@
 """applyInPandasWithState streaming assembly: diagnostics spanning
 micro-batches must equal the batch oracle, with in-flight state carried in
-the state store between availableNow runs (the checkpoint persists it), and
+the state store between availableNow runs (the checkpoint persists it),
+turns arriving out of order buffered until their prefix fills, and
 end-of-conversation flushed by an explicit EOF sentinel — the streaming
 twin of the reference's finish() call."""
 
@@ -8,14 +9,42 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
+
 from buildlogparser_spark.datagen import gen_conversations
 from buildlogparser_spark.oracle import parse_lines_with_turns
 from buildlogparser_spark.rules.table import test_stack as ref_test_stack
 from buildlogparser_spark.streaming.stateful import (
-    DEFAULT_EOF_MARKER, stream_parse_stateful)
+    EOF_MARKER, MAX_BUFFERED_TURNS, stream_parse_stateful)
 
 SEED, N_CONVS = 4242, 8
 SCHEMA = "conv_id string, turn_idx int, text string"
+
+
+class _Stream:
+    """One input directory, output directory and checkpoint: ``write``
+    appends rows as one parquet file, ``run_once`` drains everything new
+    through :func:`stream_parse_stateful` in one availableNow run."""
+
+    def __init__(self, spark, tmp_path, rules_factory=ref_test_stack):
+        self.spark, self.rules_factory = spark, rules_factory
+        self.in_dir, self.out_dir, self.ckpt = (
+            str(tmp_path / d) for d in ("in", "out", "ckpt"))
+
+    def write(self, rows):
+        self.spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
+            "append").parquet(self.in_dir)
+
+    def run_once(self):
+        stream = self.spark.readStream.schema(SCHEMA).parquet(self.in_dir)
+        q = (stream_parse_stateful(stream, self.rules_factory)
+             .writeStream.format("parquet").option("path", self.out_dir)
+             .outputMode("append").option("checkpointLocation", self.ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(180)
+
+    def rows(self):
+        return self.spark.read.parquet(self.out_dir).collect()
 
 
 def _corpus():
@@ -42,39 +71,25 @@ def test_stateful_stream_across_batches(spark, tmp_path):
     run 2 still assemble; run 3 delivers EOF sentinels that flush trailing
     in-flight diagnostics (finish())."""
     convs = _corpus()
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    st = _Stream(spark, tmp_path)
 
     half1 = [(c, i, t) for c, ls in convs.items()
              for i, t in enumerate(ls) if i < len(ls) // 2]
     half2 = [(c, i, t) for c, ls in convs.items()
              for i, t in enumerate(ls) if i >= len(ls) // 2]
-    eofs = [(c, len(ls), DEFAULT_EOF_MARKER) for c, ls in convs.items()]
+    eofs = [(c, len(ls), EOF_MARKER) for c, ls in convs.items()]
 
-    def write(rows):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-            "append").parquet(in_dir)
+    st.write(half1)
+    st.run_once()
+    n_after_1 = len(st.rows())
 
-    def run_once():
-        stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-        q = (stream_parse_stateful(stream, ref_test_stack)
-             .writeStream.format("parquet").option("path", out_dir)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    write(half1)
-    run_once()
-    n_after_1 = spark.read.parquet(out_dir).count()
-
-    write(half2)
-    run_once()
-    write(eofs)
-    run_once()
+    st.write(half2)
+    st.run_once()
+    st.write(eofs)
+    st.run_once()
 
     got: Counter = Counter()
-    for r in spark.read.parquet(out_dir).collect():
+    for r in st.rows():
         got[(r.conv_id, r.start_turn_idx, r.category, r.message,
              tuple(r.related_messages))] += 1
     exp = _expected(convs)
@@ -94,13 +109,8 @@ def test_unordered_stream_buffers_out_of_order_turns(spark, tmp_path):
     nothing lost, nothing duplicated, blocks assembled across the shuffle."""
     import random
 
-    from buildlogparser_spark.streaming.stateful import (
-        stream_parse_stateful_unordered)
-
     convs = _corpus()
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    st = _Stream(spark, tmp_path)
     rng = random.Random(7)
 
     evens = [(c, i, t) for c, ls in convs.items()
@@ -109,31 +119,21 @@ def test_unordered_stream_buffers_out_of_order_turns(spark, tmp_path):
             for i, t in enumerate(ls) if i % 2 == 1]
     rng.shuffle(evens)
     rng.shuffle(odds)
-    eofs = [(c, len(ls), DEFAULT_EOF_MARKER) for c, ls in convs.items()]
+    eofs = [(c, len(ls), EOF_MARKER) for c, ls in convs.items()]
 
-    def write(rows):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-            "append").parquet(in_dir)
+    st.write(evens)
+    st.run_once()
+    n_after_1 = len(st.rows())
 
-    def run_once():
-        stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-        q = (stream_parse_stateful_unordered(stream, ref_test_stack)
-             .writeStream.format("parquet").option("path", out_dir)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    write(evens)
-    run_once()
-    n_after_1 = spark.read.parquet(out_dir).count()
-
-    write(odds)
-    run_once()
-    write(eofs)
-    run_once()
+    # the odd turns arrive with every even turn again: duplicates below
+    # the next expected turn are dropped, not parsed a second time
+    st.write(odds + evens)
+    st.run_once()
+    st.write(eofs)
+    st.run_once()
 
     got: Counter = Counter()
-    for r in spark.read.parquet(out_dir).collect():
+    for r in st.rows():
         got[(r.conv_id, r.start_turn_idx, r.category, r.message,
              tuple(r.related_messages))] += 1
     exp = _expected(convs)
@@ -166,33 +166,21 @@ def test_stream_swiftbuild_gutter_block_spans_batches(spark, tmp_path):
         "   3 | let w = 1",
     ]
     conv = "sb_stream"
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    st = _Stream(spark, tmp_path, sb_stack)
 
-    def write(rows):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-            "append").parquet(in_dir)
+    st.write([(conv, i, t) for i, t in enumerate(lines[:3])])
+    st.run_once()
+    assert len(st.rows()) == 0  # block still open
 
-    def run_once():
-        stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-        q = (stream_parse_stateful(stream, sb_stack)
-             .writeStream.format("parquet").option("path", out_dir)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-    write([(conv, i, t) for i, t in enumerate(lines[:3])])
-    run_once()
-    assert spark.read.parquet(out_dir).count() == 0  # block still open
-
-    write([(conv, i + 3, t) for i, t in enumerate(lines[3:])])
-    run_once()
-    write([(conv, len(lines), DEFAULT_EOF_MARKER)])
-    run_once()
+    st.write([(conv, i + 3, t) for i, t in enumerate(lines[3:])])
+    st.run_once()
+    st.write([(conv, len(lines), EOF_MARKER)])
+    st.run_once()
 
     got = Counter(
         (r.conv_id, r.start_turn_idx, r.category, r.severity, r.message,
          tuple(r.related_messages))
-        for r in spark.read.parquet(out_dir).collect())
+        for r in st.rows())
     exp = Counter(
         (conv, t, d.category, d.severity, d.message, tuple(d.related_messages))
         for t, d in parse_lines_with_turns(
@@ -203,3 +191,39 @@ def test_stream_swiftbuild_gutter_block_spans_batches(spark, tmp_path):
             ("  12 |     let q1 = broken()",
              "      |         `- error: cannot find 'q1' in scope",
              "")) in got
+
+
+def test_producer_hole_raises_past_the_buffer_bound(spark, tmp_path):
+    """Turn 0 never arrives: every later turn waits in the conversation's
+    buffer, and one turn past MAX_BUFFERED_TURNS fails the query rather
+    than growing state without bound."""
+    st = _Stream(spark, tmp_path)
+    spark.range(1, MAX_BUFFERED_TURNS + 2).selectExpr(
+        "'hole' AS conv_id", "CAST(id AS INT) AS turn_idx", "'x' AS text",
+    ).coalesce(1).write.parquet(st.in_dir)
+    with pytest.raises(Exception, match="producer hole at turn 0"):
+        st.run_once()
+
+
+def test_null_text_turns_are_skipped(spark, tmp_path):
+    """NULL-text turns advance the turn contiguity like any other turn but
+    are a no-op for the parser: the stream equals the batch oracle over
+    the same conversations without those turns."""
+    convs = _corpus()
+    rows = [(c, i, None if i % 3 == 1 else t)
+            for c, ls in convs.items() for i, t in enumerate(ls)]
+    st = _Stream(spark, tmp_path)
+    st.write(rows[::2])
+    st.run_once()
+    st.write(rows[1::2] + [(c, len(ls), EOF_MARKER) for c, ls in convs.items()])
+    st.run_once()
+
+    exp: Counter = Counter()
+    for c, ls in convs.items():
+        kept = [(i, t) for i, t in enumerate(ls) if i % 3 != 1]
+        for t, d in parse_lines_with_turns(
+                [x for _, x in kept], [i for i, _ in kept], ref_test_stack()):
+            exp[(c, t, d.category, d.message, tuple(d.related_messages))] += 1
+    got = Counter((r.conv_id, r.start_turn_idx, r.category, r.message,
+                   tuple(r.related_messages)) for r in st.rows())
+    assert got == exp and sum(exp.values()) > 20
