@@ -2,9 +2,9 @@
 BASELINE.json: "resumable from per-partition checkpoints with lineage +
 row-count metrics emitted per task").
 
-The resumable unit is one idempotent sink write (overwrite mode): a killed
-job restarts, consults the manifest, skips completed units and re-runs only
-the rest. The manifest is a JSON-lines file updated with atomic
+The resumable unit is one sink, replaced whole by a rename: a killed job
+restarts, consults the manifest, skips completed units and writes the rest
+in one job. The manifest is a JSON-lines file updated with atomic
 write-then-rename from the driver — the same pattern works against object
 storage via a _manifest prefix (one object per unit) on a real cluster.
 

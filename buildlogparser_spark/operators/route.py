@@ -3,12 +3,11 @@
 The reference fans one parse out to N in-process sinks
 (``DiagnosticsParser.outputs`` — BuildLogParser.swift:285,375-384;
 TextOutput/JSONOutput/SummaryOutput etc., OutputFormatters.swift). Our
-engine's equivalent writes per-severity / per-tool partitioned parquet
+engine's equivalent writes per-severity / per-class partitioned parquet
 sinks plus a dead-letter route. The caller classifies once and owns that
 cache: the batch job (``jobs/run_pipeline.py``) persists its classified
-diagnostics for the sinks, aggregates and reports. The fan-out caches only
-its repartitioned copy, so the sinks share one shuffle. Skew defenses per
-BASELINE.json:
+diagnostics for the sinks, aggregates and reports. The fan-out shuffles
+it once and writes all its sinks in one job. Skew defenses per BASELINE.json:
 
 * sink layout: ``{root}/{sink}/`` partitioned by ``(ts_bucket, conv_bucket)``
   where ts_bucket is a day bucket of ts and conv_bucket is a salted hash of
@@ -27,10 +26,9 @@ native partition transforms instead of the materialized bucket columns.
 
 from __future__ import annotations
 
-import time
-from concurrent.futures import ThreadPoolExecutor
+import uuid
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..metrics import StageMetrics
 
@@ -77,14 +75,14 @@ FROM ({select_body}) s
 """
 
 
-def _sinks(diags: DataFrame) -> list[tuple[str, DataFrame]]:
-    """The fan-out's (name, frame) sinks, mirroring §2.6: the full
+def _sinks() -> list[tuple[str, Column]]:
+    """The fan-out's (name, predicate) sinks, mirroring §2.6: the full
     diagnostics sink, one per severity and one per diag class."""
     return [
-        ("diagnostics", diags),
-        *((f"severity={sev}", diags.filter(F.col("severity") == sev))
+        ("diagnostics", F.lit(True)),
+        *((f"severity={sev}", F.col("severity") == sev)
           for sev in ("error", "warning", "info", "note")),
-        *((f"class={cls}", diags.filter(F.col("diag_class") == cls))
+        *((f"class={cls}", F.col("diag_class") == cls)
           for cls in ("error", "warning", "note", "tool-invocation", "step-boundary")),
     ]
 
@@ -111,10 +109,10 @@ def route_writes_iceberg(diags: DataFrame, table_prefix: str,
     from pyspark.sql.functions import partitioning as P
 
     tables: dict[str, str] = {}
-    for sink, df in _sinks(diags):
+    for sink, pred in _sinks():
         name = sink.replace("=", "_").replace("-", "_")
         tables[name] = f"{table_prefix}_{name}"
-        (df.writeTo(tables[name])
+        (diags.filter(pred).writeTo(tables[name])
            .partitionedBy(P.days(F.col("ts")), P.bucket(n_salt, F.col("conv_id")))
            .using("iceberg")
            .createOrReplace())
@@ -149,69 +147,71 @@ def decode_text(raw: DataFrame, blob_col: str = "text_bytes",
 def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
                  ts_granularity: str = "day", subdir: str | None = None,
                  manifest=None) -> dict[str, dict]:
-    """Fan-out: one cached classify feeds all sinks (the reference's
+    """Fan-out: one classified input feeds all sinks (the reference's
     addOutput loop). Returns {sink_name: {"path", "rows", "secs",
-    "skipped"}} in :func:`_sinks` order; rows are observed inside each
-    write job (no second pass).
+    "skipped"}} in :func:`_sinks` order; rows are observed inside the write
+    (no second pass), and ``secs`` is the one shared write's wall time.
 
     Each sink is partitioned by (ts_bucket, conv_bucket). Write pattern:
     repartition on the sink partition columns BEFORE the partitionBy write —
     otherwise every task holds rows of every output dir and file count
     explodes to tasks × dirs (the classic partitioned-write tiny-file storm;
     at 10^12 rows that is millions of 1 KB files). After the repartition
-    each output dir's rows live in one task → files ≈ dirs.
+    each output dir's rows live in one task → files ≈ dirs. Only then is
+    each row exploded into its pending sinks, and ONE job writes them all,
+    partitioned by (sink index, ts_bucket, conv_bucket), into a fresh
+    ``_``-prefixed staging dir under ``root`` (removed in ``finally``);
+    each sink's partition is then renamed over ``{root}/{sink}``. Rename is
+    atomic on local disk and HDFS, a copy on object stores: there
+    :func:`route_writes_iceberg` is the sink.
 
-    ``subdir`` scopes the overwrite: writes land under
-    ``{root}/{sink}/{subdir}`` and only that subtree is replaced. Callers
-    writing the same logical dataset more than once into one root — e.g.
-    the streaming router's per-micro-batch calls — MUST pass a disjoint
-    subdir per call (``batch_id=N``); a bare overwrite at the sink root
-    would truncate every earlier call's rows.
+    ``subdir`` scopes the replace to ``{root}/{sink}/{subdir}``: callers
+    writing one root more than once (the streaming router, per micro-batch)
+    MUST pass a disjoint one per call, or each call drops the earlier rows.
 
     ``manifest`` (a :class:`..checkpoint.Manifest`) makes the fan-out
-    resumable per sink: a sink already recorded there is skipped and its
-    stored record returned with ``skipped=True``; each finished write is
-    recorded from the calling thread, in sink order. A crash between a
-    write and its record leaves a sink that the rerun overwrites.
-
-    The sink writes are INDEPENDENT jobs over the same cached input, so
-    they run from a small driver-side thread pool: the per-job fixed costs
-    (scheduling, the partitioned-write commit protocol) overlap instead of
-    serializing — 4.7 s → ~2 s on the sf0.1 bench (q9). The cache is filled
-    once up front, and only if a sink is left to write.
+    resumable per sink: a recorded sink is skipped and its stored record
+    returned with ``skipped=True``; each sink is recorded right after its
+    rename, so a rerun rewrites only unrecorded sinks (none left: no job).
     """
-    parts = (with_sink_partitions(diags, n_salt, ts_granularity)
-             .repartition("ts_bucket", "conv_bucket"))
     suffix = f"/{subdir}" if subdir else ""
-    mx = StageMetrics()
     results: dict[str, dict] = {}
-    pending: list[tuple[str, str, DataFrame]] = []
-    for name, df in _sinks(parts):
+    pending: list[tuple[str, Column]] = []
+    for name, pred in _sinks():
         path = f"{root}/{name}{suffix}"
         rec = manifest.get("route", name + suffix) if manifest else None
         if rec:
             results[name] = {**rec, "path": path, "skipped": True}
         else:
             results[name] = {"path": path}
-            pending.append((name, path, mx.observe(df, name)))
+            pending.append((name, pred))
     if not pending:
         return results
 
-    def write(item: tuple[str, str, DataFrame]) -> tuple[str, float]:
-        name, path, df = item
-        t0 = time.time()
-        df.write.mode("overwrite").partitionBy("ts_bucket", "conv_bucket").parquet(path)
-        return name, round(time.time() - t0, 3)
-
-    parts.cache()
+    parts = (with_sink_partitions(diags, n_salt, ts_granularity)
+             .repartition("ts_bucket", "conv_bucket")
+             .withColumn("_sink", F.explode(F.array_compact(F.array(
+                 *(F.when(pred, i) for i, (_, pred) in enumerate(pending)))))))
+    Path = diags.sparkSession._jvm.org.apache.hadoop.fs.Path
+    fs = Path(root).getFileSystem(diags.sparkSession._jsc.hadoopConfiguration())
+    staging = f"{root}/_staging-{uuid.uuid4().hex}"
+    mx = StageMetrics()
+    parts = mx.observe(parts, "route", *(F.count_if(F.col("_sink") == i).alias(str(i))
+                                         for i in range(len(pending))))
     try:
-        parts.count()  # populate the cache once, before the write threads
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for name, secs in pool.map(write, pending):
-                rows = int(mx.get(name)["rows"])
-                if manifest:
-                    manifest.mark_done("route", name + suffix, rows=rows, secs=secs)
-                results[name].update(rows=rows, secs=secs, skipped=False)
+        parts.write.partitionBy("_sink", "ts_bucket", "conv_bucket").parquet(staging)
+        secs, counts = mx.wall_s(), mx.get("route")
+        for i, (name, _) in enumerate(pending):
+            rows = int(counts[str(i)])
+            src, dst = Path(f"{staging}/_sink={i}"), Path(results[name]["path"])
+            fs.delete(dst, True)
+            fs.mkdirs(dst.getParent())
+            if not (fs.rename(src, dst) if rows else fs.mkdirs(dst)):
+                raise OSError(f"route_writes: could not place sink {name} at {dst}")
+            fs.create(Path(dst, "_SUCCESS")).close()
+            if manifest:
+                manifest.mark_done("route", name + suffix, rows=rows, secs=secs)
+            results[name].update(rows=rows, secs=secs, skipped=False)
     finally:
-        parts.unpersist()
+        fs.delete(Path(staging), True)
     return results

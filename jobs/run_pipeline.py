@@ -22,7 +22,7 @@ dropped before ``main`` returns.
 The job is resumable: rerunning with the same --output consults the
 checkpoint manifest and skips completed sink writes. Emits one JSON line of
 per-stage lineage/row-count metrics on success (``scan``, ``dead_letter``,
-``classify_enrich``).
+``classify_enrich``), plus per-sink rows and the shared sink write's ``secs``.
 """
 
 from __future__ import annotations

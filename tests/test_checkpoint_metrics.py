@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,15 +24,26 @@ def diags(spark):
     return classify(load_transcripts(spark, SF_SMOKE))
 
 
-def _execution_ids(spark) -> set[int]:
-    """Ids of the SQL executions in Spark's status store, once the listener
-    bus has delivered every event."""
+def _executions(spark) -> dict[int, str]:
+    """Physical plan text of the SQL executions in Spark's status store, by
+    id, once the listener bus has delivered every event."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
-    ids = set()
+    plans = {}
     while it.hasNext():
-        ids.add(it.next().executionId())
-    return ids
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def _write_ids(spark) -> set[int]:
+    """Ids of the file-write executions (one per ``DataFrameWriter`` call)."""
+    return {i for i, plan in _executions(spark).items()
+            if "InsertIntoHadoopFsRelationCommand" in plan}
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _part_mtimes(root: str) -> dict[str, float]:
@@ -64,44 +76,112 @@ def test_route_resumable_full_and_skip(spark, diags, tmp_path):
     key = ["conv_id", "turn_idx", "severity", "category"]
     assert diags.select(*key).exceptAll(back.select(*key)).count() == 0
 
-    # second run: everything skipped, nothing rewritten — not even the
-    # cache-filling count runs when no sink is pending
-    ids, mtimes = _execution_ids(spark), _part_mtimes(root)
+    # second run: everything skipped, nothing rewritten — no Spark job
+    # runs when no sink is pending
+    ids, mtimes = set(_executions(spark)), _part_mtimes(root)
     assert mtimes
     res2 = route_writes_resumable(diags, root, n_salt=4, ts_granularity="month")
     assert all(r["skipped"] for r in res2.values())
     assert res2["diagnostics"]["rows"] == total
-    assert _execution_ids(spark) <= ids
+    assert set(_executions(spark)) <= ids
     assert _part_mtimes(root) == mtimes
 
 
 def test_route_writes_rows_match_sinks(spark, diags, tmp_path):
     """The one fan-out returns each sink's observed row count, and it equals
-    what the sink holds on disk under the caller's subdir."""
+    what the sink holds on disk under the caller's subdir. The layout is the
+    sink contract: every sink dir has ``_SUCCESS``, part files sit under
+    ts_bucket=…/conv_bucket=…, files hold the input's columns (routing
+    columns included, no sink index), empty sinks hold only ``_SUCCESS``,
+    and a repeated subdir replaces only itself."""
     root = str(tmp_path / "sinks")
+    res0 = route_writes(diags, root, n_salt=4, ts_granularity="month",
+                        subdir="batch_id=0")
+    route_writes(diags, root, n_salt=4, ts_granularity="month", subdir="batch_id=1")
+    sibling = _part_mtimes(f"{root}/diagnostics/batch_id=0")
     res = route_writes(diags, root, n_salt=4, ts_granularity="month",
-                       subdir="batch_id=0")
+                       subdir="batch_id=1")
+    assert _part_mtimes(f"{root}/diagnostics/batch_id=0") == sibling
+    assert {s: r["rows"] for s, r in res.items()} == \
+        {s: r["rows"] for s, r in res0.items()}
     assert len(res) == 10 and not any(r["skipped"] for r in res.values())
+    assert sorted(os.listdir(root)) == sorted(res)
+    want_cols = diags.columns + ["ts_bucket", "conv_bucket"]
+    assert {"severity", "diag_class"} <= set(want_cols)
     for sink, r in res.items():
-        path = f"{root}/{sink}/batch_id=0"
+        path = f"{root}/{sink}/batch_id=1"
         assert r["path"] == path
-        on_disk = spark.read.parquet(path).count() \
-            if glob.glob(f"{path}/**/part-*", recursive=True) else 0
-        assert r["rows"] == on_disk, sink
+        assert os.path.isfile(f"{path}/_SUCCESS"), sink
+        parts = glob.glob(f"{path}/**/part-*", recursive=True)
+        for p in parts:
+            assert re.fullmatch(r"ts_bucket=[^/]+/conv_bucket=\d+/part-[^/]+\.parquet",
+                                os.path.relpath(p, path)), p
+        if parts:
+            back = spark.read.parquet(path)
+            assert back.columns == want_cols, sink
+            assert r["rows"] == back.count(), sink
+        else:
+            assert r["rows"] == 0, sink
+            assert [f for f in os.listdir(path) if not f.startswith(".")] == \
+                ["_SUCCESS"], sink
+    assert res["severity=note"]["rows"] == res["class=note"]["rows"] == 0
     assert res["diagnostics"]["rows"] == diags.count() > 0
+    assert spark.read.parquet(f"{root}/diagnostics").count() == \
+        2 * res["diagnostics"]["rows"]
+
+
+def test_route_writes_one_job_per_call(spark, diags, tmp_path, monkeypatch):
+    """A call with pending sinks is one write execution that caches nothing
+    and leaves no staging directory, also when the write raises."""
+    root = str(tmp_path / "sinks")
+    rdds, writes = _persistent_rdds(spark), _write_ids(spark)
+    res = route_writes(diags, root, n_salt=4, ts_granularity="month")
+    assert len(_write_ids(spark) - writes) == 1
+    assert _persistent_rdds(spark) == rdds
+    assert sorted(os.listdir(root)) == sorted(res)  # no staging dir left
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def write_then_fail(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        raise RuntimeError("forced write failure")
+
+    real_parquet = DataFrameWriter.parquet
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail)
+    bad_root = str(tmp_path / "failed")
+    with pytest.raises(RuntimeError, match="forced write failure"):
+        route_writes(diags, bad_root, n_salt=4, ts_granularity="month")
+    # the staging dir was written in full, then removed; no sink was moved
+    assert os.listdir(bad_root) == []
+    assert _persistent_rdds(spark) == rdds
 
 
 def test_route_resume_after_partial_failure(spark, diags, tmp_path):
     """Simulate a mid-job crash: pre-mark 3 sinks done, run, verify only the
-    remaining units execute and the manifest converges to all-done."""
+    remaining units execute — in one write, leaving the done sinks' files
+    alone — and the manifest converges to all-done."""
     root = str(tmp_path / "sinks")
     m = Manifest(root)
-    for unit in ("diagnostics", "severity=error", "class=warning"):
+    done = ("diagnostics", "severity=error", "class=warning")
+    for unit in done:
         m.mark_done("route", unit, rows=-42, secs=0.0)
+        os.makedirs(f"{root}/{unit}")
+        with open(f"{root}/{unit}/marker", "w") as f:
+            f.write(unit)
+    marks = {u: os.path.getmtime(f"{root}/{u}/marker") for u in done}
+    writes = _write_ids(spark)
     res = route_writes_resumable(diags, root, n_salt=4, ts_granularity="month")
+    assert len(_write_ids(spark) - writes) == 1
     assert res["diagnostics"]["skipped"] and res["diagnostics"]["rows"] == -42
     assert res["severity=error"]["skipped"]
     assert not res["severity=warning"]["skipped"]
+    for u in done:
+        assert os.listdir(f"{root}/{u}") == ["marker"], u
+        assert os.path.getmtime(f"{root}/{u}/marker") == marks[u]
+    pending = [s for s, r in res.items() if not r["skipped"]]
+    assert len(pending) == 7
+    for s in pending:
+        assert os.path.isfile(f"{root}/{s}/_SUCCESS"), s
     m2 = Manifest(root)
     assert len(m2.records()) == len(res)
 
