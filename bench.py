@@ -159,9 +159,11 @@ def main() -> None:
         timed("q8c_parse_stateful_auto",
               lambda: parse_stateful_auto(transcripts, default_stack).count())
         # month buckets + small salt at sandbox sf: keeps dir count sane for
-        # tiny inputs; production keeps day granularity + 64 salt buckets
+        # tiny inputs; production keeps day granularity + 64 salt buckets.
+        # Each rep writes a fresh root: route_writes skips sinks already done
         timed("q9_route_writes", lambda: route_writes(
-            diags, os.path.join(tmp, "sinks"), n_salt=4, ts_granularity="month"))
+            diags, tempfile.mkdtemp(prefix="sinks-", dir=tmp), n_salt=4,
+            ts_granularity="month"))
         timed("q10_dedup_exact", lambda: dedup.dedup_exact(documents).count())
         timed("q11_minhash_lsh", lambda: dedup.lsh_candidates(documents).count())
         timed("q12_simhash", lambda: dedup.simhash(documents).count())

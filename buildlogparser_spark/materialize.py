@@ -61,9 +61,10 @@ def materialize(df: DataFrame, n_files: int | None = None,
 
     CAVEAT — session-global: ``clearCache()`` unpersists EVERY cached
     relation in the session, not just this snapshot's inputs. The graded
-    sweep holds no live caches (the only ``.cache()`` sites, route/checkpoint
-    write fan-outs, unpersist in ``finally``), but callers that DO hold live
-    caches must not pass ``trim_jvm=True`` mid-flight.
+    sweep holds no live caches. The one live cache in the package is the
+    batch job's ``persist()`` of its classified diagnostics
+    (``jobs/run_pipeline.py``), and the job never passes ``trim_jvm=True``;
+    callers that DO hold live caches must not pass it mid-flight.
     """
     spark = df.sparkSession
     app_id = spark.sparkContext.applicationId

@@ -7,7 +7,10 @@ engine's equivalent writes per-severity / per-class partitioned parquet
 sinks plus a dead-letter route. The caller classifies once and owns that
 cache: the batch job (``jobs/run_pipeline.py``) persists its classified
 diagnostics for the sinks, aggregates and reports. The fan-out shuffles
-it once and writes all its sinks in one job. Skew defenses per BASELINE.json:
+it once and writes all its sinks in one job. Each written sink's
+``_SUCCESS`` holds its record, ``{"rows", "secs"}``, and a call skips the
+sinks that hold one: that marker is the resume state of the batch job
+and of the streaming router alike. Skew defenses per BASELINE.json:
 
 * sink layout: ``{root}/{sink}/`` partitioned by ``(ts_bucket, conv_bucket)``
   where ts_bucket is a day bucket of ts and conv_bucket is a salted hash of
@@ -26,6 +29,7 @@ native partition transforms instead of the materialized bucket columns.
 
 from __future__ import annotations
 
+import json
 import uuid
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -144,9 +148,25 @@ def decode_text(raw: DataFrame, blob_col: str = "text_bytes",
         out_col, F.when(ok, F.col(blob_col).cast("string")))
 
 
+def _done_record(fs, marker) -> dict | None:
+    """The ``{"rows", "secs"}`` record in a sink's ``_SUCCESS`` ``marker``,
+    or None while the sink is pending: no marker, an empty one, or one that
+    does not parse."""
+    if not fs.exists(marker):
+        return None
+    stream = fs.open(marker)
+    try:
+        rec = json.loads(bytes(stream.readAllBytes()))
+        return {"rows": int(rec["rows"]), "secs": float(rec["secs"])}
+    except (ValueError, TypeError, KeyError):
+        return None
+    finally:
+        stream.close()
+
+
 def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
-                 ts_granularity: str = "day", subdir: str | None = None,
-                 manifest=None) -> dict[str, dict]:
+                 ts_granularity: str = "day",
+                 subdir: str | None = None) -> dict[str, dict]:
     """Fan-out: one classified input feeds all sinks (the reference's
     addOutput loop). Returns {sink_name: {"path", "rows", "secs",
     "skipped"}} in :func:`_sinks` order; rows are observed inside the write
@@ -165,21 +185,25 @@ def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
     atomic on local disk and HDFS, a copy on object stores: there
     :func:`route_writes_iceberg` is the sink.
 
-    ``subdir`` scopes the replace to ``{root}/{sink}/{subdir}``: callers
-    writing one root more than once (the streaming router, per micro-batch)
-    MUST pass a disjoint one per call, or each call drops the earlier rows.
+    Resume is per sink and always on. Right after its rename, a sink's
+    record ``{"rows", "secs"}`` is written into its ``_SUCCESS`` through the
+    path's Hadoop ``FileSystem``. A sink whose ``_SUCCESS`` holds a record
+    is done: it is skipped and that record returned with ``skipped=True``.
+    Any other sink is pending, deleted and rewritten; with none pending no
+    Spark job runs. To recompute a sink, delete its directory.
 
-    ``manifest`` (a :class:`..checkpoint.Manifest`) makes the fan-out
-    resumable per sink: a recorded sink is skipped and its stored record
-    returned with ``skipped=True``; each sink is recorded right after its
-    rename, so a rerun rewrites only unrecorded sinks (none left: no job).
+    ``subdir`` scopes a sink to ``{root}/{sink}/{subdir}``: callers writing
+    one root more than once (the streaming router, per micro-batch) MUST
+    pass a disjoint one per call, or later calls are skipped.
     """
     suffix = f"/{subdir}" if subdir else ""
+    Path = diags.sparkSession._jvm.org.apache.hadoop.fs.Path
+    fs = Path(root).getFileSystem(diags.sparkSession._jsc.hadoopConfiguration())
     results: dict[str, dict] = {}
     pending: list[tuple[str, Column]] = []
     for name, pred in _sinks():
         path = f"{root}/{name}{suffix}"
-        rec = manifest.get("route", name + suffix) if manifest else None
+        rec = _done_record(fs, Path(path, "_SUCCESS"))
         if rec:
             results[name] = {**rec, "path": path, "skipped": True}
         else:
@@ -192,8 +216,6 @@ def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
              .repartition("ts_bucket", "conv_bucket")
              .withColumn("_sink", F.explode(F.array_compact(F.array(
                  *(F.when(pred, i) for i, (_, pred) in enumerate(pending)))))))
-    Path = diags.sparkSession._jvm.org.apache.hadoop.fs.Path
-    fs = Path(root).getFileSystem(diags.sparkSession._jsc.hadoopConfiguration())
     staging = f"{root}/_staging-{uuid.uuid4().hex}"
     mx = StageMetrics()
     parts = mx.observe(parts, "route", *(F.count_if(F.col("_sink") == i).alias(str(i))
@@ -208,9 +230,11 @@ def route_writes(diags: DataFrame, root: str, n_salt: int = DEFAULT_N_SALT,
             fs.mkdirs(dst.getParent())
             if not (fs.rename(src, dst) if rows else fs.mkdirs(dst)):
                 raise OSError(f"route_writes: could not place sink {name} at {dst}")
-            fs.create(Path(dst, "_SUCCESS")).close()
-            if manifest:
-                manifest.mark_done("route", name + suffix, rows=rows, secs=secs)
+            marker = fs.create(Path(dst, "_SUCCESS"))
+            try:
+                marker.writeBytes(json.dumps({"rows": rows, "secs": secs}))
+            finally:
+                marker.close()
             results[name].update(rows=rows, secs=secs, skipped=False)
     finally:
         fs.delete(Path(staging), True)

@@ -1,6 +1,5 @@
 from .pipeline import (  # noqa: F401
     stream_transcripts,
-    stream_classify,
     windowed_severity_counts,
     stream_asof_enrich,
     stream_route,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators import route
 from ..operators.classify import classify
 
 TRANSCRIPT_SCHEMA = (
@@ -37,12 +38,6 @@ def stream_transcripts(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def stream_classify(transcripts: DataFrame) -> DataFrame:
-    """The batch classify cascade applied to a streaming DataFrame —
-    stateless projection, so micro-batch semantics are identical to batch."""
-    return classify(transcripts)
-
-
 def windowed_severity_counts(transcripts: DataFrame, window: str = "1 hour",
                              watermark: str = "1 day") -> DataFrame:
     """Per-event-time-window severity counts with late-data handling.
@@ -50,7 +45,7 @@ def windowed_severity_counts(transcripts: DataFrame, window: str = "1 hour",
     The watermark bounds state: windows older than max(ts) - watermark are
     finalized and evicted — mandatory for an unbounded 10^12-turn stream.
     """
-    diags = stream_classify(transcripts)
+    diags = classify(transcripts)
     return (
         diags.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
@@ -76,24 +71,24 @@ def stream_asof_enrich(transcripts: DataFrame,
 
 
 def stream_route(transcripts: DataFrame, root: str, checkpoint_dir: str,
-                 n_salt: int = 16, ts_granularity: str = "day"):
+                 n_salt: int = route.DEFAULT_N_SALT, ts_granularity: str = "day"):
     """foreachBatch fan-out: every micro-batch runs the batch router (same
     sink layout, same salting), each batch under its own
     ``batch_id={N}`` subpartition of every sink. Batch-disjoint subdirs make
     multi-batch runs additive (a bare overwrite at the sink root would keep
-    only the LAST batch's rows), and a checkpoint-replayed batch overwrites
-    exactly its own subdir — idempotent, so the streaming checkpoint gives
-    effectively-once sinks. Readers scan ``{root}/{sink}`` and partition
-    discovery surfaces batch_id alongside (ts_bucket, conv_bucket).
+    only the LAST batch's rows). A batch that Spark replays from the
+    checkpoint (same id, same offsets) is skipped sink by sink, not
+    overwritten: a sink whose ``_SUCCESS`` holds its record is done, and
+    only the sinks a crash left pending are rewritten, so the sinks are
+    exactly-once. Readers scan ``{root}/{sink}`` and partition discovery
+    surfaces batch_id alongside (ts_bucket, conv_bucket).
 
     Returns the started StreamingQuery (caller awaits/stops)."""
-    from ..operators.route import route_writes
-
-    diags = stream_classify(transcripts)
+    diags = classify(transcripts)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        route_writes(batch_df, root, n_salt=n_salt, ts_granularity=ts_granularity,
-                     subdir=f"batch_id={batch_id}")
+        route.route_writes(batch_df, root, n_salt=n_salt,
+                           ts_granularity=ts_granularity, subdir=f"batch_id={batch_id}")
 
     return (
         diags.writeStream

@@ -168,12 +168,10 @@ def derive_transcripts(events: DataFrame) -> DataFrame:
     return df.select("conv_id", "turn_idx", "role", text.alias("text"), "tool", "ts")
 
 
-def load_transcripts(spark: SparkSession, sf_dir: str, cache: bool = True) -> DataFrame:
-    """Load the derived transcript table for an sf dir.
-
-    ``cache=True`` (default) materializes the derived table to a temp
-    parquet snapshot (reused while the events files are unchanged) and
-    returns a scan of it.
+def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Load the derived transcript table for an sf dir: the derived table
+    is materialized to a temp parquet snapshot (reused while the events
+    files are unchanged) and a scan of it is returned.
     Materializing matters beyond convenience: the template CASE in
     :func:`derive_transcripts` is an expensive projection, and Catalyst's
     filter pushdown inlines it into every downstream predicate/extract
@@ -188,8 +186,6 @@ def load_transcripts(spark: SparkSession, sf_dir: str, cache: bool = True) -> Da
     """
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     df = derive_transcripts(events)
-    if not cache:
-        return df
     from .materialize import materialize
 
     # n_files: the window shuffle inherits spark.sql.shuffle.partitions (200

@@ -19,8 +19,10 @@ aggregates and the reports (the reference parses a log once and fans that
 parse out to every output, BuildLogParser.swift:285,375-384). The cache is
 dropped before ``main`` returns.
 
-The job is resumable: rerunning with the same --output consults the
-checkpoint manifest and skips completed sink writes. Emits one JSON line of
+The job is resumable: rerunning with the same --output skips every sink
+whose ``_SUCCESS`` holds its record (``route_writes``) and writes the rest.
+With --streaming, a micro-batch replayed from the stream checkpoint is
+skipped the same way, sink by sink. Emits one JSON line of
 per-stage lineage/row-count metrics on success (``scan``, ``dead_letter``,
 ``classify_enrich``), plus per-sink rows and the shared sink write's ``secs``.
 """

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import glob
+import os
 import sys
 from pathlib import Path
 
@@ -99,3 +101,27 @@ def assert_frames_match(spark_df, duck_df: pd.DataFrame, name: str = "") -> None
         diff_idx = (a != b).any(axis=1)
         sample = pd.concat([a[diff_idx].head(5), b[diff_idx].head(5)], keys=["spark", "duckdb"])
         raise AssertionError(f"{name}: value mismatch\n{sample}")
+
+
+def sql_executions(spark) -> dict[int, str]:
+    """Physical plan text of the SQL executions in Spark's status store, by
+    id, once the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def write_ids(spark) -> set[int]:
+    """Ids of the file-write executions (one per ``DataFrameWriter`` call)."""
+    return {i for i, plan in sql_executions(spark).items()
+            if "InsertIntoHadoopFsRelationCommand" in plan}
+
+
+def part_mtimes(root: str) -> dict[str, float]:
+    """mtime of every part file under ``root``, by path."""
+    return {p: os.path.getmtime(p)
+            for p in glob.glob(f"{root}/**/part-*", recursive=True)}

@@ -3,15 +3,16 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, part_mtimes, sql_executions, write_ids
 
-from buildlogparser_spark.checkpoint import Manifest, route_writes_resumable
+from buildlogparser_spark.checkpoint import route_writes_resumable
 from buildlogparser_spark.metrics import StageMetrics
 from buildlogparser_spark.operators.classify import classify
 from buildlogparser_spark.operators.enrich import enrich
@@ -24,31 +25,8 @@ def diags(spark):
     return classify(load_transcripts(spark, SF_SMOKE))
 
 
-def _executions(spark) -> dict[int, str]:
-    """Physical plan text of the SQL executions in Spark's status store, by
-    id, once the listener bus has delivered every event."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
-    plans = {}
-    while it.hasNext():
-        e = it.next()
-        plans[e.executionId()] = e.physicalPlanDescription()
-    return plans
-
-
-def _write_ids(spark) -> set[int]:
-    """Ids of the file-write executions (one per ``DataFrameWriter`` call)."""
-    return {i for i, plan in _executions(spark).items()
-            if "InsertIntoHadoopFsRelationCommand" in plan}
-
-
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def _part_mtimes(root: str) -> dict[str, float]:
-    return {p: os.path.getmtime(p)
-            for p in glob.glob(f"{root}/**/part-*", recursive=True)}
 
 
 def test_stage_metrics_row_counts(spark, diags):
@@ -78,13 +56,13 @@ def test_route_resumable_full_and_skip(spark, diags, tmp_path):
 
     # second run: everything skipped, nothing rewritten — no Spark job
     # runs when no sink is pending
-    ids, mtimes = set(_executions(spark)), _part_mtimes(root)
+    ids, mtimes = set(sql_executions(spark)), part_mtimes(root)
     assert mtimes
     res2 = route_writes_resumable(diags, root, n_salt=4, ts_granularity="month")
     assert all(r["skipped"] for r in res2.values())
     assert res2["diagnostics"]["rows"] == total
-    assert set(_executions(spark)) <= ids
-    assert _part_mtimes(root) == mtimes
+    assert set(sql_executions(spark)) <= ids
+    assert part_mtimes(root) == mtimes
 
 
 def test_route_writes_rows_match_sinks(spark, diags, tmp_path):
@@ -92,26 +70,33 @@ def test_route_writes_rows_match_sinks(spark, diags, tmp_path):
     what the sink holds on disk under the caller's subdir. The layout is the
     sink contract: every sink dir has ``_SUCCESS``, part files sit under
     ts_bucket=…/conv_bucket=…, files hold the input's columns (routing
-    columns included, no sink index), empty sinks hold only ``_SUCCESS``,
-    and a repeated subdir replaces only itself."""
+    columns included, no sink index), each ``_SUCCESS`` holds the sink's
+    record, empty sinks hold only ``_SUCCESS``, and a repeated subdir is
+    skipped."""
     root = str(tmp_path / "sinks")
     res0 = route_writes(diags, root, n_salt=4, ts_granularity="month",
                         subdir="batch_id=0")
-    route_writes(diags, root, n_salt=4, ts_granularity="month", subdir="batch_id=1")
-    sibling = _part_mtimes(f"{root}/diagnostics/batch_id=0")
     res = route_writes(diags, root, n_salt=4, ts_granularity="month",
                        subdir="batch_id=1")
-    assert _part_mtimes(f"{root}/diagnostics/batch_id=0") == sibling
     assert {s: r["rows"] for s, r in res.items()} == \
         {s: r["rows"] for s, r in res0.items()}
     assert len(res) == 10 and not any(r["skipped"] for r in res.values())
+    mtimes, writes = part_mtimes(root), write_ids(spark)
+    again = route_writes(diags, root, n_salt=4, ts_granularity="month",
+                         subdir="batch_id=1")
+    assert write_ids(spark) == writes
+    assert part_mtimes(root) == mtimes
+    assert all(r["skipped"] for r in again.values())
+    assert {s: r["rows"] for s, r in again.items()} == \
+        {s: r["rows"] for s, r in res.items()}
     assert sorted(os.listdir(root)) == sorted(res)
     want_cols = diags.columns + ["ts_bucket", "conv_bucket"]
     assert {"severity", "diag_class"} <= set(want_cols)
     for sink, r in res.items():
         path = f"{root}/{sink}/batch_id=1"
         assert r["path"] == path
-        assert os.path.isfile(f"{path}/_SUCCESS"), sink
+        with open(f"{path}/_SUCCESS") as f:
+            assert json.load(f) == {"rows": r["rows"], "secs": r["secs"]}, sink
         parts = glob.glob(f"{path}/**/part-*", recursive=True)
         for p in parts:
             assert re.fullmatch(r"ts_bucket=[^/]+/conv_bucket=\d+/part-[^/]+\.parquet",
@@ -134,9 +119,9 @@ def test_route_writes_one_job_per_call(spark, diags, tmp_path, monkeypatch):
     """A call with pending sinks is one write execution that caches nothing
     and leaves no staging directory, also when the write raises."""
     root = str(tmp_path / "sinks")
-    rdds, writes = _persistent_rdds(spark), _write_ids(spark)
+    rdds, writes = _persistent_rdds(spark), write_ids(spark)
     res = route_writes(diags, root, n_salt=4, ts_granularity="month")
-    assert len(_write_ids(spark) - writes) == 1
+    assert len(write_ids(spark) - writes) == 1
     assert _persistent_rdds(spark) == rdds
     assert sorted(os.listdir(root)) == sorted(res)  # no staging dir left
 
@@ -156,34 +141,46 @@ def test_route_writes_one_job_per_call(spark, diags, tmp_path, monkeypatch):
     assert _persistent_rdds(spark) == rdds
 
 
-def test_route_resume_after_partial_failure(spark, diags, tmp_path):
-    """Simulate a mid-job crash: pre-mark 3 sinks done, run, verify only the
-    remaining units execute — in one write, leaving the done sinks' files
-    alone — and the manifest converges to all-done."""
-    root = str(tmp_path / "sinks")
-    m = Manifest(root)
+def test_route_resume_after_partial_failure(spark, diags, tmp_path, monkeypatch):
+    """Simulate a mid-job crash: 3 sinks hold a JSON record in their
+    ``_SUCCESS`` and are skipped, their markers untouched; a sink with an
+    empty ``_SUCCESS`` and one with a leftover part file but no marker are
+    pending like the rest and rewritten, all in one write. The root is a
+    ``file:`` URI, and nothing lands under the driver's working dir."""
+    sinks = tmp_path / "sinks"
     done = ("diagnostics", "severity=error", "class=warning")
     for unit in done:
-        m.mark_done("route", unit, rows=-42, secs=0.0)
-        os.makedirs(f"{root}/{unit}")
-        with open(f"{root}/{unit}/marker", "w") as f:
-            f.write(unit)
-    marks = {u: os.path.getmtime(f"{root}/{u}/marker") for u in done}
-    writes = _write_ids(spark)
-    res = route_writes_resumable(diags, root, n_salt=4, ts_granularity="month")
-    assert len(_write_ids(spark) - writes) == 1
+        os.makedirs(sinks / unit)
+        with open(sinks / unit / "_SUCCESS", "w") as f:
+            json.dump({"rows": -42, "secs": 0.0}, f)
+    marks = {u: os.path.getmtime(sinks / u / "_SUCCESS") for u in done}
+    os.makedirs(sinks / "severity=warning")
+    open(sinks / "severity=warning" / "_SUCCESS", "w").close()
+    leftover = sinks / "class=error" / "ts_bucket=x" / "conv_bucket=0" / "part-0.parquet"
+    os.makedirs(leftover.parent)
+    leftover.write_bytes(b"half-written")
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    writes = write_ids(spark)
+    res = route_writes_resumable(diags, sinks.as_uri(), n_salt=4,
+                                 ts_granularity="month")
+    assert len(write_ids(spark) - writes) == 1
+    assert os.listdir(cwd) == []
     assert res["diagnostics"]["skipped"] and res["diagnostics"]["rows"] == -42
-    assert res["severity=error"]["skipped"]
-    assert not res["severity=warning"]["skipped"]
+    assert res["severity=error"]["skipped"] and res["class=warning"]["skipped"]
     for u in done:
-        assert os.listdir(f"{root}/{u}") == ["marker"], u
-        assert os.path.getmtime(f"{root}/{u}/marker") == marks[u]
+        assert os.listdir(sinks / u) == ["_SUCCESS"], u
+        assert os.path.getmtime(sinks / u / "_SUCCESS") == marks[u]
     pending = [s for s, r in res.items() if not r["skipped"]]
     assert len(pending) == 7
+    assert {"severity=warning", "class=error"} <= set(pending)
+    assert not leftover.exists()
     for s in pending:
-        assert os.path.isfile(f"{root}/{s}/_SUCCESS"), s
-    m2 = Manifest(root)
-    assert len(m2.records()) == len(res)
+        with open(sinks / s / "_SUCCESS") as f:
+            assert json.load(f)["rows"] == res[s]["rows"], s
+    assert res["class=error"]["rows"] == \
+        spark.read.parquet(str(sinks / "class=error")).count() > 0
 
 
 def test_decode_text_invalid_utf8_dead_letters(spark):

@@ -4,14 +4,16 @@ test — BuildLogParserTests.swift:33-82 — re-expressed)."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, part_mtimes, write_ids
 
 from buildlogparser_spark.operators.classify import classify
-from buildlogparser_spark.streaming import (
-    stream_classify, stream_transcripts, windowed_severity_counts)
+from buildlogparser_spark.streaming import stream_transcripts, windowed_severity_counts
 from buildlogparser_spark.transcripts import load_transcripts
 
 
@@ -30,7 +32,7 @@ def _run_to_memory(spark, df, name, output_mode):
 
 
 def test_stream_classify_equals_batch(spark, tr_dir):
-    stream = stream_classify(stream_transcripts(spark, tr_dir))
+    stream = classify(stream_transcripts(spark, tr_dir))
     got = _run_to_memory(spark, stream, "stream_diags", "append")
     batch = classify(spark.read.parquet(tr_dir))
     cols = ["conv_id", "turn_idx", "severity", "category", "message"]
@@ -63,8 +65,10 @@ def test_stream_route_fanout_multibatch(spark, tr_dir, tmp_path):
     """Multi-batch parity: with maxFilesPerTrigger=1 the 4-file source yields
     4 micro-batches — every batch's rows must survive in the sinks (the
     regression here: a bare overwrite per batch keeps only the last batch),
-    and a second availableNow run against the same checkpoint must not
-    duplicate or drop anything."""
+    and a crash replay must not duplicate, drop or rewrite anything: with
+    the last batch's commit deleted from the checkpoint, a second
+    availableNow run re-delivers that batch, and every one of its sinks is
+    skipped on its ``_SUCCESS`` record."""
     from buildlogparser_spark.streaming import stream_route
 
     root = str(tmp_path / "sinks")
@@ -81,11 +85,24 @@ def test_stream_route_fanout_multibatch(spark, tr_dir, tmp_path):
     errors = spark.read.parquet(f"{root}/severity=error")
     assert errors.count() == batch.filter(F.col("severity") == "error").count()
 
-    # incremental re-run, same checkpoint, no new files → sinks unchanged
+    # crash replay: the run died after batch N's sinks, before its commit
+    last = max(int(os.path.basename(p)) for p in glob.glob(f"{ckpt}/commits/[0-9]*"))
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    mtimes, writes = part_mtimes(root), write_ids(spark)
+    assert mtimes
     q2 = stream_route(stream_transcripts(spark, tr_dir, max_files_per_trigger=1),
                       root, ckpt, n_salt=4, ts_granularity="month")
-    assert q2.awaitTermination(600), "incremental re-run did not finish in 600s"
+    assert q2.awaitTermination(600), "replay run did not finish in 600s"
+    # batch N ran its foreachBatch again; its input rows read 0, as the
+    # skipped fan-out never scans the batch
+    assert [p["batchId"] for p in q2.recentProgress
+            if "addBatch" in p["durationMs"]] == [last]
+    assert write_ids(spark) == writes
+    assert part_mtimes(root) == mtimes
     assert spark.read.parquet(f"{root}/diagnostics").count() == batch.count()
+    assert spark.read.parquet(f"{root}/severity=error").count() == \
+        batch.filter(F.col("severity") == "error").count()
 
 
 def test_stream_dedup_exact_across_microbatches(spark, tmp_path):
