@@ -583,13 +583,6 @@ def registry() -> dict[str, Entry]:
                                                   _diags(spark, sf)),
             tpr.incident_errors_sql(TRANSCRIPT_SQL, _diag_sql(["tool", "severity", "ts"])),
             GRADED),
-        # big-big plan: ts bucketed at incident duration, incident exploded
-        # to covered buckets. Identical oracle (graded: incident_errors)
-        "incident_errors_bucketed": Entry(
-            lambda spark, sf: tpr.incident_errors_bucketed(load_transcripts(spark, sf),
-                                                           _diags(spark, sf)),
-            tpr.incident_errors_sql(TRANSCRIPT_SQL, _diag_sql(["tool", "severity", "ts"])),
-            FOLDED),
         # --- renders ----------------------------------------------------------
         "text_render": Entry(
             lambda spark, sf: rnd.render_text(_diags(spark, sf)),

@@ -182,14 +182,6 @@ def corpus_sample_sql(table: str = "documents") -> str:
 # ---------------------------------------------------------------------------
 
 
-def _round4(x: Column) -> Column:
-    return portable_round(x, 4)
-
-
-def _round4_sql(expr: str) -> str:
-    return portable_round_sql(expr, 4)
-
-
 def repetition_stats(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, distinct_ratio, top_token_frac, top_bigram_frac):
     the repetition signals the Gopher filters threshold on — distinct-token
@@ -231,15 +223,15 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
             "n_distinct", "top_tok", "top_bg")
         .select(
             "doc_id", "n_tokens",
-            _round4(F.when(F.col("n_tokens") > 0,
-                           F.col("n_distinct") / F.col("n_tokens"))
-                    .otherwise(0.0)).alias("distinct_ratio"),
-            _round4(F.when(F.col("n_tokens") > 0,
-                           F.coalesce("top_tok", F.lit(0)) / F.col("n_tokens"))
-                    .otherwise(0.0)).alias("top_token_frac"),
-            _round4(F.when(F.col("n_tokens") > 1,
-                           F.coalesce("top_bg", F.lit(0)) / (F.col("n_tokens") - 1))
-                    .otherwise(0.0)).alias("top_bigram_frac")))
+            portable_round(F.when(F.col("n_tokens") > 0,
+                                  F.col("n_distinct") / F.col("n_tokens"))
+                           .otherwise(0.0), 4).alias("distinct_ratio"),
+            portable_round(F.when(F.col("n_tokens") > 0,
+                                  F.coalesce("top_tok", F.lit(0)) / F.col("n_tokens"))
+                           .otherwise(0.0), 4).alias("top_token_frac"),
+            portable_round(F.when(F.col("n_tokens") > 1,
+                                  F.coalesce("top_bg", F.lit(0)) / (F.col("n_tokens") - 1))
+                           .otherwise(0.0), 4).alias("top_bigram_frac")))
 
 
 def boilerplate_ngrams(documents: DataFrame, k: int = 3,
@@ -308,9 +300,9 @@ def boilerplate_stats(documents: DataFrame, k: int = 3,
             F.coalesce("n_boiler", F.lit(0)).cast("long").alias("n_boiler"))
         .withColumn(
             "boiler_ratio",
-            _round4(F.when(F.col("n_ngrams") > 0,
-                           F.col("n_boiler") / F.col("n_ngrams"))
-                    .otherwise(0.0)))
+            portable_round(F.when(F.col("n_ngrams") > 0,
+                                  F.col("n_boiler") / F.col("n_ngrams"))
+                           .otherwise(0.0), 4))
     )
 
 
@@ -331,9 +323,9 @@ WITH exploded AS MATERIALIZED (
 SELECT b.doc_id,
        CAST(len({shq}) AS BIGINT) AS n_ngrams,
        CAST(coalesce(p.n_boiler, 0) AS BIGINT) AS n_boiler,
-       {_round4_sql(f"CASE WHEN len({shq}) > 0 "
-                    f"THEN CAST(coalesce(p.n_boiler, 0) AS DOUBLE) / len({shq}) "
-                    "ELSE 0.0 END")} AS boiler_ratio
+       {portable_round_sql(f"CASE WHEN len({shq}) > 0 "
+                           f"THEN CAST(coalesce(p.n_boiler, 0) AS DOUBLE) / len({shq}) "
+                           "ELSE 0.0 END", 4)} AS boiler_ratio
 FROM {table} b LEFT JOIN per_doc p USING (doc_id)
 """
 
@@ -438,11 +430,11 @@ def source_mix_weights(documents: DataFrame) -> DataFrame:
     share = F.col("n_tokens") / total
     return (
         per_src
-        .withColumn("token_share", _round4(share))
+        .withColumn("token_share", portable_round(share, 4))
         .withColumn("weight",
-                    _round4(F.when(F.col("n_tokens") > 0,
-                                   (F.lit(1.0) / n_src) / share)
-                            .otherwise(0.0)))
+                    portable_round(F.when(F.col("n_tokens") > 0,
+                                          (F.lit(1.0) / n_src) / share)
+                                   .otherwise(0.0), 4))
         .select("source", "n_docs", "n_tokens", "token_share", "weight"))
 
 
@@ -456,8 +448,8 @@ WITH per_src AS (
   FROM {table} GROUP BY source
 )
 SELECT source, n_docs, n_tokens,
-       {_round4_sql(share)} AS token_share,
-       {_round4_sql(f"CASE WHEN n_tokens > 0 THEN (1.0 / count(*) OVER ()) / ({share}) ELSE 0.0 END")} AS weight
+       {portable_round_sql(share, 4)} AS token_share,
+       {portable_round_sql(f"CASE WHEN n_tokens > 0 THEN (1.0 / count(*) OVER ()) / ({share}) ELSE 0.0 END", 4)} AS weight
 FROM per_src
 """
 
@@ -490,9 +482,9 @@ WITH base AS MATERIALIZED (
 )
 SELECT s.doc_id,
        CAST(s.n AS BIGINT) AS n_tokens,
-       {_round4_sql("CASE WHEN s.n > 0 THEN CAST(len(list_distinct(s.toks)) AS DOUBLE) / s.n ELSE 0.0 END")} AS distinct_ratio,
-       {_round4_sql("CASE WHEN s.n > 0 THEN CAST(coalesce(t.top_tok, 0) AS DOUBLE) / s.n ELSE 0.0 END")} AS top_token_frac,
-       {_round4_sql("CASE WHEN s.n > 1 THEN CAST(coalesce(b.top_bg, 0) AS DOUBLE) / (s.n - 1) ELSE 0.0 END")} AS top_bigram_frac
+       {portable_round_sql("CASE WHEN s.n > 0 THEN CAST(len(list_distinct(s.toks)) AS DOUBLE) / s.n ELSE 0.0 END", 4)} AS distinct_ratio,
+       {portable_round_sql("CASE WHEN s.n > 0 THEN CAST(coalesce(t.top_tok, 0) AS DOUBLE) / s.n ELSE 0.0 END", 4)} AS top_token_frac,
+       {portable_round_sql("CASE WHEN s.n > 1 THEN CAST(coalesce(b.top_bg, 0) AS DOUBLE) / (s.n - 1) ELSE 0.0 END", 4)} AS top_bigram_frac
 FROM sized s
 LEFT JOIN tok_top t USING (doc_id)
 LEFT JOIN bg_top b USING (doc_id)

@@ -37,9 +37,8 @@ def curated_corpus(documents: DataFrame, lang: str = "en",
     # twin's `docs_d AS MATERIALIZED`
     docs = materialize(documents.join(survivors, "doc_id"))
     pairs = ngram_jaccard_pairs(docs, threshold=jaccard_threshold)
-    # star formulation (O(log n) rounds): min-propagation would RAISE on
-    # a dup chain whose diameter exceeds its round budget, aborting the
-    # whole curation query — the star variant converges regardless
+    # star formulation: O(log n) rounds, so a long dup chain converges
+    # well inside the round budget instead of aborting the curation query
     comp = near_dup_components_star(docs, pairs)
     keep = comp.filter(F.col("doc_id") == F.col("component_id")).select("doc_id")
     kept = docs.join(keep, "doc_id")

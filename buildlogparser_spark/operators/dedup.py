@@ -76,7 +76,7 @@ BPE_CHARS_PER_PIECE = 6
 def bpe_token_estimate(col: Column) -> Column:
     """Deterministic BPE-ish token count: Σ over GPT-2 pre-token pieces of
     ceil(len(piece)/6). The pieces array is a bound aggregate argument
-    (evaluated once — not the shingles() per-element trap)."""
+    (evaluated once — not the positional_ngrams() per-element trap)."""
     pieces = F.regexp_extract_all(col, F.lit(BPE_PRETOKEN_RE), 0)
     return F.aggregate(
         pieces, F.lit(0).cast("long"),
@@ -103,42 +103,52 @@ def bpe_tokens_sql(c: str) -> str:
     )
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles as space-joined strings (distinct). Empty for docs
-    with fewer than k tokens — the n >= k gate is load-bearing: a negative
-    slice length aborts the job in Spark while DuckDB's range(1, 1) is
-    simply empty, so the gate makes short documents match the SQL twin
-    instead of crashing the stage.
+def positional_ngrams(col: Column, n: int) -> Column:
+    """Space-joined token n-grams in position order (index i ↔ token
+    position i+1; NOT distinct — within-doc repeats stay visible). Empty
+    for NULL texts and docs with fewer than n tokens — the m >= n gate is
+    load-bearing: a negative slice length aborts the job in Spark while
+    DuckDB's range(1, 1) is simply empty, so the gate makes short
+    documents match the SQL twin instead of crashing the stage.
 
     Construction is deliberately QUADRATIC-PROOF: the tokens array is
     let-bound once via a single-element ``transform`` (its lambda variable
-    is a bound reference, not an expression subtree), and the shingles are
-    assembled by ``zip_with`` over k shifted slices. The obvious
-    formulation — ``transform(sequence(1, n-k+1), i -> slice(toks, i, k))``
+    is a bound reference, not an expression subtree), and the n-grams are
+    assembled by ``zip_with`` over n shifted slices. The obvious
+    formulation — ``transform(sequence(1, m-n+1), i -> slice(toks, i, n))``
     — re-evaluates the inline ``toks`` subtree (a full regex split of the
-    document) PER ELEMENT in interpreted mode: measured O(n²), 414 s for
-    ONE 50k-token document; this version is O(k·n), sub-second."""
+    document) PER ELEMENT in interpreted mode: measured O(m²), 414 s for
+    ONE 50k-token document; this version is O(n·m), sub-second."""
     toks = tokens(col)
 
     def build(t: Column) -> Column:
-        n = F.size(t)
-        length = F.greatest(n - (k - 1), F.lit(0))
+        m = F.size(t)
+        length = F.greatest(m - (n - 1), F.lit(0))
         z = F.slice(t, 1, length)
-        for i in range(1, k):
+        for i in range(1, n):
             z = F.zip_with(z, F.slice(t, i + 1, length),
                            lambda a, b: F.concat_ws(" ", a, b))
-        return F.when(n >= k, F.array_distinct(z)).otherwise(
-            F.array().cast("array<string>"))
+        return F.when(m >= n, z).otherwise(F.array().cast("array<string>"))
 
     return F.element_at(F.transform(F.array(toks), build), 1)
 
 
-def shingles_sql(c: str, k: int = 3) -> str:
+def positional_ngrams_sql(c: str, n: int) -> str:
     toks = TOKENS_SQL.format(c=c)
     return (
-        f"list_distinct(list_transform(range(1, greatest(len({toks}) - {k - 1}, 0) + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {k - 1}), ' ')))"
+        f"list_transform(range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
+        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
     )
+
+
+def shingles(col: Column, k: int = 3) -> Column:
+    """k-word shingles as space-joined strings (distinct; first-occurrence
+    order). Empty for NULL texts and docs with fewer than k tokens."""
+    return F.array_distinct(positional_ngrams(col, k))
+
+
+def shingles_sql(c: str, k: int = 3) -> str:
+    return f"list_distinct({positional_ngrams_sql(c, k)})"
 
 
 # ---------------------------------------------------------------------------
@@ -440,84 +450,26 @@ def simhash_near_pairs(documents: DataFrame, bits: int = 32, max_hamming: int = 
 # ---------------------------------------------------------------------------
 
 
-def near_dup_components(documents: DataFrame, pairs: DataFrame,
-                        max_iter: int = 25) -> DataFrame:
+def near_dup_components_star(documents: DataFrame, pairs: DataFrame,
+                             max_iter: int = 50) -> DataFrame:
     """(doc_id, component_id): connected components over undirected near-dup
     ``pairs`` (doc_a, doc_b); component_id = min doc_id in the component, so
     the component representative IS the dedup survivor. Docs in no pair are
     their own singleton component.
 
-    Iterative min-label propagation: each round every node takes the min of
-    its own label and its neighbors' labels; converges in ≤ graph-diameter
-    rounds (near-dup clusters are shallow — dup clusters of one document
-    family, so typically 2-4 rounds). Each round = one join + one
-    hash-aggregate, labels snapshot-materialized between rounds to cut
-    lineage (iterative plans otherwise grow unboundedly). At 10^12-doc
-    scale the refinement is the large-star/small-star formulation
-    (alternating min-propagation that squashes paths in O(log n) rounds);
-    the round structure and join shapes are identical.
-    """
-    from ..materialize import materialize
-
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = fwd.unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    edges = materialize(edges)
-
-    labels = documents.select(
-        F.col("doc_id"), F.col("doc_id").alias("component_id"))
-    labels = materialize(labels)
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src").agg(F.min("component_id").alias("nbr_min"))
-        )
-        new = (
-            labels.join(nbr, labels.doc_id == nbr.src, "left")
-            .select(
-                labels.doc_id,
-                F.least(F.col("component_id"),
-                        F.coalesce(F.col("nbr_min"), F.col("component_id")))
-                .alias("component_id"),
-            )
-        )
-        new = materialize(new)
-        changed = (
-            new.alias("n").join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component_id") != F.col("o.component_id")).count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # Silent wrong labels are worse than a loud failure: a component
-        # whose diameter exceeds max_iter would otherwise return partially
-        # propagated ids that diverge from the oracle's transitive closure.
-        raise RuntimeError(
-            f"near_dup_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — the dup graph has a longer "
-            "chain than expected; use near_dup_components_star (O(log n) "
-            "rounds) or raise max_iter")
-    return labels
-
-
-def near_dup_components_star(documents: DataFrame, pairs: DataFrame,
-                             max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds —
-    the O(log n)-round formulation (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SOCC'14) and the at-scale default: a path graph
-    that takes diameter rounds under single-step min-propagation collapses
-    in O(log n) alternations here. Same output contract as
-    :func:`near_dup_components` (component_id = min doc_id = dedup
-    survivor), differential-tested equal on adversarial long-chain graphs.
+    Alternating large-star/small-star rounds — the O(log n)-round
+    formulation (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SOCC'14): a path graph that would take diameter rounds under
+    single-step min-propagation collapses in O(log n) alternations.
+    Differential-tested equal to the DuckDB recursive-CTE oracle
+    (:func:`near_dup_components_sql`) on adversarial long-chain graphs.
 
     Each round is two (join + hash-aggregate) pairs over the canonical edge
-    list, edges re-materialized per round (bounded lineage, like the
-    min-propagation variant). Convergence = edge set reaches a fixed point
-    (union of stars centered at component minima); the final labels read
-    straight off the star edges.
+    list, edges re-materialized per round (bounded lineage). Convergence =
+    edge set reaches a fixed point (union of stars centered at component
+    minima); the final labels read straight off the star edges. A graph
+    that has not converged after ``max_iter`` rounds raises instead of
+    returning partially propagated labels.
     """
     from ..materialize import materialize
 

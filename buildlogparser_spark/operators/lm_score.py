@@ -46,7 +46,7 @@ def _bigram_stream(documents: DataFrame) -> DataFrame:
     """(doc_id, pos, w1, bg): the positional bigram stream, docs with ≥2
     tokens only. ``sequence(1, n-1)`` is guarded by the filter — Spark's
     sequence() DESCENDS when stop < start, so short docs must never reach
-    it (see shingles())."""
+    it (see positional_ngrams())."""
     d = documents.select("doc_id", tokens(F.col("text")).alias("toks"))
     d = d.filter(F.size("toks") >= 2)
     pairs = F.expr(

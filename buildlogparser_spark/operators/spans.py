@@ -27,7 +27,8 @@ Scale shape (10^12 tokens):
 * span merging is one window partitioned by doc_id — bounded by document
   length, never corpus-global order. A pathological single document is the
   same long-document skew ``BENCH/SKEW.md`` tracks for shingles; the
-  n-gram build here reuses the O(k·n) zip_with construction.
+  n-grams come from ``dedup.positional_ngrams``, the one O(k·n) zip_with
+  build that ``dedup.shingles`` and ``winnow`` share.
 
 Reference analog: none (the reference parses diagnostics); this is the
 training-data layer the driver brief asks for. Public method: Lee et al.
@@ -39,34 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..rounding import portable_round, portable_round_sql
-from .dedup import TOKENS_SQL, _md5_i64, _md5_i64_sql, tokens
-
-
-def positional_ngrams(col: Column, n: int) -> Column:
-    """Space-joined token n-grams in position order (index i ↔ token
-    position i+1; NOT distinct — within-doc repeats must stay visible).
-    Same quadratic-proof let-bound zip_with build as :func:`dedup.shingles`
-    (see that docstring for the 414-s-per-doc trap it avoids)."""
-    toks = tokens(col)
-
-    def build(t: Column) -> Column:
-        m = F.size(t)
-        length = F.greatest(m - (n - 1), F.lit(0))
-        z = F.slice(t, 1, length)
-        for i in range(1, n):
-            z = F.zip_with(z, F.slice(t, i + 1, length),
-                           lambda a, b: F.concat_ws(" ", a, b))
-        return F.when(m >= n, z).otherwise(F.array().cast("array<string>"))
-
-    return F.element_at(F.transform(F.array(toks), build), 1)
-
-
-def positional_ngrams_sql(c: str, n: int) -> str:
-    toks = TOKENS_SQL.format(c=c)
-    return (
-        f"list_transform(range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
-    )
+from .dedup import (TOKENS_SQL, _md5_i64, _md5_i64_sql, positional_ngrams,
+                    positional_ngrams_sql, tokens)
 
 
 def dup_span_removal(documents: DataFrame, n: int = 5,

@@ -39,12 +39,7 @@ RANGE JOIN (``incident_errors``). Deterministic per-tool incident windows
 error diagnostics whose ``ts_us ∈ [start_us, end_us)``. Graded plan:
 broadcast the 8-row incident dim and equi-join on ``tool`` with the range
 as a post-filter — a BroadcastHashJoin, never a nested loop, fact side
-unshuffled. The big-big sibling (``incident_errors_bucketed``, folded)
-buckets fact ts at the incident-duration granularity and explodes each
-incident to the ≤2 buckets it covers (``sequence(bucket(start),
-bucket(end))``), turning the range predicate into an equi-join on
-(tool, bucket) + exact filter — the standard distributed range-join
-rewrite (each fact row lands in exactly one bucket, so no post-dedup).
+unshuffled.
 
 DETERMINISTIC SYNTHESIS. The registry versions and incident windows are
 derived from the transcript stream's own (min, max) epoch-microsecond
@@ -262,51 +257,6 @@ def incident_errors(transcripts: DataFrame, diags: DataFrame) -> DataFrame:
             (F.col("tool") == F.col("i_tool"))
             & (F.col("ts_us") >= F.col("start_us"))
             & (F.col("ts_us") < F.col("end_us")))
-        .groupBy("i_id").agg(F.count("*").alias("n"))
-    )
-    return (
-        inc.join(F.broadcast(hits), inc["incident_id"] == hits["i_id"], "left")
-        .select("incident_id", "tool",
-                F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_errors"))
-    )
-
-
-def incident_errors_bucketed(transcripts: DataFrame,
-                             diags: DataFrame) -> DataFrame:
-    """Big-big range-join plan: bucket fact ts at incident-duration width,
-    explode each incident to its ≤2 covered buckets, equi-join on
-    (tool, bucket) + exact range filter. Column-identical to
-    :func:`incident_errors`."""
-    inc = incident_windows(transcripts)
-    bounds = _ts_bounds(transcripts)
-    # bucket width == the (uniform) incident duration: every incident
-    # overlaps at most 2 buckets, every fact row exactly 1.
-    dim = (
-        inc.join(F.broadcast(bounds.select("lo", _step(2 * N_INCIDENTS)
-                                           .alias("bw"))), F.lit(True))
-        .withColumn("bucket", F.explode(F.sequence(
-            F.floor((F.col("start_us") - F.col("lo")) / F.col("bw"))
-            .cast("long"),
-            F.floor((F.col("end_us") - F.col("lo")) / F.col("bw"))
-            .cast("long"))))
-        .select(F.col("incident_id").alias("i_id"),
-                F.col("tool").alias("i_tool"), "start_us", "end_us",
-                F.col("bucket").alias("i_bucket"))
-    )
-    err = (
-        diags.filter(F.col("severity") == "error")
-        .select("tool", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
-        .join(F.broadcast(bounds.select(
-            "lo", _step(2 * N_INCIDENTS).alias("bw"))), F.lit(True))
-        .select("tool", "ts_us",
-                F.floor((F.col("ts_us") - F.col("lo")) / F.col("bw"))
-                .cast("long").alias("bucket"))
-    )
-    hits = (
-        err.join(dim, (F.col("tool") == F.col("i_tool"))
-                 & (F.col("bucket") == F.col("i_bucket")))
-        .filter((F.col("ts_us") >= F.col("start_us"))
-                & (F.col("ts_us") < F.col("end_us")))
         .groupBy("i_id").agg(F.count("*").alias("n"))
     )
     return (

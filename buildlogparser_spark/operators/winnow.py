@@ -19,8 +19,8 @@ Scale shape (10^12 tokens):
   ``corpus_filters.boilerplate_ngrams``;
 * selection is ONE window partitioned by doc_id ordered by position —
   bounded by document length, never corpus-global (the hot-document skew
-  class ``BENCH/SKEW.md`` tracks; the k-gram build reuses the O(k·n)
-  let-bound zip_with construction);
+  class ``BENCH/SKEW.md`` tracks; the k-grams come from the O(k·n)
+  ``dedup.positional_ngrams`` build);
 * ``winnow_match_pairs`` joins on the fingerprint value with a
   document-frequency cap (``max_df``) that drops boilerplate fingerprints
   before the join — the same hot-key guard the LSH band join uses; it is
@@ -40,8 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .dedup import _md5_i64, _md5_i64_sql
-from .spans import positional_ngrams, positional_ngrams_sql
+from .dedup import _md5_i64, _md5_i64_sql, positional_ngrams, positional_ngrams_sql
 
 
 def winnow_fingerprints(documents: DataFrame, k: int = 5, w: int = 4,

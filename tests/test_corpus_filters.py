@@ -83,7 +83,7 @@ def test_decontaminate_short_docs_do_not_crash(spark):
     assert not out[2].contaminated and out[2].n_hit_shingles == 0
 
 
-def test_repetition_round4_cross_engine_case(spark):
+def test_repetition_portable_round_cross_engine_case(spark):
     # 57/800 = 0.07125: decimal-string rounding (Spark round()) and scaled
     # binary-double rounding (DuckDB round()) land on opposite sides of
     # the half; the floor(x*1e4+0.5)/1e4 formulation is identical IEEE754

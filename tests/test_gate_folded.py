@@ -28,7 +28,7 @@ def test_graded_sweep_contract():
 
 def test_folded_registry_shape():
     table = entry_mod.registry()
-    assert len(table) == 110, f"registry has {len(table)} entries"
+    assert len(table) == 109, f"registry has {len(table)} entries"
     assert len(FOLDED_NAMES) == len(table) - len(entry_mod.queries())
 
 

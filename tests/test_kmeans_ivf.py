@@ -13,7 +13,8 @@ similarity.py). These tests pin:
 * skew defense: one dominant direction cone gets SPLIT by training
   (max-cluster share drops vs the fixed seeds) — the Σ|cluster|² bound
   in semantic_dedup is only real if the quantizer adapts to clumpy data;
-* n_centroids=None auto-scales with corpus size (VERDICT r04 #3).
+* n_centroids=None auto-scales with corpus size (VERDICT r04 #3), and the
+  auto-sized trained assignment equals its DuckDB twin.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from buildlogparser_spark.operators import similarity as sim
-from conftest import SF_SMOKE, duck_df
+from conftest import SF_SMOKE, assert_frames_match, duck_df
 
 
 @pytest.fixture(scope="module")
@@ -148,15 +149,27 @@ def test_auto_n_centroids_scales(spark, emb):
     assert sim._auto_n_centroids(bigger) > auto
 
 
+def test_auto_n_centroids_assign_matches_duckdb(spark, emb, duck_smoke):
+    """The auto-scaled quantizer on an oracled path: ``n_centroids=None``
+    resolves to ceil(sqrt(N)) centroids (23 for the 500 sf0.001 vectors)
+    and the trained assignment equals the DuckDB twin built with that
+    count. A registry entry cannot carry this oracle: its SQL is fixed
+    before N is known."""
+    n = emb.count()
+    k = math.ceil(math.sqrt(n))
+    assert sim._auto_n_centroids(emb) == k > 16
+    assert_frames_match(
+        sim.ivf_assign(emb, n_centroids=None),
+        duck_df(duck_smoke, sim.ivf_assign_sql(n_centroids=k)),
+        "ivf_assign_auto")
+
+
 def test_sampled_training_differs_but_assigns_everywhere(spark, emb, duck_smoke):
     """sample_mod > 1 trains on a strict subset (bounded cost at corpus
     scale) yet still assigns the FULL corpus, and stays oracle-exact."""
     full = sim.ivf_assign(emb, 8, sample_mod=4)
     rows = full.collect()
     assert len(rows) == emb.count()
-    import pandas as pd
-    from conftest import assert_frames_match
-
     assert_frames_match(full, duck_df(
         duck_smoke, sim.ivf_assign_sql(8, sample_mod=4)), "ivf_assign_sampled")
 

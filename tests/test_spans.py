@@ -11,7 +11,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from buildlogparser_spark.operators import spans
+from buildlogparser_spark.operators import dedup, spans
 
 DOCS = [
     # (doc_id, text, n_tokens, dup_tokens, n_dup_spans, dup_ratio)
@@ -63,7 +63,7 @@ def test_positional_ngrams_keep_repeats(spark):
     from pyspark.sql import functions as F
     df = spark.createDataFrame([("x y x y x",)], "text string")
     row = df.select(
-        spans.positional_ngrams(F.col("text"), 2).alias("g")).head()
+        dedup.positional_ngrams(F.col("text"), 2).alias("g")).head()
     assert row.g == ["x y", "y x", "x y", "y x"]
 
 

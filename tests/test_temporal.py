@@ -7,10 +7,9 @@ Coverage:
   with no registry entry (NULL), and single-version tools;
 * Spark-vs-DuckDB value parity for both graded queries at sf0.001
   (driver_sim re-checks at sf0.01);
-* physical-plan equality of the big-big siblings (bucketed union-merge
-  as-of, bucketed range join) against the broadcast plans — including a
-  tiny n_buckets that forces multiple versions and bucket-boundary
-  crossings into one bucket;
+* physical-plan equality of the big-big as-of plan (bucketed union-merge)
+  against the broadcast plan — including a tiny n_buckets that forces
+  multiple versions and bucket-boundary crossings into one bucket;
 * NULL-ts robustness (both plans agree: NULL ts → NULL version);
 * a plan assertion: the graded range join is a broadcast equi-join on
   tool (never a nested loop over the fact side).
@@ -152,14 +151,6 @@ def test_incident_errors_nonvacuous_and_stable_rows(spark, smoke_diags):
         load_transcripts(spark, SF_SMOKE), smoke_diags).collect()
     assert sorted(r.incident_id for r in rows) == list(range(8))
     assert any(r.n_errors > 0 for r in rows)
-
-
-def test_incident_bucketed_equals_broadcast(spark, smoke_diags):
-    t = load_transcripts(spark, SF_SMOKE)
-    a = sorted(map(tuple, tp.incident_errors(t, smoke_diags).collect()))
-    b = sorted(map(tuple,
-                   tp.incident_errors_bucketed(t, smoke_diags).collect()))
-    assert a == b
 
 
 def test_incident_range_join_is_broadcast_hash(spark, smoke_diags):

@@ -174,54 +174,50 @@ def test_duplicate_docs_have_jaccard_one(spark, docs):
 def test_near_dup_components_chain_and_singleton(spark):
     """Chain 1-2-3 collapses to component 1 transitively (1 and 3 share no
     pair), 4-5 is its own component, 6 is a singleton."""
-    from buildlogparser_spark.operators.dedup import near_dup_components
-
     docs = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "doc_a long, doc_b long")
     got = {r.doc_id: r.component_id
-           for r in near_dup_components(docs, pairs).collect()}
+           for r in dedup.near_dup_components_star(docs, pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
 def test_near_dup_components_raises_on_unconverged(spark):
-    """A chain longer than max_iter must fail loudly, not return partially
-    propagated (wrong) labels (ADVICE r02)."""
-    import pytest
-    from buildlogparser_spark.operators.dedup import near_dup_components
-
+    """A chain longer than max_iter rounds can collapse must fail loudly,
+    not return partially propagated (wrong) labels (ADVICE r02)."""
     n = 12
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_components(docs, pairs, max_iter=3)
+        dedup.near_dup_components_star(docs, pairs, max_iter=3)
 
 
 def test_near_dup_components_star_long_chain(spark):
     """large-star/small-star collapses a diameter-40 path in O(log n)
     rounds — min-propagation would need ~40; differential equality against
-    the min-propagation result (high max_iter) on the same graph."""
-    from buildlogparser_spark.operators.dedup import (
-        near_dup_components, near_dup_components_star)
+    the DuckDB recursive-CTE oracle on the same graph."""
+    import duckdb
 
     n = 41
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     # path 0-1-…-40 plus a separate triangle and a singleton-rich tail
-    edges = [(i, i + 1) for i in range(n - 1)]
-    docs2 = spark.createDataFrame(
-        [(i,) for i in range(n + 5)], "doc_id long")
-    pairs = spark.createDataFrame(
-        edges + [(n + 1, n + 2), (n + 2, n + 3), (n + 1, n + 3)],
-        "doc_a long, doc_b long")
+    doc_rows = [(i,) for i in range(n + 5)]
+    edges = [(i, i + 1) for i in range(n - 1)] + [
+        (n + 1, n + 2), (n + 2, n + 3), (n + 1, n + 3)]
+    docs = spark.createDataFrame(doc_rows, "doc_id long")
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = {r.doc_id: r.component_id
-            for r in near_dup_components_star(docs2, pairs, max_iter=12).collect()}
-    prop = {r.doc_id: r.component_id
-            for r in near_dup_components(docs2, pairs, max_iter=100).collect()}
-    assert star == prop
+            for r in dedup.near_dup_components_star(docs, pairs, max_iter=12).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE chain_docs (doc_id BIGINT)")
+    con.executemany("INSERT INTO chain_docs VALUES (?)", doc_rows)
+    con.execute("CREATE TABLE chain_pairs (doc_a BIGINT, doc_b BIGINT)")
+    con.executemany("INSERT INTO chain_pairs VALUES (?, ?)", edges)
+    oracle = dict(con.execute(dedup.near_dup_components_sql(
+        "SELECT doc_a, doc_b FROM chain_pairs", "chain_docs")).fetchall())
+    assert len(star) == n + 5
+    assert star == oracle
     assert star[n - 1] == 0 and star[n + 3] == n + 1 and star[n] == n
-    # docs ref kept for symmetry with the sibling test
-    assert docs.count() == n
 
 
 def test_near_dup_components_star_no_pairs(spark):
