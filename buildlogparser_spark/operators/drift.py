@@ -25,10 +25,9 @@ scale this docstring advertises, turning the term into ln(0): NULL in
 Spark, -inf in DuckDB — review finding, round-5 final session). Only the
 ``ln`` RESULT is 9-dp-rounded (the ≤1-ulp libm divergence, the
 ``quality_clf`` sigmoid convention), each term is 9-dp-rounded, and
-``psi_total`` is a bin-ordered sequential fold over the dimension's term
-list (``sort_array`` + ``aggregate`` / ``list(... ORDER BY bin)`` +
-``list_reduce``), never an unordered float sum. Smoothed shares are
-strictly positive by construction, so ``ln`` is always finite.
+``psi_total`` is the :func:`~..rounding.exact_sum` of the dimension's
+terms. Smoothed shares are strictly positive by construction, so ``ln``
+is always finite.
 
 Scale shape (10^12 docs): ONE corpus scan → a (dim, bin, half) hash-agg
 with map-side partial counts; every window/join after that runs over the
@@ -44,7 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import _md5_i64, _md5_i64_sql
 
 
@@ -73,7 +73,7 @@ def psi_value(ref: dict[str, int], cur: dict[str, int]) -> float:
     """Driver-side PSI between two bin→count histograms — the EXACT same
     arithmetic as :func:`corpus_drift` (Laplace smoothing over the union
     bin set, exact shares, 9-dp portable rounding of the ``ln`` result and
-    of each term, bin-ordered sequential fold, 6-dp total), reused by the
+    of each term, exact nano-unit sum, 6-dp total), reused by the
     streaming monitor and by tests as an independent reference
     implementation."""
     import math
@@ -82,16 +82,17 @@ def psi_value(ref: dict[str, int], cur: dict[str, int]) -> float:
         s = 10 ** p
         return math.floor(x * s + 0.5) / s
 
-    bins = sorted(set(ref) | set(cur))
+    bins = set(ref) | set(cur)
     k = len(bins)
     rt = sum(ref.values())
     ct = sum(cur.values())
-    total = 0.0
+    nanos = 0
     for b in bins:
         p = (ref.get(b, 0) + 1) / (rt + k)
         q = (cur.get(b, 0) + 1) / (ct + k)
-        total += r((p - q) * r(math.log(p / q), 9), 9)
-    return r(total, 6)
+        # the term's 9-dp rounding IS its nano-unit count
+        nanos += math.floor((p - q) * r(math.log(p / q), 9) * 1e9 + 0.5)
+    return r(nanos / 1e9, 6)
 
 
 def corpus_drift(documents: DataFrame) -> DataFrame:
@@ -101,7 +102,7 @@ def corpus_drift(documents: DataFrame) -> DataFrame:
     NULL lang → 'und' (the ``unimax_weights`` convention), NULL source →
     'unknown'. ``ref_share``/``cur_share`` are the smoothed shares at 6 dp;
     ``psi_term`` is the bin's 6-dp PSI contribution; ``psi_total`` repeats
-    the dimension's deterministic-fold total on every row of that dim.
+    the dimension's exact-sum total on every row of that dim.
 
     The |bins|-row ``terms`` aggregate is snapshot-materialized before the
     per-bin/total diamond — without it each branch re-runs the corpus scan
@@ -136,18 +137,8 @@ def corpus_drift(documents: DataFrame) -> DataFrame:
             term9.alias("term9"),
         ),
         n_files=1)
-    totals = (
-        terms.groupBy("dim")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("bin", "term9"))).alias("tl"))
-        .select(
-            "dim",
-            portable_round(
-                F.aggregate(F.col("tl"), F.lit(0.0),
-                            lambda acc, s: acc + s["term9"]),
-                6).alias("psi_total"),
-        )
-    )
+    totals = terms.groupBy("dim").agg(
+        portable_round(exact_sum(F.col("term9")), 6).alias("psi_total"))
     return (
         terms.join(totals, "dim")
         .select("dim", "bin", "ref_n", "cur_n", "ref_share", "cur_share",
@@ -158,8 +149,7 @@ def corpus_drift(documents: DataFrame) -> DataFrame:
 
 def corpus_drift_sql(table: str = "documents") -> str:
     """DuckDB twin: same halves, same UNION-ALL unpivot, same exact
-    smoothed shares → 9-dp-rounded ln → 9-dp terms → bin-ordered
-    list_reduce total."""
+    smoothed shares → 9-dp-rounded ln → 9-dp terms → exact-sum total."""
     salted = "'drift' || CAST(doc_id AS VARCHAR)"
     half = f"{_md5_i64_sql(salted)} % 2"
     p = "(ref_n + 1) / CAST(ref_tot + kbins AS DOUBLE)"
@@ -198,9 +188,7 @@ terms AS (
 ),
 totals AS (
   SELECT dim,
-         {portable_round_sql(
-             "list_reduce(list(term9 ORDER BY bin), (a, b) -> a + b)", 6)}
-           AS psi_total
+         {portable_round_sql(exact_sum_sql('term9'), 6)} AS psi_total
   FROM terms GROUP BY dim
 )
 SELECT t.dim, t.bin, t.ref_n, t.cur_n,

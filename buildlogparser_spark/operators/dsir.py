@@ -26,11 +26,9 @@ Scale shape (the 100 TB plan):
   log-ratio table broadcasts to every executor.
 * Scoring is one broadcast equi-join on the bucket id plus a per-document
   hash-agg. Never all-pairs, never a window over the corpus, no Python.
-* The per-document reduce collects (bucket, term) pairs into one bounded
-  array (≤ min(doc features, B) entries) and folds them IN BUCKET ORDER —
-  a deterministic sequential fold, so Spark and DuckDB sum bit-identical
-  doubles in the same order. Each log is portable-rounded at 9 dp first,
-  absorbing the ≤1-ulp libm divergence between Java's and DuckDB's ln.
+* The per-document reduce is a hash-agg :func:`~..rounding.exact_sum` of
+  the terms. Each log is portable-rounded at 9 dp first, absorbing the
+  ≤1-ulp libm divergence between Java's and DuckDB's ln.
 
 Reference analog: none (the reference is a diagnostics parser); this is a
 driver-brief training-data op, sibling of lm_score.bigram_lm_score (the
@@ -41,7 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import TOKENS_SQL, _md5_i64, _md5_i64_sql, tokens
 
 DEFAULT_BUCKETS = 1024
@@ -101,19 +100,14 @@ def dsir_weights(documents: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
               .join(F.broadcast(totals), "k")
               .select("bucket", log_ratio.alias("log_ratio")))
 
-    scored = (fs.join(F.broadcast(ratios), "bucket")
-              .select("doc_id", "bucket", "cnt",
-                      (F.col("cnt") * F.col("log_ratio")).alias("term")))
-    # deterministic sequential fold in bucket order (cf. lm_score)
     per_doc = (
-        scored.groupBy("doc_id")
+        fs.join(F.broadcast(ratios), "bucket")
+        .groupBy("doc_id")
         .agg(F.sum("cnt").alias("n_feats"),
-             F.sort_array(F.collect_list(F.struct("bucket", "term"))).alias("ts"))
+             exact_sum(F.col("cnt") * F.col("log_ratio")).alias("sum_term"))
         .select(
             "doc_id", F.col("n_feats").cast("long").alias("n_feats"),
-            portable_round(
-                F.aggregate("ts", F.lit(0.0), lambda acc, s: acc + s["term"]),
-                6).alias("log_weight"))
+            portable_round(F.col("sum_term"), 6).alias("log_weight"))
     )
     return (
         documents.select("doc_id")
@@ -153,9 +147,7 @@ def dsir_weights_sql(table: str = "documents",
                      n_buckets: int = DEFAULT_BUCKETS,
                      target_pred: str = DEFAULT_TARGET_SQL) -> str:
     """DuckDB twin: identical hashing, identical smoothing, identical
-    9-dp-rounded ln terms, identical bucket-ordered left fold (DuckDB's
-    list_reduce seeds with the first element; Spark folds from 0.0 —
-    equal because 0.0 + x == x for every finite term here)."""
+    9-dp-rounded ln terms, identical exact sum."""
     log_ratio = portable_round_sql(
         f"ln(CAST(t_cnt + 1 AS DOUBLE) / CAST(t_total + {n_buckets} AS DOUBLE))"
         f" - ln(CAST(r_cnt + 1 AS DOUBLE) / CAST(r_total + {n_buckets} AS DOUBLE))",
@@ -171,8 +163,7 @@ WITH {hashed_features_sql(table, n_buckets, target_pred)}, dist AS MATERIALIZED 
   SELECT bucket, {log_ratio} AS log_ratio FROM dist, totals
 ), per_doc AS (
   SELECT doc_id AS p_doc_id, sum(cnt) AS n_feats,
-         list_reduce(list(cnt * log_ratio ORDER BY bucket), (a, b) -> a + b)
-           AS sum_term
+         {exact_sum_sql('cnt * log_ratio')} AS sum_term
   FROM fs JOIN ratios USING (bucket) GROUP BY doc_id
 )
 SELECT d.doc_id,

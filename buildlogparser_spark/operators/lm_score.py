@@ -13,7 +13,7 @@ the cross-entropy in bits per bigram, ``h_bits = -Σ log2 P / n_bigrams``
 (2^h_bits is the perplexity).
 
 Scale shape (the 100 TB plan):
-* ONE corpus scan produces the positional bigram stream; it is the diamond
+* ONE corpus scan produces the bigram stream; it is the diamond
   root feeding the context counts, the pair counts AND the scoring join, so
   it is snapshot-materialized once per input plan — the production
   pattern is a materialized bigram table.
@@ -23,11 +23,9 @@ Scale shape (the 100 TB plan):
   vocabulary-sized build sides, so AQE broadcasts them when they fit and
   falls back to a shuffle hash join when they don't. Never all-pairs,
   never a Python UDF.
-* The per-document reduce collects (pos, logp) pairs into one bounded
-  array (documents are bounded; same assumption as every per-doc op here)
-  and folds them IN POSITION ORDER — a deterministic sequential fold, so
-  Spark and DuckDB sum bit-identical doubles in the same order. Each term
-  is portable-rounded at 9 dp first, which absorbs the ≤1-ulp libm
+* The per-document reduce is a hash-agg count plus
+  :func:`~..rounding.exact_sum` of the log-probabilities. Each term is
+  portable-rounded at 9 dp first, which absorbs the ≤1-ulp libm
   divergence between Java's and DuckDB's log2.
 
 Reference analog: none (the reference is a diagnostics parser); this is a
@@ -38,12 +36,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import TOKENS_SQL, tokens
 
 
 def _bigram_stream(documents: DataFrame) -> DataFrame:
-    """(doc_id, pos, w1, bg): the positional bigram stream, docs with ≥2
+    """(doc_id, w1, bg): the bigram stream, docs with ≥2
     tokens only. ``sequence(1, n-1)`` is guarded by the filter — Spark's
     sequence() DESCENDS when stop < start, so short docs must never reach
     it (see positional_ngrams())."""
@@ -51,11 +50,10 @@ def _bigram_stream(documents: DataFrame) -> DataFrame:
     d = d.filter(F.size("toks") >= 2)
     pairs = F.expr(
         "transform(sequence(1, size(toks) - 1), "
-        "i -> struct(i AS pos, toks[i-1] AS w1, concat(toks[i-1], ' ', toks[i]) AS bg))")
+        "i -> struct(toks[i-1] AS w1, concat(toks[i-1], ' ', toks[i]) AS bg))")
     return (
         d.select("doc_id", F.explode(pairs).alias("p"))
-        .select("doc_id", F.col("p.pos").alias("pos"),
-                F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg"))
+        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg"))
     )
 
 
@@ -83,18 +81,15 @@ def bigram_lm_score(documents: DataFrame) -> DataFrame:
         .join(ctx_counts, "w1")
         .withColumn("k", F.lit(1))
         .join(F.broadcast(vocab), "k")
-        .select("doc_id", "pos", logp.alias("logp"))
+        .select("doc_id", logp.alias("logp"))
     )
-    # deterministic sequential fold in position order (cf. similarity._dot)
     per_doc = (
         scored.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "logp"))).alias("lps"))
+        .agg(F.count("*").alias("n_bigrams"),
+             exact_sum(F.col("logp")).alias("s"))
         .select(
-            "doc_id",
-            F.size("lps").cast("long").alias("n_bigrams"),
-            portable_round(
-                -F.aggregate("lps", F.lit(0.0), lambda acc, s: acc + s["logp"])
-                / F.size("lps"), 4).alias("h_bits"),
+            "doc_id", "n_bigrams",
+            portable_round(-F.col("s") / F.col("n_bigrams"), 4).alias("h_bits"),
         )
     )
     return (
@@ -110,9 +105,7 @@ def bigram_lm_score(documents: DataFrame) -> DataFrame:
 
 def bigram_lm_score_sql(table: str = "documents") -> str:
     """DuckDB twin: identical model, identical 9-dp-rounded log2 terms,
-    identical position-ordered left fold (DuckDB's list_reduce seeds with
-    the first element; Spark folds from 0.0 — equal because 0.0 + x == x
-    for every finite logp here)."""
+    identical exact sum."""
     toks = TOKENS_SQL.format(c="text")
     logp = portable_round_sql(
         "log2(CAST(c12 + 1 AS DOUBLE) / CAST(c1 + v_size AS DOUBLE))", 9)
@@ -120,7 +113,7 @@ def bigram_lm_score_sql(table: str = "documents") -> str:
 WITH tok AS MATERIALIZED (
   SELECT doc_id, {toks} AS toks FROM {table}
 ), bg AS MATERIALIZED (
-  SELECT doc_id, unnest(range(1, len(toks))) AS pos,
+  SELECT doc_id,
          unnest(list_transform(range(1, len(toks)), i -> toks[i])) AS w1,
          unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])) AS bg
   FROM tok WHERE len(toks) >= 2
@@ -131,12 +124,12 @@ WITH tok AS MATERIALIZED (
 ), vocab AS (
   SELECT count(DISTINCT t) AS v_size FROM (SELECT unnest(toks) AS t FROM tok)
 ), scored AS (
-  SELECT bg.doc_id AS s_doc_id, bg.pos, {logp} AS logp
+  SELECT bg.doc_id AS s_doc_id, {logp} AS logp
   FROM bg JOIN pair_counts USING (bg) JOIN ctx_counts USING (w1), vocab
 ), per_doc AS (
   SELECT s_doc_id,
          count(*) AS n_bigrams,
-         list_reduce(list(logp ORDER BY pos), (a, b) -> a + b) AS sum_logp
+         {exact_sum_sql('logp')} AS sum_logp
   FROM scored GROUP BY s_doc_id
 )
 SELECT d.doc_id,

@@ -23,15 +23,13 @@ Scale shape (the 100 TB plan):
   snapshot-materialized once; every gradient pass and the final scoring
   pass re-scan that snapshot.
 * TRAINING runs on the md5(doc_id) % sample_mod == 0 subset — at 10^12
-  docs callers raise ``sample_mod`` so the per-bucket gradient fold (a
-  doc_id-ordered sequential fold, bounded by the training sample) stays
-  small; training cost is O(sample · n_iters), independent of corpus
-  size. SCORING stays a full-corpus one-pass broadcast join (w is
-  ≤ n_buckets rows).
-* Cross-engine determinism: every fold (per-doc margin, per-bucket
-  gradient, bias gradient) is sequential in a sorted unique key, and the
-  sigmoid / updated weights are portable-rounded at 9 dp, absorbing libm
-  exp() divergence (the lm_score / k-means convention).
+  docs callers raise ``sample_mod`` so training cost, O(sample · n_iters),
+  stays independent of corpus size. SCORING stays a full-corpus one-pass
+  broadcast join (w is ≤ n_buckets rows).
+* Cross-engine determinism: every sum (per-doc margin, per-bucket
+  gradient, bias gradient) is a hash-agg :func:`~..rounding.exact_sum`,
+  and the sigmoid / updated weights are portable-rounded at 9 dp,
+  absorbing libm exp() divergence (the lm_score / k-means convention).
 
 Reference analog: none (the reference is a diagnostics parser); this is
 a driver-brief training-data op.
@@ -41,7 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import _md5_i64, _md5_i64_sql
 from .dsir import (
     DEFAULT_BUCKETS, DEFAULT_TARGET_SQL, _hashed_feature_counts)
@@ -77,18 +76,15 @@ def _bin_feats(documents: DataFrame, n_buckets: int, target: Column) -> DataFram
 
 def _margins(feats: DataFrame, w: DataFrame, bias: DataFrame) -> DataFrame:
     """(doc_id, y, p): per-doc sigmoid scores under (w, bias) — the margin
-    folds x·w in bucket order (bounded per doc), bias joins broadcast."""
+    is the exact sum of x·w, bias joins broadcast."""
     per_doc = (
         feats.join(F.broadcast(w), "bucket")
-        .select("doc_id", "y", "bucket", (F.col("x") * F.col("w")).alias("t"))
         .groupBy("doc_id")
         .agg(F.max("y").alias("y"),
-             F.sort_array(F.collect_list(F.struct("bucket", "t"))).alias("ts"))
+             exact_sum(F.col("x") * F.col("w")).alias("xw"))
         .withColumn("k", F.lit(1))
         .join(F.broadcast(bias), "k")
-        .select("doc_id", "y",
-                (F.aggregate("ts", F.lit(0.0), lambda a, s: a + s["t"])
-                 + F.col("b")).alias("m"))
+        .select("doc_id", "y", (F.col("xw") + F.col("b")).alias("m"))
     )
     return per_doc.select("doc_id", "y", _sigmoid(F.col("m")).alias("p"))
 
@@ -105,14 +101,11 @@ def _lr_iter(samp: DataFrame, w: DataFrame, bias: DataFrame, lr: float,
         .select("doc_id", (F.col("p") - F.col("y")).alias("r")))
     grad = (
         samp.join(resid, "doc_id")
-        .select("bucket", "doc_id", (F.col("r") * F.col("x")).alias("g"))
         .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "g"))).alias("gs"))
+        .agg(exact_sum(F.col("r") * F.col("x")).alias("g"))
         .withColumn("k", F.lit(1))
         .join(F.broadcast(n_samp), "k")
-        .select("bucket",
-                (F.aggregate("gs", F.lit(0.0), lambda a, s: a + s["g"])
-                 / F.col("n")).alias("gb"))
+        .select("bucket", (F.col("g") / F.col("n")).alias("gb"))
     )
     w_new = (w.join(grad, "bucket", "left")
              .select("bucket",
@@ -121,12 +114,9 @@ def _lr_iter(samp: DataFrame, w: DataFrame, bias: DataFrame, lr: float,
                      .alias("w")))
     b_grad = (resid
               .groupBy(F.lit(1).alias("k"))
-              .agg(F.sort_array(F.collect_list(F.struct("doc_id", "r")))
-                   .alias("rs"))
+              .agg(exact_sum(F.col("r")).alias("g"))
               .join(F.broadcast(n_samp), "k")
-              .select("k", (F.aggregate("rs", F.lit(0.0),
-                                        lambda a, s: a + s["r"])
-                            / F.col("n")).alias("gb")))
+              .select("k", (F.col("g") / F.col("n")).alias("gb")))
     # LEFT join + coalesce: an EMPTY training sample (every doc hashed out
     # by sample_mod, or an all-NULL-text corpus) yields an empty b_grad —
     # an inner join here silently emptied bias and with it the ENTIRE
@@ -197,9 +187,9 @@ def quality_classifier_sql(table: str = "documents",
                            lr: float = 1.0, n_iters: int = 5,
                            sample_mod: int = 1) -> str:
     """DuckDB twin: replays the identical zero-init gradient steps as
-    chained CTEs — same folds (ORDER BY the same unique keys), same 9-dp
-    portable rounding on sigmoid and weight updates, so training is a
-    full value oracle (the _kmeans_cents_sql precedent)."""
+    chained CTEs — same exact sums, same 9-dp portable rounding on
+    sigmoid and weight updates, so training is a full value oracle (the
+    _kmeans_cents_sql precedent)."""
     from .dsir import hashed_features_sql
 
     sig = portable_round_sql(
@@ -207,13 +197,12 @@ def quality_classifier_sql(table: str = "documents",
 
     def margins(feats: str, w: str, b: str, out: str) -> str:
         # MATERIALIZED: each m{i} feeds BOTH g{i} and b{i+1}; inlined, the
-        # doc-keyed list fold over the feature stream re-derives per
+        # doc-keyed aggregate over the feature stream re-derives per
         # consumer and the 5-iteration chain exhausts an 8 GB limit at
         # sf0.1 (measured 40 s → OOM; materialized the sweep passes — the
         # r04 MATERIALIZED-CTE lesson applied to the one chain that missed
         # it). Values unchanged: materialization is a plan property.
-        m = ("list_reduce(list(x * w ORDER BY bucket), (a, c) -> a + c)"
-             f" + (SELECT b FROM {b})")
+        m = f"{exact_sum_sql('x * w')} + (SELECT b FROM {b})"
         return (f"{out} AS MATERIALIZED (\n"
                 f"  SELECT doc_id, max(y) AS y,\n"
                 f"         {sig.format(m=m)} AS p\n"
@@ -239,8 +228,7 @@ def quality_classifier_sql(table: str = "documents",
         parts.append(
             f"""g{i} AS (
   SELECT bucket,
-         list_reduce(list(r * x ORDER BY doc_id), (a, c) -> a + c)
-           / (SELECT n FROM n_samp) AS gb
+         {exact_sum_sql('r * x')} / (SELECT n FROM n_samp) AS gb
   FROM samp JOIN (SELECT doc_id, p - y AS r FROM m{i}) USING (doc_id)
   GROUP BY bucket
 ), {nw} AS MATERIALIZED (
@@ -248,12 +236,12 @@ def quality_classifier_sql(table: str = "documents",
          {portable_round_sql(f'{pw}.w - {lr} * coalesce(g{i}.gb, 0.0)', 9)} AS w
   FROM {pw} LEFT JOIN g{i} ON {pw}.bucket = g{i}.bucket
 ), {nb} AS (
-  -- coalesce to the previous bias: an empty sample makes the fold NULL
+  -- coalesce to the previous bias: an empty sample makes the sum NULL
   -- (zero-gradient reading, mirrors the Spark left join)
   SELECT coalesce({portable_round_sql(
       f'(SELECT b FROM {pb}) - {lr} * '
-      f'(list_reduce(list(r ORDER BY doc_id), (a, c) -> a + c)'
-      f' / (SELECT n FROM n_samp))', 9)}, (SELECT b FROM {pb})) AS b
+      f'({exact_sum_sql("r")} / (SELECT n FROM n_samp))', 9)},
+      (SELECT b FROM {pb})) AS b
   FROM (SELECT doc_id, p - y AS r FROM m{i})
 )""")
     wf, bf = f"w{n_iters}", f"b{n_iters}"

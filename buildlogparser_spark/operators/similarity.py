@@ -24,7 +24,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import _md5_i64, _md5_i64_sql
 from pyspark.sql.window import Window
 
@@ -270,10 +271,10 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.4,
 # The quantizer is TRAINED by default (round 5 — VERDICT r04 #2): a seeded,
 # fixed-iteration Lloyd's k-means over a deterministic md5-sampled subset,
 # expressed entirely as DataFrame ops (broadcast the tiny centroid table,
-# per-row argmax assignment, per-cluster position-ordered sequential-fold
-# mean — the same deterministic-fold discipline as lm_score). Fixed
-# iterations + md5-seeded init keep it exactly reproducible, so the DuckDB
-# twin replays the identical training and stays a full value oracle.
+# per-row argmax assignment, per-cluster vec_id-ordered sequential-fold
+# mean). Fixed iterations + md5-seeded init keep it exactly reproducible,
+# so the DuckDB twin replays the identical training and stays a full value
+# oracle.
 # ``trained=False`` falls back to the md5-derived fixed centroids (the
 # k-means init), kept as the recall baseline for tests.
 # ---------------------------------------------------------------------------
@@ -1060,22 +1061,38 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k_results: int = 5,
                 portable_round(
                     _dot(F.slice("unit", F.col("sub") * sub_d + 1, F.lit(sub_d)),
                          F.col("cvec")), 9).alias("p")))
-    # the m partials are summed by a sub-ordered SEQUENTIAL fold, not
-    # F.sum — hash-agg addition order is engine/layout-dependent and the
-    # last bit of an 8-term float sum must not depend on it (the same
-    # discipline as every other cross-engine float fold in this repo)
+    return _adc_topk(partial, k_results)
+
+
+def _adc_topk(partial: DataFrame, k_results: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_sim): the ADC scoring tail shared by
+    :func:`pq_topk` and :func:`ivfpq_topk` — the exact sum of the per-
+    subspace partials ``p`` per (query, candidate), top ``k_results`` by
+    score then vec_id, 4-dp output."""
     scored = (partial.groupBy("query_id", "vec_id")
-              .agg(portable_round(
-                  F.aggregate(
-                      F.transform(
-                          F.sort_array(F.collect_list(F.struct("sub", "p"))),
-                          lambda s: s["p"]),
-                      F.lit(0.0), lambda acc, v: acc + v), 9).alias("adc")))
+              .agg(exact_sum(F.col("p")).alias("adc")))
     w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
     return (scored.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= k_results)
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
                     portable_round(F.col("adc"), 4).alias("adc_sim")))
+
+
+def _adc_topk_sql(parts_cte: str, col: str, k_results: int) -> str:
+    """DuckDB twin of :func:`_adc_topk`: the CTEs after ``parts_cte``
+    (query_id, vec_id, ``col``) and the final SELECT."""
+    return f"""scored AS (
+  SELECT query_id, vec_id, {exact_sum_sql(col)} AS adc
+  FROM {parts_cte} GROUP BY query_id, vec_id),
+ranked AS (
+  SELECT query_id, vec_id, adc,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY adc DESC, vec_id) AS rk
+  FROM scored)
+SELECT query_id, vec_id AS neighbor_id,
+       {portable_round_sql('adc', 4)} AS adc_sim
+FROM ranked WHERE rk <= {k_results}
+"""
 
 
 def _pq_dist_sql(a: str, b: str, sub_d: int) -> str:
@@ -1204,20 +1221,7 @@ parts AS (
   JOIN pqcents p ON p.sub = e.sub AND p.cid = e.code
   CROSS JOIN q
   WHERE e.vec_id <> q.query_id),
-scored AS (
-  SELECT query_id, vec_id,
-         {portable_round_sql(
-             "list_reduce(list(p ORDER BY sub), (x, y) -> x + y)", 9)} AS adc
-  FROM parts GROUP BY query_id, vec_id),
-ranked AS (
-  SELECT query_id, vec_id, adc,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc DESC, vec_id) AS rk
-  FROM scored)
-SELECT query_id, vec_id AS neighbor_id,
-       {portable_round_sql('adc', 4)} AS adc_sim
-FROM ranked WHERE rk <= {k_results}
-"""
+{_adc_topk_sql('parts', 'p', k_results)}"""
 
 
 def ivfpq_topk(embeddings: DataFrame, query_ids: list[int],
@@ -1263,18 +1267,7 @@ def ivfpq_topk(embeddings: DataFrame, query_ids: list[int],
                     _dot(F.slice("q_unit", F.col("sub") * sub_d + 1,
                                  F.lit(sub_d)),
                          F.col("cvec")), 9).alias("p")))
-    scored = (partial.groupBy("query_id", "vec_id")
-              .agg(portable_round(
-                  F.aggregate(
-                      F.transform(
-                          F.sort_array(F.collect_list(F.struct("sub", "p"))),
-                          lambda s: s["p"]),
-                      F.lit(0.0), lambda acc, v: acc + v), 9).alias("adc")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k_results)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    portable_round(F.col("adc"), 4).alias("adc_sim")))
+    return _adc_topk(partial, k_results)
 
 
 def ivfpq_topk_sql(query_ids: list[int], k_results: int = 5,
@@ -1285,7 +1278,7 @@ def ivfpq_topk_sql(query_ids: list[int], k_results: int = 5,
     """DuckDB twin: the IVF prelude (shared ``unitv`` + coarse k-means +
     csim) composed with the PQ training chain (``with_unitv=False``) —
     probe lists from csim, candidates from the rank-1 assignment, ADC from
-    the code/codebook joins with the same sub-ordered fold."""
+    the code/codebook joins with the same scoring tail."""
     sub_d = dim // m
     ids = ", ".join(str(i) for i in query_ids)
     qdot = _DOT_SQL.format(
@@ -1305,20 +1298,7 @@ parts AS (
   JOIN assigned a ON a.cluster = p.cluster AND a.vec_id <> p.query_id
   JOIN pqcodes e ON e.vec_id = a.vec_id
   JOIN pqcents c ON c.sub = e.sub AND c.cid = e.code),
-scored AS (
-  SELECT query_id, vec_id,
-         {portable_round_sql(
-             "list_reduce(list(pp ORDER BY sub), (x, y) -> x + y)", 9)} AS adc
-  FROM parts GROUP BY query_id, vec_id),
-ranked AS (
-  SELECT query_id, vec_id, adc,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc DESC, vec_id) AS rk
-  FROM scored)
-SELECT query_id, vec_id AS neighbor_id,
-       {portable_round_sql('adc', 4)} AS adc_sim
-FROM ranked WHERE rk <= {k_results}
-"""
+{_adc_topk_sql('parts', 'pp', k_results)}"""
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..rounding import portable_round, portable_round_sql
+from ..rounding import (
+    exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import TOKENS_SQL, bpe_token_estimate, bpe_tokens_sql, tokens
 
 # Tiny per-language stopword marker lists for the n-gram/stopword heuristic.
@@ -403,31 +404,26 @@ def token_entropy(documents: DataFrame) -> DataFrame:
 
     Cross-engine determinism: each token's term follows
     :func:`entropy_term` (the drift.py convention) and the per-document
-    sum is a TOKEN-ORDERED sequential fold — safe collation-wise because
-    :func:`~.dedup.tokens` emits only ``[a-z0-9]+`` strings. Docs with
-    no tokens (NULL/empty/symbol-only text) emit the zero row rather
-    than vanishing.
+    sum is :func:`~..rounding.exact_sum`. Docs with no tokens
+    (NULL/empty/symbol-only text) emit the zero row rather than
+    vanishing.
 
     Scale shape (10^12 docs): one explode scan → (doc, token) hash-agg
-    (map-side combinable) → per-doc fold bounded by the doc's distinct
-    token count — the repetition_stats shape; the zero-row completion is
-    a left join against the doc_id projection only.
+    (map-side combinable) → per-doc total n on each (doc, token) row →
+    per-doc hash-agg — the repetition_stats shape; the zero-row
+    completion is a left join against the doc_id projection only.
     """
     toks = tokens(F.col("text"))
     pairs = documents.select(
         "doc_id", F.explode(toks).alias("tok"))
-    counts = pairs.groupBy("doc_id", "tok").agg(
-        F.count("*").alias("c"))
+    counts = (pairs.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
+              .withColumn("n", F.sum("c").over(Window.partitionBy("doc_id"))))
     per_doc = counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n"),
+        F.max("n").alias("n"),
         F.count("*").alias("n_distinct"),
-        F.sort_array(F.collect_list(F.struct("tok", "c"))).alias("tl"),
+        exact_sum(entropy_term(F.col("c"), F.col("n"))).alias("negent"),
     )
-
-    # fold order is the sorted struct array (token asc), summed
-    # sequentially from 0.0
-    ent9 = -F.aggregate(F.col("tl"), F.lit(0.0),
-                        lambda acc, s: acc + entropy_term(s["c"], F.col("n")))
+    ent9 = -F.col("negent")
     norm = F.when(
         F.col("n_distinct") > 1,
         portable_round(ent9 / portable_round(
@@ -455,8 +451,8 @@ def token_entropy(documents: DataFrame) -> DataFrame:
 
 
 def token_entropy_sql(table: str = "documents") -> str:
-    """DuckDB twin: unnest → (doc, token) counts → token-ordered
-    list_reduce fold of the same :func:`entropy_term` terms."""
+    """DuckDB twin: unnest → (doc, token) counts → exact sum of the same
+    :func:`entropy_term` terms."""
     term9 = entropy_term_sql("c", "n")
     return f"""
 WITH pairs AS (
@@ -466,18 +462,12 @@ counts AS (
   SELECT doc_id, tok, count(*) AS c FROM pairs GROUP BY doc_id, tok
 ),
 with_n AS (
-  -- the per-doc total must exist per (doc, token) ROW before the fold
-  -- aggregates; a same-SELECT alias cannot feed the list() argument
   SELECT doc_id, tok, c, sum(c) OVER (PARTITION BY doc_id) AS n
   FROM counts
 ),
 per_doc AS (
   SELECT doc_id, max(n) AS n, count(*) AS n_distinct,
-         -- 0.0 seed + sequential fold in token order == the Spark
-         -- aggregate over the sorted struct array
-         coalesce(list_reduce(
-             list_prepend(0.0, list({term9} ORDER BY tok)),
-             (a, b) -> a + b), 0.0) AS negent
+         {exact_sum_sql(term9)} AS negent
   FROM with_n GROUP BY doc_id
 )
 SELECT d.doc_id,

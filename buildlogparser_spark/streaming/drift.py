@@ -8,13 +8,13 @@ a (batch_id, dim, psi, alert) row is emitted per dimension — the
 "did today's crawl change under me" gate running continuously instead of
 between snapshots. PSI arithmetic is byte-identical to the batch
 operator's (:func:`~..operators.drift.psi_value`: Laplace smoothing over
-the union bin set, 9-dp portable rounding around ``ln``, bin-ordered
-fold, 6-dp total), so a stream batch and the same rows run through the
+the union bin set, 9-dp portable rounding around ``ln``, exact nano-unit
+sum, 6-dp total), so a stream batch and the same rows run through the
 batch operator agree exactly.
 
 Scale shape (10^9-doc/day ingest): the per-batch histogram is a plain
 DataFrame hash-agg (map-side combinable) — only the |dims|·|bins|-row
-RESULT crosses to the driver, where the PSI fold over a few hundred bins
+RESULT crosses to the driver, where the PSI sum over a few hundred bins
 is O(bins). The reference histogram is config-sized state (it describes
 the accepted corpus profile, not the corpus) held driver-side, exactly
 as production would load it from a metrics table. ``foreachBatch`` is

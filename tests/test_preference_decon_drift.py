@@ -156,8 +156,11 @@ def test_corpus_drift_matches_hand_computed_psi(spark):
     assert (en.ref_n, en.cur_n, zh.ref_n, zh.cur_n) == (2, 3, 1, 0)
     assert en.ref_share == r6(p_en) and en.cur_share == r6(q_en)
     assert en.psi_term == r6(t_en) and zh.psi_term == r6(t_zh)
-    # bin-ordered fold: en before zh
-    assert en.psi_total == zh.psi_total == r6(t_en + t_zh)
+    # exact sum of the terms' nano-units
+    def nano(x):
+        return math.floor(x * 1e9 + 0.5)
+
+    assert en.psi_total == zh.psi_total == r6((nano(t_en) + nano(t_zh)) / 1e9)
     # the single-bin source dim is exactly balanced
     s = out[("source", "s")]
     assert s.psi_term == 0.0 and s.psi_total == 0.0
