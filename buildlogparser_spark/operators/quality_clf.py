@@ -15,8 +15,8 @@ steps from w = 0:
 
 Fixed iterations from a zero init with no RNG make training exactly
 reproducible, so the DuckDB twin replays the SAME gradient steps as
-chained CTEs and every value is a full oracle (the kmeans_centroids
-precedent, similarity.py).
+chained CTEs and every value is a full oracle (as ``similarity._lloyd_sql``
+replays the k-means and PQ training).
 
 Scale shape (the 100 TB plan):
 * the hashed per-(doc, bucket) feature stream (shared with DSIR) is
@@ -188,8 +188,8 @@ def quality_classifier_sql(table: str = "documents",
                            sample_mod: int = 1) -> str:
     """DuckDB twin: replays the identical zero-init gradient steps as
     chained CTEs — same exact sums, same 9-dp portable rounding on
-    sigmoid and weight updates, so training is a full value oracle (the
-    _kmeans_cents_sql precedent)."""
+    sigmoid and weight updates, so training is a full value oracle (as
+    ``similarity._lloyd_sql`` is for k-means)."""
     from .dsir import hashed_features_sql
 
     sig = portable_round_sql(

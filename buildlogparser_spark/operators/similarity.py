@@ -1,33 +1,43 @@
-"""Approximate-nearest-neighbor search over the ``embeddings`` table
-(vec_id, embedding: array<float>, label).
+"""Approximate-nearest-neighbor search and embedding dedup over the
+``embeddings`` table (vec_id, embedding: array<float>, label).
 
-* :func:`cosine_topk` — exact brute-force baseline: broadcast the (small)
-  query set against the full corpus; per-row JVM-side dot product via
-  ``F.aggregate``/``zip_with`` (no Python). At 10^12 rows this is the
-  verification/recall-measurement path, run on samples.
-* :func:`lsh_topk` — the scale path: random-hyperplane LSH (signs of dot
-  products with deterministic md5-derived hyperplanes) buckets the corpus;
-  candidates = same-bucket rows across ``n_tables`` independent tables;
-  exact cosine re-rank on candidates only. Candidate generation is a
-  bucket-equality join — shuffle on (table, bucket), never all-pairs.
+* :func:`cosine_topk` — exact brute-force top-k: the (small) query set is
+  broadcast against the corpus; per-row JVM-side dot products via
+  ``F.aggregate``/``zip_with`` (no Python). The recall baseline.
+* :func:`lsh_topk`, :func:`embedding_near_dup_lsh` — random-hyperplane LSH
+  (signs of dot products with md5-derived hyperplanes) buckets the corpus;
+  candidates share a bucket in any of ``n_tables`` tables and are verified
+  by exact cosine. A bucket-equality join, never all-pairs.
+* :func:`ivf_topk`, :func:`semantic_dedup` — an IVF coarse quantizer
+  trained by Lloyd's k-means (:func:`kmeans_centroids`): a query probes its
+  ``nprobe`` nearest lists; SemDeDup pairs vectors only within a list.
+* :func:`pq_topk`, :func:`ivfpq_topk` — product quantization: per-subspace
+  codebooks trained by the same Lloyd step (:func:`pq_codebooks`) and
+  asymmetric-distance (ADC) scoring of the codes.
+* :func:`semantic_decontaminate` — max cosine against a benchmark set.
 
-Math is float64 end-to-end (cast from float32 storage) with sequential
-left-to-right folds, matching the DuckDB oracle's evaluation to the last
-bit in practice; scores are rounded for cross-engine hashing and ties are
-broken by vec_id.
+Every operator has a DuckDB twin (``*_sql``) that is its value oracle.
+Math is float64 (cast from float32 storage); dot products and the k-means
+vector means are left-to-right folds, the means over members in vec_id
+order, so both engines add in the same order. ADC totals are
+:func:`~..rounding.exact_sum` aggregates. Scores are rounded to 9 dp
+before they are compared and ties are broken by id.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+from functools import reduce
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.window import Window
 
+from ..materialize import materialize
 from ..rounding import (
     exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from .dedup import _md5_i64, _md5_i64_sql
-from pyspark.sql.window import Window
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -42,64 +52,61 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` bound to a lambda variable, so a body
+    that reads it per element evaluates it once, not once per element."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def with_unit_vectors(embeddings: DataFrame) -> DataFrame:
-    """Add a float64 L2-normalized copy of the embedding (cosine → dot).
+    """(vec_id, unit): a float64 L2-normalized copy of each embedding
+    (cosine → dot).
 
     Rows with a NULL embedding are DROPPED here — the single entry point
     every similarity operator shares — rather than flowing NULL subvectors
     into k-means/ADC where each engine's NULL-in-struct ordering diverges
     (a NULL row in the PQ training set flipped the trained codebooks
     between Spark and DuckDB). Zero vectors stay: their unit copy is the
-    zero vector itself, deterministic in both engines.
-
-    The norm is let-bound via a single-element ``transform`` so the
-    normalizing division references a bound O(1) lambda variable — the
-    naive ``transform(vec, v -> v / norm(vec))`` re-evaluates the whole
-    norm fold per element (O(dim²); harmless at dim 64, wrong at
-    production embedding widths). Same defense as
-    :func:`~.dedup.shingles`."""
-    embeddings = embeddings.filter(F.col("embedding").isNotNull())
+    zero vector itself, deterministic in both engines. The norm is
+    let-bound (:func:`_let`): ``transform(vec, v -> v / norm(vec))`` would
+    re-evaluate the whole norm fold per element (O(dim²))."""
     vec = F.transform(F.col("embedding"), lambda v: v.cast("double"))
+    unit = _let(vec, lambda v: _let(
+        _norm(v), lambda n: F.when(n > 0, F.transform(v, lambda x: x / n))
+        .otherwise(v)))
+    return (embeddings.filter(F.col("embedding").isNotNull())
+            .select("vec_id", unit.alias("unit")))
 
-    def build(v: Column) -> Column:
-        n = _norm(v)
-        return F.element_at(
-            F.transform(F.array(n),
-                        lambda nn: F.when(nn > 0, F.transform(v, lambda x: x / nn))
-                        .otherwise(v)), 1)
 
-    return embeddings.withColumn(
-        "unit", F.element_at(F.transform(F.array(vec), build), 1))
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): the top ``k`` of each
+    query's (query_id, neighbor_id, sim) rows. Ranked on sim rounded to
+    9 dp, so sub-1e-9 float divergence (e.g. an engine fusing the fold
+    differently) cannot flip neighbor order; ties go to the lower
+    neighbor_id. 4-dp output."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(portable_round(F.col("sim"), 9)), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank",
+                portable_round(F.col("sim"), 4).alias("cos_sim"))
+    )
 
 
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact top-k neighbors (excluding self) for each query vec_id.
 
     Output: (query_id, neighbor_id, rank, cos_sim). The query side is tiny
-    → broadcast; corpus side streams, one window per query for top-k
-    (TakeOrdered per group). Deterministic: ties broken by neighbor_id.
-    """
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
+    → broadcast; corpus side streams, one window per query for top-k."""
+    base = with_unit_vectors(embeddings)
     queries = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit"))
-    scored = (
+    return _topk(
         base.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dot(F.col("q_unit"), F.col("unit")).alias("sim"),
-        )
-    )
-    # rank on sim rounded to 9 dp: sub-1e-9 float divergence (e.g. a future
-    # engine fusing the fold differently) must not flip neighbor order; ties
-    # break on neighbor_id in both engines
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(portable_round(F.col("sim"), 9)), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", portable_round(F.col("sim"), 4).alias("cos_sim"))
-    )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                _dot(F.col("q_unit"), F.col("unit")).alias("sim")),
+        k)
 
 
 def _hyperplanes(dim: int, n_planes: int, table: int) -> list[list[float]]:
@@ -125,67 +132,53 @@ def lsh_bucket(unit: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
+def _lsh_banded(embeddings: DataFrame, n_planes: int, n_tables: int,
+                dim: int) -> DataFrame:
+    """(vec_id, unit, tbl, bucket): each unit vector once per LSH table,
+    with its bucket in that table. A parquet snapshot: the candidate join
+    reads it twice, and repeated calls against the same corpus skip the
+    normalize + hash recompute."""
+    base = with_unit_vectors(embeddings)
+    banded = None
+    for t in range(n_tables):
+        part = base.select(
+            "vec_id", "unit", F.lit(t).alias("tbl"),
+            lsh_bucket(F.col("unit"), _hyperplanes(dim, n_planes, t)).alias("bucket"))
+        banded = part if banded is None else banded.unionByName(part)
+    return materialize(banded)
+
+
 def lsh_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
              n_planes: int = 8, n_tables: int = 4, dim: int = 64) -> DataFrame:
-    """Banded random-hyperplane ANN: same output schema as cosine_topk but
-    only candidates sharing an LSH bucket (any table) are scored. May miss
-    true neighbors (approximate); recall measured in tests vs cosine_topk.
-
-    The banded corpus (unit vectors + bucket ids per table) is a parquet
-    snapshot, like :func:`embedding_near_dup_lsh` — repeated top-k calls
-    against the same corpus then skip the normalize+hash recompute and
-    scan the snapshot."""
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    tables = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, t)
-        tables.append(base.select(
-            "vec_id", "unit", F.lit(t).alias("tbl"),
-            lsh_bucket(F.col("unit"), planes).alias("bucket")))
-    banded = tables[0]
-    for t in tables[1:]:
-        banded = banded.unionByName(t)
-    from ..materialize import materialize
-
-    banded = materialize(banded)
-
+    """Banded random-hyperplane ANN: same output and ranking as
+    :func:`cosine_topk`, but only candidates sharing an LSH bucket (any
+    table) are scored. May miss true neighbors (approximate); recall
+    measured in tests vs cosine_topk."""
+    banded = _lsh_banded(embeddings, n_planes, n_tables, dim)
     queries = banded.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit"),
         "tbl", "bucket")
     cands = (
-        banded.join(F.broadcast(queries),
-                    ["tbl", "bucket"])
+        banded.join(F.broadcast(queries), ["tbl", "bucket"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "unit", "q_unit")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id", "neighbor_id", _dot(F.col("q_unit"), F.col("unit")).alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", portable_round(F.col("sim"), 4).alias("cos_sim"))
-    )
+    return _topk(cands.select("query_id", "neighbor_id",
+                              _dot(F.col("q_unit"), F.col("unit")).alias("sim")), k)
 
 
 # ---------------------------------------------------------------------------
-# DuckDB twin (correctness oracle) for the exact brute-force path. The fold
-# order matches the Spark expressions exactly (left fold, double math), so
-# scores agree bit-for-bit; ranking uses the same portable 9-dp round + vec_id
-# tie-break.
+# DuckDB twins. The folds match the Spark expressions exactly (left fold,
+# double math), so scores agree bit-for-bit; ranking uses the same portable
+# 9-dp round + id tie-break.
 # ---------------------------------------------------------------------------
 
 _DOT_SQL = ("list_reduce(list_transform(range(1, len({a}) + 1), "
             "i -> {a}[i] * {b}[i]), (x, y) -> x + y)")
 
-
-def cosine_topk_sql(query_ids: list[int], k: int = 5,
-                    table: str = "embeddings") -> str:
-    ids = ", ".join(str(i) for i in query_ids)
-    dot = _DOT_SQL.format(a="u.unit", b="q.q_unit")
-    return f"""
-WITH vec AS (
+_UNITV_SQL = """
+vec AS (
   SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS v
   FROM {table} WHERE embedding IS NOT NULL
 ),
@@ -195,26 +188,39 @@ unitv AS (
   FROM (SELECT vec_id, v,
                sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS n
         FROM vec) t
-),
+)"""
+
+
+def _topk_sql(scored: str, k: int) -> str:
+    """DuckDB twin of :func:`_topk` over the CTE ``scored``."""
+    return f"""
+SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, {portable_round_sql('sim', 4)} AS cos_sim
+FROM (SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY {portable_round_sql('sim', 9)} DESC, neighbor_id) AS rank
+      FROM {scored}) r
+WHERE rank <= {k}
+"""
+
+
+def cosine_topk_sql(query_ids: list[int], k: int = 5,
+                    table: str = "embeddings") -> str:
+    ids = ", ".join(str(i) for i in query_ids)
+    dot = _DOT_SQL.format(a="u.unit", b="q.q_unit")
+    return f"""
+WITH {_UNITV_SQL.format(table=table)},
 q AS (SELECT vec_id AS query_id, unit AS q_unit FROM unitv WHERE vec_id IN ({ids})),
 scored AS (
   SELECT q.query_id, u.vec_id AS neighbor_id, {dot} AS sim
   FROM unitv u CROSS JOIN q
   WHERE u.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, {portable_round_sql('sim', 4)} AS cos_sim
-FROM (SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY {portable_round_sql('sim', 9)} DESC, neighbor_id) AS rank
-      FROM scored) r
-WHERE rank <= {k}
-"""
+){_topk_sql('scored', k)}"""
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — exact all-pairs baseline
     (vec_a < vec_b, cosine ≥ threshold). The verification/recall path; at
     corpus scale use :func:`embedding_near_dup_lsh`."""
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
+    base = with_unit_vectors(embeddings)
     a, b = base.alias("a"), base.alias("b")
     sim = _dot(F.col("a.unit"), F.col("b.unit"))
     return (
@@ -233,17 +239,7 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.4,
     """Scale path: random-hyperplane LSH blocks candidates (same-bucket in
     any table), exact cosine verifies — never an all-pairs join.
     Approximate: may miss pairs whose vectors disagree in every table."""
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    banded = None
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, t)
-        part = base.select(
-            "vec_id", "unit", F.lit(t).alias("tbl"),
-            lsh_bucket(F.col("unit"), planes).alias("bucket"))
-        banded = part if banded is None else banded.unionByName(part)
-    from ..materialize import materialize
-
-    banded = materialize(banded)  # self-join computes each side otherwise
+    banded = _lsh_banded(embeddings, n_planes, n_tables, dim)
     l, r = banded.alias("l"), banded.alias("r")
     cands = (
         l.join(r, [F.col("l.tbl") == F.col("r.tbl"),
@@ -261,22 +257,267 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.4,
     )
 
 
+def embedding_near_dup_sql(threshold: float = 0.4,
+                           table: str = "embeddings",
+                           where_sql: str = "") -> str:
+    """DuckDB twin of the exact all-pairs path; ``where_sql`` restricts the
+    id set (the graded use is a mod-sampled verification subset)."""
+    dot = _DOT_SQL.format(a="a.unit", b="b.unit")
+    return f"""
+WITH {_UNITV_SQL.format(table=f"(SELECT * FROM {table} {where_sql}) t0")}
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       {portable_round_sql(portable_round_sql(dot, 9), 4)} AS cos_sim
+FROM unitv a JOIN unitv b ON a.vec_id < b.vec_id
+WHERE {portable_round_sql(dot, 9)} >= {threshold}
+"""
+
+
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the coarse-quantizer scale path the brief names
-# beside LSH. Vectors are assigned to their nearest coarse centroid once
-# (one corpus pass, per-row expression, shuffle-free); a query probes only
-# the ``nprobe`` centroid lists nearest to it, so search cost is
-# corpus_size * nprobe / n_centroids instead of corpus_size.
+# Lloyd's k-means: ONE step in Spark (_lloyd_step) and one in SQL
+# (_lloyd_sql), shared by the IVF coarse quantizer and the PQ codebooks.
+# PQ training is k-means run separately in each subspace (Jégou et al.
+# 2011), so the two differ only in what _Quantizer holds:
 #
-# The quantizer is TRAINED by default (round 5 — VERDICT r04 #2): a seeded,
-# fixed-iteration Lloyd's k-means over a deterministic md5-sampled subset,
-# expressed entirely as DataFrame ops (broadcast the tiny centroid table,
-# per-row argmax assignment, per-cluster vec_id-ordered sequential-fold
-# mean). Fixed iterations + md5-seeded init keep it exactly reproducible,
-# so the DuckDB twin replays the identical training and stays a full value
-# oracle.
-# ``trained=False`` falls back to the md5-derived fixed centroids (the
-# k-means init), kept as the recall baseline for tests.
+# * IVF: cost = -(9-dp cosine), the new centroid is the L2-normalized
+#   mean, no group key;
+# * PQ: cost = 9-dp squared L2 over sub-vectors (_pq_dist), the new
+#   centroid is the plain mean, group key ``sub`` — one chain trains all m
+#   subspaces at once, so cost does not multiply by m.
+#
+# A step assigns each point to the lowest (cost, cid) centroid of its
+# group, takes the vec_id-ordered mean per (keys, cid), rounds it to 9 dp
+# (which canonicalizes ±0.0 and bounds plan literals), re-seeds each empty
+# slot with a worst-fit point of its group (cost DESC, vec_id — the
+# classical move-a-far-point fix; a centroid that loses all members would
+# otherwise stay stranded and a clumpy corpus collapse into one list), and
+# keeps the previous centroid where neither applies. Seeds are
+# deterministic Forgy picks (md5-ranked data points) and the iteration
+# count is fixed, so training is exactly reproducible and the DuckDB twin
+# replays it: both are full value oracles. Training runs on the md5-sampled
+# subset ``sample_mod`` selects, so its collect_list and global windows are
+# bounded by the sample, not the corpus; assignment is one full-corpus
+# pass. ``trained=False`` uses the fixed md5 directions (_ivf_centroids) as
+# the IVF quantizer, the recall baseline for tests.
+# ---------------------------------------------------------------------------
+
+
+class _Quantizer(NamedTuple):
+    keys: tuple[str, ...]  # group columns: one codebook per group
+    vec: str  # the point column
+    cost: Callable[[Column, Column], Column]  # (point, centroid) → cost
+    cost_sql: Callable[[str, str], str]  # its DuckDB twin
+    unit_mean: bool  # L2-normalize the new centroid
+
+
+def _pq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance, 9-dp rounded (the PQ assignment cost)."""
+    return portable_round(
+        F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0), lambda acc, v: acc + v), 9)
+
+
+def _pq_dist_sql(a: str, b: str) -> str:
+    return portable_round_sql(
+        f"list_reduce(list_transform(range(1, len({a}) + 1), "
+        f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (x, y) -> x + y)", 9)
+
+
+# portable_round never returns -0.0, so the argmin over (-sim, cid) picks
+# what an argmax over (sim, -cid) would: highest sim, lowest cid
+_IVF = _Quantizer(
+    (), "unit",
+    lambda u, c: -portable_round(_dot(u, c), 9),
+    lambda u, c: f"-({portable_round_sql(_DOT_SQL.format(a=u, b=c), 9)})",
+    True)
+_PQ = _Quantizer(("sub",), "svec", _pq_dist, _pq_dist_sql, False)
+
+
+def _cents_row(cents: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Collapse (keys…, cid, cvec) into ONE row (cents: array<struct>)
+    sorted by (keys…, cid) — broadcast onto point rows so assignment is a
+    per-row array expression, never a per-row join."""
+    return cents.groupBy().agg(F.sort_array(F.collect_list(
+        F.struct(*keys, "cid", "cvec"))).alias("cents"))
+
+
+def _costs(q: _Quantizer) -> Column:
+    """array<struct(cost, cid)>: the point's cost against every centroid of
+    its group in the broadcast ``cents`` row. A chained when()-fold would
+    duplicate its subtree per level and grow the plan 2^n_centroids."""
+    cents = F.col("cents")
+    if q.keys:
+        cents = F.filter(cents, lambda c: reduce(
+            lambda a, b: a & b, [c[k] == F.col(k) for k in q.keys]))
+    return F.transform(cents, lambda c: F.struct(
+        q.cost(F.col(q.vec), c["cvec"]).alias("cost"), c["cid"].alias("cid")))
+
+
+def _assign(points: DataFrame, cents: DataFrame, q: _Quantizer) -> DataFrame:
+    """(vec_id, keys…, vec, cid, cost): each point's nearest centroid of
+    its group — the lowest (cost, cid)."""
+    return (points.join(F.broadcast(_cents_row(cents, q.keys)), F.lit(True))
+            .select("vec_id", *q.keys, q.vec, F.array_min(_costs(q)).alias("b"))
+            .select("vec_id", *q.keys, q.vec, "b.cid", "b.cost"))
+
+
+def _lloyd_step(points: DataFrame, cents: DataFrame, q: _Quantizer) -> DataFrame:
+    """One Lloyd iteration: (keys…, cid, cvec) from the previous
+    centroids. The assignment is a snapshot because the means, the empty
+    slots and the worst-fit ranks all read it (the twin's ``a{i}``
+    MATERIALIZED); the step's own plan then holds one collect_list, the
+    vec_id-ordered mean fold. The re-seed join carries explicit e_/w_
+    key aliases: after step 1 both sides' keys trace to the same lineage,
+    and Spark would resolve ``sub == sub`` as trivially true."""
+    keys = list(q.keys)
+    assigned = materialize(_assign(points, cents, q))
+    grouped = assigned.groupBy(*keys, "cid").agg(
+        F.count("*").alias("cnt"),
+        F.sort_array(F.collect_list(F.struct("vec_id", q.vec))).alias("ms"))
+    vecs = F.transform("ms", lambda s: s[q.vec])
+    total = F.aggregate(vecs, F.array_repeat(F.lit(0.0), F.size(vecs[0])),
+                        lambda acc, u: F.zip_with(acc, u, lambda a, b: a + b))
+    mv = F.col("mv")
+    if q.unit_mean:
+        nvec = _let(_norm(mv), lambda n: F.when(
+            n > 0, F.transform(mv, lambda x: portable_round(x / n, 9))))
+    else:
+        nvec = F.transform(mv, lambda x: portable_round(x, 9))
+    means = (grouped
+             .select(*keys, "cid", F.transform(total, lambda x: x / F.col("cnt")).alias("mv"))
+             .select(*keys, "cid", nvec.alias("nvec")))
+    empty = (cents.join(grouped.select(*keys, "cid"), [*keys, "cid"], "left_anti")
+             .select(*[F.col(k).alias(f"e_{k}") for k in keys], "cid",
+                     F.row_number().over(
+                         Window.partitionBy(*keys).orderBy("cid")).alias("en")))
+    worst = assigned.select(
+        *[F.col(k).alias(f"w_{k}") for k in keys], F.col(q.vec).alias("rvec"),
+        F.row_number().over(Window.partitionBy(*keys).orderBy(
+            F.desc("cost"), F.asc("vec_id"))).alias("wn"))
+    reseed = (empty.join(worst, [F.col("en") == F.col("wn")]
+                         + [F.col(f"e_{k}") == F.col(f"w_{k}") for k in keys])
+              .select(*[F.col(f"e_{k}").alias(k) for k in keys], "cid", "rvec"))
+    return (cents.join(means, [*keys, "cid"], "left")
+            .join(reseed, [*keys, "cid"], "left")
+            .select(*keys, "cid", F.coalesce("nvec", "rvec", "cvec").alias("cvec")))
+
+
+def _forgy_seeds(points: DataFrame, q: _Quantizer, n: int,
+                 seed_key: Column) -> DataFrame:
+    """(keys…, cid, cvec): deterministic Forgy init — per group, the n
+    points ranked first by md5(seed_key), then vec_id, become centroids
+    0..n-1. Pseudo-random DATA points: pure-direction seeds stagnate Lloyd
+    on clumpy data (the nearest seed swallows the whole clump and no other
+    centroid ever gains members)."""
+    rank = Window.partitionBy(*q.keys).orderBy(_md5_i64(seed_key), "vec_id")
+    return (points.withColumn("rn", F.row_number().over(rank))
+            .filter(F.col("rn") <= n)
+            .select(*q.keys, (F.col("rn") - 1).cast("int").alias("cid"),
+                    F.col(q.vec).alias("cvec")))
+
+
+def _lloyd(points: DataFrame, seeds: DataFrame, q: _Quantizer,
+           n_iters: int) -> DataFrame:
+    """``n_iters`` Lloyd steps from ``seeds``. One tiny snapshot per step:
+    a step reads the previous centroids three times, so a lazy chain
+    would grow as 3^n_iters plan copies."""
+    cents = materialize(seeds)
+    for _ in range(n_iters):
+        cents = materialize(_lloyd_step(points, cents, q))
+    return cents
+
+
+def _cols_sql(keys: tuple[str, ...], t: str = "") -> str:
+    """``t.k1, t.k2, `` — the group columns as a select-list prefix."""
+    return "".join(f"{t}{k}, " for k in keys)
+
+
+def _window_sql(keys: tuple[str, ...], order: str, t: str = "") -> str:
+    part = f"PARTITION BY {_cols_sql(keys, t)[:-2]} " if keys else ""
+    return f"OVER ({part}ORDER BY {order})"
+
+
+def _assign_sql(points: str, cents: str, q: _Quantizer) -> str:
+    """DuckDB twin of :func:`_assign` before the pick: every (point,
+    centroid of its group) pair with its cost, and ``rk`` = the rank of
+    (cost, cid) within the point — rk = 1 is the assignment."""
+    cost = q.cost_sql(f"s.{q.vec}", "c.cvec")
+    point = ("vec_id", *q.keys)
+    on = " AND ".join(f"c.{k} = s.{k}" for k in q.keys) or "TRUE"
+    return f"""
+  SELECT {_cols_sql(point, 's.')}s.{q.vec}, c.cid, {cost} AS cost,
+         row_number() {_window_sql(point, f'{cost}, c.cid', 's.')} AS rk
+  FROM {points} s JOIN {cents} c ON {on}"""
+
+
+def _forgy_sql(points: str, q: _Quantizer, n: int, seed_key: str) -> str:
+    """DuckDB twin of :func:`_forgy_seeds`."""
+    keys = _cols_sql(q.keys)
+    order = _window_sql(q.keys, f"{_md5_i64_sql(seed_key)}, vec_id")
+    return f"""
+  SELECT {keys}CAST(rn - 1 AS INTEGER) AS cid, {q.vec} AS cvec
+  FROM (SELECT {keys}vec_id, {q.vec}, row_number() {order} AS rn
+        FROM {points}) r
+  WHERE rn <= {n}"""
+
+
+def _lloyd_sql(prefix: str, points: str, q: _Quantizer,
+               n_iters: int) -> list[str]:
+    """DuckDB twin of :func:`_lloyd`: the CTEs ``{prefix}a1`` …
+    ``{prefix}k{n_iters}``, replaying the Lloyd steps from the seeds CTE
+    ``{prefix}k0`` over the ``points`` CTE. The prefix keeps two chains
+    apart in one WITH (``ivfpq_topk_sql`` composes both). The per-group
+    sum is ``list(vec ORDER BY vec_id)`` + a sequential ``list_reduce``:
+    the same vec_id-ordered left fold as Spark's sort_array(collect_list)
+    + aggregate."""
+    keys, v = q.keys, q.vec
+    kc = _cols_sql(keys)
+
+    def on(a: str, b: str) -> str:
+        return " AND ".join(f"{a}.{c} = {b}.{c}" for c in (*keys, "cid"))
+
+    mean = ("list_transform(list_reduce(us, (a, b) -> list_transform("
+            "range(1, len(a) + 1), j -> a[j] + b[j])), x -> x / cnt)")
+    ctes = []
+    for i in range(1, n_iters + 1):
+        prev = f"{prefix}k{i - 1}"
+        a, g, m, e, w, r, k = (f"{prefix}{c}{i}" for c in "agmewrk")
+        src = f"(SELECT {kc}cid, {mean} AS mv FROM {g}) t1"
+        if q.unit_mean:
+            nvec = f"CASE WHEN nrm > 0 THEN list_transform(mv, x -> {portable_round_sql('x / nrm', 9)}) END"
+            src = (f"(SELECT *, sqrt(list_reduce(list_transform(mv, x -> x * x), "
+                   f"(a, b) -> a + b)) AS nrm FROM {src}) t2")
+        else:
+            nvec = f"list_transform(mv, x -> {portable_round_sql('x', 9)})"
+        # MATERIALIZED: a{i} feeds both g{i} (means) and w{i} (worst fit);
+        # inlined, DuckDB derives the point × centroid costs twice per step
+        # (measured 5x on the ivf_topk oracle, 4.4x on pq_topk)
+        ctes += [
+            f"{a} AS MATERIALIZED ({_assign_sql(points, prev, q)})",
+            f"""{g} AS (
+  SELECT {kc}cid, count(*) AS cnt, list({v} ORDER BY vec_id) AS us
+  FROM {a} WHERE rk = 1 GROUP BY {kc}cid)""",
+            f"{m} AS (SELECT {kc}cid, {nvec} AS nvec FROM {src})",
+            f"""{e} AS (
+  SELECT {_cols_sql(keys, 'p.')}p.cid, row_number() {_window_sql(keys, 'p.cid', 'p.')} AS en
+  FROM {prev} p LEFT JOIN {g} g ON {on('p', 'g')} WHERE g.cid IS NULL)""",
+            f"""{w} AS (
+  SELECT {kc}{v}, row_number() {_window_sql(keys, 'cost DESC, vec_id')} AS wn
+  FROM {a} WHERE rk = 1)""",
+            f"""{r} AS (
+  SELECT {_cols_sql(keys, 'e.')}e.cid, w.{v} AS rvec
+  FROM {e} e JOIN {w} w ON {''.join(f'w.{c} = e.{c} AND ' for c in keys)}e.en = w.wn)""",
+            f"""{k} AS (
+  SELECT {_cols_sql(keys, 'p.')}p.cid, coalesce(m.nvec, r.rvec, p.cvec) AS cvec
+  FROM {prev} p LEFT JOIN {m} m ON {on('p', 'm')} LEFT JOIN {r} r ON {on('p', 'r')})""",
+        ]
+    return ctes
+
+
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) ANN. Vectors are assigned to their nearest coarse
+# centroid once (one corpus pass, per-row expression, shuffle-free); a
+# query probes only the ``nprobe`` centroid lists nearest to it, so search
+# cost is corpus_size * nprobe / n_centroids instead of corpus_size.
 # ---------------------------------------------------------------------------
 
 
@@ -284,7 +525,8 @@ def _ivf_centroids(n_centroids: int, dim: int) -> list[list[float]]:
     """Deterministic unit-norm seed centroids: components in [-1, 1) from
     md5(centroid, i), L2-normalized driver-side. Plain double math — the
     SAME literals are embedded in the Spark plan and the DuckDB twin.
-    These are k-means iteration 0; ``trained=False`` uses them as-is."""
+    ``trained=False`` uses them as the quantizer; training pads its Forgy
+    seeds with them when the sample has fewer than n_centroids points."""
     cents = []
     for c in range(n_centroids):
         row = []
@@ -299,9 +541,8 @@ def _ivf_centroids(n_centroids: int, dim: int) -> list[list[float]]:
 def _auto_n_centroids(embeddings: DataFrame) -> int:
     """Corpus-scaled cluster count: ceil(sqrt(N)) clamped to [4, 65536] —
     keeps per-cluster pairwise work (Σ|cluster|² in semantic_dedup) roughly
-    linear in N instead of quadratic (VERDICT r04 #3). Callers that need a
-    static DuckDB twin pass an explicit count; ``None`` triggers this
-    (one cheap count() action — control plane, like AQE statistics)."""
+    linear in N instead of quadratic. One cheap count() action (control
+    plane, like AQE statistics)."""
     n = embeddings.count()
     return max(4, min(65536, math.ceil(math.sqrt(n))))
 
@@ -317,132 +558,33 @@ def _seed_cents_df(spark, n_centroids: int, dim: int) -> DataFrame:
             .select("s.cid", "s.cvec"))
 
 
-def _cents_row(cents_df: DataFrame) -> DataFrame:
-    """Collapse (cid, cvec) into ONE row (cents: array<struct>) sorted by
-    cid — broadcast-joined onto vector rows so the argmax is a per-row
-    array expression, never a per-row join."""
-    return cents_df.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents"))
-
-
-def _best_cent(cents_col: Column, unit_col: Column) -> Column:
-    """argmax struct(sim, negcid) over a cents array column: highest sim
-    wins, ties go to the LOWEST cid — matching the row_number tie-break
-    (sim DESC, cid ASC) in the SQL twin. A chained when()-fold would
-    duplicate its subtree per level and grow the plan 2^n_centroids."""
-    return F.array_max(F.transform(cents_col, lambda c: F.struct(
-        portable_round(_dot(unit_col, c["cvec"]), 9).alias("sim"),
-        (-c["cid"]).alias("negcid"))))
-
-
-def _kmeans_iter(sample: DataFrame, cents_df: DataFrame, dim: int) -> DataFrame:
-    """One Lloyd iteration, cross-engine deterministic:
-
-    assign each sampled vector to its nearest current centroid (argmax on
-    9-dp-rounded sims), then new centroid = L2-normalized per-cluster mean,
-    summed by a SEQUENTIAL vec_id-ordered fold (sort_array(collect_list) +
-    aggregate here; list(... ORDER BY vec_id) + list_reduce in DuckDB) so
-    float addition order is identical in both engines, and 9-dp
-    portable-rounded per component (canonicalizes ±0.0 and bounds plan
-    literals).
-
-    Empty clusters are RE-SEEDED at the worst-fit sample vectors (lowest
-    assignment sim, tie vec_id; the classical move-a-far-point fix) — a
-    centroid that loses all members to a neighbor would otherwise stay
-    stranded forever and a clumpy corpus would collapse into one list.
-    collect_list and the re-seed rank window are bounded by the
-    training-sample cap, not the corpus."""
-    crow = _cents_row(cents_df)
-    assigned = (
-        sample.join(F.broadcast(crow), F.lit(True))
-        .select("vec_id", "unit",
-                _best_cent(F.col("cents"), F.col("unit")).alias("b"))
-        .select("vec_id", "unit",
-                (-F.col("b")["negcid"]).cast("int").alias("cid"),
-                F.col("b")["sim"].alias("sim"))
-    )
-    zero = F.array(*[F.lit(0.0)] * dim)
-    grouped = (
-        assigned.groupBy("cid")
-        .agg(F.count("*").alias("cnt"),
-             F.sort_array(F.collect_list(F.struct("vec_id", "unit"))).alias("members"))
-    )
-    means = (
-        grouped
-        .select("cid", "cnt",
-                F.aggregate(F.transform("members", lambda s: s["unit"]), zero,
-                            lambda acc, u: F.zip_with(acc, u, lambda a, b: a + b))
-                .alias("sv"))
-        .select("cid", F.transform("sv", lambda x: x / F.col("cnt")).alias("mv"))
-        .select("cid", "mv",
-                F.sqrt(F.aggregate("mv", F.lit(0.0), lambda a, x: a + x * x))
-                .alias("nrm"))
-        .select("cid",
-                F.when(F.col("nrm") > 0,
-                       F.transform("mv", lambda x: portable_round(x / F.col("nrm"), 9)))
-                .alias("nvec"))
-    )
-    empty = (cents_df.join(grouped.select("cid"), "cid", "left_anti")
-             .select("cid",
-                     F.row_number().over(Window.orderBy("cid")).alias("en")))
-    worst = assigned.select(
-        "unit", F.row_number().over(
-            Window.orderBy(F.asc("sim"), F.asc("vec_id"))).alias("wn"))
-    reseed = (empty.join(worst, F.col("en") == F.col("wn"))
-              .select("cid", F.col("unit").alias("rvec")))
-    return (cents_df.join(means, "cid", "left").join(reseed, "cid", "left")
-            .select("cid", F.coalesce("nvec", "rvec", "cvec").alias("cvec")))
-
-
-def _forgy_seeds(sample: DataFrame, n_centroids: int, dim: int) -> DataFrame:
-    """Deterministic Forgy init: the n_centroids sample vectors ranked
-    first by md5('seed'||vec_id) become centroids 0..k-1 (pseudo-random
-    DATA points — pure-direction seeds stagnate Lloyd on clumpy data: the
-    nearest seed swallows the whole clump and no other centroid ever gains
-    members). Corpora smaller than n_centroids pad the tail cids with the
-    fixed md5 direction seeds via the left join."""
-    rank = Window.orderBy(
-        _md5_i64(F.concat(F.lit("seed"), F.col("vec_id").cast("string"))),
-        "vec_id")  # global window: bounded by the training-sample cap
-    data_seeds = (sample
-                  .withColumn("rn", F.row_number().over(rank))
-                  .filter(F.col("rn") <= n_centroids)
-                  .select((F.col("rn") - 1).cast("int").alias("cid"),
-                          F.col("unit").alias("dvec")))
-    fixed = _seed_cents_df(sample.sparkSession, n_centroids, dim)
-    return (fixed.join(data_seeds, "cid", "left")
-            .select("cid", F.coalesce("dvec", "cvec").alias("cvec")))
-
-
 def kmeans_centroids(embeddings: DataFrame, n_centroids: int = 16,
                      dim: int = 64, n_iters: int = 3,
                      sample_mod: int = 1) -> DataFrame:
-    """(cid, cvec): coarse centroids trained by ``n_iters`` fixed Lloyd
-    iterations from deterministic Forgy seeds (:func:`_forgy_seeds`), on
-    the md5(vec_id)%sample_mod == 0 training sample. At 10^12 rows callers
-    raise ``sample_mod`` so the sample (and the per-cluster collect_list /
-    the init's global rank window) stays bounded — training cost is
-    O(sample), independent of corpus size; assignment stays a full-corpus
-    one-pass. Exactly reproducible (no RNG state), so
-    :func:`_kmeans_cents_sql` is a complete DuckDB value twin."""
-    sample = with_unit_vectors(embeddings).select("vec_id", "unit")
+    """(cid, cvec): coarse centroids trained by ``n_iters`` Lloyd steps
+    (:func:`_lloyd_step` with the IVF cost) from Forgy seeds, on the
+    md5(vec_id) % sample_mod == 0 training sample. Corpora smaller than
+    n_centroids keep the fixed md5 directions in the tail cids.
+    :func:`kmeans_centroids_sql` is its DuckDB value twin."""
+    sample = with_unit_vectors(embeddings)
     if sample_mod > 1:
         keep = _md5_i64(F.concat(F.lit("km"), F.col("vec_id").cast("string")))
         sample = sample.filter(keep % sample_mod == 0)
-    from ..materialize import materialize
-
     sample = materialize(sample)  # each iteration rescans it
-    # one tiny (n_centroids-row) snapshot per step: each iteration reads
-    # the previous centroids three times, so a lazy chain grows as
-    # 3^n_iters plan copies (the quality_clf._lr_iter precedent)
-    cents = materialize(_forgy_seeds(sample, n_centroids, dim))
-    for _ in range(n_iters):
-        cents = materialize(_kmeans_iter(sample, cents, dim))
-    return cents  # consumed by assignment AND probes
+    data = _forgy_seeds(sample, _IVF, n_centroids, F.concat(
+        F.lit("seed"), F.col("vec_id").cast("string")))
+    seeds = (_seed_cents_df(sample.sparkSession, n_centroids, dim)
+             .join(data.withColumnRenamed("cvec", "dvec"), "cid", "left")
+             .select("cid", F.coalesce("dvec", "cvec").alias("cvec")))
+    return _lloyd(sample, seeds, _IVF, n_iters)
 
 
-def _cents_df(embeddings: DataFrame, n_centroids: int, dim: int,
-              trained: bool, n_iters: int, sample_mod: int) -> DataFrame:
+def _ivf_cents(embeddings: DataFrame, n_centroids: int | None, dim: int,
+               trained: bool, n_iters: int, sample_mod: int) -> DataFrame:
+    """(cid, cvec): the IVF quantizer every IVF operator reads. ``None``
+    scales the count with the corpus (:func:`_auto_n_centroids`)."""
+    if n_centroids is None:
+        n_centroids = _auto_n_centroids(embeddings)
     if trained:
         return kmeans_centroids(embeddings, n_centroids, dim, n_iters,
                                 sample_mod)
@@ -456,100 +598,73 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int | None = 16,
 
     The centroid table (trained by default, see :func:`kmeans_centroids`)
     is collapsed to one row and broadcast; assignment is then one per-row
-    JVM expression — n_centroids sequential-fold dot products and an
-    array_max argmax (:func:`_best_cent`). No corpus shuffle, no UDF; the
+    JVM expression (:func:`_assign`). No corpus shuffle, no UDF; the
     assignment column IS the IVF partition key downstream.
-    ``n_centroids=None`` auto-scales with corpus size
-    (:func:`_auto_n_centroids`)."""
-    if n_centroids is None:
-        n_centroids = _auto_n_centroids(embeddings)
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod))
-    best = _best_cent(F.col("cents"), F.col("unit"))
-    return (base.join(F.broadcast(crow), F.lit(True))
-            .select("vec_id", "unit", best.alias("best"))
-            .select("vec_id",
-                    (-F.col("best")["negcid"]).cast("int").alias("cluster"),
-                    portable_round(F.col("best")["sim"], 4).alias("cos_sim")))
+    ``n_centroids=None`` auto-scales with corpus size."""
+    cents = _ivf_cents(embeddings, n_centroids, dim, trained, n_iters,
+                       sample_mod)
+    return (_assign(with_unit_vectors(embeddings), cents, _IVF)
+            .select("vec_id", F.col("cid").cast("int").alias("cluster"),
+                    portable_round(-F.col("cost"), 4).alias("cos_sim")))
+
+
+def _assigned_corpus(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, unit, cluster): unit vectors with their IVF assignment,
+    snapshot-materialized — ivf_topk, ivfpq_topk and both semantic_dedup
+    policies consume the IDENTICAL relation, so they share one snapshot."""
+    return materialize(_assign(with_unit_vectors(embeddings), cents, _IVF)
+                       .select("vec_id", "unit", F.col("cid").alias("cluster")))
+
+
+def _probe_queries(embeddings: DataFrame, cents: DataFrame,
+                   query_ids: list[int], nprobe: int) -> DataFrame:
+    """(query_id, q_unit, cluster): each query exploded to its nprobe
+    nearest centroid lists — the first nprobe of its sorted (cost, cid)."""
+    probes = F.slice(F.array_sort(_costs(_IVF)), 1, nprobe)
+    return (
+        with_unit_vectors(embeddings).filter(F.col("vec_id").isin(query_ids))
+        .join(F.broadcast(_cents_row(cents)), F.lit(True))
+        .select(F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit"),
+                F.explode(F.transform(probes, lambda s: s["cid"])).alias("cluster"))
+    )
 
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
              n_centroids: int | None = 16, nprobe: int = 4, dim: int = 64,
              trained: bool = True, n_iters: int = 3,
              sample_mod: int = 1) -> DataFrame:
-    """IVF ANN top-k: same output schema as cosine_topk, but each query is
-    scored only against the ``nprobe`` centroid lists nearest to it.
-    Approximate — recall vs cosine_topk asserted in pytest (trained ≥
-    fixed at equal nprobe). Deterministic end-to-end (seeded fixed-iteration
-    training), so it carries a full DuckDB oracle.
+    """IVF ANN top-k: same output and ranking as :func:`cosine_topk`, but
+    each query is scored only against the ``nprobe`` centroid lists
+    nearest to it. Approximate — recall vs cosine_topk asserted in pytest
+    (trained ≥ fixed at equal nprobe). Deterministic end-to-end, so it
+    carries a full DuckDB oracle.
 
     Plan: k-means on the bounded sample → assignment scan (shuffle-free)
     → tiny exploded probe table (len(query_ids) × nprobe rows, broadcast)
     → equi-join on cluster → exact re-rank on candidates. The corpus is
     never all-pairs joined."""
-    if n_centroids is None:
-        n_centroids = _auto_n_centroids(embeddings)
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
-                              n_iters, sample_mod)
-    crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod))
-
-    queries = _probe_queries(base, crow, query_ids, nprobe)
-    cands = (
-        corpus.join(F.broadcast(queries), "cluster")
+    cents = _ivf_cents(embeddings, n_centroids, dim, trained, n_iters,
+                       sample_mod)
+    queries = _probe_queries(embeddings, cents, query_ids, nprobe)
+    return _topk(
+        _assigned_corpus(embeddings, cents)
+        .join(F.broadcast(queries), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "unit", "q_unit")
-    )
-    scored = cands.select(
-        "query_id", "neighbor_id", _dot(F.col("q_unit"), F.col("unit")).alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(portable_round(F.col("sim"), 9)), F.asc("neighbor_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                _dot(F.col("q_unit"), F.col("unit")).alias("sim")),
+        k)
+
+
+def _cluster_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b): pairs of the same IVF cluster with doc_a < doc_b and
+    9-dp cosine ≥ threshold — the only pairs SemDeDup ever scores."""
+    l, r = corpus.alias("l"), corpus.alias("r")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                portable_round(F.col("sim"), 4).alias("cos_sim"))
+        l.join(r, [F.col("l.cluster") == F.col("r.cluster"),
+                   F.col("l.vec_id") < F.col("r.vec_id")])
+        .filter(portable_round(_dot(F.col("l.unit"), F.col("r.unit")), 9) >= threshold)
+        .select(F.col("l.vec_id").alias("doc_a"), F.col("r.vec_id").alias("doc_b"))
     )
-
-
-def _probe_queries(base: DataFrame, crow: DataFrame, query_ids: list[int],
-                   nprobe: int) -> DataFrame:
-    """(query_id, q_unit, cluster): each query exploded to its nprobe
-    nearest centroid lists. Top-nprobe centroids per query: reverse-sort
-    the (sim, cid) structs — struct order sorts sim asc then cid asc, so
-    the reverse is sim desc, cid desc; to match the SQL row_number
-    (sim desc, cid ASC) flip the cid sign inside the sort key."""
-    probe_sims = F.transform(F.col("cents"), lambda c: F.struct(
-        portable_round(_dot(F.col("unit"), c["cvec"]), 9).alias("sim"),
-        c["cid"].alias("cid")))
-    keyed = F.transform(
-        probe_sims, lambda s: F.struct(s["sim"].alias("sim"),
-                                       (-s["cid"]).alias("negcid"),
-                                       s["cid"].alias("cid")))
-    probes = F.slice(F.reverse(F.array_sort(keyed)), 1, nprobe)
-    return (
-        base.filter(F.col("vec_id").isin(query_ids))
-        .join(F.broadcast(crow), F.lit(True))
-        .select(F.col("vec_id").alias("query_id"), F.col("unit").alias("q_unit"),
-                F.explode(F.transform(probes, lambda s: s["cid"])).alias("cluster"))
-    )
-
-
-def _assigned_corpus(embeddings: DataFrame, n_centroids: int, dim: int,
-                     trained: bool = True, n_iters: int = 3,
-                     sample_mod: int = 1) -> DataFrame:
-    """(vec_id, unit, cluster): unit vectors with their IVF assignment,
-    snapshot-materialized — ivf_topk and semantic_dedup consume the
-    IDENTICAL relation, so they share one snapshot instead of deriving
-    (and writing) it twice."""
-    from ..materialize import materialize
-
-    assigned = ivf_assign(embeddings, n_centroids, dim, trained, n_iters,
-                          sample_mod).select("vec_id", "cluster")
-    return materialize(with_unit_vectors(embeddings).select("vec_id", "unit")
-                       .join(assigned, "vec_id"))
 
 
 def semantic_dedup(embeddings: DataFrame, threshold: float = 0.4,
@@ -561,33 +676,23 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.4,
     embedding-space near-duplicates are detected WITHIN each coarse IVF
     cluster only, never corpus-wide — the clustering bounds the pairwise
     work to Σ |cluster|², exactly the paper's k-means trick. The quantizer
-    is k-means-TRAINED by default (round 5), which is what actually keeps
-    clusters small on real (clumpy) embedding distributions;
-    ``n_centroids=None`` scales the cluster count with corpus size
-    (ceil(sqrt(N)) — the paper uses 50k clusters at web scale).
+    is k-means-trained by default, which is what actually keeps clusters
+    small on real (clumpy) embedding distributions; ``n_centroids=None``
+    scales the cluster count with corpus size (ceil(sqrt(N)) — the paper
+    uses 50k clusters at web scale).
 
     Output (vec_id, cluster, kept): ``kept`` is false iff a LOWER-id
-    vector in the same cluster has cosine ≥ threshold. Disclosed policy
-    (ADVICE r04): drops are marked against ALL lower-id similar vectors,
-    including ones themselves dropped — in a chain a~b, b~c, a≁c this
-    drops c where the paper's one-representative-per-ε-neighborhood would
-    keep it. Deterministic, identical in both engines, and strictly more
-    aggressive than the paper (never keeps a duplicate pair); the
-    components machinery in dedup.near_dup_components_star is the
-    paper-faithful alternative when needed."""
-    if n_centroids is None:
-        n_centroids = _auto_n_centroids(embeddings)
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
-                              n_iters, sample_mod)
-    l, r = corpus.alias("l"), corpus.alias("r")
-    sim = _dot(F.col("l.unit"), F.col("r.unit"))
-    dropped = (
-        l.join(r, [F.col("l.cluster") == F.col("r.cluster"),
-                   F.col("l.vec_id") < F.col("r.vec_id")])
-        .filter(portable_round(sim, 9) >= threshold)
-        .select(F.col("r.vec_id").alias("vec_id"))
-        .distinct()
-    )
+    vector in the same cluster has cosine ≥ threshold. Disclosed policy:
+    drops are marked against ALL lower-id similar vectors, including ones
+    themselves dropped — in a chain a~b, b~c, a≁c this drops c where the
+    paper's one-representative-per-ε-neighborhood would keep it.
+    Deterministic, identical in both engines, and strictly more aggressive
+    than the paper (never keeps a duplicate pair);
+    :func:`semantic_dedup_representative` is the paper-faithful policy."""
+    corpus = _assigned_corpus(embeddings, _ivf_cents(
+        embeddings, n_centroids, dim, trained, n_iters, sample_mod))
+    dropped = (_cluster_pairs(corpus, threshold)
+               .select(F.col("doc_b").alias("vec_id")).distinct())
     return (
         corpus.select("vec_id", "cluster")
         .join(dropped.withColumn("is_dup", F.lit(True)), "vec_id", "left")
@@ -602,37 +707,26 @@ def semantic_dedup_representative(embeddings: DataFrame,
                                   trained: bool = True, n_iters: int = 3,
                                   sample_mod: int = 1) -> DataFrame:
     """SemDeDup with the PAPER-FAITHFUL keep policy (closes the disclosed
-    over-drop of :func:`semantic_dedup`, ADVICE r04 #1): one representative
-    per connected ε-neighborhood — the similarity pairs within each IVF
-    cluster form a graph, and only the minimum vec_id of each connected
-    component is kept (so in a chain a~b, b~c, a≁c: a survives, b drops,
-    and c — whose only similar kept vector is none — ALSO drops as part of
-    a's component; the paper's "keep one per duplicate group" read
-    transitively). The third reading — greedy keep-unless-similar-to-a-
-    KEPT-item (a maximal independent set in id order) — would keep c, but
-    its fixpoint needs O(chain length) rounds where components need
-    O(log n); at 10^12 rows the component representative is the policy
-    you can actually run, and it never keeps a duplicate pair. Components
-    via the large-star/small-star rounds
-    (:func:`~.dedup.near_dup_components_star`), bounded by the same
-    cluster-local pair graph — never corpus-wide."""
+    over-drop of :func:`semantic_dedup`): one representative per connected
+    ε-neighborhood — the similarity pairs within each IVF cluster form a
+    graph, and only the minimum vec_id of each connected component is kept
+    (so in a chain a~b, b~c, a≁c: a survives, b drops, and c — whose only
+    similar kept vector is none — ALSO drops as part of a's component; the
+    paper's "keep one per duplicate group" read transitively). The third
+    reading — greedy keep-unless-similar-to-a-KEPT-item (a maximal
+    independent set in id order) — would keep c, but its fixpoint needs
+    O(chain length) rounds where components need O(log n); at 10^12 rows
+    the component representative is the policy you can actually run, and
+    it never keeps a duplicate pair. Components via the
+    large-star/small-star rounds (:func:`~.dedup.near_dup_components_star`),
+    bounded by the same cluster-local pair graph — never corpus-wide."""
     from .dedup import near_dup_components_star
 
-    if n_centroids is None:
-        n_centroids = _auto_n_centroids(embeddings)
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
-                              n_iters, sample_mod)
-    l, r = corpus.alias("l"), corpus.alias("r")
-    sim = _dot(F.col("l.unit"), F.col("r.unit"))
-    pairs = (
-        l.join(r, [F.col("l.cluster") == F.col("r.cluster"),
-                   F.col("l.vec_id") < F.col("r.vec_id")])
-        .filter(portable_round(sim, 9) >= threshold)
-        .select(F.col("l.vec_id").alias("doc_a"),
-                F.col("r.vec_id").alias("doc_b"))
-    )
+    corpus = _assigned_corpus(embeddings, _ivf_cents(
+        embeddings, n_centroids, dim, trained, n_iters, sample_mod))
     comp = near_dup_components_star(
-        corpus.select(F.col("vec_id").alias("doc_id")), pairs)
+        corpus.select(F.col("vec_id").alias("doc_id")),
+        _cluster_pairs(corpus, threshold))
     return (
         corpus.select("vec_id", "cluster")
         .join(comp.select(F.col("doc_id").alias("vec_id"), "component_id"),
@@ -640,6 +734,61 @@ def semantic_dedup_representative(embeddings: DataFrame,
         .select("vec_id", F.col("cluster").cast("int").alias("cluster"),
                 (F.col("component_id") == F.col("vec_id")).alias("kept"))
     )
+
+
+def _centroids_values_sql(n_centroids: int, dim: int) -> str:
+    rows = ", ".join(
+        f"({cid}, [{', '.join(repr(x) for x in cent)}])"
+        for cid, cent in enumerate(_ivf_centroids(n_centroids, dim)))
+    return f"(VALUES {rows}) c(cid, cvec)"
+
+
+def _kmeans_cents_sql(n_centroids: int, dim: int, n_iters: int,
+                      sample_mod: int) -> str:
+    """DuckDB twin of :func:`kmeans_centroids`, ending in the CTE
+    ``cents(cid, cvec)``. Requires the ``unitv`` CTE in scope."""
+    where = ""
+    if sample_mod > 1:
+        keep = _md5_i64_sql("'km' || CAST(vec_id AS VARCHAR)")
+        where = f"WHERE ({keep}) % {sample_mod} = 0"
+    seed = "'seed' || CAST(vec_id AS VARCHAR)"
+    return ",\n".join([
+        f"samp AS MATERIALIZED (SELECT vec_id, unit FROM unitv {where})",
+        f"dseed AS ({_forgy_sql('samp', _IVF, n_centroids, seed)})",
+        f"""k0 AS (
+  SELECT c.cid, coalesce(d.cvec, c.cvec) AS cvec
+  FROM {_centroids_values_sql(n_centroids, dim)}
+  LEFT JOIN dseed d ON c.cid = d.cid)""",
+        *_lloyd_sql("", "samp", _IVF, n_iters),
+        f"cents AS (SELECT cid, cvec FROM k{n_iters})"])
+
+
+def _ivf_prelude_sql(n_centroids: int, dim: int, trained: bool,
+                     n_iters: int, sample_mod: int, table: str) -> str:
+    """unitv + cents (trained chain or seed VALUES) + csim, ready to WITH.
+    ``csim`` holds every (vector, centroid) cost and rank: rank 1 is the
+    assignment, rank <= nprobe is a query's probe list."""
+    cents = (_kmeans_cents_sql(n_centroids, dim, n_iters, sample_mod)
+             if trained else
+             f"cents AS (SELECT cid, cvec FROM {_centroids_values_sql(n_centroids, dim)})")
+    return ",\n".join([
+        _UNITV_SQL.format(table=table), cents,
+        f"csim AS MATERIALIZED ({_assign_sql('unitv', 'cents', _IVF)})"])
+
+
+def _cluster_pairs_sql(threshold: float) -> str:
+    """DuckDB twin of :func:`_assigned_corpus` + :func:`_cluster_pairs`:
+    the CTEs ``assigned`` and ``pairs``, after :func:`_ivf_prelude_sql`."""
+    dot = _DOT_SQL.format(a="a.unit", b="b.unit")
+    return f"""assigned AS MATERIALIZED (
+  SELECT vec_id, cid AS cluster, unit FROM csim WHERE rk = 1
+),
+pairs AS MATERIALIZED (
+  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+  FROM assigned a JOIN assigned b
+    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+  WHERE {portable_round_sql(dot, 9)} >= {threshold}
+)"""
 
 
 def semantic_dedup_representative_sql(threshold: float = 0.4,
@@ -651,18 +800,9 @@ def semantic_dedup_representative_sql(threshold: float = 0.4,
     same recursive min-reachable-id CTE shape as
     :func:`~.dedup.near_dup_components_sql` (inlined — the prelude and the
     recursive CTE must share one WITH RECURSIVE clause)."""
-    dot = _DOT_SQL.format(a="a.unit", b="b.unit")
     return f"""
 WITH RECURSIVE {_ivf_prelude_sql(n_centroids, dim, trained, n_iters, sample_mod, table)},
-assigned AS MATERIALIZED (
-  SELECT vec_id, cid AS cluster, unit FROM csim WHERE rk = 1
-),
-pairs AS MATERIALIZED (
-  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-  FROM assigned a JOIN assigned b
-    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE {portable_round_sql(dot, 9)} >= {threshold}
-),
+{_cluster_pairs_sql(threshold)},
 edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION ALL
@@ -683,139 +823,14 @@ FROM assigned s JOIN comp c USING (vec_id)
 def semantic_dedup_sql(threshold: float = 0.4, n_centroids: int = 16,
                        dim: int = 64, trained: bool = True, n_iters: int = 3,
                        sample_mod: int = 1, table: str = "embeddings") -> str:
-    dot = _DOT_SQL.format(a="a.unit", b="b.unit")
     return f"""
 WITH {_ivf_prelude_sql(n_centroids, dim, trained, n_iters, sample_mod, table)},
-assigned AS MATERIALIZED (
-  SELECT vec_id, cid AS cluster, unit FROM csim WHERE rk = 1
-),
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM assigned a JOIN assigned b
-    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE {portable_round_sql(dot, 9)} >= {threshold}
-)
+{_cluster_pairs_sql(threshold)},
+dropped AS (SELECT DISTINCT doc_b AS vec_id FROM pairs)
 SELECT s.vec_id, CAST(s.cluster AS INTEGER) AS cluster,
        (d.vec_id IS NULL) AS kept
 FROM assigned s LEFT JOIN dropped d USING (vec_id)
 """
-
-
-def _centroids_values_sql(n_centroids: int, dim: int) -> str:
-    rows = ", ".join(
-        f"({cid}, [{', '.join(repr(x) for x in cent)}])"
-        for cid, cent in enumerate(_ivf_centroids(n_centroids, dim)))
-    return f"(VALUES {rows}) c(cid, cvec)"
-
-
-def _kmeans_cents_sql(n_centroids: int, dim: int, n_iters: int,
-                      sample_mod: int) -> str:
-    """DuckDB twin of :func:`kmeans_centroids`: the identical seeded
-    fixed-iteration Lloyd training, as a chained-CTE unroll ending in
-    ``cents(cid, cvec)``. Requires the ``unitv`` CTE in scope. Parity
-    notes: the per-cluster sum is ``list(unit ORDER BY vec_id)`` +
-    sequential ``list_reduce`` — the same vec_id-ordered left fold Spark
-    runs via sort_array(collect_list) + aggregate — and each new centroid
-    component is 9-dp portable-rounded, so both engines carry bit-equal
-    centroid literals into assignment."""
-    where = ""
-    if sample_mod > 1:
-        keep = _md5_i64_sql("'km' || CAST(vec_id AS VARCHAR)")
-        where = f"WHERE ({keep}) % {sample_mod} = 0"
-    seed_rank = _md5_i64_sql("'seed' || CAST(vec_id AS VARCHAR)")
-    parts = [
-        f"samp AS MATERIALIZED (SELECT vec_id, unit FROM unitv {where})",
-        f"""dseed AS (
-  SELECT CAST(rn - 1 AS INTEGER) AS cid, unit AS dvec
-  FROM (SELECT vec_id, unit,
-               row_number() OVER (ORDER BY {seed_rank}, vec_id) AS rn
-        FROM samp) r
-  WHERE rn <= {n_centroids})""",
-        f"""k0 AS (
-  SELECT c.cid, coalesce(d.dvec, c.cvec) AS cvec
-  FROM {_centroids_values_sql(n_centroids, dim)}
-  LEFT JOIN dseed d ON c.cid = d.cid)""",
-    ]
-    for i in range(1, n_iters + 1):
-        prev = f"k{i - 1}"
-        dot = _DOT_SQL.format(a="s.unit", b="k.cvec")
-        # MATERIALIZED: a{{i}} feeds both g{{i}} (means) and w{{i}} (re-seed
-        # worst-fit) — without it DuckDB inlines the samp×k distance join
-        # twice per Lloyd round (the r04 5× oracle lesson, same fix)
-        parts.append(f"""a{i} AS MATERIALIZED (
-  SELECT s.vec_id, s.unit, k.cid, {portable_round_sql(dot, 9)} AS sim,
-         row_number() OVER (PARTITION BY s.vec_id
-                            ORDER BY {portable_round_sql(dot, 9)} DESC, k.cid) AS rk
-  FROM samp s CROSS JOIN {prev} k)""")
-        parts.append(f"""g{i} AS (
-  SELECT cid, count(*) AS cnt, list(unit ORDER BY vec_id) AS us
-  FROM a{i} WHERE rk = 1 GROUP BY cid)""")
-        parts.append(f"""m{i} AS (
-  SELECT cid, CASE WHEN nrm > 0
-              THEN list_transform(mv, x -> {portable_round_sql('x / nrm', 9)}) END AS nvec
-  FROM (SELECT cid, mv,
-               sqrt(list_reduce(list_transform(mv, x -> x * x), (a, b) -> a + b)) AS nrm
-        FROM (SELECT cid,
-                     list_transform(
-                       list_reduce(us, (a, b) -> list_transform(range(1, {dim + 1}), j -> a[j] + b[j])),
-                       x -> x / cnt) AS mv
-              FROM g{i}) t1) t2)""")
-        # empty-cluster re-seed: rank empty cids by cid, worst-fit vectors
-        # by (sim ASC, vec_id), pair them 1:1 — exactly _kmeans_iter's
-        # reseed joins
-        parts.append(f"""e{i} AS (
-  SELECT p.cid, row_number() OVER (ORDER BY p.cid) AS en
-  FROM {prev} p LEFT JOIN g{i} g ON p.cid = g.cid WHERE g.cid IS NULL)""")
-        parts.append(f"""w{i} AS (
-  SELECT unit, row_number() OVER (ORDER BY sim ASC, vec_id) AS wn
-  FROM a{i} WHERE rk = 1)""")
-        parts.append(f"""r{i} AS (
-  SELECT e.cid, w.unit AS rvec FROM e{i} e JOIN w{i} w ON e.en = w.wn)""")
-        parts.append(f"""k{i} AS (
-  SELECT p.cid, coalesce(m.nvec, r.rvec, p.cvec) AS cvec
-  FROM {prev} p LEFT JOIN m{i} m USING (cid) LEFT JOIN r{i} r USING (cid))""")
-    parts.append(f"cents AS (SELECT cid, cvec FROM k{n_iters})")
-    return ",\n".join(parts)
-
-
-def _ivf_prelude_sql(n_centroids: int, dim: int, trained: bool,
-                     n_iters: int, sample_mod: int, table: str) -> str:
-    """unitv + cents (trained chain or seed VALUES) + csim, ready to WITH."""
-    parts = [_UNITV_SQL.format(table=table)]
-    if trained:
-        parts.append(_kmeans_cents_sql(n_centroids, dim, n_iters, sample_mod))
-    else:
-        parts.append(
-            f"cents AS (SELECT cid, cvec FROM {_centroids_values_sql(n_centroids, dim)})")
-    parts.append(_IVF_CSIM_SQL)
-    return ",\n".join(parts)
-
-
-_UNITV_SQL = """
-vec AS (
-  SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS v
-  FROM {table} WHERE embedding IS NOT NULL
-),
-unitv AS (
-  SELECT vec_id,
-         CASE WHEN n > 0 THEN list_transform(v, x -> x / n) ELSE v END AS unit
-  FROM (SELECT vec_id, v,
-               sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS n
-        FROM vec) t
-)"""
-
-
-_IVF_CSIM_SQL = f"""
-csim AS MATERIALIZED (
-  SELECT u.vec_id, c.cid, u.unit,
-         {portable_round_sql(_DOT_SQL.format(a='u.unit', b='c.cvec'), 9)} AS sim,
-         row_number() OVER (PARTITION BY u.vec_id
-                            ORDER BY {portable_round_sql(_DOT_SQL.format(a='u.unit', b='c.cvec'), 9)} DESC, c.cid) AS rk
-  FROM unitv u CROSS JOIN cents c
-)"""
-# Shared CTE body: every (vec, centroid) sim plus the per-vec rank — rank 1
-# is the assignment, rank <= nprobe is a query's probe list. ``cents`` is
-# provided by _ivf_prelude_sql (trained chain or seed VALUES).
 
 
 def ivf_assign_sql(n_centroids: int = 16, dim: int = 64, trained: bool = True,
@@ -824,7 +839,7 @@ def ivf_assign_sql(n_centroids: int = 16, dim: int = 64, trained: bool = True,
     return f"""
 WITH {_ivf_prelude_sql(n_centroids, dim, trained, n_iters, sample_mod, table)}
 SELECT vec_id, CAST(cid AS INTEGER) AS cluster,
-       {portable_round_sql('sim', 4)} AS cos_sim
+       {portable_round_sql('-cost', 4)} AS cos_sim
 FROM csim WHERE rk = 1
 """
 
@@ -858,39 +873,7 @@ scored AS (
   SELECT q.query_id, a.vec_id AS neighbor_id, {dot} AS sim
   FROM assigned a JOIN probes q USING (cluster)
   WHERE a.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
-       {portable_round_sql('sim', 4)} AS cos_sim
-FROM (SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY {portable_round_sql('sim', 9)} DESC, neighbor_id) AS rank
-      FROM scored) r
-WHERE rank <= {k}
-"""
-
-
-def embedding_near_dup_sql(threshold: float = 0.4,
-                           table: str = "embeddings",
-                           where_sql: str = "") -> str:
-    """DuckDB twin of the exact all-pairs path; ``where_sql`` restricts the
-    id set (the graded use is a mod-sampled verification subset)."""
-    dot = _DOT_SQL.format(a="a.unit", b="b.unit")
-    return f"""
-WITH vec AS (
-  SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS v
-  FROM (SELECT * FROM {table} WHERE embedding IS NOT NULL) t0 {where_sql}
-),
-unitv AS (
-  SELECT vec_id,
-         CASE WHEN n > 0 THEN list_transform(v, x -> x / n) ELSE v END AS unit
-  FROM (SELECT vec_id, v,
-               sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS n
-        FROM vec) t
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       {portable_round_sql(portable_round_sql(dot, 9), 4)} AS cos_sim
-FROM unitv a JOIN unitv b ON a.vec_id < b.vec_id
-WHERE {portable_round_sql(dot, 9)} >= {threshold}
-"""
+){_topk_sql('scored', k)}"""
 
 
 # ---------------------------------------------------------------------------
@@ -899,16 +882,10 @@ WHERE {portable_round_sql(dot, 9)} >= {threshold}
 # representation at 10^12-vector scale: each unit vector is stored as m
 # small codes (here 8 × 1 byte ≈ 64× smaller than 64 float64s) and queries
 # are scored against RECONSTRUCTED vectors (ADC — asymmetric distance
-# computation) without ever touching the original embeddings.
-#
-# The subspace codebooks are trained by the SAME seeded fixed-iteration
-# deterministic k-means discipline as the IVF coarse quantizer — but in
-# L2 over raw subvectors (plain means, no normalization: dot(q, x) equals
-# the SUM of subspace dots, so quantizing each subspace for L2
-# reconstruction error directly bounds the ADC dot error). One training
-# chain covers ALL m subspaces at once (the group key is (sub, cid)), so
-# cost does not multiply by m. Everything is 9-dp portable-rounded with
-# vec_id-ordered folds: the DuckDB twins are full value oracles.
+# computation) without ever touching the original embeddings. Codebooks
+# quantize raw sub-vectors for L2 (plain means, no normalization): dot(q,
+# x) is the SUM of subspace dots, so the per-subspace reconstruction error
+# directly bounds the ADC dot error.
 # ---------------------------------------------------------------------------
 
 
@@ -924,94 +901,31 @@ def _pq_subvectors(embeddings: DataFrame, m: int, dim: int) -> DataFrame:
                             F.lit(sub_d)).alias("svec")))
 
 
-def _pq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 distance, 9-dp rounded (the assignment key)."""
-    return portable_round(
-        F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0), lambda acc, v: acc + v), 9)
-
-
-def _pq_cents_row(cents: DataFrame) -> DataFrame:
-    return cents.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("sub", "cid", "cvec"))).alias("cb"))
-
-
-def _pq_iter(subs: DataFrame, cents: DataFrame, sub_d: int) -> DataFrame:
-    """One Lloyd iteration over ALL subspaces at once (group key (sub,
-    cid)); empty clusters re-seed per subspace at the worst-fit
-    subvectors. Same determinism discipline as :func:`_kmeans_iter` but
-    plain L2/means — no normalization."""
-    crow = _pq_cents_row(cents)
-    best = F.array_min(F.transform(
-        F.filter(F.col("cb"), lambda c: c["sub"] == F.col("sub")),
-        lambda c: F.struct(_pq_dist(F.col("svec"), c["cvec"]).alias("dist"),
-                           c["cid"].alias("cid"))))
-    assigned = (
-        subs.join(F.broadcast(crow), F.lit(True))
-        .select("vec_id", "sub", "svec", best.alias("b"))
-        .select("vec_id", "sub", "svec",
-                F.col("b")["cid"].alias("cid"), F.col("b")["dist"].alias("dist")))
-    zero = F.array(*[F.lit(0.0)] * sub_d)
-    means = (
-        assigned.groupBy("sub", "cid")
-        .agg(F.count("*").alias("cnt"),
-             F.sort_array(F.collect_list(F.struct("vec_id", "svec"))).alias("ms"))
-        .select("sub", "cid",
-                F.transform(
-                    F.aggregate(F.transform("ms", lambda s: s["svec"]), zero,
-                                lambda acc, u: F.zip_with(acc, u, lambda a, b: a + b)),
-                    lambda x: portable_round(x / F.col("cnt"), 9)).alias("nvec")))
-    # explicit aliases on the re-seed join: empty's and worst's `sub`
-    # attributes can trace to the same lineage (cents after iteration 1
-    # derives from `assigned` too), and Spark then resolves `sub == sub`
-    # trivially true — which would pair subspace A's empty slots with
-    # subspace B's worst-fit vectors
-    empty = (cents.join(means.select("sub", "cid"), ["sub", "cid"], "left_anti")
-             .select(F.col("sub").alias("e_sub"), "cid",
-                     F.row_number().over(
-                         Window.partitionBy("sub").orderBy("cid")).alias("en")))
-    worst = assigned.select(
-        F.col("sub").alias("w_sub"), "svec",
-        F.row_number().over(
-            Window.partitionBy("sub")
-            .orderBy(F.desc("dist"), F.asc("vec_id"))).alias("wn"))
-    reseed = (empty.join(worst, (F.col("en") == F.col("wn"))
-                         & (F.col("e_sub") == F.col("w_sub")))
-              .select(F.col("e_sub").alias("sub"), "cid",
-                      F.col("svec").alias("rvec")))
-    return (cents.join(means, ["sub", "cid"], "left")
-            .join(reseed, ["sub", "cid"], "left")
-            .select("sub", "cid",
-                    F.coalesce("nvec", "rvec", "cvec").alias("cvec")))
-
-
 def pq_codebooks(embeddings: DataFrame, m: int = 8, k: int = 16,
                  dim: int = 64, n_iters: int = 2,
                  sample_mod: int = 1) -> DataFrame:
-    """(sub, cid, cvec[dim/m]): per-subspace PQ codebooks — deterministic
-    Forgy seeds (md5-ranked sample subvectors per subspace) + ``n_iters``
-    Lloyd rounds in one (sub, cid)-keyed chain. ``sample_mod`` bounds
-    training cost at corpus scale exactly as in :func:`kmeans_centroids`;
-    corpora smaller than k get min(k, n) centroids per subspace."""
-    sub_d = dim // m
+    """(sub, cid, cvec[dim/m]): per-subspace PQ codebooks — Forgy seeds
+    (md5-ranked sample subvectors per subspace) + ``n_iters`` Lloyd steps
+    (:func:`_lloyd_step` with the L2 cost, keyed by ``sub``).
+    ``sample_mod`` bounds training cost at corpus scale exactly as in
+    :func:`kmeans_centroids`; corpora smaller than k get min(k, n)
+    centroids per subspace."""
     subs = _pq_subvectors(embeddings, m, dim)
     if sample_mod > 1:
         keep = _md5_i64(F.concat(F.lit("pq"), F.col("vec_id").cast("string")))
         subs = subs.filter(keep % sample_mod == 0)
-    from ..materialize import materialize
-
     subs = materialize(subs)
-    rank = Window.partitionBy("sub").orderBy(
-        _md5_i64(F.concat(F.lit("pqseed"), F.col("sub").cast("string"),
-                          F.lit(":"), F.col("vec_id").cast("string"))),
-        "vec_id")
-    cents = materialize(subs.withColumn("rn", F.row_number().over(rank))
-                        .filter(F.col("rn") <= k)
-                        .select("sub", (F.col("rn") - 1).cast("int").alias("cid"),
-                                F.col("svec").alias("cvec")))
-    for _ in range(n_iters):  # per-step snapshots, as in kmeans_centroids
-        cents = materialize(_pq_iter(subs, cents, sub_d))
-    return cents
+    seeds = _forgy_seeds(subs, _PQ, k, F.concat(
+        F.lit("pqseed"), F.col("sub").cast("string"), F.lit(":"),
+        F.col("vec_id").cast("string")))
+    return _lloyd(subs, seeds, _PQ, n_iters)
+
+
+def _pq_codes(embeddings: DataFrame, cents: DataFrame, m: int,
+              dim: int) -> DataFrame:
+    """(vec_id, sub, code): every vector encoded against ``cents``."""
+    return (_assign(_pq_subvectors(embeddings, m, dim), cents, _PQ)
+            .select("vec_id", "sub", F.col("cid").alias("code")))
 
 
 def pq_encode(embeddings: DataFrame, m: int = 8, k: int = 16, dim: int = 64,
@@ -1021,15 +935,36 @@ def pq_encode(embeddings: DataFrame, m: int = 8, k: int = 16, dim: int = 64,
     subspace: arrays stringify differently across engines, the flat form
     value-hashes identically; production packs the m codes into bytes).
     One pass over the corpus; the codebook rides a 1-row broadcast."""
+    return _pq_codes(embeddings,
+                     pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod),
+                     m, dim)
+
+
+def _pq_reconstructed(embeddings: DataFrame, m: int, k: int, dim: int,
+                      n_iters: int, sample_mod: int) -> DataFrame:
+    """(vec_id, sub, cvec): each vector's codebook row per subspace."""
     cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod)
-    crow = _pq_cents_row(cents)
-    best = F.array_min(F.transform(
-        F.filter(F.col("cb"), lambda c: c["sub"] == F.col("sub")),
-        lambda c: F.struct(_pq_dist(F.col("svec"), c["cvec"]).alias("dist"),
-                           c["cid"].alias("cid"))))
-    return (_pq_subvectors(embeddings, m, dim)
-            .join(F.broadcast(crow), F.lit(True))
-            .select("vec_id", "sub", best["cid"].alias("code")))
+    codes = _pq_codes(embeddings, cents, m, dim)
+    return (codes.join(F.broadcast(cents), (codes["sub"] == cents["sub"])
+                       & (codes["code"] == cents["cid"]))
+            .select("vec_id", codes["sub"].alias("sub"), "cvec"))
+
+
+def _adc_topk(cands: DataFrame, q_unit: str, sub_d: int,
+              k_results: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_sim): the ADC scoring tail shared by
+    :func:`pq_topk` and :func:`ivfpq_topk`. Over (query_id, vec_id, sub,
+    cvec, ``q_unit``) rows: the 9-dp dot of the query's sub-vector with
+    the reconstructed one, summed exactly per (query, candidate); top
+    ``k_results`` by score then vec_id, 4-dp output."""
+    p = portable_round(_dot(F.slice(q_unit, F.col("sub") * sub_d + 1,
+                                    F.lit(sub_d)), F.col("cvec")), 9)
+    scored = cands.groupBy("query_id", "vec_id").agg(exact_sum(p).alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
+    return (scored.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= k_results)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    portable_round(F.col("adc"), 4).alias("adc_sim")))
 
 
 def pq_topk(embeddings: DataFrame, query_ids: list[int], k_results: int = 5,
@@ -1045,37 +980,46 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k_results: int = 5,
     production composes this with the IVF lists (scan nprobe lists' codes
     only) — here the full codes table is scanned so the oracle covers the
     whole scoring path."""
-    sub_d = dim // m
-    codes = pq_encode(embeddings, m, k, dim, n_iters, sample_mod)
-    cents = pq_codebooks(embeddings, m, k, dim, n_iters, sample_mod)
     queries = (with_unit_vectors(embeddings)
                .filter(F.col("vec_id").isin(query_ids))
                .select(F.col("vec_id").alias("query_id"), F.col("unit")))
-    partial = (
-        codes.join(F.broadcast(cents),
-                   (codes["sub"] == cents["sub"]) & (codes["code"] == cents["cid"]))
-        .select("vec_id", codes["sub"].alias("sub"), "cvec")
-        .join(F.broadcast(queries), F.lit(True))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "sub",
-                portable_round(
-                    _dot(F.slice("unit", F.col("sub") * sub_d + 1, F.lit(sub_d)),
-                         F.col("cvec")), 9).alias("p")))
-    return _adc_topk(partial, k_results)
+    cands = (_pq_reconstructed(embeddings, m, k, dim, n_iters, sample_mod)
+             .join(F.broadcast(queries), F.lit(True))
+             .filter(F.col("vec_id") != F.col("query_id")))
+    return _adc_topk(cands, "unit", dim // m, k_results)
 
 
-def _adc_topk(partial: DataFrame, k_results: int) -> DataFrame:
-    """(query_id, neighbor_id, adc_sim): the ADC scoring tail shared by
-    :func:`pq_topk` and :func:`ivfpq_topk` — the exact sum of the per-
-    subspace partials ``p`` per (query, candidate), top ``k_results`` by
-    score then vec_id, 4-dp output."""
-    scored = (partial.groupBy("query_id", "vec_id")
-              .agg(exact_sum(F.col("p")).alias("adc")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k_results)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    portable_round(F.col("adc"), 4).alias("adc_sim")))
+def _pq_chain_sql(m: int, k: int, dim: int, n_iters: int,
+                  sample_mod: int) -> str:
+    """DuckDB twin of :func:`pq_codebooks`: the CTEs ``allsubs(vec_id,
+    sub, svec)``, ``subs`` (the training sample) and the trained
+    ``pqcents(sub, cid, cvec)``. Requires the ``unitv`` CTE in scope."""
+    sub_d = dim // m
+    where = ""
+    if sample_mod > 1:
+        keep = _md5_i64_sql("'pq' || CAST(vec_id AS VARCHAR)")
+        where = f"WHERE ({keep}) % {sample_mod} = 0"
+    seed = "'pqseed' || CAST(sub AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)"
+    return ",\n".join([
+        f"""allsubs AS MATERIALIZED (
+  SELECT vec_id, s.sub,
+         list_slice(unit, s.sub * {sub_d} + 1, s.sub * {sub_d} + {sub_d}) AS svec
+  FROM unitv, (SELECT unnest(range(0, {m})) AS sub) s)""",
+        # sample_mod == 1 means subs IS allsubs — a plain alias, or the
+        # MATERIALIZED would hold a second full copy of the subvector table
+        (f"subs AS MATERIALIZED (SELECT * FROM allsubs {where})"
+         if sample_mod > 1 else "subs AS (SELECT * FROM allsubs)"),
+        f"pk0 AS ({_forgy_sql('subs', _PQ, k, seed)})",
+        *_lloyd_sql("p", "subs", _PQ, n_iters),
+        f"pqcents AS MATERIALIZED (SELECT sub, cid, cvec FROM pk{n_iters})"])
+
+
+def _pq_codes_sql() -> str:
+    """``pqcodes(vec_id, sub, code)`` from allsubs × pqcents (the FULL
+    corpus is encoded even when training sampled)."""
+    return f"""penc AS ({_assign_sql('allsubs', 'pqcents', _PQ)}),
+pqcodes AS MATERIALIZED (
+  SELECT vec_id, sub, CAST(cid AS INTEGER) AS code FROM penc WHERE rk = 1)"""
 
 
 def _adc_topk_sql(parts_cte: str, col: str, k_results: int) -> str:
@@ -1095,100 +1039,11 @@ FROM ranked WHERE rk <= {k_results}
 """
 
 
-def _pq_dist_sql(a: str, b: str, sub_d: int) -> str:
-    d = (f"list_reduce(list_transform(range(1, {sub_d + 1}), "
-         f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (x, y) -> x + y)")
-    return portable_round_sql(d, 9)
-
-
-def _pq_chain_sql(m: int, k: int, dim: int, n_iters: int, sample_mod: int,
-                  table: str, with_unitv: bool = True) -> str:
-    """Shared CTE chain ending in ``pqcents(sub, cid, cvec)`` and
-    ``subs(vec_id, sub, svec)`` — the DuckDB replay of
-    :func:`pq_codebooks`' training (Forgy seeds + n_iters Lloyd rounds in
-    one (sub, cid)-keyed chain, vec_id-ordered folds, 9-dp rounding).
-    ``with_unitv=False`` composes after a prelude that already defined
-    the ``unitv`` CTE (the IVF-PQ twin)."""
-    sub_d = dim // m
-    where = ""
-    if sample_mod > 1:
-        keep = _md5_i64_sql("'pq' || CAST(vec_id AS VARCHAR)")
-        where = f"WHERE ({keep}) % {sample_mod} = 0"
-    seed = _md5_i64_sql(
-        "'pqseed' || CAST(sub AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)")
-    parts = ([_UNITV_SQL.format(table=table)] if with_unitv else []) + [
-        f"""allsubs AS MATERIALIZED (
-  SELECT vec_id, s.sub,
-         list_slice(unit, s.sub * {sub_d} + 1, s.sub * {sub_d} + {sub_d}) AS svec
-  FROM unitv, (SELECT unnest(range(0, {m})) AS sub) s)""",
-        # sample_mod == 1 means subs IS allsubs — a plain alias, or the
-        # MATERIALIZED would hold a second full copy of the subvector table
-        (f"subs AS MATERIALIZED (SELECT * FROM allsubs {where})"
-         if sample_mod > 1 else "subs AS (SELECT * FROM allsubs)"),
-        f"""pk0 AS (
-  SELECT sub, CAST(rn - 1 AS INTEGER) AS cid, svec AS cvec
-  FROM (SELECT sub, svec,
-               row_number() OVER (PARTITION BY sub ORDER BY {seed}, vec_id) AS rn
-        FROM subs) r
-  WHERE rn <= {k})""",
-    ]
-    for i in range(1, n_iters + 1):
-        prev = f"pk{i - 1}"
-        dist = _pq_dist_sql("s.svec", "c.cvec", sub_d)
-        # MATERIALIZED for the same two-consumer reason as a{{i}} above
-        # (pg{{i}} + pw{{i}} both read pa{{i}}): 4.4x on the pq_topk oracle
-        parts.append(f"""pa{i} AS MATERIALIZED (
-  SELECT s.vec_id, s.sub, s.svec, c.cid, {dist} AS dist,
-         row_number() OVER (PARTITION BY s.vec_id, s.sub
-                            ORDER BY {dist}, c.cid) AS rk
-  FROM subs s JOIN {prev} c ON c.sub = s.sub)""")
-        parts.append(f"""pg{i} AS (
-  SELECT sub, cid, count(*) AS cnt, list(svec ORDER BY vec_id) AS us
-  FROM pa{i} WHERE rk = 1 GROUP BY sub, cid)""")
-        parts.append(f"""pm{i} AS (
-  SELECT sub, cid,
-         list_transform(
-           list_reduce(us, (a, b) -> list_transform(range(1, {sub_d + 1}), j -> a[j] + b[j])),
-           x -> {portable_round_sql('x / cnt', 9)}) AS nvec
-  FROM pg{i})""")
-        parts.append(f"""pe{i} AS (
-  SELECT p.sub, p.cid, row_number() OVER (PARTITION BY p.sub ORDER BY p.cid) AS en
-  FROM {prev} p LEFT JOIN pg{i} g ON p.sub = g.sub AND p.cid = g.cid
-  WHERE g.cid IS NULL)""")
-        parts.append(f"""pw{i} AS (
-  SELECT sub, svec, row_number() OVER (PARTITION BY sub
-                                       ORDER BY dist DESC, vec_id) AS wn
-  FROM pa{i} WHERE rk = 1)""")
-        parts.append(f"""pr{i} AS (
-  SELECT e.sub, e.cid, w.svec AS rvec
-  FROM pe{i} e JOIN pw{i} w ON w.sub = e.sub AND e.en = w.wn)""")
-        parts.append(f"""pk{i} AS (
-  SELECT p.sub, p.cid, coalesce(m.nvec, r.rvec, p.cvec) AS cvec
-  FROM {prev} p
-  LEFT JOIN pm{i} m ON p.sub = m.sub AND p.cid = m.cid
-  LEFT JOIN pr{i} r ON p.sub = r.sub AND p.cid = r.cid)""")
-    parts.append(f"pqcents AS MATERIALIZED (SELECT sub, cid, cvec FROM pk{n_iters})")
-    return ",\n".join(parts)
-
-
-def _pq_codes_sql(m: int, dim: int) -> str:
-    """``pqcodes(vec_id, sub, code)`` from allsubs × pqcents (the FULL
-    corpus is encoded even when training sampled)."""
-    sub_d = dim // m
-    dist = _pq_dist_sql("s.svec", "c.cvec", sub_d)
-    return f"""penc AS (
-  SELECT s.vec_id, s.sub, c.cid,
-         row_number() OVER (PARTITION BY s.vec_id, s.sub
-                            ORDER BY {dist}, c.cid) AS rk
-  FROM allsubs s JOIN pqcents c ON c.sub = s.sub),
-pqcodes AS MATERIALIZED (
-  SELECT vec_id, sub, CAST(cid AS INTEGER) AS code FROM penc WHERE rk = 1)"""
-
-
 def pq_codebooks_sql(m: int = 8, k: int = 16, dim: int = 64, n_iters: int = 2,
                      sample_mod: int = 1, table: str = "embeddings") -> str:
     return f"""
-WITH {_pq_chain_sql(m, k, dim, n_iters, sample_mod, table)}
+WITH {_UNITV_SQL.format(table=table)},
+{_pq_chain_sql(m, k, dim, n_iters, sample_mod)}
 SELECT sub, cid, cvec FROM pqcents
 """
 
@@ -1196,8 +1051,9 @@ SELECT sub, cid, cvec FROM pqcents
 def pq_encode_sql(m: int = 8, k: int = 16, dim: int = 64, n_iters: int = 2,
                   sample_mod: int = 1, table: str = "embeddings") -> str:
     return f"""
-WITH {_pq_chain_sql(m, k, dim, n_iters, sample_mod, table)},
-{_pq_codes_sql(m, dim)}
+WITH {_UNITV_SQL.format(table=table)},
+{_pq_chain_sql(m, k, dim, n_iters, sample_mod)},
+{_pq_codes_sql()}
 SELECT vec_id, sub, code FROM pqcodes
 """
 
@@ -1211,8 +1067,9 @@ def pq_topk_sql(query_ids: list[int], k_results: int = 5, m: int = 8,
         a=f"list_slice(q.unit, p.sub * {sub_d} + 1, p.sub * {sub_d} + {sub_d})",
         b="p.cvec")
     return f"""
-WITH {_pq_chain_sql(m, k, dim, n_iters, sample_mod, table)},
-{_pq_codes_sql(m, dim)},
+WITH {_UNITV_SQL.format(table=table)},
+{_pq_chain_sql(m, k, dim, n_iters, sample_mod)},
+{_pq_codes_sql()},
 q AS (SELECT vec_id AS query_id, unit FROM unitv WHERE vec_id IN ({ids})),
 parts AS (
   SELECT q.query_id, e.vec_id, e.sub,
@@ -1240,34 +1097,17 @@ def ivfpq_topk(embeddings: DataFrame, query_ids: list[int],
 
     Output (query_id, neighbor_id, adc_sim) — approximate on two axes
     (list pruning + quantized scores); pytest bounds recall vs exact."""
-    if n_centroids is None:
-        n_centroids = _auto_n_centroids(embeddings)
-    sub_d = dim // m
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
-    corpus = _assigned_corpus(embeddings, n_centroids, dim, trained,
-                              n_iters, sample_mod)
-    crow = _cents_row(_cents_df(embeddings, n_centroids, dim, trained,
-                                n_iters, sample_mod))
-    queries = _probe_queries(base, crow, query_ids, nprobe)
+    cents = _ivf_cents(embeddings, n_centroids, dim, trained, n_iters,
+                       sample_mod)
+    queries = _probe_queries(embeddings, cents, query_ids, nprobe)
     cands = (
-        corpus.select("vec_id", "cluster")
+        _assigned_corpus(embeddings, cents).select("vec_id", "cluster")
         .join(F.broadcast(queries), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "q_unit"))
-    codes = pq_encode(embeddings, m, k, dim, pq_iters, sample_mod)
-    cents = pq_codebooks(embeddings, m, k, dim, pq_iters, sample_mod)
-    cvecs = (codes.join(F.broadcast(cents),
-                        (codes["sub"] == cents["sub"])
-                        & (codes["code"] == cents["cid"]))
-             .select("vec_id", codes["sub"].alias("sub"), "cvec"))
-    partial = (
-        cands.join(cvecs, "vec_id")
-        .select("query_id", "vec_id", "sub",
-                portable_round(
-                    _dot(F.slice("q_unit", F.col("sub") * sub_d + 1,
-                                 F.lit(sub_d)),
-                         F.col("cvec")), 9).alias("p")))
-    return _adc_topk(partial, k_results)
+    cvecs = _pq_reconstructed(embeddings, m, k, dim, pq_iters, sample_mod)
+    return _adc_topk(cands.join(cvecs, "vec_id"), "q_unit", dim // m,
+                     k_results)
 
 
 def ivfpq_topk_sql(query_ids: list[int], k_results: int = 5,
@@ -1276,9 +1116,9 @@ def ivfpq_topk_sql(query_ids: list[int], k_results: int = 5,
                    n_iters: int = 3, pq_iters: int = 2, sample_mod: int = 1,
                    table: str = "embeddings") -> str:
     """DuckDB twin: the IVF prelude (shared ``unitv`` + coarse k-means +
-    csim) composed with the PQ training chain (``with_unitv=False``) —
-    probe lists from csim, candidates from the rank-1 assignment, ADC from
-    the code/codebook joins with the same scoring tail."""
+    csim) composed with the PQ training chain — probe lists from csim,
+    candidates from the rank-1 assignment, ADC from the code/codebook
+    joins with the same scoring tail."""
     sub_d = dim // m
     ids = ", ".join(str(i) for i in query_ids)
     qdot = _DOT_SQL.format(
@@ -1290,8 +1130,8 @@ assigned AS MATERIALIZED (SELECT vec_id, cid AS cluster FROM csim WHERE rk = 1),
 probes AS (
   SELECT vec_id AS query_id, unit AS q_unit, cid AS cluster
   FROM csim WHERE vec_id IN ({ids}) AND rk <= {nprobe}),
-{_pq_chain_sql(m, k, dim, pq_iters, sample_mod, table, with_unitv=False)},
-{_pq_codes_sql(m, dim)},
+{_pq_chain_sql(m, k, dim, pq_iters, sample_mod)},
+{_pq_codes_sql()},
 parts AS (
   SELECT p.query_id, a.vec_id, e.sub, {portable_round_sql(qdot, 9)} AS pp
   FROM probes p
@@ -1339,7 +1179,7 @@ def semantic_decontaminate(embeddings: DataFrame, bench_mod: int = 97,
 
     Reference analog: none; driver-brief training-data op.
     """
-    base = with_unit_vectors(embeddings).select("vec_id", "unit")
+    base = with_unit_vectors(embeddings)
     bench_arr = (
         base.filter((F.col("vec_id") % bench_mod) == 0)
         .agg(F.sort_array(

@@ -101,8 +101,8 @@ def registry_versions(transcripts: DataFrame) -> DataFrame:
     spark = transcripts.sparkSession
     grid = spark.createDataFrame(
         _REGISTRY_GRID, "tool string, tool_idx int, ver int")
-    # 28-row grid × 1-row bounds: broadcast literal-true join (the
-    # similarity.py _cents_row pattern), never a shuffle.
+    # 28-row grid × 1-row bounds: broadcast literal-true join (as
+    # similarity._assign joins the centroid row), never a shuffle.
     return (
         grid.join(F.broadcast(_ts_bounds(transcripts)), F.lit(True))
         .select(

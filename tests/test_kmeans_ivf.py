@@ -14,7 +14,10 @@ similarity.py). These tests pin:
   (max-cluster share drops vs the fixed seeds) — the Σ|cluster|² bound
   in semantic_dedup is only real if the quantizer adapts to clumpy data;
 * n_centroids=None auto-scales with corpus size (VERDICT r04 #3), and the
-  auto-sized trained assignment equals its DuckDB twin.
+  auto-sized trained assignment equals its DuckDB twin;
+* layout invariance of both trainers that share the Lloyd step
+  (kmeans_centroids and pq_codebooks): bit-equal output across input
+  partitioning, shuffle partitions and input row order.
 """
 
 from __future__ import annotations
@@ -127,18 +130,44 @@ def test_training_splits_dominant_cluster(spark):
     assert trained <= 0.5, f"trained quantizer still has a {trained:.0%} cluster"
 
 
-def test_kmeans_partition_count_invariance(spark):
-    """Training is deterministic under physical layout: 2 vs 16 input
-    partitions produce bit-equal centroids (the vec_id-ordered sequential
-    folds make float addition order layout-independent)."""
+def _assert_layout_invariant(spark, train) -> None:
+    """``train(docs)`` collects bit-equal at 2 and 16 input partitions, at
+    shuffle partitions 1 and 7, and with the input rows reversed (the
+    vec_id-ordered folds make float addition order layout-independent).
+    Every variant is a fresh RDD-backed frame, so no run can reuse another
+    run's training snapshots."""
     dim = 8
     dirs = [_unit([1.0] * dim), _unit([1.0, -1.0] * (dim // 2))]
     docs = _synthetic_emb(spark, [(d, 30, 0.3) for d in dirs], dim)
-    a = {r.cid: list(r.cvec) for r in sim.kmeans_centroids(
-        docs.repartition(2), 4, dim=dim, n_iters=3).collect()}
-    b = {r.cid: list(r.cvec) for r in sim.kmeans_centroids(
-        docs.repartition(16), 4, dim=dim, n_iters=3).collect()}
-    assert a == b
+    rows = docs.collect()
+
+    def run(ordered, n_parts: int) -> list:
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(ordered, n_parts), docs.schema)
+        return sorted((tuple(r[:-1]), list(r[-1])) for r in train(df).collect())
+
+    want = run(rows, 2)
+    assert run(rows, 16) == want
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n_shuffle in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
+            for ordered in (rows, rows[::-1]):
+                assert run(ordered, 9) == want, (n_shuffle, ordered is rows)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_kmeans_partition_count_invariance(spark):
+    """The IVF trainer is deterministic under physical layout."""
+    _assert_layout_invariant(
+        spark, lambda df: sim.kmeans_centroids(df, 4, dim=8, n_iters=3))
+
+
+def test_pq_partition_count_invariance(spark):
+    """The PQ trainer, the same Lloyd step keyed by subspace, is too."""
+    _assert_layout_invariant(
+        spark, lambda df: sim.pq_codebooks(df, m=2, k=4, dim=8, n_iters=3))
 
 
 def test_auto_n_centroids_scales(spark, emb):

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from buildlogparser_spark.operators import similarity as sim
 from buildlogparser_spark.rounding import (
     exact_sum, exact_sum_sql, portable_round, portable_round_sql)
 from conftest import SF_SMOKE
@@ -127,3 +128,19 @@ def test_float_totals_hold_no_per_key_list(spark, name):
     df = entry_mod.registry()[name].run(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("collect_list(") == (1 if name == "pq_topk" else 0)
+
+
+@pytest.mark.parametrize("trainer", ["kmeans_centroids", "pq_codebooks"])
+def test_lloyd_step_holds_one_ordered_fold(spark, trainer):
+    """Plan guard for the one Lloyd step shared by the IVF and PQ trainers:
+    the centroid broadcast row is collected into the step's assignment
+    snapshot, so the step's optimized plan holds exactly one collect_list,
+    the vec_id-ordered vector-mean fold."""
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    if trainer == "kmeans_centroids":
+        points, q = sim.with_unit_vectors(emb), sim._IVF
+    else:
+        points, q = sim._pq_subvectors(emb, 8, 64), sim._PQ
+    step = sim._lloyd_step(points, getattr(sim, trainer)(emb), q)
+    plan = step._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("collect_list(") == 1

@@ -42,6 +42,28 @@ def test_lsh_topk_recall(spark, emb):
     assert all(q != n for q, n in approx)
 
 
+def test_lsh_topk_ranks_like_cosine_topk(spark):
+    """lsh_topk ranks like cosine_topk and ivf_topk: on the 9-dp sim, then
+    neighbor_id. Ids 1 and 2 differ from the query by 2e-6 and 1e-6 in one
+    component; their cosines differ by about 1.5e-12 and both round to
+    1.0, so the tie goes to the lower id even though id 2's raw cosine is
+    higher."""
+    from pyspark.sql import Row
+
+    dim = 8
+
+    def vec(eps: float) -> list[float]:
+        return [1.0, eps] + [0.0] * (dim - 2)
+
+    docs = spark.createDataFrame(
+        [Row(vec_id=i, embedding=vec(eps), label=0)
+         for i, eps in enumerate([0.0, 2e-6, 1e-6])])
+    want = [(0, 1, 1, 1.0)]
+    assert [tuple(r) for r in sim.cosine_topk(docs, [0], k=1).collect()] == want
+    assert [tuple(r) for r in sim.lsh_topk(
+        docs, [0], k=1, n_planes=4, n_tables=2, dim=dim).collect()] == want
+
+
 def test_media_feature_plumbing(spark):
     media = mm.synthetic_media(spark, n=64)
     feats = mm.extract_features(media).collect()
